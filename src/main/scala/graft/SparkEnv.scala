@@ -84,6 +84,10 @@ object SparkEnv {
     * "actions are only sequential because your driver code calls them
     * sequentially"). `fa` runs on the calling thread, `fb` on a pooled
     * thread; both are awaited, and an exception from either propagates.
+    * `fb` is awaited even when `fa` throws, so no side is still running
+    * when the failure surfaces (a caller that retries the batch must
+    * not race a still-running append); a failure of `fb` then rides
+    * `fa`'s exception as suppressed instead of being lost.
     * Use ONLY for actions with no data/commit dependency between them
     * (e.g. two localCheckpoints of disjoint frames, appends to two
     * different tables) — the per-batch action chains of the streaming
@@ -94,7 +98,12 @@ object SparkEnv {
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     val f = Future(blocking(fb))(ExecutionContext.global)
-    val a = fa
+    val a = try fa catch {
+      case t: Throwable =>
+        Await.ready(f, Duration.Inf).value.flatMap(_.failed.toOption)
+          .foreach(t.addSuppressed)
+        throw t
+    }
     (a, Await.result(f, Duration.Inf))
   }
 }

@@ -38,8 +38,6 @@ class LakeTable(val spark: SparkSession, val location: String) {
   def read(filter: Column): DataFrame =
     Scan.read(spark, meta, Scan.ReadOptions(filter = Some(filter)))
 
-  def readWith(opts: Scan.ReadOptions): DataFrame = Scan.read(spark, meta, opts)
-
   /** Time travel by snapshot id — `FOR VERSION AS OF <id>` (`sql:216`). */
   def asOf(snapshotId: Long): DataFrame =
     Scan.read(spark, meta, Scan.ReadOptions(snapshotId = Some(snapshotId)))

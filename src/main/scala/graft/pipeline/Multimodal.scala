@@ -180,8 +180,6 @@ object Multimodal {
     */
   def setCodec(c: BlobCodec): Unit = { codec = c }
 
-  def installedCodec: BlobCodec = codec
-
   val blobSchema: StructType = StructType(Seq(
     StructField("blob_id", LongType, nullable = false),
     StructField("modality", StringType, nullable = false),

@@ -26,12 +26,4 @@ object Quantize {
   /** Dequantize back to float. */
   def dequantize(q: Column, scale: Column): Column =
     transform(q, x => x.cast("float") * scale)
-
-  /** Cosine between a float query and an int8-quantized vector without
-    * materializing the dequantized array: cosine is scale-invariant, so
-    * the stored scale cancels and the int8 codes feed the native kernel
-    * directly.
-    */
-  def cosineQuantized(query: Column, q: Column): Column =
-    Similarity.cosine(query, q.cast("array<double>"))
 }

@@ -764,16 +764,6 @@ object TextAnalysis {
         Ipv4Re, "<IP>"),
       PhoneRe, "<PHONE>")
 
-  /** Cheap boilerplate strip: collapse whitespace runs, drop
-    * non-printable control chars, trim — the normalization applied
-    * before fingerprinting/dedup so formatting noise doesn't defeat
-    * exact matching.
-    */
-  def normalizeText(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(text, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]", ""),
-      "\\s+", " "))
-
   /** Document fingerprints: md5 of whitespace-normalized text (exact
     * content identity) + an 8-way min-hash sketch (winnowing-style
     * robust fingerprint for near-identity).

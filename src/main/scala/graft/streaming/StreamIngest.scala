@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import graft.lake.LakeTable
+import graft.pipeline.{IncrementalDedup, Similarity, TextAnalysis}
 
 /** Streaming ingestion into a lake table: `foreachBatch` → one append
   * snapshot per micro-batch, stamped with the batch id.
@@ -69,6 +71,121 @@ object StreamIngest {
       }
       .toSet
 
+  /** The one door skeleton every ingest door runs on: start `stream`
+    * under `checkpointDir`, hand each non-empty micro-batch to
+    * `perBatch`, drain everything currently available, stop, and
+    * return how many batches committed (replays and empty batches are
+    * skipped). `perBatch(batch, batchId, seen)` reports whether it
+    * committed; a commit adds `batchId` to `seen`.
+    *
+    * `seen` starts as `stamps`' [[committedBatches]] — one metadata
+    * read up front; this writer is the only one stamping `queryName`,
+    * so tracking its own commits locally avoids an O(# snapshots)
+    * metadata load + parse per micro-batch. Two replay modes:
+    *  - skip on replay (`rerunOnReplay = false`): a batch id in `seen`
+    *    is skipped BEFORE `batch.isEmpty`, so a replay runs no job;
+    *  - rerun on replay: the batch's work reruns (an index half a
+    *    crash left uncommitted gets filled in) and the door guards its
+    *    own stamped append with `seen`.
+    */
+  private def runDoor(stream: DataFrame, stamps: Option[LakeTable],
+      queryName: String, checkpointDir: String, rerunOnReplay: Boolean)(
+      perBatch: (DataFrame, Long, scala.collection.Set[Long]) => Boolean)
+      : Long = {
+    var committed = 0L
+    val seen = scala.collection.mutable.Set.empty[Long] ++=
+      stamps.fold(Set.empty[Long])(committedBatches(_, queryName))
+    val q = stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if ((rerunOnReplay || !seen.contains(batchId)) && !batch.isEmpty &&
+            perBatch(batch, batchId, seen)) {
+          seen += batchId
+          committed += 1
+        }
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    committed
+  }
+
+  private def stamped(queryName: String, batchId: Long) =
+    Map(BatchStamp -> stamp(queryName, batchId))
+
+  /** Decontamination verdict: ids of the docs sharing a hashed word
+    * `k`-gram with the (static) benchmark gram set — one broadcast
+    * semi-probe.
+    */
+  private def contaminatedIds(batch: DataFrame, benchGrams: DataFrame,
+      k: Int): DataFrame =
+    batch.select(col("doc_id"),
+        explode(graft.functions.ShingleExpressions.hashedShingles(
+          trim(lower(col("text"))), k)).as("_gram"))
+      .join(broadcast(benchGrams), Seq("_gram"), "left_semi")
+      .select("doc_id").distinct()
+
+  /** Quality verdict: ids the rule gate keeps. */
+  private def qualityKeptIds(batch: DataFrame): DataFrame =
+    TextAnalysis.qualityGate(batch).filter(col("keep")).select("doc_id")
+
+  /** Classifier verdict: ids at or above the calibrated cut on the
+    * ROUNDED score, not the log-odds sign: a thin reference corpus
+    * makes the prior strongly negative and a sign cut would admit
+    * nothing — the published recipe thresholds at a score percentile
+    * learned offline, which is what `threshold` carries.
+    */
+  private def classifierKeptIds(batch: DataFrame, weights: DataFrame,
+      prior: DataFrame, threshold: Double): DataFrame =
+    TextAnalysis.nbScore(batch, weights, prior)
+      .filter(col("log_odds") >= threshold).select("doc_id")
+
+  /** The stateful LSH stage of [[dedupIngestAvailable]] and
+    * [[curateIngestAvailable]]: probe `cleared` against the persisted
+    * index at `indexLoc`, then append the survivors to `kept` (stamped,
+    * plus `extraSummary` of the kept rows; skipped when `batchId` is in
+    * `seen`) and to the index (each half self-guarded by its own
+    * stamp). Returns whether the kept append committed.
+    */
+  private def lshAdmit(cleared: DataFrame, indexLoc: String,
+      threshold: Double, kept: LakeTable, queryName: String, batchId: Long,
+      seen: scala.collection.Set[Long])(
+      extraSummary: DataFrame => Map[String, String]): Boolean = {
+    val idx = IncrementalDedup.load(cleared.sparkSession, indexLoc)
+    // sketch ONCE: shingling + minhashing is the map-side cost of
+    // the operator, and the lazy-lineage form (probe from `cleared`,
+    // admit from `keptRows`) re-shingled every kept document
+    val (nb, nt) = IncrementalDedup.sketch(idx, cleared)
+    // the two sketch halves are independent single-split jobs:
+    // overlap them (guide §2.6) — wall pays max, not sum
+    val (bands, toks) = graft.SparkEnv.overlap(
+      nb.localCheckpoint(true), nt.localCheckpoint(true))
+    val losers = IncrementalDedup
+      .nearDupPairsSketched(idx, bands, toks, threshold)
+      .select(col("id_b").as("doc_id")).distinct()
+    // one materialization feeds BOTH appends — the probe join must
+    // not run twice with possibly different AQE plans
+    val keptRows = cleared.join(losers, Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
+    val keptIds = keptRows.select("doc_id")
+    // three snapshot-isolated appends to three DIFFERENT tables —
+    // overlap them too; replay safety never depended on their
+    // order (each table self-guards by its own stamp, and the
+    // probe tolerates any committed subset — see the replay
+    // argument in dedupIngestAvailable's scaladoc)
+    val (appended, _) = graft.SparkEnv.overlap(
+      !seen.contains(batchId) && {
+        kept.append(keptRows,
+          summary = stamped(queryName, batchId) ++ extraSummary(keptRows))
+        true
+      },
+      IncrementalDedup.appendIdempotentSketched(idx,
+        bands.join(keptIds, Seq("doc_id"), "left_semi"),
+        toks.join(keptIds, Seq("doc_id"), "left_semi"),
+        BatchStamp, stamp(queryName, batchId)))
+    appended
+  }
+
   /** Start `stream` UPSERTING into `table` by `keys` — one MERGE per
     * micro-batch (matched rows updated from the stream, unmatched
     * inserted), with the same batch-stamp idempotency as
@@ -86,24 +203,12 @@ object StreamIngest {
     * range never rewrites the rest of a 100 TB table.
     */
   def upsertAvailable(stream: DataFrame, table: LakeTable, keys: Seq[String],
-      queryName: String, checkpointDir: String): Long = {
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(table, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          val snap = table.merge(batch.dropDuplicates(keys), keys,
-            summary = Map(BatchStamp -> stamp(queryName, batchId)))
-          if (snap.nonEmpty) { seen += batchId; committed += 1 }
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      queryName: String, checkpointDir: String): Long =
+    runDoor(stream, Some(table), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      table.merge(batch.dropDuplicates(keys), keys,
+        summary = stamped(queryName, batchId)).nonEmpty
+    }
 
   /** Start a DOCUMENT stream ingesting into `kept` with near-duplicate
     * SUPPRESSION at ingest — the "dedup at the door" shape a continuous
@@ -131,59 +236,12 @@ object StreamIngest {
     */
   def dedupIngestAvailable(stream: DataFrame, indexLoc: String,
       kept: LakeTable, threshold: Double, queryName: String,
-      checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions.col
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val idx = graft.pipeline.IncrementalDedup.load(
-            batch.sparkSession, indexLoc)
-          // sketch ONCE: shingling + minhashing is the map-side cost of
-          // the operator, and the lazy-lineage form (probe from `batch`,
-          // admit from `keptRows`) re-shingled every kept document
-          val (nb, nt) = graft.pipeline.IncrementalDedup.sketch(idx, batch)
-          // the two sketch halves are independent single-split jobs:
-          // overlap them (guide §2.6) — wall pays max, not sum
-          val (bands, toks) = graft.SparkEnv.overlap(
-            nb.localCheckpoint(true), nt.localCheckpoint(true))
-          val losers = graft.pipeline.IncrementalDedup
-            .nearDupPairsSketched(idx, bands, toks, threshold)
-            .select(col("id_b").as("doc_id")).distinct()
-          // one materialization feeds BOTH appends — the probe join must
-          // not run twice with possibly different AQE plans
-          val keptRows = batch.join(losers, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptIds = keptRows.select("doc_id")
-          // three snapshot-isolated appends to three DIFFERENT tables —
-          // overlap them too; replay safety never depended on their
-          // order (each table self-guards by its own stamp, and the
-          // probe tolerates any committed subset — see the replay
-          // argument in the scaladoc above)
-          graft.SparkEnv.overlap(
-            {
-              if (!seen.contains(batchId)) {
-                kept.append(keptRows,
-                  summary = Map(BatchStamp -> stamp(queryName, batchId)))
-                seen += batchId
-                committed += 1
-              }
-            },
-            graft.pipeline.IncrementalDedup.appendIdempotentSketched(idx,
-              bands.join(keptIds, Seq("doc_id"), "left_semi"),
-              toks.join(keptIds, Seq("doc_id"), "left_semi"),
-              BatchStamp, stamp(queryName, batchId)))
-          ()
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      checkpointDir: String): Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = true) { (batch, batchId, seen) =>
+      lshAdmit(batch, indexLoc, threshold, kept, queryName, batchId,
+        seen)(_ => Map.empty)
+    }
 
   /** Benchmark-decontamination DOOR at ingest: per micro-batch, drop
     * any document sharing a word `k`-gram with the (static) benchmark
@@ -201,35 +259,16 @@ object StreamIngest {
     */
   def decontaminateIngestAvailable(stream: DataFrame,
       benchGrams: DataFrame, kept: LakeTable, k: Int, queryName: String,
-      checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions._
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val bench = broadcast(benchGrams)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          val grams = batch.select(col("doc_id"),
-            explode(graft.functions.ShingleExpressions.hashedShingles(
-              trim(lower(col("text"))), k)).as("_gram"))
-          val contaminated = grams.join(bench, Seq("_gram"), "left_semi")
-            .select("doc_id").distinct()
-          // one materialization (see qualityGateIngestAvailable): the
-          // gram probe must not re-run inside append's lineage pass
-          kept.append(batch.join(contaminated, Seq("doc_id"), "left_anti")
-              .localCheckpoint(true),
-            summary = Map(BatchStamp -> stamp(queryName, batchId)))
-          seen += batchId
-          committed += 1
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      checkpointDir: String): Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      // one materialization (see qualityGateIngestAvailable): the
+      // gram probe must not re-run inside append's lineage pass
+      kept.append(batch.join(contaminatedIds(batch, benchGrams, k),
+          Seq("doc_id"), "left_anti").localCheckpoint(true),
+        summary = stamped(queryName, batchId))
+      true
+    }
 
   /** The QUALITY door — fourth of the ingest doors (after syntactic
     * LSH, semantic cosine, benchmark decontamination): each micro-batch
@@ -242,32 +281,17 @@ object StreamIngest {
     * and the left-semi verdict join stays inside the batch.
     */
   def qualityGateIngestAvailable(stream: DataFrame, kept: LakeTable,
-      queryName: String, checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions._
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          val kept_ids = graft.pipeline.TextAnalysis.qualityGate(batch)
-            .filter(col("keep")).select("doc_id")
-          // one materialization: append's lineage pass (dense row-id
-          // assignment counts its input) would otherwise re-run the
-          // gate plan a second time per batch
-          kept.append(batch.join(kept_ids, Seq("doc_id"), "left_semi")
-              .localCheckpoint(true),
-            summary = Map(BatchStamp -> stamp(queryName, batchId)))
-          seen += batchId
-          committed += 1
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      queryName: String, checkpointDir: String): Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      // one materialization: append's lineage pass (dense row-id
+      // assignment counts its input) would otherwise re-run the
+      // gate plan a second time per batch
+      kept.append(batch.join(qualityKeptIds(batch), Seq("doc_id"),
+          "left_semi").localCheckpoint(true),
+        summary = stamped(queryName, batchId))
+      true
+    }
 
   /** The CLASSIFIER door — fifth ingest door: documents land only if
     * the trained reference classifier ([[graft.pipeline.TextAnalysis
@@ -282,37 +306,17 @@ object StreamIngest {
   def classifierGateIngestAvailable(stream: DataFrame,
       weights: DataFrame, prior: DataFrame, threshold: Double,
       kept: LakeTable, queryName: String,
-      checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions._
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          // calibrated cut on the ROUNDED score, not the log-odds
-          // sign: a thin reference corpus makes the prior strongly
-          // negative and a sign cut would admit nothing — the
-          // published recipe thresholds at a score percentile learned
-          // offline, which is what `threshold` carries
-          val keptIds = graft.pipeline.TextAnalysis
-            .nbScore(batch, weights, prior)
-            .filter(col("log_odds") >= threshold).select("doc_id")
-          // one materialization (see qualityGateIngestAvailable): the
-          // score plan must not re-run inside append's lineage pass
-          kept.append(batch.join(keptIds, Seq("doc_id"), "left_semi")
-              .localCheckpoint(true),
-            summary = Map(BatchStamp -> stamp(queryName, batchId)))
-          seen += batchId
-          committed += 1
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      checkpointDir: String): Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      // one materialization (see qualityGateIngestAvailable): the
+      // score plan must not re-run inside append's lineage pass
+      kept.append(batch.join(
+          classifierKeptIds(batch, weights, prior, threshold),
+          Seq("doc_id"), "left_semi").localCheckpoint(true),
+        summary = stamped(queryName, batchId))
+      true
+    }
 
   /** The COMPOSED door — the full document-side ingest funnel in one
     * stream: per micro-batch, the three STATIC verdicts first
@@ -336,99 +340,48 @@ object StreamIngest {
       weights: DataFrame, prior: DataFrame, scoreThreshold: Double,
       benchK: Int, indexLoc: String, kept: LakeTable,
       dedupThreshold: Double, queryName: String,
-      checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions._
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val bench = broadcast(benchGrams)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.global
-          // docs_in is independent of every verdict: start it first so
-          // the count overlaps the statics job (guide §2.6)
-          val docsInF = Future(blocking(batch.count()))
-          val grams = batch.select(col("doc_id"),
-            explode(graft.functions.ShingleExpressions.hashedShingles(
-              trim(lower(col("text"))), benchK)).as("_gram"))
-          val contaminated = grams.join(bench, Seq("_gram"), "left_semi")
-            .select("doc_id").distinct()
-          val qualIds = graft.pipeline.TextAnalysis.qualityGate(batch)
-            .filter(col("keep")).select("doc_id")
-          val clsIds = graft.pipeline.TextAnalysis
-            .nbScore(batch, weights, prior)
-            .filter(col("log_odds") >= scoreThreshold).select("doc_id")
-          // one materialization: the statically-cleared slice feeds the
-          // dedup probe AND both appends
-          val statics = batch
-            .join(contaminated, Seq("doc_id"), "left_anti")
-            .join(qualIds, Seq("doc_id"), "left_semi")
-            .join(clsIds, Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          // summary count over the just-checkpointed frame: overlap it
-          // with the sketch jobs below
-          val staticsNF = Future(blocking(statics.count()))
-          val idx = graft.pipeline.IncrementalDedup.load(
-            batch.sparkSession, indexLoc)
-          val (nb, nt) = graft.pipeline.IncrementalDedup
-            .sketch(idx, statics)
-          // independent single-split sketch halves: overlap (§2.6)
-          val (bands, toks) = graft.SparkEnv.overlap(
-            nb.localCheckpoint(true), nt.localCheckpoint(true))
-          val losers = graft.pipeline.IncrementalDedup
-            .nearDupPairsSketched(idx, bands, toks, dedupThreshold)
-            .select(col("id_b").as("doc_id")).distinct()
-          val keptRows = statics.join(losers, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptIds = keptRows.select("doc_id")
-          // three snapshot-isolated appends to three DIFFERENT tables —
-          // overlap; order was never load-bearing (each table
-          // self-guards by its own stamp, the probe tolerates any
-          // committed subset — the replay argument above)
-          graft.SparkEnv.overlap(
-            {
-              if (!seen.contains(batchId)) {
-                // Per-batch admission metrics ride the commit summary —
-                // the attrition record an ingest door publishes with
-                // every snapshot (docs in, statics-cleared, admitted;
-                // dedup suppression is the difference). All three
-                // counts are cheap by construction — two over
-                // just-checkpointed frames, one over the batch source —
-                // and all three overlapped earlier jobs as futures.
-                // Replayed batches skip this append entirely, so replay
-                // cannot double-count.
-                kept.append(keptRows, summary = Map(
-                  BatchStamp -> stamp(queryName, batchId),
-                  DocsInKey ->
-                    Await.result(docsInF, Duration.Inf).toString,
-                  StaticsClearedKey ->
-                    Await.result(staticsNF, Duration.Inf).toString,
-                  AdmittedKey -> keptRows.count().toString))
-                seen += batchId
-                committed += 1
-              }
-            },
-            graft.pipeline.IncrementalDedup.appendIdempotentSketched(idx,
-              bands.join(keptIds, Seq("doc_id"), "left_semi"),
-              toks.join(keptIds, Seq("doc_id"), "left_semi"),
-              BatchStamp, stamp(queryName, batchId)))
-          // a replayed batch skips the kept append without consuming
-          // the futures — surface any failure they carry instead of
-          // dropping it on the floor
-          Await.result(docsInF, Duration.Inf)
-          Await.result(staticsNF, Duration.Inf)
-          ()
-        }
+      checkpointDir: String): Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = true) { (batch, batchId, seen) =>
+      import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+      import scala.concurrent.duration.Duration
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      // docs_in is independent of every verdict: start it first so
+      // the count overlaps the statics job (guide §2.6)
+      val docsInF = Future(blocking(batch.count()))
+      // one materialization: the statically-cleared slice feeds the
+      // dedup probe AND both appends
+      val statics = batch
+        .join(contaminatedIds(batch, benchGrams, benchK), Seq("doc_id"),
+          "left_anti")
+        .join(qualityKeptIds(batch), Seq("doc_id"), "left_semi")
+        .join(classifierKeptIds(batch, weights, prior, scoreThreshold),
+          Seq("doc_id"), "left_semi")
+        .localCheckpoint(true)
+      // summary count over the just-checkpointed frame: overlap it
+      // with the sketch jobs of the LSH stage
+      val staticsNF = Future(blocking(statics.count()))
+      // Per-batch admission metrics ride the commit summary — the
+      // attrition record an ingest door publishes with every snapshot
+      // (docs in, statics-cleared, admitted; dedup suppression is the
+      // difference). All three counts are cheap by construction — two
+      // over just-checkpointed frames, one over the batch source — and
+      // all three overlapped earlier jobs as futures. Replayed batches
+      // skip the kept append entirely, so replay cannot double-count.
+      val appended = lshAdmit(statics, indexLoc, dedupThreshold, kept,
+          queryName, batchId, seen) { keptRows =>
+        Map(DocsInKey -> Await.result(docsInF, Duration.Inf).toString,
+          StaticsClearedKey ->
+            Await.result(staticsNF, Duration.Inf).toString,
+          AdmittedKey -> keptRows.count().toString)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      // a replayed batch skips the kept append without consuming
+      // the futures — surface any failure they carry instead of
+      // dropping it on the floor
+      Await.result(docsInF, Duration.Inf)
+      Await.result(staticsNF, Duration.Inf)
+      appended
+    }
 
   /** Start an EMBEDDING stream ingesting into a persisted IVF index —
     * continuous vector indexing, the ANN analog of
@@ -446,55 +399,44 @@ object StreamIngest {
     * the owner makes (see refreshIvf's scaladoc).
     */
   def annIngestAvailable(stream: DataFrame, indexLoc: String,
-      queryName: String, checkpointDir: String): Long = {
-    var committed = 0L
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val idx = graft.pipeline.Similarity.loadIvf(spark, indexLoc)
-          if (!committedBatches(idx.table.get, queryName)
-              .contains(batchId)) {
-            import org.apache.spark.sql.functions.{avg, coalesce, col,
-              count, lit, round}
-            // Drift signal on the commit: the batch's assignment
-            // quality against the FIXED centroids (count + mean
-            // squared L2 to the nearest cell) rides the snapshot
-            // summary, so "has the arriving distribution walked away
-            // from the quantizer" is answerable from the index table
-            // alone — the observable behind refreshIvf's documented
-            // re-fit-on-drift maintenance decision. ONE O(batch×nlist)
-            // expansion serves both the stats and the index layout
-            // (assignCellsDist; stats + refreshIvf's assignCells
-            // previously each ran the full expansion). Replayed
-            // batches skip the append, so replay cannot double-report.
-            val assigned = batch
-              .select(col("vec_id"), col("embedding"))
-              .transform(graft.pipeline.Similarity.assignCellsDist(
-                idx.centroids, "embedding", "vec_id"))
-              .localCheckpoint(true)
-            // same estimator (and 6-dp rounding) as
-            // Similarity.assignmentStats — the stamped mean must stay
-            // oracle-identical
-            val statsRow = assigned
-              .agg(count(lit(1)).cast("long").as("n"),
-                round(coalesce(avg(col("_dist")), lit(0.0d)), 6).as("m"))
-              .head()
-            idx.table.get.append(
-              assigned.drop("_dist").repartition(col("cell")),
-              summary = Map(BatchStamp -> stamp(queryName, batchId),
-                NVectorsKey -> statsRow.getLong(0).toString,
-                MeanSqDistKey -> statsRow.getDouble(1).toString))
-            committed += 1
-          }
-        }
+      queryName: String, checkpointDir: String): Long =
+    // no up-front stamp read: the index table is re-loaded (and its
+    // stamps re-read) every batch
+    runDoor(stream, None, queryName, checkpointDir,
+        rerunOnReplay = true) { (batch, batchId, _) =>
+      val idx = Similarity.loadIvf(batch.sparkSession, indexLoc)
+      !committedBatches(idx.table.get, queryName).contains(batchId) && {
+        // Drift signal on the commit: the batch's assignment quality
+        // against the FIXED centroids (count + mean squared L2 to the
+        // nearest cell) rides the snapshot summary, so "has the
+        // arriving distribution walked away from the quantizer" is
+        // answerable from the index table alone — the observable
+        // behind refreshIvf's documented re-fit-on-drift maintenance
+        // decision. ONE O(batch×nlist) expansion serves both the stats
+        // and the index layout (assignCellsDist; stats + refreshIvf's
+        // assignCells previously each ran the full expansion).
+        // Replayed batches skip the append, so replay cannot
+        // double-report.
+        val assigned = batch
+          .select(col("vec_id"), col("embedding"))
+          .transform(Similarity.assignCellsDist(
+            idx.centroids, "embedding", "vec_id"))
+          .localCheckpoint(true)
+        // same estimator (and 6-dp rounding) as
+        // Similarity.assignmentStats — the stamped mean must stay
+        // oracle-identical
+        val statsRow = assigned
+          .agg(count(lit(1)).cast("long").as("n"),
+            round(coalesce(avg(col("_dist")), lit(0.0d)), 6).as("m"))
+          .head()
+        idx.table.get.append(
+          assigned.drop("_dist").repartition(col("cell")),
+          summary = stamped(queryName, batchId) ++ Map(
+            NVectorsKey -> statsRow.getLong(0).toString,
+            MeanSqDistKey -> statsRow.getDouble(1).toString))
+        true
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+    }
 
   /** Streaming SEMANTIC dedup at ingest — the cosine mirror of
     * [[dedupIngestAvailable]]'s syntactic LSH suppression, composing
@@ -528,77 +470,58 @@ object StreamIngest {
   def semanticDedupIngestAvailable(stream: DataFrame, indexLoc: String,
       kept: LakeTable, cosineThreshold: Double, queryName: String,
       checkpointDir: String, vecCol: String = "embedding",
-      idCol: String = "vec_id"): Long = {
-    import org.apache.spark.sql.functions.{col, round}
-    import graft.pipeline.Similarity
-    import graft.functions.VectorExpressions.cosineNative
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val idx = Similarity.loadIvf(spark, indexLoc)
-          // one materialization feeds the probe, the mate join, and
-          // both appends — the assignment must not re-plan per consumer
-          val assigned = batch.select(col(idCol), col(vecCol))
-            .transform(Similarity.assignCells(idx.centroids, vecCol, idCol))
-            .localCheckpoint(true)
-          val cells = assigned.select(col("cell")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val state = idx.table.get
-            .read(col("cell").isin(cells: _*))
-            .select(col("cell"), col(idCol).as("_sid"),
-              col(vecCol).as("_sv"))
-          val byState = assigned.join(state, Seq("cell"))
-            // self-exclusion: a REPLAYED batch finds its own admitted
-            // rows in the state; without this, every one of them would
-            // dominate itself (cosine 1) and the replay would emit an
-            // empty kept set instead of the original one
-            .filter(col("_sid") =!= col(idCol))
-            .filter(round(cosineNative(col(vecCol), col("_sv")), 6)
-              >= cosineThreshold)
-            .select(col(idCol))
-          val a = assigned.select(col(idCol).as("_id_a"), col("cell"),
-            col(vecCol).as("_va"))
-          val b = assigned.select(col(idCol).as("_id_b"), col("cell"),
-            col(vecCol).as("_vb"))
-          val byMate = a.join(b, Seq("cell"))
-            .filter(col("_id_a") < col("_id_b"))
-            .filter(round(cosineNative(col("_va"), col("_vb")), 6)
-              >= cosineThreshold)
-            .select(col("_id_b").as(idCol))
-          val keptRows = assigned
-            .join(byState.union(byMate).distinct(), Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          val idxTable = idx.table.get
-          // two snapshot-isolated appends to two DIFFERENT tables, each
-          // self-guarded by its own stamp (the crash-consistency
-          // argument above never depended on their order): overlap them
-          // (guide §2.6)
-          graft.SparkEnv.overlap(
-            {
-              if (!seen.contains(batchId)) {
-                kept.append(keptRows,
-                  summary = Map(BatchStamp -> stamp(queryName, batchId)))
-                seen += batchId
-                committed += 1
-              }
-            },
-            if (!committedBatches(idxTable, queryName).contains(batchId))
-              idxTable.append(
-                keptRows.repartition(col("cell")),
-                summary = Map(BatchStamp -> stamp(queryName, batchId))))
-          ()
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      idCol: String = "vec_id"): Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = true) { (batch, batchId, seen) =>
+      import graft.functions.VectorExpressions.cosineNative
+      val idx = Similarity.loadIvf(batch.sparkSession, indexLoc)
+      // one materialization feeds the probe, the mate join, and
+      // both appends — the assignment must not re-plan per consumer
+      val assigned = batch.select(col(idCol), col(vecCol))
+        .transform(Similarity.assignCells(idx.centroids, vecCol, idCol))
+        .localCheckpoint(true)
+      val cells = assigned.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val idxTable = idx.table.get
+      val state = idxTable
+        .read(col("cell").isin(cells: _*))
+        .select(col("cell"), col(idCol).as("_sid"),
+          col(vecCol).as("_sv"))
+      val byState = assigned.join(state, Seq("cell"))
+        // self-exclusion: a REPLAYED batch finds its own admitted
+        // rows in the state; without this, every one of them would
+        // dominate itself (cosine 1) and the replay would emit an
+        // empty kept set instead of the original one
+        .filter(col("_sid") =!= col(idCol))
+        .filter(round(cosineNative(col(vecCol), col("_sv")), 6)
+          >= cosineThreshold)
+        .select(col(idCol))
+      val a = assigned.select(col(idCol).as("_id_a"), col("cell"),
+        col(vecCol).as("_va"))
+      val b = assigned.select(col(idCol).as("_id_b"), col("cell"),
+        col(vecCol).as("_vb"))
+      val byMate = a.join(b, Seq("cell"))
+        .filter(col("_id_a") < col("_id_b"))
+        .filter(round(cosineNative(col("_va"), col("_vb")), 6)
+          >= cosineThreshold)
+        .select(col("_id_b").as(idCol))
+      val keptRows = assigned
+        .join(byState.union(byMate).distinct(), Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      // two snapshot-isolated appends to two DIFFERENT tables, each
+      // self-guarded by its own stamp (the crash-consistency
+      // argument above never depended on their order): overlap them
+      // (guide §2.6)
+      val (appended, _) = graft.SparkEnv.overlap(
+        !seen.contains(batchId) && {
+          kept.append(keptRows, summary = stamped(queryName, batchId))
+          true
+        },
+        if (!committedBatches(idxTable, queryName).contains(batchId))
+          idxTable.append(keptRows.repartition(col("cell")),
+            summary = stamped(queryName, batchId)))
+      appended
+    }
 
   /** Summary key carrying a batch's admitted-token deltas per stratum
     * (`en:123|fr:45`) on budget-ingest snapshots. The running totals
@@ -654,74 +577,44 @@ object StreamIngest {
   def budgetIngestAvailable(stream: DataFrame, kept: LakeTable,
       budgetTokens: Long, queryName: String, checkpointDir: String,
       stratumCol: String = "lang", tokensCol: String = "n_tokens")
-      : Long = {
-    import org.apache.spark.sql.functions.{col, sum}
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(kept, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          val admitted = graft.pipeline.Sampling.tokenBudgetMix(
-              batch, budgetTokens, stratumCol = stratumCol,
-              tokensCol = tokensCol, spent = spentTokens(kept))
-            .localCheckpoint(true)
-          val delta = admitted.groupBy(col(stratumCol))
-            .agg(sum(col(tokensCol)).cast("long").as("t"))
-            .collect()
-            .map { r =>
-              // a NULL stratum has no delta-map identity (the spent
-              // fold is keyed by String) — reject loudly rather than
-              // NPE in encodeKey or silently mis-budget; '' round-trips
-              // fine (parseDelta accepts the empty key)
-              val k = r.getString(0)
-              require(k != null,
-                s"budget ingest: NULL $stratumCol in admitted batch — " +
-                  "strata must be non-null for the cross-batch ledger")
-              s"${encodeKey(k)}:${r.getLong(1)}"
-            }
-            .sorted.mkString("|")
-          kept.append(admitted, summary = Map(
-            BatchStamp -> stamp(queryName, batchId),
-            BudgetDelta -> delta))
-          seen += batchId
-          committed += 1
+      : Long =
+    runDoor(stream, Some(kept), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      val admitted = graft.pipeline.Sampling.tokenBudgetMix(
+          batch, budgetTokens, stratumCol = stratumCol,
+          tokensCol = tokensCol, spent = spentTokens(kept))
+        .localCheckpoint(true)
+      val delta = admitted.groupBy(col(stratumCol))
+        .agg(sum(col(tokensCol)).cast("long").as("t"))
+        .collect()
+        .map { r =>
+          // a NULL stratum has no delta-map identity (the spent
+          // fold is keyed by String) — reject loudly rather than
+          // NPE in encodeKey or silently mis-budget; '' round-trips
+          // fine (parseDelta accepts the empty key)
+          val k = r.getString(0)
+          require(k != null,
+            s"budget ingest: NULL $stratumCol in admitted batch — " +
+              "strata must be non-null for the cross-batch ledger")
+          s"${encodeKey(k)}:${r.getLong(1)}"
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+        .sorted.mkString("|")
+      kept.append(admitted,
+        summary = stamped(queryName, batchId) + (BudgetDelta -> delta))
+      true
+    }
 
   /** Start `stream` appending into `table`, drain everything currently
     * available, and stop. Returns the number of micro-batches that
     * actually committed (replays and empty batches are skipped).
     */
   def ingestAvailable(stream: DataFrame, table: LakeTable,
-      queryName: String, checkpointDir: String): Long = {
-    var committed = 0L
-    // One metadata read up front; this writer is the only one stamping
-    // `queryName`, so tracking its own commits locally avoids an O(#
-    // snapshots) metadata load + parse per micro-batch.
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(table, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          table.append(batch,
-            summary = Map(BatchStamp -> stamp(queryName, batchId)))
-          seen += batchId
-          committed += 1
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+      queryName: String, checkpointDir: String): Long =
+    runDoor(stream, Some(table), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      table.append(batch, summary = stamped(queryName, batchId))
+      true
+    }
 
   /** Per-batch cumulative vocabulary estimate stamped by
     * [[vocabSketchIngestAvailable]]: `k_used:kth_min:est_distinct`
@@ -749,60 +642,47 @@ object StreamIngest {
     * contract), and nothing ever re-reads the corpus.
     */
   def vocabSketchIngestAvailable(stream: DataFrame, sketch: LakeTable,
-      k: Int, queryName: String, checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions._
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(sketch, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          import graft.functions.ShingleExpressions.winnowFingerprints
-          import graft.functions.KmvAgg.kmvSketch
-          val batchHashes = batch.select(
-            explode(winnowFingerprints(
-              trim(lower(col("text"))), 3, 1)).as("h"))
-          // The current sketch is the max-batch_id slice, and every
-          // appended slice's batch_id is stamped on its snapshot — so
-          // the slice id comes from `seen` (the stamp fold this door
-          // already maintains), not from a per-batch max() scan job.
-          // A batch that appended nothing (sub-3-word docs) never
-          // entered `seen`, matching the table exactly.
-          val cur = sketch.read()
-          val prev =
-            if (seen.isEmpty) cur.select(col("h")).limit(0)
-            else cur.filter(col("batch_id") === seen.max)
-              .select(col("h"))
-          // ≤ k elements by the aggregate's contract — bounded collect
-          val hs = batchHashes.unionByName(prev)
-            .agg(kmvSketch(col("h"), k).as("sk"))
-            .head().getSeq[Long](0)
-          // a batch of only sub-3-word docs adds no grams: skip like an
-          // empty batch (replaying it is a no-op either way)
-          if (hs.nonEmpty) {
-            val kUsed = hs.length
-            val kth = hs.last
-            val est =
-              if (kUsed < k) kUsed.toLong
-              else math.round((kUsed - 1).toDouble *
-                math.pow(2.0, 60) / kth)
-            import spark.implicits._
-            sketch.append(
-              hs.map(h => (batchId, h)).toDF("batch_id", "h"),
-              summary = Map(BatchStamp -> stamp(queryName, batchId),
-                VocabEstKey -> s"$kUsed:$kth:$est"))
-            seen += batchId
-            committed += 1
-          }
-        }
+      k: Int, queryName: String, checkpointDir: String): Long =
+    runDoor(stream, Some(sketch), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, seen) =>
+      val spark = batch.sparkSession
+      import graft.functions.ShingleExpressions.winnowFingerprints
+      import graft.functions.KmvAgg.kmvSketch
+      val batchHashes = batch.select(
+        explode(winnowFingerprints(
+          trim(lower(col("text"))), 3, 1)).as("h"))
+      // The current sketch is the max-batch_id slice, and every
+      // appended slice's batch_id is stamped on its snapshot — so
+      // the slice id comes from `seen` (the stamp fold the runner
+      // already maintains), not from a per-batch max() scan job.
+      // A batch that appended nothing (sub-3-word docs) never
+      // entered `seen`, matching the table exactly.
+      val cur = sketch.read()
+      val prev =
+        if (seen.isEmpty) cur.select(col("h")).limit(0)
+        else cur.filter(col("batch_id") === seen.max)
+          .select(col("h"))
+      // ≤ k elements by the aggregate's contract — bounded collect
+      val hs = batchHashes.unionByName(prev)
+        .agg(kmvSketch(col("h"), k).as("sk"))
+        .head().getSeq[Long](0)
+      // a batch of only sub-3-word docs adds no grams: skip like an
+      // empty batch (replaying it is a no-op either way)
+      hs.nonEmpty && {
+        val kUsed = hs.length
+        val kth = hs.last
+        val est =
+          if (kUsed < k) kUsed.toLong
+          else math.round((kUsed - 1).toDouble *
+            math.pow(2.0, 60) / kth)
+        import spark.implicits._
+        sketch.append(
+          hs.map(h => (batchId, h)).toDF("batch_id", "h"),
+          summary = stamped(queryName, batchId) +
+            (VocabEstKey -> s"$kUsed:$kth:$est"))
+        true
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
-  }
+    }
 
   /** Per-batch boilerplate-mass ledger stamped by
     * [[freqSketchIngestAvailable]]:
@@ -836,58 +716,46 @@ object StreamIngest {
   def freqSketchIngestAvailable(stream: DataFrame, grid: LakeTable,
       depth: Int, width: Int, probes: Seq[String], queryName: String,
       checkpointDir: String): Long = {
-    import org.apache.spark.sql.functions._
     require(probes.nonEmpty, "freqSketchIngest: probe set is empty")
-    var committed = 0L
-    val seen = scala.collection.mutable.Set.empty[Long] ++=
-      committedBatches(grid, queryName)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!seen.contains(batchId) && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          import graft.functions.ShingleKernel.cmsCell
-          // ≤ depth·width cells by the grid's construction — bounded
-          // collects, never vocabulary-sized; the packed-cell decode
-          // lives in ONE place (Sketches.cmsGrid)
-          // the batch's grid and the cumulative table grid are
-          // independent bounded collects — overlap them (guide §2.6)
-          val (bmap, prev) = graft.SparkEnv.overlap(
-            graft.pipeline.Sketches
-              .cmsGrid(batch, "text", depth, width, Seq.empty)
-              .groupBy(col("cell")).agg(sum(col("cnt")).as("cnt"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-            grid.read()
-              .groupBy(col("cell")).agg(sum(col("cnt")).as("cnt"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-          val cum = (prev.keySet ++ bmap.keySet).iterator
-            .map(c => c -> (prev.getOrElse(c, 0L) + bmap.getOrElse(c, 0L)))
-            .toMap
-          def mass(g: Map[Long, Long]): Long = probes.map { w =>
-            (0 until depth).map(dd =>
-              g.getOrElse(cmsCell(dd, w, width), 0L)).min
-          }.sum
-          // hash row 0's cells (< width) partition the batch's words,
-          // so their counter sum IS the batch token count — no second
-          // corpus pass for the ledger denominator
-          val batchTokens = bmap.collect {
-            case (c, n) if c < width => n
-          }.sum
-          import spark.implicits._
-          grid.append(
-            bmap.toSeq.sortBy(_._1)
-              .map { case (c, n) => (batchId, c, n) }
-              .toDF("batch_id", "cell", "cnt"),
-            summary = Map(BatchStamp -> stamp(queryName, batchId),
-              FreqMassKey -> s"$batchTokens:${mass(bmap)}:${mass(cum)}"))
-          seen += batchId
-          committed += 1
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    committed
+    runDoor(stream, Some(grid), queryName, checkpointDir,
+        rerunOnReplay = false) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      import graft.functions.ShingleKernel.cmsCell
+      // ≤ depth·width cells by the grid's construction — bounded
+      // collects, never vocabulary-sized; the packed-cell decode
+      // lives in ONE place (Sketches.cmsGrid)
+      // the batch's grid and the cumulative table grid are
+      // independent bounded collects — overlap them (guide §2.6)
+      val (bmap, prev) = graft.SparkEnv.overlap(
+        graft.pipeline.Sketches
+          .cmsGrid(batch, "text", depth, width, Seq.empty)
+          .groupBy(col("cell")).agg(sum(col("cnt")).as("cnt"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        grid.read()
+          .groupBy(col("cell")).agg(sum(col("cnt")).as("cnt"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      val cum = (prev.keySet ++ bmap.keySet).iterator
+        .map(c => c -> (prev.getOrElse(c, 0L) + bmap.getOrElse(c, 0L)))
+        .toMap
+      def mass(g: Map[Long, Long]): Long = probes.map { w =>
+        (0 until depth).map(dd =>
+          g.getOrElse(cmsCell(dd, w, width), 0L)).min
+      }.sum
+      // hash row 0's cells (< width) partition the batch's words,
+      // so their counter sum IS the batch token count — no second
+      // corpus pass for the ledger denominator
+      val batchTokens = bmap.collect {
+        case (c, n) if c < width => n
+      }.sum
+      import spark.implicits._
+      grid.append(
+        bmap.toSeq.sortBy(_._1)
+          .map { case (c, n) => (batchId, c, n) }
+          .toDF("batch_id", "cell", "cnt"),
+        summary = stamped(queryName, batchId) +
+          (FreqMassKey -> s"$batchTokens:${mass(bmap)}:${mass(cum)}"))
+      true
+    }
   }
 
   /** The re-fit decision for [[refitIvfOnDrift]], and its evidence:
@@ -949,19 +817,16 @@ object StreamIngest {
     if (covered || lastMean <= driftFactor * fitMean)
       (RefitDecision(refit = false, lastBatch, lastMean), fitMean)
     else {
-      val idx = graft.pipeline.Similarity.loadIvf(spark, indexLoc)
-      val data = idx.table.get.read()
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("embedding"))
+      val data = Similarity.loadIvf(spark, indexLoc).table.get.read()
+        .select(col("vec_id"), col("embedding"))
         // the re-fit reads its own input TWICE (quantizer train sample
         // + full re-assignment) and persistIvf replaces the files it
         // came from — materialize first
         .localCheckpoint(true)
-      val refitted = graft.pipeline.Similarity
+      val refitted = Similarity
         .buildIvfDeterministic(data, nlist, maxTrainRows = maxTrainRows)
-      val t2 = graft.pipeline.Similarity.persistIvf(refitted, indexLoc)
-      val (_, newMean) = graft.pipeline.Similarity
-        .assignmentStats(data, refitted.centroids)
+      val t2 = Similarity.persistIvf(refitted, indexLoc)
+      val (_, newMean) = Similarity.assignmentStats(data, refitted.centroids)
       t2.setProperties(Map(FitMeanSqKey -> newMean.toString,
         RefitAfterBatchKey -> lastBatch.toString))
       (RefitDecision(refit = true, lastBatch, lastMean), newMean)

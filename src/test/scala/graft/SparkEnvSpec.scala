@@ -36,6 +36,24 @@ class SparkEnvSpec extends AnyFunSuite {
     assert(ex.getMessage == "fb boom")
   }
 
+  test("a calling-side failure waits for the pooled side and carries " +
+      "its failure as suppressed") {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val ex = intercept[IllegalStateException] {
+      SparkEnv.overlap(throw new IllegalStateException("fa boom"), {
+        Thread.sleep(300)
+        done.set(true)
+        throw new IllegalArgumentException("fb boom")
+      })
+    }
+    // the pooled side finished before the failure surfaced (a caller
+    // retrying a batch must not race a still-running append) ...
+    assert(done.get(), "fa's failure propagated while fb was still running")
+    assert(ex.getMessage == "fa boom")
+    // ... and its own failure is not lost
+    assert(ex.getSuppressed.map(_.getMessage).toSeq == Seq("fb boom"))
+  }
+
   test("overlapped Spark actions agree with sequential ones") {
     val df = s.range(1000).toDF("id").localCheckpoint(true)
     val (a, b) = SparkEnv.overlap(df.count(), df.filter("id % 2 = 0").count())

@@ -12,6 +12,40 @@ class StreamingSpec extends AnyFunSuite {
   import TestSpark._
   private lazy val s = spark
 
+  /** A file stream over `frames` as ordered arrival waves: each frame
+    * lands as one parquet file whose mtime pins its trigger order (the
+    * file source batches by modification time — write timing alone is
+    * a race). Call the returned factory once per run.
+    */
+  private def waveStream(base: java.nio.file.Path,
+      frames: Seq[org.apache.spark.sql.DataFrame])
+      : () => org.apache.spark.sql.DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val waves = base.resolve("waves")
+    java.nio.file.Files.createDirectories(waves)
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val tmp = base.resolve(s"w$i")
+      df.coalesce(1).write.parquet(tmp.toString)
+      val part = java.nio.file.Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val dst = waves.resolve(s"wave-$i.parquet")
+      java.nio.file.Files.move(part, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - (frames.size - i) * 60000L))
+    }
+    val schema = frames.head.schema
+    () => s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(waves.toString)
+  }
+
+  /** The documents fixture in two waves: even doc ids, then odd. */
+  private def docWaves(base: java.nio.file.Path,
+      docs: org.apache.spark.sql.DataFrame)
+      : () => org.apache.spark.sql.DataFrame =
+    waveStream(base, Seq(docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1)))
+
   test("streamed hourly counts equal the batch aggregation") {
     val events = EventStreams.readEvents(s, s"$sf/events.parquet")
     val q = EventStreams.hourlyCounts(events)
@@ -485,26 +519,12 @@ class StreamingSpec extends AnyFunSuite {
     val even = all.filter(_._1 % 2 == 0)
     val w1 = (odd ++ twin(even, 1000L)).toDF("vec_id", "embedding")
     val w2 = twin(odd, 1000L).toDF("vec_id", "embedding")
-    val waves = java.nio.file.Files.createTempDirectory("semw-test-")
-    Seq(w1 -> 1, w2 -> 2).foreach { case (df, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"semw$i-")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dst = waves.resolve(s"wave-$i.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - (3 - i) * 60000L))
-    }
-    def stream = s.readStream.schema(w1.schema)
-      .option("maxFilesPerTrigger", "1").parquet(waves.toString)
+    val stream = waveStream(base, Seq(w1, w2))
     val idxT = graft.pipeline.Similarity.loadIvf(s, idxLoc).table.get
     val seedRows = idxT.read().count()
     val kept1 = graft.lake.LakeTable.create(s,
       base.resolve("kept1").toString, Left(idxT.read().schema))
-    val n = StreamIngest.semanticDedupIngestAvailable(stream, idxLoc,
+    val n = StreamIngest.semanticDedupIngestAvailable(stream(), idxLoc,
       kept1, cosineThreshold = 0.98, "sd", base.resolve("c1").toString)
     assert(n == 2, s"expected 2 micro-batches, got $n")
     val keptIds = kept1.read().select("vec_id").as[Long].collect().sorted
@@ -524,7 +544,7 @@ class StreamingSpec extends AnyFunSuite {
     // appends must be skipped (no double-indexed vectors)
     val kept2 = graft.lake.LakeTable.create(s,
       base.resolve("kept2").toString, Left(idxT.read().schema))
-    val n2 = StreamIngest.semanticDedupIngestAvailable(stream, idxLoc,
+    val n2 = StreamIngest.semanticDedupIngestAvailable(stream(), idxLoc,
       kept2, cosineThreshold = 0.98, "sd", base.resolve("c2").toString)
     assert(n2 == 2)
     assert(kept2.read().select("vec_id").as[Long].collect().sorted.toSeq
@@ -536,18 +556,10 @@ class StreamingSpec extends AnyFunSuite {
   test("quality-gate door equals the batch gate and skips replays") {
     val base = java.nio.file.Files.createTempDirectory("qgate-test-")
     val docs = s.read.parquet(s"$sf/documents.parquet")
-    // two arrival waves: even doc ids, then odd
-    val wavesDir = base.resolve("waves").toString
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.parquet(s"$wavesDir/w0")
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.parquet(s"$wavesDir/w1")
-    def stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$wavesDir/w*")
+    val stream = docWaves(base, docs)
     val kept = graft.lake.LakeTable.create(s,
       base.resolve("kept").toString, Left(docs.schema))
-    val n = StreamIngest.qualityGateIngestAvailable(stream, kept, "qg",
+    val n = StreamIngest.qualityGateIngestAvailable(stream(), kept, "qg",
       base.resolve("ckpt").toString)
     assert(n == 2, s"expected 2 micro-batches, got $n")
     val streamed = kept.read().select("doc_id")
@@ -558,7 +570,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch,
       "door verdicts are per-doc rules — must equal the batch gate")
     // fresh checkpoint replays both batch ids: stamps must reject them
-    val n2 = StreamIngest.qualityGateIngestAvailable(stream, kept, "qg",
+    val n2 = StreamIngest.qualityGateIngestAvailable(stream(), kept, "qg",
       base.resolve("ckpt2").toString)
     assert(n2 == 0 && kept.read().count() == batch.size,
       "replayed batches must not double-land")
@@ -568,14 +580,7 @@ class StreamingSpec extends AnyFunSuite {
       "equals the batch classifier, idempotent under replay") {
     val base = java.nio.file.Files.createTempDirectory("cgate-test-")
     val docs = s.read.parquet(s"$sf/documents.parquet")
-    val wavesDir = base.resolve("waves").toString
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.parquet(s"$wavesDir/w0")
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.parquet(s"$wavesDir/w1")
-    def stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$wavesDir/w*")
+    val stream = docWaves(base, docs)
     val positive = col("source").isin("src0", "src1")
     val (w, p) = graft.pipeline.TextAnalysis.nbTrain(docs, positive)
     val weights = w.localCheckpoint(); val prior = p.localCheckpoint()
@@ -588,7 +593,7 @@ class StreamingSpec extends AnyFunSuite {
     val thr = xs((xs.length + 1) / 2 - 1)
     val kept = graft.lake.LakeTable.create(s,
       base.resolve("kept").toString, Left(docs.schema))
-    val n = StreamIngest.classifierGateIngestAvailable(stream, weights,
+    val n = StreamIngest.classifierGateIngestAvailable(stream(), weights,
       prior, thr, kept, "cg", base.resolve("ckpt").toString)
     assert(n == 2)
     val streamed = kept.read().select("doc_id")
@@ -599,7 +604,7 @@ class StreamingSpec extends AnyFunSuite {
       "static model + per-doc verdicts must equal the batch classifier")
     assert(batch.nonEmpty && batch.size < docs.count(),
       "the calibrated cut must keep a strict non-empty subset")
-    val n2 = StreamIngest.classifierGateIngestAvailable(stream, weights,
+    val n2 = StreamIngest.classifierGateIngestAvailable(stream(), weights,
       prior, thr, kept, "cg", base.resolve("ckpt2").toString)
     assert(n2 == 0 && kept.read().count() == batch.size,
       "replayed batches must not double-land")
@@ -609,14 +614,7 @@ class StreamingSpec extends AnyFunSuite {
       "no near-dup pair survives, replay idempotent") {
     val base = java.nio.file.Files.createTempDirectory("curate-test-")
     val docs = s.read.parquet(s"$sf/documents.parquet")
-    val wavesDir = base.resolve("waves").toString
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.parquet(s"$wavesDir/w0")
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.parquet(s"$wavesDir/w1")
-    def stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$wavesDir/w*")
+    val stream = docWaves(base, docs)
     val bucket = graft.pipeline.Sampling.bucketCol(col("doc_id"))
     val bench = docs.filter(bucket >= 90)
       .select(explode(graft.functions.ShingleExpressions.hashedShingles(
@@ -636,7 +634,7 @@ class StreamingSpec extends AnyFunSuite {
     graft.pipeline.IncrementalDedup.build(docs.limit(0), idxLoc)
     val kept = graft.lake.LakeTable.create(s,
       base.resolve("kept").toString, Left(docs.schema))
-    val n = StreamIngest.curateIngestAvailable(stream, bench, weights,
+    val n = StreamIngest.curateIngestAvailable(stream(), bench, weights,
       prior, thr, benchK = 8, idxLoc, kept, dedupThreshold = 0.5,
       "cu", base.resolve("ckpt").toString)
     assert(n == 2)
@@ -689,13 +687,66 @@ class StreamingSpec extends AnyFunSuite {
       "admitted counts must sum to the landed rows")
     // replay: fresh checkpoint, same stamps -> nothing double-lands,
     // and no second metrics record appears for a replayed batch
-    val n2 = StreamIngest.curateIngestAvailable(stream, bench, weights,
+    val n2 = StreamIngest.curateIngestAvailable(stream(), bench, weights,
       prior, thr, benchK = 8, idxLoc, kept, dedupThreshold = 0.5,
       "cu", base.resolve("ckpt2").toString)
     assert(n2 == 0 && kept.read().count() == keptIds.size)
     val stamps2 = kept.meta.snapshots.flatMap(
       _.summary.get(StreamIngest.BatchStamp)).filter(_.startsWith("cu:"))
     assert(stamps2.size == 2, s"replay must not re-stamp: $stamps2")
+  }
+
+  test("dedup, decontamination and budget doors: a fresh-checkpoint " +
+      "replay commits nothing and leaves every table unchanged") {
+    val base = java.nio.file.Files.createTempDirectory("replay-test-")
+    val docs = s.read.parquet(s"$sf/documents.parquet")
+    val stream = docWaves(base, docs)
+    def ckpt(name: String) = base.resolve(name).toString
+    def rows(t: graft.lake.LakeTable) = t.read().count()
+    // dedup door: the kept table AND both index halves (a replayed
+    // index append would double-count shingles in later probes)
+    val idxLoc = ckpt("index")
+    graft.pipeline.IncrementalDedup.build(docs.limit(0), idxLoc)
+    val idx = graft.pipeline.IncrementalDedup.load(s, idxLoc)
+    val dd = graft.lake.LakeTable.create(s, ckpt("dd"), Left(docs.schema))
+    def dedup(c: String) = StreamIngest.dedupIngestAvailable(stream(),
+      idxLoc, dd, threshold = 0.5, "dd", ckpt(c))
+    assert(dedup("dd1") == 2)
+    val ddRows = Seq(rows(dd), rows(idx.tokens), rows(idx.bands))
+    assert(ddRows.forall(_ > 0), s"dedup door landed nothing: $ddRows")
+    assert(dedup("dd2") == 0, "replayed dedup batches must not commit")
+    assert(Seq(rows(dd), rows(idx.tokens), rows(idx.bands)) == ddRows)
+    // decontamination door
+    val bench = docs.filter(graft.pipeline.Sampling.bucketCol(col("doc_id"))
+        >= 90)
+      .select(explode(graft.functions.ShingleExpressions.hashedShingles(
+        trim(lower(col("text"))), 8)).as("_gram"))
+      .distinct().localCheckpoint(true)
+    val dc = graft.lake.LakeTable.create(s, ckpt("dc"), Left(docs.schema))
+    def decont(c: String) = StreamIngest.decontaminateIngestAvailable(
+      stream(), bench, dc, k = 8, "dc", ckpt(c))
+    assert(decont("dc1") == 2)
+    val dcRows = rows(dc)
+    assert(dcRows > 0 && dcRows < docs.count(), s"kept $dcRows")
+    assert(decont("dc2") == 0, "replayed decontamination batches must " +
+      "not commit")
+    assert(rows(dc) == dcRows)
+    // budget door: rows AND the cross-batch token ledger
+    def score(df: org.apache.spark.sql.DataFrame) =
+      graft.pipeline.TextAnalysis.qualityScore(df)
+        .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")))
+        .select(col("doc_id"), col("lang"), col("n_tokens"),
+          col("quality_score"))
+    val bu = graft.lake.LakeTable.create(s, ckpt("bu"),
+      Left(score(docs).schema))
+    def budget(c: String) = StreamIngest.budgetIngestAvailable(
+      score(stream()), bu, budgetTokens = 5000L, "bu", ckpt(c))
+    assert(budget("bu1") == 2)
+    val (buRows, spent) = (rows(bu), StreamIngest.spentTokens(bu))
+    assert(buRows > 0 && spent.nonEmpty, s"budget door: $buRows $spent")
+    assert(budget("bu2") == 0, "replayed budget batches must not commit")
+    assert(rows(bu) == buRows && StreamIngest.spentTokens(bu) == spent,
+      "a replay must neither land rows nor move the ledger")
   }
 
   test("refitIvfOnDrift edges: missing baseline throws a clear message; " +
@@ -755,30 +806,12 @@ class StreamingSpec extends AnyFunSuite {
     import graft.functions.KmvAgg.kmvSketch
     val base = java.nio.file.Files.createTempDirectory("vocab-test-")
     val docs = s.read.parquet(s"$sf/documents.parquet")
-    // two ordered waves: even doc ids, then odd (the scenario shape)
-    val waves = base.resolve("waves")
-    java.nio.file.Files.createDirectories(waves)
-    Seq(docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-      .zipWithIndex.foreach { case (df, i) =>
-        val tmp = base.resolve(s"w$i")
-        df.coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val part = java.nio.file.Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = waves.resolve(s"wave-$i.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - (2 - i) * 60000L))
-      }
-    def stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(waves.toString)
+    val stream = docWaves(base, docs)
     val skT = graft.lake.LakeTable.create(s,
       base.resolve("sketch").toString,
       Left(Seq.empty[(Long, Long)].toDF("batch_id", "h").schema))
     val k = 64
-    val n = StreamIngest.vocabSketchIngestAvailable(stream, skT, k,
+    val n = StreamIngest.vocabSketchIngestAvailable(stream(), skT, k,
       "v", base.resolve("ckpt").toString)
     assert(n == 2, s"expected 2 sketch commits, got $n")
     // batch 1's cumulative sketch must equal sketching the FULL corpus
@@ -806,7 +839,7 @@ class StreamingSpec extends AnyFunSuite {
     // a fresh checkpoint replays both batch ids — the stamps must
     // reject them and leave the table unchanged
     val rows = skT.read().count()
-    val n2 = StreamIngest.vocabSketchIngestAvailable(stream, skT, k,
+    val n2 = StreamIngest.vocabSketchIngestAvailable(stream(), skT, k,
       "v", base.resolve("ckpt2").toString)
     assert(n2 == 0 && skT.read().count() == rows,
       s"replay committed $n2 batches")
@@ -819,31 +852,14 @@ class StreamingSpec extends AnyFunSuite {
     import graft.functions.ShingleKernel.cmsCell
     val base = java.nio.file.Files.createTempDirectory("freq-test-")
     val docs = s.read.parquet(s"$sf/documents.parquet")
-    val waves = base.resolve("waves")
-    java.nio.file.Files.createDirectories(waves)
-    Seq(docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-      .zipWithIndex.foreach { case (df, i) =>
-        val tmp = base.resolve(s"w$i")
-        df.coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val part = java.nio.file.Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = waves.resolve(s"wave-$i.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - (2 - i) * 60000L))
-      }
-    def stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(waves.toString)
+    val stream = docWaves(base, docs)
     val gridT = graft.lake.LakeTable.create(s,
       base.resolve("grid").toString,
       Left(Seq.empty[(Long, Long, Long)]
         .toDF("batch_id", "cell", "cnt").schema))
     val (depth, width) = (4, 256)
     val probes = Seq("the", "a")
-    val n = StreamIngest.freqSketchIngestAvailable(stream, gridT,
+    val n = StreamIngest.freqSketchIngestAvailable(stream(), gridT,
       depth, width, probes, "f", base.resolve("ckpt").toString)
     assert(n == 2, s"expected 2 grid commits, got $n")
     // merge = addition: summing the per-batch grids equals building
@@ -884,7 +900,7 @@ class StreamingSpec extends AnyFunSuite {
       s"cumulative mass shrank: $stamps")
     // fresh checkpoint replays both batch ids — stamps reject them
     val rows = gridT.read().count()
-    val n2 = StreamIngest.freqSketchIngestAvailable(stream, gridT,
+    val n2 = StreamIngest.freqSketchIngestAvailable(stream(), gridT,
       depth, width, probes, "f", base.resolve("ckpt2").toString)
     assert(n2 == 0 && gridT.read().count() == rows,
       s"replay committed $n2 batches")
