@@ -28,9 +28,6 @@ class LakeTable(val spark: SparkSession, val location: String) {
 
   def properties: Map[String, String] = meta.properties
 
-  def mergeMode: String =
-    meta.properties.getOrElse("merge_mode", "merge-on-read")
-
   // ---- reads ----------------------------------------------------------
 
   def read(): DataFrame = Scan.read(spark, meta, Scan.ReadOptions())
@@ -132,9 +129,15 @@ class LakeTable(val spark: SparkSession, val location: String) {
     df.select(cols: _*)
   }
 
-  private def sortedBy(m: TableMetadata): Seq[String] =
-    m.properties.get("sorted_by").toSeq.flatMap(_.split(",")).map(_.trim)
-      .filter(_.nonEmpty)
+  /** The table-policy data write: default spec, current schema,
+    * `sorted_by` order and [[writeOpts]].
+    */
+  private def writeData(m: TableMetadata, seq: Long, df: DataFrame)
+      : Seq[DataFileEntry] =
+    Writer.writeDataFiles(df, location, m.defaultSpec, m.currentSchemaId, seq,
+      m.properties.get("sorted_by").toSeq.flatMap(_.split(",")).map(_.trim)
+        .filter(_.nonEmpty),
+      writeOpts(m))
 
   /** Parquet writer options derived from table properties.
     * `bloom_filter_columns` = comma list of high-cardinality columns →
@@ -160,6 +163,73 @@ class LakeTable(val spark: SparkSession, val location: String) {
 
   /** Null-safe "row matches": DML predicates treat null as no-match. */
   private def matches(cond: Column): Column = coalesce(cond, lit(false))
+
+  private def mergeOnRead(m: TableMetadata): Boolean =
+    m.properties.getOrElse("merge_mode", "merge-on-read") == "merge-on-read"
+
+  /** Rows with `set` applied over the table columns (UPDATE's rows and
+    * MERGE's matched rows): `$row_id` kept, `$last_updated_sequence_number`
+    * stamped with `seq` (v3 row lineage, `sql:133-135`).
+    */
+  private def assign(rows: DataFrame, target: StructType,
+      set: Map[String, Column], seq: Long): DataFrame =
+    rows.select(target.fields.toSeq.map { f =>
+      set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
+    } ++ Seq(col(RowId), lit(seq).cast(LongType).as(LastUpdatedSeq)): _*)
+
+  /** The files a key set can touch, pruned by the key set's min/max box
+    * (one metadata-sized agg over `keys`, whose `keyCols` are the table's
+    * `tableCols`). Under `===` matching (MERGE) a null key matches no
+    * row, so an empty key set or an all-null key column touches no file.
+    * Under null-safe `<=>` matching (equality deletes) an empty key set
+    * touches no file, and any null key defeats the box: a null never
+    * satisfies a range predicate, yet it matches null-keyed rows in any
+    * file — so every file stays, correctness over pruning.
+    */
+  private def keyCandidates(m: TableMetadata, files: Seq[DataFileEntry],
+      keys: DataFrame, keyCols: Seq[String], tableCols: Seq[String],
+      nullSafe: Boolean): Seq[DataFileEntry] = {
+    val aggs = keyCols.indices.flatMap { i =>
+      val k = col(keyCols(i))
+      Seq(min(k).as(s"_mn_$i"), max(k).as(s"_mx_$i"),
+        count(when(k.isNull, 1)).as(s"_nn_$i"))
+    }
+    val b = keys.agg(aggs.head, aggs.tail: _*).head()
+    val box = tableCols.indices.map(i =>
+      (tableCols(i), b.getAs[Any](s"_mn_$i"), b.getAs[Any](s"_mx_$i")))
+    if (nullSafe && keyCols.indices.exists(i => b.getAs[Long](s"_nn_$i") > 0))
+      files
+    else if (box.exists(_._2 == null)) Nil
+    else Scan.pruneFiles(m, files, Some(box.map { case (n, mn, mx) =>
+      col(n) >= lit(mn) && col(n) <= lit(mx) }.reduce(_ && _)))
+  }
+
+  /** Copy-on-write: of the `candidates`, rewrite only the files holding
+    * a row that `hits` selects, with `rewrite` giving their new content,
+    * and commit them as removed. Finding those files is a metadata-sized
+    * collect of file paths, matched by file NAME via a set lookup — an
+    * exists/endsWith scan would be O(files × hits) driver work at
+    * 100k-file scale. None when no candidate holds a hit.
+    */
+  private def rewriteFiles(m: TableMetadata, operation: String,
+      branch: String, candidates: Seq[DataFileEntry],
+      dels: Seq[DeleteFileEntry], hits: DataFrame => DataFrame,
+      rewrite: DataFrame => DataFrame): Option[Snapshot] = {
+    if (candidates.isEmpty) return None
+    val hitNames = hits(Scan.readEntries(spark, m, candidates, dels,
+        withPath = true))
+      .select(Scan.GraftPath).distinct().collect()
+      .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
+      .toSet
+    val affected = candidates.filter(e =>
+      hitNames.contains(e.path.stripPrefix("data/")))
+    if (affected.isEmpty) return None
+    val entries = writeData(m, m.lastSequenceNumber + 1,
+      rewrite(Scan.readEntries(spark, m, affected, dels)))
+    Some(commitSnapshot(m, operation,
+      Manifest(entries.toList, Nil, affected.map(_.path).toList, Nil),
+      branch, 0))
+  }
 
   /** Optimistic-concurrency retry: re-run `body` when its commit loses
     * the metadata CAS to a concurrent writer (the Iceberg commit loop).
@@ -223,8 +293,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
     val withLin =
       if (Scan.rowLineageEnabled(m)) Writer.withLineage(aligned, m.nextRowId, seq)
       else aligned
-    val entries = Writer.writeDataFiles(withLin, location, m.defaultSpec,
-      m.currentSchemaId, seq, sortedBy(m), writeOpts(m))
+    val entries = writeData(m, seq, withLin)
     val rows = entries.map(_.recordCount).sum
     commitSnapshot(m, "append",
       Manifest(entries.toList, Nil, Nil, Nil), branch, rows, summary)
@@ -239,37 +308,16 @@ class LakeTable(val spark: SparkSession, val location: String) {
     val (files, dels) = liveOf(m, branch)
     val candidates = Scan.pruneFiles(m, files, Some(cond))
     if (candidates.isEmpty) return None
-    val seq = m.lastSequenceNumber + 1
-    if (mergeMode == "merge-on-read") {
+    if (mergeOnRead(m)) {
       require(Scan.rowLineageEnabled(m), "merge-on-read requires row lineage")
       val matched = Scan.readEntries(spark, m, candidates, dels)
         .filter(matches(cond))
-      Writer.writeDeleteFile(matched.select(col(RowId)), location, seq) match {
-        case None => None
-        case Some(entry) => Some(commitSnapshot(m, "delete",
-          Manifest(Nil, List(entry), Nil, Nil), branch, 0))
-      }
-    } else {
-      // CoW: find files actually containing matches (metadata-sized
-      // collect of file paths), rewrite only those without matched rows.
-      // Matching is by file NAME via a set lookup — an exists/endsWith
-      // scan would be O(files × hits) driver work at 100k-file scale.
-      val withPath = Scan.readEntries(spark, m, candidates, dels, withPath = true)
-      val hitNames = withPath.filter(matches(cond))
-        .select(Scan.GraftPath).distinct().collect()
-        .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
-        .toSet
-      val affected = candidates.filter(e =>
-        hitNames.contains(e.path.stripPrefix("data/")))
-      if (affected.isEmpty) return None
-      val survivors = Scan.readEntries(spark, m, affected, dels)
-        .filter(!matches(cond))
-      val entries = Writer.writeDataFiles(survivors, location, m.defaultSpec,
-        m.currentSchemaId, seq, sortedBy(m), writeOpts(m))
-      Some(commitSnapshot(m, "delete",
-        Manifest(entries.toList, Nil, affected.map(_.path).toList, Nil),
-        branch, 0))
-    }
+      Writer.writeDeleteFile(matched.select(col(RowId)), location,
+          m.lastSequenceNumber + 1)
+        .map(d => commitSnapshot(m, "delete",
+          Manifest(Nil, List(d), Nil, Nil), branch, 0))
+    } else rewriteFiles(m, "delete", branch, candidates, dels,
+      _.filter(matches(cond)), _.filter(!matches(cond)))
   }
 
   /** DELETE by key set — the public Iceberg v2/v3 EQUALITY-delete shape
@@ -299,54 +347,26 @@ class LakeTable(val spark: SparkSession, val location: String) {
         .getOrElse(throw new IllegalArgumentException(
           s"equality delete key '$c' is not a table column"))
     }
-    val seq = m.lastSequenceNumber + 1
-    if (mergeMode == "merge-on-read") {
-      Writer.writeEqualityDeleteFile(keys, keyCols, fieldIds,
-        location, seq) match {
-        case None => None
-        case Some(entry) => Some(commitSnapshot(m, "delete",
-          Manifest(Nil, List(entry), Nil, Nil), branch, 0))
-      }
-    } else {
-      // CoW: prune candidate files by the key set's bounding box (one
-      // metadata-sized agg over the key set), then rewrite only files
-      // that actually contain a matching row — the key set broadcasts
-      // in both the hit-detection and the survivor anti-join.
+    if (mergeOnRead(m))
+      Writer.writeEqualityDeleteFile(keys, keyCols, fieldIds, location,
+          m.lastSequenceNumber + 1)
+        .map(d => commitSnapshot(m, "delete",
+          Manifest(Nil, List(d), Nil, Nil), branch, 0))
+    else {
+      // CoW: the key set (persisted: the box agg reads it, then it
+      // broadcasts in both the hit-detection semi-join and the survivor
+      // anti-join) prunes by its box, then only files that actually
+      // contain a matching row are rewritten.
       keys.persist()
       try {
         val (files, dels) = liveOf(m, branch)
-        val boundsAggs = keyCols.flatMap(k =>
-          Seq(min(col(k)).as(s"_mn_$k"), max(col(k)).as(s"_mx_$k")))
-        val b = keys.agg(boundsAggs.head, boundsAggs.tail: _*).head()
-        val bounds = keyCols.map(k =>
-          (b.getAs[Any](s"_mn_$k"), b.getAs[Any](s"_mx_$k")))
-        val candidates =
-          if (bounds.exists { case (mn, mx) => mn == null || mx == null }) Nil
-          else Scan.pruneFiles(m, files, Some(
-            keyCols.zip(bounds).map { case (k, (mn, mx)) =>
-              col(k) >= lit(mn) && col(k) <= lit(mx)
-            }.reduce(_ && _)))
-        if (candidates.isEmpty) return None
         val keyDf = broadcast(keys.select(keyCols.map(c =>
           col(c).as(s"_k_$c")): _*).distinct())
-        def keyEq(df: DataFrame) = keyCols.map(c =>
-          df(c) <=> keyDf(s"_k_$c")).reduce(_ && _)
-        val withPath = Scan.readEntries(spark, m, candidates, dels,
-          withPath = true)
-        val hitNames = withPath.join(keyDf, keyEq(withPath), "left_semi")
-          .select(Scan.GraftPath).distinct().collect()
-          .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
-          .toSet
-        val affected = candidates.filter(e =>
-          hitNames.contains(e.path.stripPrefix("data/")))
-        if (affected.isEmpty) return None
-        val all = Scan.readEntries(spark, m, affected, dels)
-        val survivors = all.join(keyDf, keyEq(all), "left_anti")
-        val entries = Writer.writeDataFiles(survivors, location,
-          m.defaultSpec, m.currentSchemaId, seq, sortedBy(m), writeOpts(m))
-        Some(commitSnapshot(m, "delete",
-          Manifest(entries.toList, Nil, affected.map(_.path).toList, Nil),
-          branch, 0))
+        def keyed(df: DataFrame, how: String) = df.join(keyDf,
+          keyCols.map(c => df(c) <=> keyDf(s"_k_$c")).reduce(_ && _), how)
+        rewriteFiles(m, "delete", branch,
+          keyCandidates(m, files, keys, keyCols, keyCols, nullSafe = true),
+          dels, keyed(_, "left_semi"), keyed(_, "left_anti"))
       } finally keys.unpersist()
     }
   }
@@ -364,46 +384,20 @@ class LakeTable(val spark: SparkSession, val location: String) {
     if (candidates.isEmpty) return None
     val seq = m.lastSequenceNumber + 1
     val target = m.currentSchema.struct
-
-    def applySet(df: DataFrame): DataFrame = {
-      val cols = target.fields.toSeq.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      } ++ Seq(col(RowId), lit(seq).cast(LongType).as(LastUpdatedSeq))
-      df.select(cols: _*)
-    }
-
-    if (mergeMode == "merge-on-read") {
+    if (mergeOnRead(m)) {
       val matched = Scan.readEntries(spark, m, candidates, dels)
         .filter(matches(cond))
       matched.cache()
       try {
-        val delEntry = Writer.writeDeleteFile(matched.select(col(RowId)),
-          location, seq)
-        if (delEntry.isEmpty) return None
-        val entries = Writer.writeDataFiles(applySet(matched), location,
-          m.defaultSpec, m.currentSchemaId, seq, sortedBy(m), writeOpts(m))
-        Some(commitSnapshot(m, "overwrite",
-          Manifest(entries.toList, delEntry.toList, Nil, Nil), branch, 0))
+        Writer.writeDeleteFile(matched.select(col(RowId)), location, seq)
+          .map(d => commitSnapshot(m, "overwrite", Manifest(
+            writeData(m, seq, assign(matched, target, set, seq)).toList,
+            List(d), Nil, Nil), branch, 0))
       } finally matched.unpersist()
-    } else {
-      val withPath = Scan.readEntries(spark, m, candidates, dels, withPath = true)
-      val hitNames = withPath.filter(matches(cond))
-        .select(Scan.GraftPath).distinct().collect()
-        .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
-        .toSet
-      val affected = candidates.filter(e =>
-        hitNames.contains(e.path.stripPrefix("data/")))
-      if (affected.isEmpty) return None
-      val all = Scan.readEntries(spark, m, affected, dels)
-      val rewritten = applySet(all.filter(matches(cond)))
-        .unionByName(all.filter(!matches(cond)))
-      val entries = Writer.writeDataFiles(rewritten, location, m.defaultSpec,
-        m.currentSchemaId, seq, sortedBy(m), writeOpts(m))
-      Some(commitSnapshot(m, "overwrite",
-        Manifest(entries.toList, Nil, affected.map(_.path).toList, Nil),
-        branch, 0))
-    }
+    } else rewriteFiles(m, "overwrite", branch, candidates, dels,
+      _.filter(matches(cond)),
+      all => assign(all.filter(matches(cond)), target, set, seq)
+        .unionByName(all.filter(!matches(cond))))
   }
 
   /** MERGE INTO (`sql:146-157`): matched-update + not-matched-insert in
@@ -436,126 +430,76 @@ class LakeTable(val spark: SparkSession, val location: String) {
 
     source.persist()
     try {
-      val boundsAggs = keys.flatMap(k =>
-        Seq(min(col(k)).as(s"_mn_$k"), max(col(k)).as(s"_mx_$k")))
-      val b = source.agg(boundsAggs.head, boundsAggs.tail: _*).head()
-      val bounds = keys.map(k =>
-        (b.getAs[Any](s"_mn_$k"), b.getAs[Any](s"_mx_$k")))
-      // A null bound means the source is empty or that key is all-null —
-      // either way no target row can match.
       val candidates =
-        if (bounds.exists { case (mn, mx) => mn == null || mx == null }) Nil
-        else Scan.pruneFiles(m, files, Some(
-          keys.zip(bounds).map { case (k, (mn, mx)) =>
-            col(k) >= lit(mn) && col(k) <= lit(mx)
-          }.reduce(_ && _)))
-      mergeClassified(m, source, keys, matchedCondition, whenMatchedSet,
-        whenNotMatchedInsert, branch, seq, target, candidates, files.size,
-        dels, summary)
-    } finally source.unpersist()
-  }
-
-  private def mergeClassified(m: TableMetadata, source: DataFrame,
-      keys: Seq[String], matchedCondition: Option[Column],
-      whenMatchedSet: Option[Map[String, Column]],
-      whenNotMatchedInsert: Boolean, branch: String, seq: Long,
-      target: StructType, candidates: Seq[DataFileEntry], totalFiles: Int,
-      dels: List[DeleteFileEntry],
-      extraSummary: Map[String, String] = Map.empty): Option[Snapshot] = {
-    val src = source.columns.foldLeft(source) { (d, c) =>
-      d.withColumnRenamed(c, s"src_$c")
-    }
-    val tgt = Scan.readEntries(spark, m, candidates, dels)
-    val joinCond = keys.map(k => tgt(k) === src(s"src_$k")).reduce(_ && _)
-    // Unmatched target rows are never consulted (neither updated nor
-    // re-written): right_outer keeps every source row for the insert
-    // classification; inner suffices when inserts are off.
-    val joined = tgt.join(src, joinCond,
-      if (whenNotMatchedInsert) "right_outer" else "inner").cache()
-    try {
-      val isMatched = col(RowId).isNotNull &&
-        keys.map(k => col(s"src_$k").isNotNull).reduce(_ && _)
-
-      // matched + condition → updated rows (same $row_id, new seq)
-      val updatedOpt = whenMatchedSet.map { setRaw =>
-        val set: Map[String, Column] =
-          if (setRaw.nonEmpty) setRaw
-          else target.fieldNames.filter(n => source.columns.contains(n))
-            .filterNot(keys.contains).map(n => n -> col(s"src_$n")).toMap
-        val condCol = matchedCondition.map(matches).getOrElse(lit(true))
-        val rows = joined.filter(isMatched && condCol)
-        val cols = target.fields.toSeq.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(col(f.name))
-        } ++ Seq(col(RowId), lit(seq).cast(LongType).as(LastUpdatedSeq))
-        rows.select(cols: _*)
+        keyCandidates(m, files, source, keys, keys, nullSafe = false)
+      val src = source.columns.foldLeft(source) { (d, c) =>
+        d.withColumnRenamed(c, s"src_$c")
       }
-
-      // unmatched source rows → inserts (fresh $row_id)
-      val insertedOpt =
-        if (whenNotMatchedInsert) {
-          val rows = joined.filter(col(RowId).isNull)
-          val cols = target.fields.toSeq.map { f =>
-            if (source.columns.contains(f.name))
-              col(s"src_${f.name}").cast(f.dataType).as(f.name)
-            else SchemaEvolution.defaultValue(f).getOrElse(lit(null))
-              .cast(f.dataType).as(f.name)
-          }
-          Some(rows.select(cols: _*))
-        } else None
-
-      var manifest = Manifest(Nil, Nil, Nil, Nil)
-      var rowsAssigned = 0L
-      // Gate FIRST (Trino semantics: a target row matched by >1 source
-      // row is an error, not a silent duplicate — both copies would
-      // share one $row_id and corrupt later MoR deletes): the invariant
-      // must hold before ANY file lands. The gating count also
-      // materializes the joined/upd caches, so the two write branches
-      // below never race to compute them.
-      updatedOpt.foreach(_.cache())
+      val tgt = Scan.readEntries(spark, m, candidates, dels)
+      val joinCond = keys.map(k => tgt(k) === src(s"src_$k")).reduce(_ && _)
+      // Unmatched target rows are never consulted (neither updated nor
+      // re-written): right_outer keeps every source row for the insert
+      // classification; inner suffices when inserts are off.
+      val joined = tgt.join(src, joinCond,
+        if (whenNotMatchedInsert) "right_outer" else "inner").cache()
       try {
-        updatedOpt.foreach { upd =>
-          val multi = upd.groupBy(col(RowId)).count()
-            .filter(col("count") > 1).limit(1).count()
-          require(multi == 0,
-            "MERGE: one target row matched more than one source row")
+        val isMatched = col(RowId).isNotNull &&
+          keys.map(k => col(s"src_$k").isNotNull).reduce(_ && _)
+
+        // matched + condition → updated rows (same $row_id, new seq)
+        val updatedOpt = whenMatchedSet.map { setRaw =>
+          val set: Map[String, Column] =
+            if (setRaw.nonEmpty) setRaw
+            else target.fieldNames.filter(n => source.columns.contains(n))
+              .filterNot(keys.contains).map(n => n -> col(s"src_$n")).toMap
+          val condCol = matchedCondition.map(matches).getOrElse(lit(true))
+          assign(joined.filter(isMatched && condCol), target, set, seq)
         }
-        // The update-side writes (delete vector + rewritten rows) and
-        // the insert-side writes (lineage + new rows) read only the
-        // cached frames and land in DISJOINT files — overlap them
-        // (guide §2.6); the commit below is still one atomic snapshot.
-        val (updPart, insPart) = graft.SparkEnv.overlap(
-          updatedOpt.flatMap { upd =>
-            val delEntry = Writer.writeDeleteFile(upd.select(col(RowId)),
-              location, seq)
-            delEntry.map { de =>
-              val entries = Writer.writeDataFiles(upd, location,
-                m.defaultSpec, m.currentSchemaId, seq, sortedBy(m),
-                writeOpts(m))
-              (entries, de)
-            }
-          },
-          insertedOpt.map { ins =>
-            val withLin = Writer.withLineage(ins, m.nextRowId, seq)
-            Writer.writeDataFiles(withLin, location, m.defaultSpec,
-              m.currentSchemaId, seq, sortedBy(m), writeOpts(m))
-          })
-        updPart.foreach { case (entries, de) =>
-          manifest = manifest.copy(
-            addedData = manifest.addedData ++ entries,
-            addedDeletes = manifest.addedDeletes :+ de)
-        }
-        insPart.foreach { entries =>
-          rowsAssigned += entries.map(_.recordCount).sum
-          manifest = manifest.copy(addedData = manifest.addedData ++ entries)
-        }
-      } finally updatedOpt.foreach(_.unpersist())
-      if (manifest.addedData.isEmpty && manifest.addedDeletes.isEmpty) None
-      else Some(commitSnapshot(m, "overwrite", manifest, branch, rowsAssigned,
-        summary = extraSummary ++ Map(
-          "candidate-data-files" -> candidates.size.toString,
-          "total-data-files" -> totalFiles.toString)))
-    } finally joined.unpersist()
+
+        // unmatched source rows → inserts (fresh $row_id)
+        val insertedOpt =
+          if (whenNotMatchedInsert) Some(align(
+            joined.filter(col(RowId).isNull).select(source.columns
+              .filter(target.fieldNames.contains)
+              .map(c => col(s"src_$c").as(c)).toSeq: _*), target))
+          else None
+
+        // Gate FIRST (Trino semantics: a target row matched by >1 source
+        // row is an error, not a silent duplicate — both copies would
+        // share one $row_id and corrupt later MoR deletes): the invariant
+        // must hold before ANY file lands. The gating count also
+        // materializes the joined/upd caches, so the two write branches
+        // below never race to compute them.
+        updatedOpt.foreach(_.cache())
+        val (updPart, insPart) = try {
+          updatedOpt.foreach { upd =>
+            val multi = upd.groupBy(col(RowId)).count()
+              .filter(col("count") > 1).limit(1).count()
+            require(multi == 0,
+              "MERGE: one target row matched more than one source row")
+          }
+          // The update-side writes (delete vector + rewritten rows) and
+          // the insert-side writes (lineage + new rows) read only the
+          // cached frames and land in DISJOINT files — overlap them
+          // (guide §2.6); the commit below is still one atomic snapshot.
+          graft.SparkEnv.overlap(
+            updatedOpt.flatMap { upd =>
+              Writer.writeDeleteFile(upd.select(col(RowId)), location, seq)
+                .map(de => (writeData(m, seq, upd), de))
+            },
+            insertedOpt.map(ins =>
+              writeData(m, seq, Writer.withLineage(ins, m.nextRowId, seq))))
+        } finally updatedOpt.foreach(_.unpersist())
+        val inserted = insPart.toList.flatten
+        val manifest = Manifest(updPart.toList.flatMap(_._1) ++ inserted,
+          updPart.map(_._2).toList, Nil, Nil)
+        if (manifest.addedData.isEmpty && manifest.addedDeletes.isEmpty) None
+        else Some(commitSnapshot(m, "overwrite", manifest, branch,
+          inserted.map(_.recordCount).sum, summary = summary ++ Map(
+            "candidate-data-files" -> candidates.size.toString,
+            "total-data-files" -> files.size.toString)))
+      } finally joined.unpersist()
+    } finally source.unpersist()
   }
 
   // ---- versioning (SURVEY §2.8) --------------------------------------
@@ -731,13 +675,9 @@ class LakeTable(val spark: SparkSession, val location: String) {
             // key null-safe-equals a delete-file row (same semi-join
             // the scan path uses as anti-join). Key-set files are
             // CDC-batch-sized → broadcast; parent files are pruned by
-            // the key set's bounding box first (one agg over the
-            // loaded delete frame — the merge()/deleteByKeys-CoW
-            // stance), so a narrow-key delete commit's preimage never
-            // scans the rest of a 100 TB parent snapshot. Null keys
-            // defeat the box (a null never satisfies a range
-            // predicate), so any null key falls back to the full
-            // parent — correctness over pruning.
+            // the key set's bounding box first ([[keyCandidates]], the
+            // deleteByKeys-CoW rule), so a narrow-key delete commit's
+            // preimage never scans the rest of a 100 TB parent snapshot.
             val eqPres: Seq[DataFrame] =
               eqDels.groupBy(_.equalityIds).toSeq.map { case (ids, fs) =>
                 val names = ids.map { id =>
@@ -749,24 +689,8 @@ class LakeTable(val spark: SparkSession, val location: String) {
                 }
                 val delDf = broadcast(spark.read.parquet(
                   fs.map(d => s"$location/${d.path}"): _*))
-                val boundsAggs = ids.flatMap(id => Seq(
-                  min(col(s"k_$id")).as(s"_mn_$id"),
-                  max(col(s"k_$id")).as(s"_mx_$id"),
-                  sum(when(col(s"k_$id").isNull, 1).otherwise(0))
-                    .as(s"_nn_$id")))
-                val b = delDf.agg(boundsAggs.head, boundsAggs.tail: _*)
-                  .head()
-                val anyNull = ids.exists(id =>
-                  b.getAs[Any](s"_mn_$id") == null ||
-                    Option(b.getAs[Any](s"_nn_$id"))
-                      .exists(_.toString.toLong > 0))
-                val prunedParent =
-                  if (anyNull) pData
-                  else Scan.pruneFiles(m, pData, Some(
-                    ids.zip(names).map { case (id, n) =>
-                      col(n) >= lit(b.getAs[Any](s"_mn_$id")) &&
-                        col(n) <= lit(b.getAs[Any](s"_mx_$id"))
-                    }.reduce(_ && _)))
+                val prunedParent = keyCandidates(m, pData, delDf,
+                  ids.map(id => s"k_$id"), names, nullSafe = true)
                 val parent = Scan.readEntries(spark, m, prunedParent, pDels)
                 val keyEq = ids.zip(names).map { case (id, n) =>
                   parent(n) <=> delDf(s"k_$id") }.reduce(_ && _)
@@ -854,17 +778,16 @@ class LakeTable(val spark: SparkSession, val location: String) {
     val rows = Scan.readEntries(spark, m, selected, dels)
     val targetFiles = targetFileCount.getOrElse(math.max(1,
       (selected.map(_.sizeBytes).sum / fileSizeThresholdBytes).toInt))
-    // clusterBy makes two passes (min/max agg + write): cache the
-    // delete-applied input so compaction doesn't read the files twice
-    if (clusterBy.nonEmpty) rows.cache()
-    val entries = try {
-      val arranged =
-        if (clusterBy.nonEmpty) ZOrder.cluster(rows, clusterBy, targetFiles)
-        else rows.coalesce(targetFiles)
-      Writer.writeDataFiles(arranged, location,
-        m.defaultSpec, m.currentSchemaId, seq,
-        if (clusterBy.nonEmpty) Nil else sortedBy(m), writeOpts(m))
-    } finally if (clusterBy.nonEmpty) rows.unpersist()
+    val entries =
+      if (clusterBy.nonEmpty) {
+        // clusterBy makes two passes (min/max agg + write): cache the
+        // delete-applied input so compaction doesn't read the files
+        // twice. The clustered order replaces `sorted_by`.
+        rows.cache()
+        try Writer.writeDataFiles(ZOrder.cluster(rows, clusterBy, targetFiles),
+          location, m.defaultSpec, m.currentSchemaId, seq, Nil, writeOpts(m))
+        finally rows.unpersist()
+      } else writeData(m, seq, rows.coalesce(targetFiles))
     val allCompacted = selected.map(_.path).toSet == files.map(_.path).toSet
     Some(commitSnapshot(m, "replace",
       Manifest(entries.toList, Nil, selected.map(_.path).toList,

@@ -92,8 +92,8 @@ object Scan {
     */
   def readEntries(spark: SparkSession, meta: TableMetadata,
       entries: Seq[DataFileEntry], deletes: Seq[DeleteFileEntry],
-      withPath: Boolean = false, applyDeletes: Boolean = true,
-      targetSchemaId: Option[Int] = None): DataFrame = {
+      withPath: Boolean = false, targetSchemaId: Option[Int] = None)
+      : DataFrame = {
     val lineage = rowLineageEnabled(meta)
     val target = targetSchemaId.map(meta.schema(_).struct)
       .getOrElse(meta.currentSchema.struct)
@@ -104,7 +104,7 @@ object Scan {
       readGroup(spark, meta, sid, files, lineage, withPath, target)
     }
     var df = parts.reduce(_ unionByName _)
-    if (applyDeletes && deletes.nonEmpty && lineage) {
+    if (deletes.nonEmpty && lineage) {
       val (eqDels, posDels) = deletes.partition(_.content == "equality")
       if (posDels.nonEmpty) {
         val delDf = broadcast(spark.read

@@ -95,8 +95,8 @@ object Writer {
       spec: PartitionSpec,
       schemaId: Int,
       seq: Long,
-      sortedBy: Seq[String] = Nil,
-      writeOptions: Map[String, String] = Map.empty): Seq[DataFileEntry] = {
+      sortedBy: Seq[String],
+      writeOptions: Map[String, String]): Seq[DataFileEntry] = {
     val spark = df.sparkSession
     val tmp = Files.createTempDirectory(Paths.get(location), ".stage-")
     try {

@@ -60,13 +60,25 @@ class EqualityDeleteSpec extends AnyFunSuite {
 
   test("null-safe matching: a null key row deletes null-keyed data") {
     import s.implicits._
-    val init = Seq((Option(1L), 10L), (Option.empty[Long], 20L),
-      (Option(3L), 30L)).toDF("id", "v")
-    val t = LakeTable.create(s, tmpLoc(), Right(init),
-      properties = Map("merge_mode" -> "merge-on-read"))
-    t.deleteByKeys(Seq(Option.empty[Long]).toDF("id"), Seq("id"))
-    val left = t.read().select("v").collect().map(_.getLong(0)).sorted
-    assert(left.toSeq == Seq(10L, 30L))
+    // one data file per write, so the key set's min/max box alone
+    // decides which files a copy-on-write delete reads
+    def nullableKeyed(mode: String) = mk(mode, Seq((Option(1L), 10L),
+      (Option.empty[Long], 20L), (Option(3L), 30L)).toDF("id", "v").coalesce(1))
+    def vs(t: LakeTable) =
+      t.read().select("v").collect().map(_.getLong(0)).sorted.toSeq
+    for (mode <- Seq("merge-on-read", "copy-on-write")) {
+      val t = nullableKeyed(mode)
+      val snap = t.deleteByKeys(Seq(Option.empty[Long]).toDF("id"), Seq("id"))
+      assert(snap.isDefined, mode)
+      assert(vs(t) == Seq(10L, 30L), mode)
+      // a key set mixing null and non-null keys
+      val u = nullableKeyed(mode)
+      u.append(Seq((Option.empty[Long], 40L), (Option(50L), 50L))
+        .toDF("id", "v").coalesce(1))
+      u.deleteByKeys(Seq(Option.empty[Long], Option(50L)).toDF("id"),
+        Seq("id"))
+      assert(vs(u) == Seq(10L, 30L), mode)
+    }
   }
 
   test("multi-column keys delete only full-tuple matches") {
