@@ -186,16 +186,15 @@ object Bench {
       catch { case _: Throwable => Map.empty }
     def overGate(name: String, minSec: Double): Boolean =
       floors.get(name).exists(f => minSec > RetryGate * effFloor(f))
+    // A misspelt name fails before the session starts: a partial run
+    // would otherwise report `failed: []` over fewer rows than asked.
+    val selected = SparkEntry.select(args.toSeq).map(q => q.name -> q.run)
     val spark = SparkEnv.session()
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => args.contains(k) }
-    // Sorted: Map iteration order varies across JVMs, and whichever
-    // query runs FIRST in its section absorbs residual warmup — a
-    // deterministic order keeps per-query numbers comparable
+    // Sorted by name: whichever query runs FIRST in its section absorbs
+    // residual warmup — a fixed order keeps per-query numbers comparable
     // round-over-round instead of shuffling the warmup penalty around.
     val (streamSel, batchSel) =
-      selected.toSeq.sortBy(_._1).partition(_._1.startsWith("stream_"))
+      selected.sortBy(_._1).partition(_._1.startsWith("stream_"))
     // Streaming is timed BEFORE the batch warmup: batch chain queries
     // (pipeline_pretrain) reuse streaming scenarios, and a batch-first
     // warmup would build those scenarios — running the stream — outside

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registry row's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** Run one registry query and dump its result parquet; on failure
@@ -32,23 +32,16 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
-    // Optional extra args: restrict to the named queries (builder-side
-    // iteration aid; the driver always passes exactly two args). A
-    // typo'd name fails HERE — a silent intersection would leave stale
-    // previous output in outDir and let a builder iterate against it.
-    val names = args.drop(2).toSet
-    val unknown = names.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val selected =
-      if (names.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => names(k) }
+    // Optional extra args: restrict to the named queries (an iteration
+    // aid; the driver always passes exactly two args). A misspelt name
+    // fails here, before any output is written.
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = SparkEnv.session()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
-      runOne(spark, name, fn, sfDir, outDir)
-        .foreach(msg => failures(name) = msg)
+    selected.foreach { row =>
+      runOne(spark, row.name, row.run, sfDir, outDir)
+        .foreach(msg => failures(row.name) = msg)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -62,9 +55,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => names.isEmpty || names(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map(row => s"${q(row.name)}: ${q(row.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = failures
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -1099,129 +1099,77 @@ object CoreQueries {
       .orderBy("s_suppkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_federation_agg"    -> federationAgg _,
-    "q_euro_customers"    -> euroCustomers _,
-    "q_orders_date_range" -> ordersDateRange _,
-    "q_customer_in_list"  -> customerInList _,
-    "q_scalar_fns"        -> scalarFns _,
-    "q_pricing_summary"   -> pricingSummary _,
-    "q_customer_order_counts" -> customerOrderCounts _,
-    "q_top_orders_per_status" -> topOrdersPerStatus _,
-    "q_events_hourly"     -> eventsHourly _,
-    "q_events_json"       -> eventsJsonExtract _,
-    "q_rollup_revenue"    -> rollupRevenue _,
-    "q_running_total"     -> runningTotal _,
-    "q_rolling_window"    -> rollingWindow _,
-    "q_retention_cohorts" -> retentionCohorts _,
-    "q_shipping_priority" -> shippingPriority _,
-    "q_supplier_volume"   -> localSupplierVolume _,
-    "q_customer_distribution" -> customerDistribution _,
-    "q_large_orders"      -> largeVolumeCustomers _,
-    "q_returned_revenue"  -> returnedItemRevenue _,
-    "q_promo_revenue"     -> promoRevenue _,
-    "q_disjunctive_sale"  -> disjunctiveSale _,
-    "q_idle_customers"    -> idleWealthyCustomers _,
-    "q_forecast_revenue"  -> forecastRevenue _,
-    "q_top_supplier"      -> topSupplier _,
-    "q_value_percentiles" -> valuePercentiles _,
-    "q_distinct_users"    -> distinctUsers _,
-    "q_approx_distinct"   -> approxDistinct _,
-    "q_approx_quantiles"  -> approxQuantiles _,
-    "q_rank_functions"    -> rankFunctions _,
-    "q_cube_volume"       -> cubeVolume _,
-    "q_pivot_status"      -> pivotStatus _,
-    "q_unpivot_status"    -> unpivotStatus _,
-    "q_grouping_sets"     -> groupingSets _,
-    "q_urgent_customers"  -> urgentCustomers _,
-    "q_conditional_agg"   -> conditionalAgg _,
-    "q_session_window"    -> sessionWindows _,
-    "q_set_ops"           -> setOps _,
-    "q_volume_shipping"   -> volumeShipping _,
-    "q_market_share"      -> marketShare _,
-    "q_late_lines"        -> lateLineDistribution _,
-    "q_order_priority"    -> orderPriorityCounts _,
-    "q_product_profit"    -> productTypeProfit _,
-    "q_order_gaps"        -> orderGaps _,
-    "q_min_cost_supplier" -> minCostSupplier _,
-    "q_supplier_diversity" -> supplierDiversity _,
-    "q_important_parts"   -> importantParts _,
-    "q_dominant_suppliers" -> dominantSuppliers _,
-    "q_small_qty_revenue" -> smallQtyRevenue _,
-    "q_waiting_suppliers" -> waitingSuppliers _
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_federation_agg" ->
+  val entries: Seq[Q] = Seq(
+    Q("q_federation_agg", federationAgg _,
       """SELECT n_name AS nation, round(sum(o_totalprice), 2) AS total_price
          FROM customer JOIN nation ON c_nationkey = n_nationkey
          JOIN orders ON o_custkey = c_custkey
-         GROUP BY n_name ORDER BY total_price, nation""",
-    "q_euro_customers" ->
+         GROUP BY n_name ORDER BY total_price, nation"""),
+    Q("q_euro_customers", euroCustomers _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 round(c_acctbal) AS account_balance,
                 c_mktsegment AS mktsegment, n_name AS nation, r_name AS region
          FROM customer JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'EUROPE' ORDER BY custkey LIMIT 500""",
-    "q_orders_date_range" ->
+         WHERE r_name = 'EUROPE' ORDER BY custkey LIMIT 500"""),
+    Q("q_orders_date_range", ordersDateRange _,
       """SELECT o_orderkey AS orderkey, CAST(o_orderdate AS DATE) AS order_date,
                 o_totalprice AS totalprice
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1995-06-01'
            AND o_orderdate <  TIMESTAMP '1996-06-01'
-         ORDER BY orderkey""",
-    "q_customer_in_list" ->
+         ORDER BY orderkey"""),
+    Q("q_customer_in_list", customerInList _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_mktsegment AS mktsegment, round(c_acctbal, 2) AS acctbal
-         FROM customer WHERE c_custkey IN (11, 47, 103) ORDER BY custkey""",
-    "q_scalar_fns" ->
+         FROM customer WHERE c_custkey IN (11, 47, 103) ORDER BY custkey"""),
+    Q("q_scalar_fns", scalarFns _,
       """SELECT o_orderkey AS orderkey,
                 concat_ws('#', o_orderstatus, o_orderpriority) AS tag,
                 strftime(o_orderdate, '%Y/%m/%d-%H:%M:%S') AS odate_fmt,
                 CAST(year(o_orderdate) AS INT) AS oyear,
                 CAST(o_orderdate - INTERVAL 2 DAY AS DATE) AS odate_minus2
-         FROM orders WHERE o_orderkey < 1000 ORDER BY orderkey""",
-    "q_pricing_summary" ->
+         FROM orders WHERE o_orderkey < 1000 ORDER BY orderkey"""),
+    Q("q_pricing_summary", pricingSummary _,
       """SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
                 round(sum(l_quantity), 2) AS sum_qty,
                 round(sum(l_extendedprice), 2) AS sum_base_price,
                 round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
                 round(avg(l_quantity), 4) AS avg_qty,
                 count(*) AS count_order
-         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_customer_order_counts" ->
+         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Q("q_customer_order_counts", customerOrderCounts _,
       """SELECT c_custkey AS custkey, count(o_orderkey) AS n_orders,
                 round(coalesce(sum(o_totalprice), 0.0), 2) AS spend
          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY 1 ORDER BY custkey""",
-    "q_top_orders_per_status" ->
+         GROUP BY 1 ORDER BY custkey"""),
+    Q("q_top_orders_per_status", topOrdersPerStatus _,
       """SELECT o_orderstatus AS orderstatus, CAST(rn AS INT) AS rn,
                 o_orderkey AS orderkey,
                 round(o_totalprice, 2) AS totalprice
          FROM (SELECT *, row_number() OVER
                  (PARTITION BY o_orderstatus
                   ORDER BY o_totalprice DESC, o_orderkey) AS rn
-               FROM orders) WHERE rn <= 3 ORDER BY orderstatus, rn""",
-    "q_events_hourly" ->
+               FROM orders) WHERE rn <= 3 ORDER BY orderstatus, rn"""),
+    Q("q_events_hourly", eventsHourly _,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_bucket,
                 event_type, count(*) AS n_events,
                 round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type""",
-    "q_events_json" ->
+         FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type"""),
+    Q("q_events_json", eventsJsonExtract _,
       """SELECT event_type, count(*) AS n,
                 CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
                 min(CAST(json_extract_string(props, '$.k') AS INT)) AS min_k,
                 max(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_rollup_revenue" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q_rollup_revenue", rollupRevenue _,
       """SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
                 round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
                 count(*) AS n_items
          FROM lineitem
          GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY returnflag NULLS FIRST, linestatus NULLS FIRST""",
-    "q_running_total" ->
+         ORDER BY returnflag NULLS FIRST, linestatus NULLS FIRST"""),
+    Q("q_running_total", runningTotal _,
       """SELECT o_custkey AS custkey, o_orderkey AS orderkey,
                 round(o_totalprice, 2) AS totalprice,
                 round(sum(o_totalprice) OVER
@@ -1230,8 +1178,8 @@ object CoreQueries {
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
                   AS running_spend
          FROM orders WHERE o_custkey <= 200
-         ORDER BY custkey, orderkey""",
-    "q_shipping_priority" ->
+         ORDER BY custkey, orderkey"""),
+    Q("q_shipping_priority", shippingPriority _,
       """SELECT l_orderkey, o_orderdate, o_orderpriority,
                 round(sum(l_extendedprice * (1.0 - l_discount)), 2)
                   AS revenue
@@ -1243,8 +1191,8 @@ object CoreQueries {
          GROUP BY 1, 2, 3
          ORDER BY sum(l_extendedprice * (1.0 - l_discount)) DESC,
                   o_orderdate, l_orderkey
-         LIMIT 10""",
-    "q_supplier_volume" ->
+         LIMIT 10"""),
+    Q("q_supplier_volume", localSupplierVolume _,
       """SELECT n_name,
                 round(sum(l_extendedprice * (1.0 - l_discount)), 2)
                   AS revenue
@@ -1255,8 +1203,8 @@ object CoreQueries {
            AND r_name = 'EUROPE'
            AND o_orderdate >= DATE '1996-01-01'
            AND o_orderdate < DATE '1997-01-01'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
-    "q_large_orders" ->
+         GROUP BY n_name ORDER BY revenue DESC, n_name"""),
+    Q("q_large_orders", largeVolumeCustomers _,
       """WITH big AS (SELECT l_orderkey, sum(l_quantity) AS total_qty
                       FROM lineitem GROUP BY 1
                       HAVING sum(l_quantity) > 150)
@@ -1265,8 +1213,8 @@ object CoreQueries {
                 round(b.total_qty, 2) AS total_qty
          FROM big b JOIN orders o ON b.l_orderkey = o.o_orderkey
          JOIN customer c ON o.o_custkey = c.c_custkey
-         ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 20""",
-    "q_returned_revenue" ->
+         ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 20"""),
+    Q("q_returned_revenue", returnedItemRevenue _,
       """SELECT c.c_custkey, c.c_name, n.n_name,
                 round(sum(l.l_extendedprice * (1 - l.l_discount)), 2)
                   AS revenue
@@ -1280,8 +1228,8 @@ object CoreQueries {
          GROUP BY 1, 2, 3
          ORDER BY sum(l.l_extendedprice * (1 - l.l_discount)) DESC,
                   c.c_custkey
-         LIMIT 20""",
-    "q_promo_revenue" ->
+         LIMIT 20"""),
+    Q("q_promo_revenue", promoRevenue _,
       """SELECT round(100.0 * sum(CASE WHEN p.p_type = 'PROMO'
                   THEN l.l_extendedprice * (1 - l.l_discount)
                   ELSE 0 END)
@@ -1290,8 +1238,8 @@ object CoreQueries {
                 count(*) AS n_items
          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
          WHERE l.l_shipdate >= TIMESTAMP '1996-03-01'
-           AND l.l_shipdate <  TIMESTAMP '1996-04-01'""",
-    "q_disjunctive_sale" ->
+           AND l.l_shipdate <  TIMESTAMP '1996-04-01'"""),
+    Q("q_disjunctive_sale", disjunctiveSale _,
       """SELECT round(sum(l.l_extendedprice * (1 - l.l_discount)), 2)
                   AS revenue,
                 count(*) AS n_items
@@ -1301,8 +1249,8 @@ object CoreQueries {
             OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 10 AND 30
                 AND l.l_quantity BETWEEN 10 AND 20)
             OR (p.p_brand = 'Brand#24' AND p.p_size BETWEEN 20 AND 50
-                AND l.l_quantity BETWEEN 20 AND 30)""",
-    "q_idle_customers" ->
+                AND l.l_quantity BETWEEN 20 AND 30)"""),
+    Q("q_idle_customers", idleWealthyCustomers _,
       """WITH ab AS (SELECT round(avg(c_acctbal), 2) AS v FROM customer
                      WHERE c_acctbal > 0.0)
          SELECT n.n_name, count(*) AS numcust,
@@ -1312,16 +1260,16 @@ object CoreQueries {
            AND NOT EXISTS (SELECT 1 FROM orders o
                            WHERE o.o_custkey = c.c_custkey
                              AND o.o_orderdate < TIMESTAMP '1996-01-01')
-         GROUP BY 1 ORDER BY 1""",
-    "q_forecast_revenue" ->
+         GROUP BY 1 ORDER BY 1"""),
+    Q("q_forecast_revenue", forecastRevenue _,
       """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
                 count(*) AS n_items
          FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
            AND l_shipdate <  TIMESTAMP '1997-01-01'
            AND l_discount BETWEEN 0.05 AND 0.07
-           AND l_quantity < 24""",
-    "q_top_supplier" ->
+           AND l_quantity < 24"""),
+    Q("q_top_supplier", topSupplier _,
       """WITH rev AS (
            SELECT l_suppkey,
                   sum(l_extendedprice * (1 - l_discount)) AS total
@@ -1332,8 +1280,8 @@ object CoreQueries {
          SELECT s.s_suppkey, s.s_name, round(r.total, 2) AS total_revenue
          FROM supplier s JOIN rev r ON s.s_suppkey = r.l_suppkey
          WHERE r.total = (SELECT max(total) FROM rev)
-         ORDER BY s.s_suppkey""",
-    "q_customer_distribution" ->
+         ORDER BY s.s_suppkey"""),
+    Q("q_customer_distribution", customerDistribution _,
       """SELECT n_orders, count(*) AS n_customers FROM (
            SELECT coalesce(o.n_orders, 0) AS n_orders
            FROM customer c LEFT JOIN (
@@ -1341,11 +1289,11 @@ object CoreQueries {
              FROM orders GROUP BY o_custkey) o
              ON c.c_custkey = o.o_custkey)
          GROUP BY n_orders
-         ORDER BY n_customers DESC, n_orders DESC""",
+         ORDER BY n_customers DESC, n_orders DESC"""),
     // Frame boundaries are epoch SECONDS in both engines (Spark's
     // timestamp→long cast floors to seconds; date_trunc('second')
     // replicates that), so the 1-hour RANGE frame admits identical rows.
-    "q_rolling_window" ->
+    Q("q_rolling_window", rollingWindow _,
       """SELECT event_id, user_id,
                 round(sum(value) OVER w, 2) AS rolling_value_1h,
                 count(*) OVER w AS rolling_events_1h
@@ -1353,8 +1301,8 @@ object CoreQueries {
          WINDOW w AS (PARTITION BY user_id
            ORDER BY CAST(epoch(date_trunc('second', ts)) AS BIGINT)
            RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-    "q_retention_cohorts" ->
+         ORDER BY event_id"""),
+    Q("q_retention_cohorts", retentionCohorts _,
       """WITH e AS (SELECT user_id,
                            CAST(date_trunc('week', ts) AS DATE) AS wk
                     FROM events),
@@ -1365,35 +1313,35 @@ object CoreQueries {
                   AS week_offset,
                 count(DISTINCT e.user_id) AS active_users
          FROM e JOIN f USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_value_percentiles" ->
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Q("q_value_percentiles", valuePercentiles _,
       """SELECT event_type,
                 round(quantile_cont(value, 0.25), 6) AS p25,
                 round(quantile_cont(value, 0.5), 6)  AS p50,
                 round(quantile_cont(value, 0.75), 6) AS p75,
                 round(quantile_cont(value, 0.95), 6) AS p95,
                 count(*) AS n
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_distinct_users" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q_distinct_users", distinctUsers _,
       """SELECT event_type, count(DISTINCT user_id) AS n_users,
                 count(*) AS n_events
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
     // The sketch estimates themselves are engine-specific; the row
     // carries the EXACT values (oracle-able) plus the in-plan error
     // certificate, which must come out true — a sketch drifting past
     // its bound turns the row red.
-    "q_approx_distinct" ->
+    Q("q_approx_distinct", approxDistinct _,
       """SELECT event_type, count(DISTINCT user_id) AS n_users,
                 count(*) AS n_events, true AS hll_ok
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_approx_quantiles" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q_approx_quantiles", approxQuantiles _,
       """SELECT event_type,
                 round(quantile_cont(value, 0.5), 6)  AS p50,
                 round(quantile_cont(value, 0.9), 6)  AS p90,
                 round(quantile_cont(value, 0.99), 6) AS p99,
                 count(*) AS n, true AS gk_ok
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_cube_volume" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q_cube_volume", cubeVolume _,
       """SELECT orderstatus, orderpriority, total, n, gid FROM (
            SELECT o_orderstatus AS orderstatus,
                   o_orderpriority AS orderpriority,
@@ -1403,8 +1351,8 @@ object CoreQueries {
                     AS gid
            FROM orders
            GROUP BY CUBE (o_orderstatus, o_orderpriority))
-         ORDER BY gid, orderstatus NULLS LAST, orderpriority NULLS LAST""",
-    "q_rank_functions" ->
+         ORDER BY gid, orderstatus NULLS LAST, orderpriority NULLS LAST"""),
+    Q("q_rank_functions", rankFunctions _,
       """SELECT orderkey, priority, rnk, drnk, prnk, cdist, quartile,
                 prev_price
          FROM (
@@ -1419,8 +1367,8 @@ object CoreQueries {
            FROM orders
            WINDOW w AS (PARTITION BY o_orderpriority
                         ORDER BY o_totalprice DESC, o_orderkey))
-         WHERE rnk <= 100 ORDER BY priority, rnk, orderkey""",
-    "q_pivot_status" ->
+         WHERE rnk <= 100 ORDER BY priority, rnk, orderkey"""),
+    Q("q_pivot_status", pivotStatus _,
       """SELECT o_orderpriority AS priority,
                 round(sum(CASE WHEN o_orderstatus = 'F'
                   THEN o_totalprice END), 2) AS total_f,
@@ -1428,8 +1376,8 @@ object CoreQueries {
                   THEN o_totalprice END), 2) AS total_o,
                 round(sum(CASE WHEN o_orderstatus = 'P'
                   THEN o_totalprice END), 2) AS total_p
-         FROM orders GROUP BY o_orderpriority ORDER BY priority""",
-    "q_unpivot_status" ->
+         FROM orders GROUP BY o_orderpriority ORDER BY priority"""),
+    Q("q_unpivot_status", unpivotStatus _,
       """WITH p AS (
            SELECT o_orderpriority AS priority,
                   round(sum(CASE WHEN o_orderstatus = 'F'
@@ -1446,23 +1394,23 @@ object CoreQueries {
            UNION ALL
            SELECT priority, 'P', total_p FROM p)
          SELECT priority, orderstatus, total FROM u
-         WHERE total IS NOT NULL ORDER BY priority, orderstatus""",
-    "q_grouping_sets" ->
+         WHERE total IS NOT NULL ORDER BY priority, orderstatus"""),
+    Q("q_grouping_sets", groupingSets _,
       """SELECT o_orderstatus AS orderstatus,
                 o_orderpriority AS orderpriority,
                 round(sum(o_totalprice), 2) AS total, count(*) AS n
          FROM orders
          GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-         ORDER BY orderstatus NULLS LAST, orderpriority NULLS LAST""",
-    "q_urgent_customers" ->
+         ORDER BY orderstatus NULLS LAST, orderpriority NULLS LAST"""),
+    Q("q_urgent_customers", urgentCustomers _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_mktsegment AS mktsegment
          FROM customer c
          WHERE EXISTS (SELECT 1 FROM orders o
                        WHERE o.o_custkey = c.c_custkey
                          AND o.o_orderpriority = '1-URGENT')
-         ORDER BY custkey""",
-    "q_conditional_agg" ->
+         ORDER BY custkey"""),
+    Q("q_conditional_agg", conditionalAgg _,
       """SELECT user_id % 10 AS user_decile, count(*) AS n,
                 count(*) FILTER (WHERE event_type = 'purchase')
                   AS n_purchases,
@@ -1470,10 +1418,10 @@ object CoreQueries {
                                ELSE 0.0 END), 4) AS purchase_value,
                 round(avg(value) FILTER (WHERE value > 50), 4)
                   AS avg_high_value
-         FROM events GROUP BY 1 ORDER BY user_decile""",
+         FROM events GROUP BY 1 ORDER BY user_decile"""),
     // session_window semantics: merge on OVERLAP (strict), window end =
     // last event + gap — gaps-and-islands with `>=` and a shifted end
-    "q_session_window" ->
+    Q("q_session_window", sessionWindows _,
       """WITH x AS (
            SELECT user_id,
                   CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t,
@@ -1492,8 +1440,8 @@ object CoreQueries {
                 max(t) + INTERVAL 10 MINUTE AS session_end,
                 CAST(count(*) AS INT) AS n_events,
                 round(sum(value), 4) AS sum_value
-         FROM g GROUP BY user_id, grp ORDER BY user_id, session_start""",
-    "q_set_ops" ->
+         FROM g GROUP BY user_id, grp ORDER BY user_id, session_start"""),
+    Q("q_set_ops", setOps _,
       """SELECT custkey FROM (
            SELECT c_custkey AS custkey FROM customer
            WHERE c_mktsegment = 'BUILDING'
@@ -1503,8 +1451,8 @@ object CoreQueries {
          SELECT o_custkey FROM orders
          EXCEPT
          SELECT c_custkey FROM customer WHERE c_acctbal < 0
-         ORDER BY custkey""",
-    "q_volume_shipping" ->
+         ORDER BY custkey"""),
+    Q("q_volume_shipping", volumeShipping _,
       """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
                 CAST(year(l.l_shipdate) AS INT) AS l_year,
                 round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2)
@@ -1521,8 +1469,8 @@ object CoreQueries {
            AND l.l_shipdate <  TIMESTAMP '1998-01-01'
            AND ((sr.r_name = 'ASIA' AND cr.r_name = 'EUROPE')
              OR (sr.r_name = 'EUROPE' AND cr.r_name = 'ASIA'))
-         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q_market_share" ->
+         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
+    Q("q_market_share", marketShare _,
       """SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
                 round(sum(CASE WHEN sn.n_name = 'NATION_3'
                     THEN l.l_extendedprice * (1.0 - l.l_discount)
@@ -1543,8 +1491,8 @@ object CoreQueries {
                        JOIN region r ON cn.n_regionkey = r.r_regionkey
                        WHERE c.c_custkey = o.o_custkey
                          AND r.r_name = 'EUROPE')
-         GROUP BY 1 ORDER BY 1""",
-    "q_late_lines" ->
+         GROUP BY 1 ORDER BY 1"""),
+    Q("q_late_lines", lateLineDistribution _,
       """SELECT CAST(year(l.l_shipdate) AS INT) AS ship_year,
                 CASE WHEN datediff('day', o.o_orderdate, l.l_shipdate) <= 180
                      THEN 'late_3_6mo' ELSE 'late_6mo_plus' END
@@ -1555,8 +1503,8 @@ object CoreQueries {
                   NOT IN ('1-URGENT', '2-HIGH')) AS low_priority
          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
          WHERE datediff('day', o.o_orderdate, l.l_shipdate) > 90
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_important_parts" ->
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Q("q_important_parts", importantParts _,
       """WITH sup AS (
            SELECT s_suppkey FROM supplier s
            JOIN nation n ON s.s_nationkey = n.n_nationkey
@@ -1569,8 +1517,8 @@ object CoreQueries {
          t AS (SELECT sum(value) AS total, count(*) AS n_parts FROM v)
          SELECT l_partkey AS partkey, round(value, 2) AS value
          FROM v, t WHERE value * n_parts > total * 1.5
-         ORDER BY round(value, 2) DESC, partkey""",
-    "q_dominant_suppliers" ->
+         ORDER BY round(value, 2) DESC, partkey"""),
+    Q("q_dominant_suppliers", dominantSuppliers _,
       """WITH l96 AS (
            SELECT l_partkey, l_suppkey, l_quantity FROM lineitem
            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -1585,8 +1533,8 @@ object CoreQueries {
          FROM ps JOIN pt USING (l_partkey)
          JOIN supplier s ON ps.l_suppkey = s.s_suppkey
          WHERE ps.sq * 2.0 > pt.tq
-         GROUP BY 1, 2 ORDER BY s_suppkey""",
-    "q_min_cost_supplier" ->
+         GROUP BY 1, 2 ORDER BY s_suppkey"""),
+    Q("q_min_cost_supplier", minCostSupplier _,
       """WITH u AS (
            SELECT p.p_partkey, p.p_name, s.s_suppkey, s.s_name, n.n_name,
                   round(avg(l.l_extendedprice / l.l_quantity), 6)
@@ -1603,8 +1551,8 @@ object CoreQueries {
                 s_name AS supplier, n_name AS nation, avg_unit_price
          FROM (SELECT *, row_number() OVER (PARTITION BY p_partkey
                  ORDER BY avg_unit_price, s_suppkey) AS rn FROM u)
-         WHERE rn = 1 ORDER BY partkey""",
-    "q_supplier_diversity" ->
+         WHERE rn = 1 ORDER BY partkey"""),
+    Q("q_supplier_diversity", supplierDiversity _,
       """SELECT p.p_brand, p.p_size,
                 count(DISTINCT l.l_suppkey) AS supplier_cnt
          FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -1612,8 +1560,8 @@ object CoreQueries {
            AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
                                    WHERE s_acctbal < 0)
          GROUP BY 1, 2
-         ORDER BY supplier_cnt DESC, p_brand, p_size""",
-    "q_order_priority" ->
+         ORDER BY supplier_cnt DESC, p_brand, p_size"""),
+    Q("q_order_priority", orderPriorityCounts _,
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders o
          WHERE o.o_orderdate >= TIMESTAMP '1996-07-01'
@@ -1622,8 +1570,8 @@ object CoreQueries {
                        WHERE l.l_orderkey = o.o_orderkey
                          AND datediff('day', o.o_orderdate, l.l_shipdate)
                              > 90)
-         GROUP BY 1 ORDER BY 1""",
-    "q_product_profit" ->
+         GROUP BY 1 ORDER BY 1"""),
+    Q("q_product_profit", productTypeProfit _,
       """SELECT n.n_name AS nation,
                 CAST(year(o.o_orderdate) AS INT) AS o_year,
                 round(sum(l.l_extendedprice * (1.0 - l.l_discount)
@@ -1634,8 +1582,8 @@ object CoreQueries {
          JOIN supplier s ON l.l_suppkey = s.s_suppkey
          JOIN nation n ON s.s_nationkey = n.n_nationkey
          WHERE p.p_name LIKE '%red%'
-         GROUP BY 1, 2 ORDER BY nation, o_year DESC""",
-    "q_order_gaps" ->
+         GROUP BY 1, 2 ORDER BY nation, o_year DESC"""),
+    Q("q_order_gaps", orderGaps _,
       """SELECT o_custkey AS custkey, o_orderkey AS orderkey,
                 CAST(datediff('day', lag(o_orderdate) OVER seq,
                   o_orderdate) AS INT) AS days_since_prev,
@@ -1647,8 +1595,8 @@ object CoreQueries {
                         ORDER BY o_orderdate, o_orderkey),
                 spend AS (PARTITION BY o_custkey
                           ORDER BY o_totalprice DESC, o_orderkey)
-         ORDER BY custkey, orderkey""",
-    "q_small_qty_revenue" ->
+         ORDER BY custkey, orderkey"""),
+    Q("q_small_qty_revenue", smallQtyRevenue _,
       """WITH l AS (SELECT l_partkey, l_quantity, l_extendedprice
                     FROM lineitem
                     WHERE l_partkey IN (SELECT p_partkey FROM part
@@ -1658,8 +1606,8 @@ object CoreQueries {
          SELECT round(sum(l.l_extendedprice) / 7.0, 2) AS avg_yearly,
                 count(*) AS n_items
          FROM l JOIN t ON l.l_partkey = t.l_partkey
-         WHERE l.l_quantity < t.qty_thresh""",
-    "q_waiting_suppliers" ->
+         WHERE l.l_quantity < t.qty_thresh"""),
+    Q("q_waiting_suppliers", waitingSuppliers _,
       """SELECT s.s_name, count(*) AS numwait
          FROM lineitem l1
          JOIN orders o ON o.o_orderkey = l1.l_orderkey
@@ -1675,6 +1623,5 @@ object CoreQueries {
                              AND l3.l_suppkey <> l1.l_suppkey
                              AND datediff('day', o3.o_orderdate,
                                    l3.l_shipdate) > 90)
-         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20"""
-  )
+         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20"""))
 }

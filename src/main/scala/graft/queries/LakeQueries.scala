@@ -859,126 +859,88 @@ object LakeQueries {
   def tagRead(s: SparkSession, d: String): DataFrame =
     wapScenario(s, d).readRef("published-v1").orderBy("custkey")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sql_federation"     -> sqlFederation _,
-    "lake_wap_publish"     -> wapPublish _,
-    "lake_tag_read"        -> tagRead _,
-    "lake_catalog_view"    -> catalogViewHistory _,
-    "lake_ctas_select"     -> ctasSelect _,
-    "lake_mor_update"      -> morUpdate _,
-    "lake_mor_delete"      -> morDelete _,
-    "lake_equality_delete" -> equalityDelete _,
-    "lake_cow_dml"         -> cowDml _,
-    "lake_merge_upsert"    -> mergeUpsert _,
-    "lake_time_travel"     -> timeTravel _,
-    "lake_branch_main"     -> branchMain _,
-    "lake_branch_dev"      -> branchDev _,
-    "lake_cdc_changes"     -> cdcChanges _,
-    "lake_branch_diff"     -> lakeBranchDiff _,
-    "lake_drift_psi"       -> lakeDriftPsi _,
-    "lake_corpus_diff"     -> lakeCorpusDiff _,
-    "lake_incremental_read" -> incrementalRead _,
-    "lake_optimize_invariance" -> optimizeInvariance _,
-    "lake_zorder_compaction" -> zorderCompaction _,
-    "lake_pruned_scan"     -> prunedScan _,
-    "lake_schema_evolution" -> schemaEvolution _,
-    "lake_drop_column"     -> dropColumnCycle _,
-    "lake_spec_evolution"  -> specEvolution _,
-    "lake_filtered_optimize" -> filteredOptimize _,
-    "lake_snapshot_log"    -> snapshotLog _,
-    "lake_row_lineage"     -> rowLineage _,
-    "lake_stats"           -> statsShow _,
-    "lake_register"        -> registerRead _,
-    "lake_mview_refresh"   -> mviewRefresh _,
-    "lake_mview_incremental" -> mviewIncremental _,
-    "lake_maintenance"     -> maintenanceInvariance _,
-    "lake_show_create"     -> showCreateDdl _,
-    "lake_show_create_schema" -> showCreateSchemaDdl _,
-    "lake_bloom_pruning"   -> bloomPointLookup _
-  )
-
   /** Oracles express the *final state* of each lifecycle in ANSI SQL over
     * the source parquet — DuckDB never sees the lake machinery, so a
     * match proves write+read round-trip semantics, not shared code.
     */
-  val oracleSql: Map[String, String] = Map(
-    "q_sql_federation" ->
+  val entries: Seq[Q] = Seq(
+    Q("q_sql_federation", sqlFederation _,
       """SELECT n_name AS nation, round(sum(o_totalprice), 2) AS total_price
          FROM customer JOIN nation ON c_nationkey = n_nationkey
          JOIN orders ON o_custkey = c_custkey
-         GROUP BY n_name ORDER BY total_price, nation""",
-    "lake_ctas_select" ->
+         GROUP BY n_name ORDER BY total_price, nation"""),
+    Q("lake_ctas_select", ctasSelect _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_mktsegment AS mktsegment, n_name AS nation
          FROM customer JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'EUROPE' ORDER BY custkey""",
+         WHERE r_name = 'EUROPE' ORDER BY custkey"""),
     // main = base + the one audited-clean batch; the poisoned batch
     // (custkey < 50 re-staged with a nulled name) must be invisible
-    "lake_wap_publish" ->
+    Q("lake_wap_publish", wapPublish _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey <= 1200 ORDER BY custkey""",
-    "lake_tag_read" ->
+         FROM customer WHERE c_custkey <= 1200 ORDER BY custkey"""),
+    Q("lake_tag_read", tagRead _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey <= 1200 ORDER BY custkey""",
-    "lake_mor_update" ->
+         FROM customer WHERE c_custkey <= 1200 ORDER BY custkey"""),
+    Q("lake_mor_update", morUpdate _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 CASE WHEN c_custkey < 10 THEN 1000.0 ELSE c_acctbal END
                   AS account_balance,
                 c_mktsegment AS mktsegment
-         FROM customer ORDER BY custkey""",
-    "lake_mor_delete" ->
+         FROM customer ORDER BY custkey"""),
+    Q("lake_mor_delete", morDelete _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey % 10 <> 0 ORDER BY custkey""",
+         FROM customer WHERE c_custkey % 10 <> 0 ORDER BY custkey"""),
     // survivors = keys not deleted, plus the re-appended half of the
     // deleted keys (identical values, later sequence → immune)
-    "lake_equality_delete" ->
+    Q("lake_equality_delete", equalityDelete _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
          FROM customer WHERE c_custkey % 7 <> 0 OR c_custkey % 14 = 0
-         ORDER BY custkey""",
-    "lake_cow_dml" ->
+         ORDER BY custkey"""),
+    Q("lake_cow_dml", cowDml _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 CASE WHEN c_custkey < 10 THEN 1000.0 ELSE c_acctbal END
                   AS account_balance,
                 c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey % 10 <> 0 ORDER BY custkey""",
-    "lake_merge_upsert" ->
+         FROM customer WHERE c_custkey % 10 <> 0 ORDER BY custkey"""),
+    Q("lake_merge_upsert", mergeUpsert _,
       """SELECT c_custkey AS custkey,
                 CASE WHEN c_custkey >= 50 THEN 'M-' || c_name ELSE c_name END
                   AS name,
                 CASE WHEN c_custkey >= 50 THEN c_acctbal + 5.0 ELSE c_acctbal
                   END AS account_balance,
                 c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 150 ORDER BY custkey""",
-    "lake_time_travel" ->
+         FROM customer WHERE c_custkey < 150 ORDER BY custkey"""),
+    Q("lake_time_travel", timeTravel _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 100 ORDER BY custkey""",
-    "lake_branch_main" ->
+         FROM customer WHERE c_custkey < 100 ORDER BY custkey"""),
+    Q("lake_branch_main", branchMain _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 100 ORDER BY custkey""",
-    "lake_branch_dev" ->
+         FROM customer WHERE c_custkey < 100 ORDER BY custkey"""),
+    Q("lake_branch_dev", branchDev _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
          FROM customer WHERE c_custkey >= 5 AND c_custkey < 110
-         ORDER BY custkey""",
-    "lake_cdc_changes" ->
+         ORDER BY custkey"""),
+    Q("lake_cdc_changes", cdcChanges _,
       """SELECT * FROM (
            SELECT 'insert' AS change_type, c_custkey AS custkey
            FROM customer WHERE c_custkey >= 100 AND c_custkey < 150
            UNION ALL
            SELECT 'delete' AS change_type, c_custkey AS custkey
            FROM customer WHERE c_custkey < 150 AND c_custkey % 7 = 0
-         ) ORDER BY change_type, custkey""",
+         ) ORDER BY change_type, custkey"""),
     // The branch states replayed as predicates (main = custkey<100;
     // dev = that plus the [100,110) append minus the <5 delete), then
     // the same full-outer classification.
-    "lake_branch_diff" ->
+    Q("lake_branch_diff", lakeBranchDiff _,
       """WITH m AS (SELECT c_custkey AS custkey FROM customer
                     WHERE c_custkey < 100),
          dv AS (SELECT c_custkey AS custkey FROM customer
@@ -989,12 +951,12 @@ object LakeQueries {
                      WHEN dv.custkey IS NOT NULL THEN 'dev_only'
                      ELSE 'main_only' END AS status
          FROM m FULL OUTER JOIN dv ON m.custkey = dv.custkey
-         ORDER BY custkey""",
+         ORDER BY custkey"""),
     // The parity replay of the scenario (even docs = the baseline
     // snapshot, odd docs = the CDC insert delta) fed through the
     // text_drift_psi CTE chain — same capped sample, integer decile
     // edges, add-one smoothing, and operand-for-operand ln term.
-    "lake_drift_psi" ->
+    Q("lake_drift_psi", lakeDriftPsi _,
       """WITH t AS (
            SELECT doc_id, doc_id % 2 = 0 AS isref,
                   CAST(len(string_split_regex(trim(text), '\s+'))
@@ -1033,13 +995,13 @@ object LakeQueries {
                          ((g2.ref_n + 1.0) / (tot.rt + 10.0))), 6)
                   AS psi_bin
          FROM g2 CROSS JOIN tot LEFT JOIN cuts c ON c.bin = g2.bin
-         ORDER BY g2.bin""",
+         ORDER BY g2.bin"""),
     // The parity replay of the corpus-diff scenario fed through the
     // sketch_corpus_diff CTE chain: before = the full corpus (baseline
     // ∪ insert delta = all documents), after (keep) = the even-id
     // baseline snapshot. Every axis is the deterministic house sketch,
     // so the single report row hash-checks.
-    "lake_corpus_diff" ->
+    Q("lake_corpus_diff", lakeCorpusDiff _,
       ("""WITH base AS (SELECT doc_id % 2 = 0 AS keep,
                   string_split_regex(trim(lower(text)), '\s+') AS words
                 FROM documents),
@@ -1053,31 +1015,31 @@ object LakeQueries {
                 jac.est_jaccard AS est_base_resemblance,
                 mass.top20_mass_before AS top20_mass,
                 mass.top20_mass_after AS top20_mass_base
-         FROM cnt, ev, jac, mass"""),
-    "lake_optimize_invariance" ->
+         FROM cnt, ev, jac, mass""")),
+    Q("lake_optimize_invariance", optimizeInvariance _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
          FROM customer WHERE c_custkey < 80 AND c_custkey % 9 <> 0
-         ORDER BY custkey""",
-    "lake_zorder_compaction" ->
+         ORDER BY custkey"""),
+    Q("lake_zorder_compaction", zorderCompaction _,
       """SELECT o_orderkey AS orderkey, round(o_totalprice, 2) AS totalprice
-         FROM orders WHERE o_totalprice < 20000.0 ORDER BY orderkey""",
-    "lake_pruned_scan" ->
+         FROM orders WHERE o_totalprice < 20000.0 ORDER BY orderkey"""),
+    Q("lake_pruned_scan", prunedScan _,
       """SELECT o_orderkey AS orderkey, CAST(o_orderdate AS DATE) AS order_date,
                 o_totalprice AS totalprice
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1997-01-01'
            AND o_orderdate <  TIMESTAMP '1998-01-01'
-         ORDER BY orderkey""",
-    "lake_schema_evolution" ->
+         ORDER BY orderkey"""),
+    Q("lake_schema_evolution", schemaEvolution _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment,
                 '+33606060606' AS phone
-         FROM customer WHERE c_custkey < 50 ORDER BY custkey""",
+         FROM customer WHERE c_custkey < 50 ORDER BY custkey"""),
     // Field-id stability: the pre-drop file's message bytes must NOT
     // resurface under the re-added same-name column (fresh field id) —
     // row 200000 reads NULL, only post-re-add row 200001 has a value.
-    "lake_drop_column" ->
+    Q("lake_drop_column", dropColumnCycle _,
       """SELECT custkey, name, message FROM (
            SELECT c_custkey AS custkey, c_name AS name,
                   CAST(NULL AS VARCHAR) AS message
@@ -1086,13 +1048,13 @@ object LakeQueries {
            SELECT * FROM (VALUES
              (200000, 'COMMANDER BUN BUN', CAST(NULL AS VARCHAR)),
              (200001, 'TRINO', 'fresh')) AS t(custkey, name, message)
-         ) ORDER BY custkey""",
+         ) ORDER BY custkey"""),
     // Each write generation appears under ITS OWN spec: the CTAS slice
     // under spec 0 (per-mktsegment counts recomputed from the source),
     // the two spec-1 inserts under (mktsegment, custkey) tuples, the
     // two spec-2 inserts under nation. file_count pinned to 1 by the
     // scenario's per-spec repartitioning.
-    "lake_spec_evolution" ->
+    Q("lake_spec_evolution", specEvolution _,
       """SELECT * FROM (
            SELECT '{mktsegment=' || c_mktsegment || '}' AS partition,
                   0 AS spec_id, count(*) AS record_count, 1 AS file_count
@@ -1104,41 +1066,41 @@ object LakeQueries {
              ('{nation=ITALY}', 2, 1, 1),
              ('{nation=SPAIN}', 2, 1, 1))
              AS t(partition, spec_id, record_count, file_count)
-         ) ORDER BY spec_id, partition""",
+         ) ORDER BY spec_id, partition"""),
     // Content invariant under the filtered compaction, plus the two
     // file-level observables computed in-scenario from `$files`: the
     // backdated generation's files survive untouched, the recent
     // generation collapsed to one file.
-    "lake_filtered_optimize" ->
+    Q("lake_filtered_optimize", filteredOptimize _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment,
                 TRUE AS old_files_untouched, TRUE AS recent_files_compacted
-         FROM customer WHERE c_custkey < 120 ORDER BY custkey""",
-    "lake_incremental_read" ->
+         FROM customer WHERE c_custkey < 120 ORDER BY custkey"""),
+    Q("lake_incremental_read", incrementalRead _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
          FROM customer WHERE c_custkey >= 100 AND c_custkey < 200
-         ORDER BY custkey""",
+         ORDER BY custkey"""),
     // The scenario's commit sequence is fully deterministic (ids are a
     // monotone counter): create+append, append, update, delete.
-    "lake_snapshot_log" ->
+    Q("lake_snapshot_log", snapshotLog _,
       """SELECT CAST(snapshot_id AS BIGINT) AS snapshot_id,
                 CAST(parent_id AS BIGINT) AS parent_id, operation
          FROM (VALUES (1, NULL, 'append'), (2, 1, 'append'),
                       (3, 2, 'overwrite'), (4, 3, 'delete'))
            AS t(snapshot_id, parent_id, operation)
-         ORDER BY snapshot_id""",
-    "lake_catalog_view" ->
+         ORDER BY snapshot_id"""),
+    Q("lake_catalog_view", catalogViewHistory _,
       """SELECT CAST(snapshot_id AS BIGINT) AS snapshot_id, operation,
                 is_current_ancestor
          FROM (VALUES (1, 'append', true), (2, 'append', true))
            AS t(snapshot_id, operation, is_current_ancestor)
-         ORDER BY snapshot_id""",
+         ORDER BY snapshot_id"""),
     // Every SHOW STATS cell recomputed from the same slice: NDV exact
     // (the scenario runs ANALYZE in exact mode), data_size = 8·rows for
     // fixed-width types / Σlength for strings, min/max rendered as
     // strings (both engines print shortest-round-trip doubles).
-    "lake_stats" ->
+    Q("lake_stats", statsShow _,
       """WITH src AS (SELECT c_custkey AS custkey, c_name AS name,
                              c_acctbal AS account_balance,
                              c_mktsegment AS mktsegment
@@ -1191,42 +1153,42 @@ object LakeQueries {
            FROM n
            UNION ALL
            SELECT NULL, NULL, NULL, NULL, n.rc, NULL, NULL FROM n
-         ) ORDER BY column_name NULLS LAST""",
+         ) ORDER BY column_name NULLS LAST"""),
     // current state after expire+orphan-sweep = the DML replay; history
     // loss must never leak into the head
-    "lake_maintenance" ->
+    Q("lake_maintenance", maintenanceInvariance _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 CASE WHEN c_custkey < 10 THEN 250.0 ELSE c_acctbal END
                   AS account_balance,
                 c_mktsegment AS mktsegment
          FROM customer WHERE c_custkey < 120 AND c_custkey % 11 <> 0
-         ORDER BY custkey""",
+         ORDER BY custkey"""),
     // delta-partial maintenance must equal the full aggregate
-    "lake_mview_incremental" ->
+    Q("lake_mview_incremental", mviewIncremental _,
       """SELECT o_custkey AS custkey, count(*) AS n_orders,
                 round(sum(o_totalprice), 2) AS total
-         FROM orders GROUP BY custkey ORDER BY custkey""",
+         FROM orders GROUP BY custkey ORDER BY custkey"""),
     // post-refresh mview state = the stored aggregate over ALL orders
-    "lake_mview_refresh" ->
+    Q("lake_mview_refresh", mviewRefresh _,
       """SELECT o_custkey AS custkey, round(sum(o_totalprice), 2) AS total
-         FROM orders GROUP BY o_custkey ORDER BY custkey""",
+         FROM orders GROUP BY o_custkey ORDER BY custkey"""),
     // register_table is a metadata pointer — the read-back must be the
     // source slice, byte for byte
-    "lake_register" ->
+    Q("lake_register", registerRead _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 120 ORDER BY custkey""",
+         FROM customer WHERE c_custkey < 120 ORDER BY custkey"""),
     // Row ids are assigned in file order (customer.parquet is custkey-
     // ordered, keys from 0), so lineage is a pure function of custkey;
     // the custkey<5 UPDATE bumps those rows to sequence 2.
-    "lake_row_lineage" ->
+    Q("lake_row_lineage", rowLineage _,
       """SELECT c_custkey AS custkey, CAST(c_custkey AS BIGINT) AS row_id,
                 CAST(CASE WHEN c_custkey < 5 THEN 2 ELSE 1 END AS BIGINT)
                   AS last_seq
-         FROM customer WHERE c_custkey < 20 ORDER BY custkey""",
+         FROM customer WHERE c_custkey < 20 ORDER BY custkey"""),
     // SHOW CREATE render vs the DDL a user must be able to parse,
     // literal line by literal line (quotes doubled for SQL escaping)
-    "lake_show_create" ->
+    Q("lake_show_create", showCreateDdl _,
       """SELECT * FROM (VALUES
            (1, 'CREATE TABLE demo.customer_ddl ('),
            (2, '   custkey bigint,'),
@@ -1240,23 +1202,22 @@ object LakeQueries {
            (10, '   partitioning = ARRAY[''mktsegment''],'),
            (11, '   merge_mode = ''merge-on-read'''),
            (12, ')')
-         ) AS t(line_no, line) ORDER BY line_no""",
-    "lake_show_create_schema" ->
+         ) AS t(line_no, line) ORDER BY line_no"""),
+    Q("lake_show_create_schema", showCreateSchemaDdl _,
       """SELECT * FROM (VALUES
            (1, 'CREATE SCHEMA demo_fixed'),
            (2, 'WITH ('),
            (3, '   location = ''<warehouse>/demo_fixed'''),
            (4, ')')
-         ) AS t(line_no, line) ORDER BY line_no""",
+         ) AS t(line_no, line) ORDER BY line_no"""),
     // Point lookups through the bloom-filtered scan = the same rows from
     // the source table; the footer observable (every data file blooms
     // the listed column, none the unlisted one) rides as a literal TRUE.
-    "lake_bloom_pruning" ->
+    Q("lake_bloom_pruning", bloomPointLookup _,
       """SELECT o_orderkey AS orderkey, o_custkey AS custkey,
                 round(o_totalprice, 2) AS totalprice,
                 TRUE AS bloom_on_all_files
          FROM orders
          WHERE o_orderkey IN (1, 7, 32, 33, 34, 35, 36, 37, 38, 39)
-         ORDER BY orderkey"""
-  )
+         ORDER BY orderkey"""))
 }

@@ -2011,138 +2011,6 @@ object PipelineQueries {
       .orderBy("modality")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact"          -> dedupExact _,
-    "dedup_minhash_pairs"  -> dedupMinhash _,
-    "dedup_simhash_pairs"  -> dedupSimhash _,
-    "dedup_ngram_pairs"    -> dedupNgram _,
-    "dedup_winnow_pairs"   -> dedupWinnow _,
-    "dedup_source_matrix"  -> dedupSourceMatrix _,
-    "dedup_blob_exact"     -> dedupBlobExact _,
-    "dedup_blob_near"      -> dedupBlobNear _,
-    "dedup_blob_clusters"  -> dedupBlobClusters _,
-    "pipeline_multimodal_curate" -> pipelineMultimodalCurate _,
-    "text_novelty"         -> textNovelty _,
-    "dedup_incremental"    -> dedupIncremental _,
-    "sample_token_budget"  -> sampleTokenBudget _,
-    "dedup_embedding_pairs" -> dedupEmbedding _,
-    "dedup_keep_best"      -> dedupKeepBest _,
-    "quantize_roundtrip"   -> quantizeRoundtrip _,
-    "skew_salted_agg"      -> skewSaltedAgg _,
-    "funnel_conversion"    -> funnelConversion _,
-    "funnel_windowed"      -> funnelWindowed _,
-    "funnel_reach"         -> funnelReach _,
-    "resample_forward_fill" -> resampleForwardFill _,
-    "asof_join_orders"     -> asofOrders _,
-    "range_join_sessions"  -> rangeJoinSessions _,
-    "sim_topk_bruteforce"  -> simTopK _,
-    "sim_topk_sql"         -> simTopKSql _,
-    "sim_topk_ivf"         -> simTopKIvf _,
-    "sim_topk_ivf_recall"  -> simTopKIvfRecall _,
-    "sim_topk_matryoshka"  -> simTopKMatryoshka _,
-    "text_tokens"          -> textTokens _,
-    "text_quality"         -> textQuality _,
-    "text_source_quality"  -> textSourceQuality _,
-    "text_langid"          -> textLangId _,
-    "text_tfidf"           -> textTfidf _,
-    "text_vocabulary"      -> textVocabulary _,
-    "text_repetition"      -> textRepetition _,
-    "text_common_ngrams"   -> textCommonNgrams _,
-    "sample_split"         -> sampleSplit _,
-    "sample_domain_cap"    -> sampleDomainCap _,
-    "sample_stratified"    -> sampleStratified _,
-    "filter_blocklist"     -> filterBlocklist _,
-    "text_decontaminate"   -> textDecontaminate _,
-    "text_decontaminate_spans" -> textDecontaminateSpans _,
-    "text_decontaminate_excise" -> textDecontaminateExcise _,
-    "text_decontaminate_bloom" -> textDecontaminateBloom _,
-    "text_bpe_pairs"       -> textBpePairs _,
-    "text_bpe_train"       -> textBpeTrain _,
-    "text_bpe_encode"      -> textBpeEncode _,
-    "text_bpe_fertility"   -> textBpeFertility _,
-    "sample_coreset"       -> sampleCoreset _,
-    "pipeline_fewshot"     -> pipelineFewshot _,
-    "embedding_centroid_assign" -> embeddingCentroidAssign _,
-    "embedding_kmeans"     -> embeddingKmeans _,
-    "embedding_outliers"   -> embeddingOutliers _,
-    // text_drift_psi / text_nb_pr_curve (and lake_drift_psi in
-    // LakeQueries) carry a MINIMUM-SAMPLE contract: building the frame
-    // collects the decile sample eagerly and requires >= 10 sampled
-    // docs (mod-10 id slice), so they fail fast with an explicit
-    // message on sub-~100-doc fixtures instead of running to a
-    // meaningless curve. sf0.001+ clears the bar.
-    "text_drift_psi"       -> textDriftPsi _,
-    "dedup_cross_corpus"   -> dedupCrossCorpus _,
-    "sample_shard_export"  -> sampleShardExport _,
-    "text_lm_score"        -> textLmScore _,
-    "text_corpus_stats"    -> textCorpusStats _,
-    "text_nb_classifier"   -> textNbClassifier _,
-    "sim_bitext_mine"      -> simBitextMine _,
-    "text_ppl_buckets"     -> textPplBuckets _,
-    "embedding_decontaminate" -> embeddingDecontaminate _,
-    "pipeline_quality_vote" -> pipelineQualityVote _,
-    "sample_domain_weights" -> sampleDomainWeights _,
-    "sample_triplets"      -> sampleTriplets _,
-    "text_nb_agreement"    -> textNbAgreement _,
-    "text_nb_pr_curve"     -> textNbPrCurve _,
-    "text_nb_auc"          -> textNbAuc _,
-    "text_distinct_ngrams" -> textDistinctNgrams _,
-    "text_langid_eval"     -> textLangidEval _,
-    "text_token_histogram" -> textTokenHistogram _,
-    "text_lm_score_persisted" -> textLmScorePersisted _,
-    "sample_cluster_balanced" -> sampleClusterBalanced _,
-    "pipeline_curate"      -> pipelineCurate _,
-    "pipeline_curate_sql"  -> pipelineCurateSql _,
-    "pipeline_attrition"   -> pipelineAttrition _,
-    "pipeline_curate_neardup" -> pipelineCurateNearDup _,
-    "pipeline_pretrain"    -> pipelinePretrain _,
-    "pipeline_pretrain_attrition" -> pipelinePretrainAttrition _,
-    "dedup_lines"          -> dedupLines _,
-    "dedup_substring"      -> dedupSubstring _,
-    "dedup_minhash_clusters" -> dedupMinhashClusters _,
-    "sample_temperature"   -> sampleTemperature _,
-    "sample_epoch_mix"     -> sampleEpochMix _,
-    "text_fingerprint"     -> textFingerprint _,
-    "pack_sequences"       -> packSequences _,
-    "pack_report"          -> packReport _,
-    "text_chunks"          -> textChunks _,
-    "text_quality_gate"    -> textQualityGate _,
-    "knn_graph"            -> knnGraph _,
-    "knn_graph_ivf"        -> knnGraphIvf _,
-    "sketch_distinct_kmv"  -> sketchDistinctKmv _,
-    "sketch_jaccard_kmv"   -> sketchJaccardKmv _,
-    "sketch_quantiles_kmv" -> sketchQuantilesKmv _,
-    "sketch_freq_cms"      -> sketchFreqCms _,
-    "sketch_corpus_diff"   -> sketchCorpusDiff _,
-    "sketch_sql_text"      -> sketchSqlText _,
-    "dedup_sql_text"       -> dedupSqlText _,
-    "dedup_embedding_clusters" -> dedupEmbeddingClusters _,
-    "dedup_semantic"       -> dedupSemantic _,
-    "text_heavy_hitters"   -> textHeavyHitters _,
-    "embedding_pca"        -> embeddingPca _,
-    "sim_pq_recall"        -> simPqRecall _,
-    "sim_ivfpq_recall"     -> simIvfPqRecall _,
-    "knn_label_prop"       -> knnLabelProp _,
-    "sample_dsir"          -> sampleDsir _,
-    "pipeline_rag"         -> pipelineRag _,
-    "pipeline_bm25"        -> pipelineBm25 _,
-    "pipeline_hybrid_rrf"  -> pipelineHybridRrf _,
-    "knn_pagerank"         -> knnPagerank _,
-    "sim_hard_negatives"   -> simHardNegatives _,
-    "embedding_prototypes" -> embeddingPrototypes _,
-    "text_oov_rate"        -> textOovRate _,
-    "attribution_last_touch" -> attributionLastTouch _,
-    "sample_uniform_k"     -> sampleUniformK _,
-    "sample_weighted_k"    -> sampleWeightedK _,
-    "sample_curriculum"    -> sampleCurriculum _,
-    "skew_salted_join"     -> skewSaltedJoin _,
-    "text_char_entropy"    -> textCharEntropy _,
-    "text_pii_mask"        -> textPiiMask _,
-    "multimodal_features"  -> multimodalFeatures _,
-    "multimodal_frames"    -> multimodalFrames _,
-    "multimodal_resize"    -> multimodalResize _
-  )
-
   private val DecontaminateOracle =
     """WITH s AS (
          SELECT doc_id,
@@ -2931,21 +2799,61 @@ object PipelineQueries {
          FROM best b JOIN documents d USING (doc_id)
          WHERE rn = 1 ORDER BY doc_id"""
 
-  /** The SQL-text curate route is semantics-identical to the typed
-    * chain, so it shares `pipeline_curate`'s oracle verbatim (appended
-    * below the literal — one definition, zero drift risk).
+  /** The whole curation chain replayed as one CTE: dedup → blocklist →
+    * quality ≥ 0.8 → stratified sample → per-(lang, source) accounting.
+    * The SQL-text curate route is semantics-identical to the typed
+    * chain, so `pipeline_curate` and `pipeline_curate_sql` share it.
     */
-  val oracleSql: Map[String, String] = oracleSqlBase +
-    ("pipeline_curate_sql" -> oracleSqlBase("pipeline_curate"))
+  private val CurateOracle =
+    """WITH allowed AS (
+           SELECT * FROM documents
+           WHERE source IS NULL OR source NOT IN ('src3','src7','src11')),
+         dedup AS (
+           SELECT * FROM (
+             SELECT *, row_number() OVER (PARTITION BY md5(text)
+               ORDER BY doc_id) AS rn
+             FROM allowed) WHERE rn = 1),
+         quality AS (
+           SELECT * FROM dedup
+           WHERE round(
+             (CASE WHEN length(text) BETWEEN 100 AND 20000
+                   THEN 0.3 ELSE 0 END) +
+             (CASE WHEN len(list_filter(
+                     string_split_regex(trim(lower(text)), '\s+'),
+                     w -> list_contains(['the','a','an','and','or','of',
+                       'to','in','is','it','that','for','on','with','as',
+                       'at','by'], w)))::DOUBLE
+                   / greatest(len(string_split_regex(trim(lower(text)),
+                       '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
+             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
+                   / greatest(length(text), 1) <= 0.2
+                   THEN 0.2 ELSE 0 END) +
+             (CASE WHEN list_sum(list_transform(
+                     string_split_regex(trim(lower(text)), '\s+'),
+                     w -> length(w)))::DOUBLE
+                   / greatest(len(string_split_regex(trim(lower(text)),
+                       '\s+')), 1) BETWEEN 2.0 AND 12.0
+                   THEN 0.2 ELSE 0 END), 2) >= 0.8),
+         sampled AS (
+           SELECT * FROM quality
+           WHERE ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
+                   18, 15))::UBIGINT % 100
+             < CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 60 ELSE 100 END)
+         SELECT lang, source, count(*) AS n_docs,
+                CAST(sum(len(string_split_regex(trim(text), '\s+')))
+                  AS BIGINT) AS n_tokens
+         FROM sampled GROUP BY 1, 2 ORDER BY lang, source"""
 
-  private lazy val oracleSqlBase: Map[String, String] = Map(
-    "sim_topk_matryoshka" -> MatryoshkaOracle,
+  // Lazy: the oracles read this object's private vals, and a lazy list
+  // cannot see one of them before it is set, wherever it is declared.
+  lazy val entries: Seq[Q] = Seq(
+    Q("sim_topk_matryoshka", simTopKMatryoshka _, MatryoshkaOracle),
     // Full Artetxe–Schwenk replay from all-pairs cosines: forward/
     // backward top-4 neighborhood averages, ratio margin, forward-best
     // selection, mutual-best flag. The backward CTE re-ranks the SAME
     // scored pair space (cosine is symmetric), exactly as the Spark
     // side's second kernel pass reproduces identical arithmetic.
-    "sim_bitext_mine" ->
+    Q("sim_bitext_mine", simBitextMine _,
       """WITH src AS (SELECT vec_id AS sid, embedding::DOUBLE[] AS sv
                       FROM embeddings WHERE vec_id % 2 = 0),
          tgt AS (SELECT vec_id AS tid, embedding::DOUBLE[] AS tv
@@ -2976,10 +2884,10 @@ object PipelineQueries {
          LEFT JOIN mut m ON m.tid = b.tid AND m.sid = b.sid
          WHERE (d1.dsrc + d2.dtgt) / 2 > 0
            AND b.cos / ((d1.dsrc + d2.dtgt) / 2) >= 1.0
-         ORDER BY src_id""",
-    "dedup_exact" ->
+         ORDER BY src_id"""),
+    Q("dedup_exact", dedupExact _,
       """SELECT min(doc_id) AS doc_id, count(*) AS dup_count
-         FROM documents GROUP BY text ORDER BY doc_id""",
+         FROM documents GROUP BY text ORDER BY doc_id"""),
     // Exact set-similarity join: DuckDB recomputes the same 3-shingle
     // Jaccard over all pairs — the prefix-filtered Spark plan must not
     // lose (or invent) a single pair.
@@ -2987,7 +2895,7 @@ object PipelineQueries {
     // 60-bit md5 hashes, length-4 window minima (clamped tail for
     // short docs), distinct per doc, df<=50 cap, pair overlap count
     // and fingerprint-set Jaccard with the same thresholds.
-    "dedup_winnow_pairs" -> (s"WITH $WinnowPairCtes" + """
+    Q("dedup_winnow_pairs", dedupWinnow _, (s"WITH $WinnowPairCtes" + """
          SELECT p.id_a, p.id_b, p.n_shared,
                 round(CAST(p.n_shared AS DOUBLE) /
                   (sa.n + sb.n - p.n_shared), 6) AS sim
@@ -2995,11 +2903,12 @@ object PipelineQueries {
                 JOIN sz sb ON sb.doc_id = p.id_b
          WHERE round(CAST(p.n_shared AS DOUBLE) /
                (sa.n + sb.n - p.n_shared), 6) >= 0.4
-         ORDER BY id_a, id_b"""),
+         ORDER BY id_a, id_b""")),
     // The same verified pair set folded to the source level: which
     // crawl sources copy each other (mirror detection). Pair sources
     // are canonicalized least/greatest so the matrix is triangular.
-    "dedup_source_matrix" -> (s"WITH $WinnowPairCtes," + """
+    Q("dedup_source_matrix", dedupSourceMatrix _,
+      (s"WITH $WinnowPairCtes," + """
          pr AS (SELECT p.id_a, p.id_b
                 FROM p JOIN sz sa ON sa.doc_id = p.id_a
                        JOIN sz sb ON sb.doc_id = p.id_b
@@ -3011,12 +2920,12 @@ object PipelineQueries {
                       JOIN documents db ON db.doc_id = pr.id_b)
          SELECT source_a, source_b, count(*) AS n_pairs,
                 (source_a <> source_b) AS cross_source
-         FROM m GROUP BY 1, 2 ORDER BY source_a, source_b"""),
+         FROM m GROUP BY 1, 2 ORDER BY source_a, source_b""")),
     // Novelty replayed: the winnow CTEs (same selection as
     // dedup_winnow_pairs), reference membership as a distinct-fp
     // left join, counts and the rounded fraction per current doc;
     // zero-fingerprint docs drop out of the unnest identically.
-    "text_novelty" ->
+    Q("text_novelty", textNovelty _,
       """WITH wdoc AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -3047,8 +2956,8 @@ object PipelineQueries {
                 round(CAST(sum(CASE WHEN seen.fp IS NULL THEN 1 ELSE 0
                   END) AS DOUBLE) / count(*), 6) AS novelty
          FROM e LEFT JOIN seen ON e.fp = seen.fp
-         GROUP BY e.doc_id ORDER BY e.doc_id""",
-    "dedup_ngram_pairs" ->
+         GROUP BY e.doc_id ORDER BY e.doc_id"""),
+    Q("dedup_ngram_pairs", dedupNgram _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -3072,11 +2981,11 @@ object PipelineQueries {
          WHERE len(list_intersect(sha, shb))::DOUBLE /
                (len(sha) + len(shb) - len(list_intersect(sha, shb)))
                >= 0.6
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
     // MinHash LSH is approximate, but at verify scale its banded recall
     // is total — hold it to the exact all-pairs answer so recall
     // regressions fail loudly instead of shrinking the row count.
-    "dedup_minhash_pairs" ->
+    Q("dedup_minhash_pairs", dedupMinhash _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -3100,11 +3009,11 @@ object PipelineQueries {
          WHERE len(list_intersect(sha, shb))::DOUBLE /
                (len(sha) + len(shb) - len(list_intersect(sha, shb)))
                >= 0.5
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
     // Exact all-pairs Jaccard restricted to pairs touching the batch
     // (doc_id % 5 = 4): corpus-vs-batch pairs keep (old, new) order,
     // in-batch pairs keep (min, max).
-    "dedup_incremental" ->
+    Q("dedup_incremental", dedupIncremental _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -3130,7 +3039,7 @@ object PipelineQueries {
          WHERE len(list_intersect(sha, shb))::DOUBLE /
                (len(sha) + len(shb) - len(list_intersect(sha, shb)))
                >= 0.5
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
     // Transitive closure of the exact Jaccard graph via a recursive
     // CTE; min(r) per node IS the min-label component — the same
     // fixpoint the Spark side's pointer-doubling propagation computes.
@@ -3148,7 +3057,7 @@ object PipelineQueries {
     // pruned BEFORE the per-pair intersection is computed, with zero
     // recall loss (the same arithmetic bound PPJoin's length filter
     // uses).
-    "dedup_minhash_clusters" ->
+    Q("dedup_minhash_clusters", dedupMinhashClusters _,
       """WITH RECURSIVE w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -3178,11 +3087,11 @@ object PipelineQueries {
            SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id
            WHERE reach.r < e.b)
          SELECT id AS doc_id, min(r) AS component
-         FROM reach GROUP BY id ORDER BY component, doc_id""",
+         FROM reach GROUP BY id ORDER BY component, doc_id"""),
     // Same deterministic 3-word segmentation (the regex is replicated
     // verbatim), df >= 2 on the normalized line over distinct docs,
     // survivors reassembled in position order.
-    "dedup_lines" ->
+    Q("dedup_lines", dedupLines _,
       """WITH seg AS (
            SELECT doc_id,
                   regexp_replace(text, '((\S+\s+){3})', '\1' || chr(10),
@@ -3210,11 +3119,11 @@ object PipelineQueries {
                 coalesce(k.n_kept, 0) AS n_kept,
                 coalesce(k.clean_text, '') AS clean_text
          FROM seg LEFT JOIN k USING (doc_id)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // Same 40-char/20-stride window grid, same md5-prefix hash key; a
     // window is duplicated iff its hash occurs >= 2 times corpus-wide.
     // keep is the integral comparison 2*dup <= n (bit-stable).
-    "dedup_substring" ->
+    Q("dedup_substring", dedupSubstring _,
       """WITH w AS (
            SELECT doc_id, text,
                   unnest(generate_series(1,
@@ -3238,11 +3147,11 @@ object PipelineQueries {
                 coalesce(p.dup_windows, 0) * 2 <=
                   coalesce(p.n_windows, 0) AS keep
          FROM documents d LEFT JOIN p USING (doc_id)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // integer repeats + the fractional epoch decided by the same md5
     // bucket draw as sample_split (salt 'graft-epoch'); fr at 0.0
     // epochs must vanish entirely, zh defaults to exactly 1
-    "sample_epoch_mix" ->
+    Q("sample_epoch_mix", sampleEpochMix _,
       """WITH w AS (
            SELECT doc_id, lang,
                   CASE lang WHEN 'en' THEN 2.5 WHEN 'de' THEN 0.25
@@ -3258,12 +3167,12 @@ object PipelineQueries {
                              THEN 1 ELSE 0 END AS reps
                FROM w)
          SELECT doc_id, lang, CAST(unnest(range(0, reps)) AS INT) AS epoch
-         FROM n WHERE reps > 0 ORDER BY doc_id, epoch""",
+         FROM n WHERE reps > 0 ORDER BY doc_id, epoch"""),
     // √count temperature mix: per-source keep fraction
     // min(1, 0.5·N·√n_s/Z/n_s), kept set selected by the same md5
     // bucket arithmetic as sample_split (sqrt is IEEE
     // correctly-rounded, so both engines compute identical fractions).
-    "sample_temperature" ->
+    Q("sample_temperature", sampleTemperature _,
       """WITH c AS (SELECT lang, CAST(count(*) AS DOUBLE) AS n_s
                     FROM documents GROUP BY lang),
          t AS (SELECT sum(sqrt(n_s)) AS z, sum(n_s) AS n FROM c),
@@ -3277,12 +3186,12 @@ object PipelineQueries {
                  CAST(doc_id AS VARCHAR)), 18, 15))::UBIGINT % 100
                  AS DOUBLE)
                < keep_frac * 100
-         ORDER BY doc_id""",
-    "skew_salted_agg" ->
+         ORDER BY doc_id"""),
+    Q("skew_salted_agg", skewSaltedAgg _,
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS n_rows
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "funnel_reach" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Q("funnel_reach", funnelReach _,
       """WITH e AS (
            SELECT user_id, event_type,
                   CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
@@ -3299,10 +3208,10 @@ object PipelineQueries {
                 GROUP BY e.user_id)
          SELECT (SELECT count(*) FROM s1) AS reached_view,
                 (SELECT count(*) FROM s2) AS reached_click,
-                (SELECT count(*) FROM s3) AS reached_purchase""",
+                (SELECT count(*) FROM s3) AS reached_purchase"""),
     // last-observation-per-bucket (ties by ts desc, event_id desc),
     // per-user hourly grid over the observed span, forward fill
-    "resample_forward_fill" ->
+    Q("resample_forward_fill", resampleForwardFill _,
       """WITH e AS (
            SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS b,
                   value, ts, event_id
@@ -3328,10 +3237,10 @@ object PipelineQueries {
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
                   AS filled_value,
                 is_gap
-         FROM joined ORDER BY user_id, bucket""",
+         FROM joined ORDER BY user_id, bucket"""),
     // Greedy-earliest funnel: t_i = min event time of step i strictly
     // after t_{i-1}; LEFT joins keep the drop-offs with null times.
-    "funnel_conversion" ->
+    Q("funnel_conversion", funnelConversion _,
       """WITH e AS (
            SELECT user_id, event_type,
                   CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
@@ -3351,10 +3260,10 @@ object PipelineQueries {
                   + (s3.t3 IS NOT NULL)::INT AS INT) AS depth
          FROM s1 LEFT JOIN s2 USING (user_id)
                  LEFT JOIN s3 USING (user_id)
-         ORDER BY user_id""",
+         ORDER BY user_id"""),
     // Same shape as funnel_conversion plus the window bound on t1:
     // both engines compare µs-precision timestamps, boundary inclusive.
-    "funnel_windowed" ->
+    Q("funnel_windowed", funnelWindowed _,
       """WITH e AS (
            SELECT user_id, event_type,
                   CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
@@ -3376,8 +3285,8 @@ object PipelineQueries {
                   + (s3.t3 IS NOT NULL)::INT AS INT) AS depth
          FROM s1 LEFT JOIN s2 USING (user_id)
                  LEFT JOIN s3 USING (user_id)
-         ORDER BY user_id""",
-    "asof_join_orders" ->
+         ORDER BY user_id"""),
+    Q("asof_join_orders", asofOrders _,
       """WITH o AS (SELECT o_custkey, CAST(o_orderdate AS TIMESTAMP) AS ots,
                            max(o_totalprice) AS last_order_price
                     FROM orders GROUP BY 1, 2)
@@ -3386,8 +3295,8 @@ object PipelineQueries {
          FROM events e ASOF LEFT JOIN o
            ON e.user_id = o.o_custkey
           AND o.ots <= CAST(date_trunc('microseconds', e.ts) AS TIMESTAMP)
-         ORDER BY event_id""",
-    "range_join_sessions" ->
+         ORDER BY event_id"""),
+    Q("range_join_sessions", rangeJoinSessions _,
       """WITH x AS (
            SELECT user_id, CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
                     AS t,
@@ -3411,11 +3320,11 @@ object PipelineQueries {
            ON e.user_id = s.user_id
           AND CAST(date_trunc('microseconds', e.ts) AS TIMESTAMP)
               BETWEEN s.session_start AND s.session_end
-         ORDER BY e.event_id""",
+         ORDER BY e.event_id"""),
     // Pairs here are exact-text duplicates, so the transitive closure
     // the Spark side computes (pairs → min-label components → keep-best)
     // collapses to GROUP BY text with an argmax over the quality score.
-    "dedup_keep_best" ->
+    Q("dedup_keep_best", dedupKeepBest _,
       """WITH q AS (
            SELECT doc_id, text, CAST(round(
              (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3 ELSE 0
@@ -3441,10 +3350,10 @@ object PipelineQueries {
                   row_number() OVER (PARTITION BY text
                     ORDER BY quality_score DESC, doc_id) AS rk
            FROM q)
-         WHERE rk = 1 ORDER BY doc_id""",
+         WHERE rk = 1 ORDER BY doc_id"""),
     // Identical double arithmetic replayed: scale = max|x|/127 promoted
     // to double, codes = round-half-up int8, deq = codes * scale.
-    "quantize_roundtrip" ->
+    Q("quantize_roundtrip", quantizeRoundtrip _,
       """WITH s AS (
            SELECT vec_id, embedding,
                   CAST(greatest(list_max(list_transform(embedding,
@@ -3467,10 +3376,10 @@ object PipelineQueries {
                   AS max_err,
                 round(list_cosine_similarity(embedding::DOUBLE[], deq), 6)
                   AS cos_roundtrip
-         FROM e ORDER BY vec_id""",
+         FROM e ORDER BY vec_id"""),
     // Planted-twin scenario replayed in DuckDB float math: union base
     // vectors with their jittered twins, all pairs with cosine >= 0.98.
-    "dedup_embedding_pairs" ->
+    Q("dedup_embedding_pairs", dedupEmbedding _,
       """WITH u AS (
            SELECT vec_id, embedding FROM embeddings
            UNION ALL
@@ -3485,10 +3394,10 @@ object PipelineQueries {
          FROM u a JOIN u b ON a.vec_id < b.vec_id
          WHERE list_cosine_similarity(a.embedding::DOUBLE[],
                  b.embedding::DOUBLE[]) >= 0.98
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
     // The planted-twin pair set closed into components by a recursive
     // CTE — same closure idiom as dedup_minhash_clusters.
-    "dedup_embedding_clusters" ->
+    Q("dedup_embedding_clusters", dedupEmbeddingClusters _,
       """WITH RECURSIVE u AS (
            SELECT vec_id, embedding FROM embeddings
            UNION ALL
@@ -3510,11 +3419,11 @@ object PipelineQueries {
            SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id
            WHERE reach.r < e.b)
          SELECT id AS vec_id, min(r) AS component
-         FROM reach GROUP BY id ORDER BY component, vec_id""",
+         FROM reach GROUP BY id ORDER BY component, vec_id"""),
     // SemDeDup replay: same planted-twin union, the first-8 centroid
     // assignment (exact-cosine argmax, ties to lowest cell), then the
     // cell-scoped dominance rule on the ROUNDED cosine.
-    "dedup_semantic" ->
+    Q("dedup_semantic", dedupSemantic _,
       """WITH u AS (
            SELECT vec_id, embedding FROM embeddings
            UNION ALL
@@ -3541,13 +3450,13 @@ object PipelineQueries {
                  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.98)
          SELECT v.vec_id, v.cell, (d.vec_id IS NULL) AS kept
          FROM v LEFT JOIN drp d ON v.vec_id = d.vec_id
-         ORDER BY v.vec_id""",
+         ORDER BY v.vec_id"""),
     // The eigen-decomposition is not SQL-replayable; the oracle pins
     // the exact total variance (trace of the population covariance) and
     // requires every certificate true — unit norms, orthogonality, the
     // eigen residual, eigenvalue ordering, and the projected-variance
     // closure over the actual corpus.
-    "embedding_pca" ->
+    Q("embedding_pca", embeddingPca _,
       """WITH x AS (SELECT unnest(embedding::DOUBLE[]) AS v,
                            generate_subscripts(embedding, 1) AS pos
                     FROM embeddings),
@@ -3557,20 +3466,20 @@ object PipelineQueries {
                 true AS unit_norm_ok, true AS orthogonal_ok,
                 true AS residual_ok, true AS ordered_ok,
                 true AS proj_var_ok
-         FROM range(4) r, tv ORDER BY component""",
+         FROM range(4) r, tv ORDER BY component"""),
     // PQ codebooks are not SQL-replayable; the oracle pins the code
     // geometry and requires the two-stage recall and reconstruction
     // certificates true (the sim_topk_ivf_recall stance).
-    "sim_pq_recall" ->
+    Q("sim_pq_recall", simPqRecall _,
       """SELECT 5 AS n_queries, 10 AS k, 32 AS code_bits,
-                true AS recall_ok, true AS mse_ok""",
-    "sim_ivfpq_recall" ->
+                true AS recall_ok, true AS mse_ok"""),
+    Q("sim_ivfpq_recall", simIvfPqRecall _,
       """SELECT 16 AS nlist, 4 AS nprobe, 5 AS n_queries, 10 AS k,
-                true AS recall_ok""",
+                true AS recall_ok"""),
     // the certificate column must come out true: if Misra–Gries ever
     // missed a true top-20 word OR the certificate logic weakened, the
     // row goes red against this exact full-shuffle top-k
-    "text_heavy_hitters" ->
+    Q("text_heavy_hitters", textHeavyHitters _,
       """WITH w AS (SELECT lower(unnest(string_split_regex(trim(text),
                       '\s+'))) AS word
                     FROM documents),
@@ -3579,11 +3488,11 @@ object PipelineQueries {
          SELECT CAST(row_number() OVER (ORDER BY n DESC, word) AS INT)
                   AS rk,
                 word, n, true AS provably_exact
-         FROM top ORDER BY rk""",
+         FROM top ORDER BY rk"""),
     // ONE string for both keys: the SQL-surface variant must produce
     // byte-identical results to the Column-API plan by construction
-    "sim_topk_bruteforce" -> SimTopKOracle,
-    "sim_topk_sql" -> SimTopKOracle,
+    Q("sim_topk_bruteforce", simTopK _, SimTopKOracle),
+    Q("sim_topk_sql", simTopKSql _, SimTopKOracle),
     // The ENTIRE IVF probe replayed — quantizer included: the md5-
     // seeded 2-iteration cosine-Lloyd fit (the embedding_kmeans CTEs at
     // k=16), L2 cell assignment of every vector, each query's 4 nearest
@@ -3591,7 +3500,7 @@ object PipelineQueries {
     // cells. Possible since buildIvfDeterministic replaced the MLlib
     // quantizer for this index: approximate-by-construction, yet every
     // row hash-checks.
-    "sim_topk_ivf" ->
+    Q("sim_topk_ivf", simTopKIvf _,
       s"""WITH $IvfFit16Ctes,
          q AS (SELECT vec_id AS query_id, v AS qvec FROM v
                WHERE vec_id < 5),
@@ -3609,16 +3518,16 @@ object PipelineQueries {
                 round(cos, 6) AS cosine
          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                  ORDER BY cos DESC, vec_id) AS rank FROM sc)
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+         WHERE rank <= 10 ORDER BY query_id, rank"""),
     // The recall row stays as the QUALITY gate (now over the
     // deterministic-quantizer index): probe recalls ≥ 50% of the exact
     // neighbor set at nprobe=4/16.
-    "sim_topk_ivf_recall" ->
+    Q("sim_topk_ivf_recall", simTopKIvfRecall _,
       """SELECT CAST(count(*) AS INT) AS n_queries,
                 CAST(10 * count(*) AS INT) AS n_exact,
                 CAST(1 AS BOOLEAN) AS recall_ge_05
-         FROM embeddings WHERE vec_id < 5""",
-    "text_tokens" ->
+         FROM embeddings WHERE vec_id < 5"""),
+    Q("text_tokens", textTokens _,
       """SELECT doc_id,
                 CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
                   AS ws_tokens,
@@ -3628,8 +3537,8 @@ object PipelineQueries {
                   greatest(len(regexp_extract_all(text,
                     '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')), 1), 4)
                   AS chars_per_token
-         FROM documents ORDER BY doc_id""",
-    "text_quality" ->
+         FROM documents ORDER BY doc_id"""),
+    Q("text_quality", textQuality _,
       """SELECT doc_id,
                 round(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
                     w -> list_contains(['the','a','an','and','or','of','to','in',
@@ -3655,15 +3564,15 @@ object PipelineQueries {
                       '\s+'), w -> length(w)))::DOUBLE
                     / greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1)
                     BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END), 2) AS quality_score
-         FROM documents ORDER BY doc_id""",
-    "text_fingerprint" ->
+         FROM documents ORDER BY doc_id"""),
+    Q("text_fingerprint", textFingerprint _,
       """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
                   AS content_md5
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
     // Shard-then-pack: the md5 shard is the same 60-bit arithmetic as
     // the sampling bucket (mod 4); offsets are integer prefix sums, so
     // every column is exact — no FP anywhere.
-    "pack_sequences" ->
+    Q("pack_sequences", packSequences _,
       """WITH t AS (
            SELECT doc_id,
                   CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)),
@@ -3680,12 +3589,12 @@ object PipelineQueries {
          SELECT doc_id, shard, n_tokens, start_offset,
                 start_offset // 512 AS first_seq,
                 (start_offset + n_tokens - 1) // 512 AS last_seq
-         FROM c ORDER BY doc_id""",
+         FROM c ORDER BY doc_id"""),
     // the pack CTE refolded as per-shard utilization accounting:
     // n_seqs = ceil(tokens/512) is exact because each shard's token
     // stream is gapless; tail waste is the only padding
     // concat-and-split produces
-    "pack_report" ->
+    Q("pack_report", packReport _,
       """WITH t AS (
            SELECT doc_id,
                   CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)),
@@ -3711,11 +3620,11 @@ object PipelineQueries {
                 ((n_tokens + 511) // 512) * 512 - n_tokens AS tail_waste,
                 round(n_tokens / (((n_tokens + 511) // 512) * 512.0), 6)
                   AS utilization
-         FROM a ORDER BY shard""",
+         FROM a ORDER BY shard"""),
     // Chunk slices are 1-based inclusive in DuckDB, (start, length) in
     // Spark — both truncate at the token count; the md5 compares chunk
     // CONTENT, not just shape.
-    "text_chunks" ->
+    Q("text_chunks", textChunks _,
       """WITH s AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                     FROM documents),
          k AS (SELECT doc_id, w,
@@ -3726,17 +3635,17 @@ object PipelineQueries {
                   AS chunk_tokens,
                 md5(array_to_string(w[(k*48+1):least(k*48+64, len(w))], ' '))
                   AS chunk_md5
-         FROM k ORDER BY doc_id, chunk_idx""",
+         FROM k ORDER BY doc_id, chunk_idx"""),
     // Verdict thresholds compare the ROUNDED signals (same values the
     // signal queries publish), so the gate replays exactly; the
     // quality_score CASEs reuse text_quality's raw-ratio arithmetic.
-    "text_quality_gate" -> (QualityGateCtes + """
+    Q("text_quality_gate", textQualityGate _, (QualityGateCtes + """
          SELECT doc_id, quality_score, dup_gram_frac, (len(hit) = 0) AS keep,
                 coalesce(array_to_string(hit, ','), '') AS reasons
-         FROM v ORDER BY doc_id"""),
+         FROM v ORDER BY doc_id""")),
     // The league fold over the same gate CTEs, source re-joined by id;
     // token counts from the same split as every token row.
-    "text_source_quality" -> (QualityGateCtes + """,
+    Q("text_source_quality", textSourceQuality _, (QualityGateCtes + """,
          k AS (SELECT doc_id, len(hit) = 0 AS keep, quality_score,
                       dup_gram_frac
                FROM v),
@@ -3750,11 +3659,11 @@ object PipelineQueries {
                 round(avg(dup_gram_frac), 4) AS mean_dup_frac,
                 round(sum(CASE WHEN keep THEN 1 ELSE 0 END)::DOUBLE
                       / count(*), 4) AS keep_rate
-         FROM j GROUP BY source ORDER BY source"""),
+         FROM j GROUP BY source ORDER BY source""")),
     // The as-of self-join on events: DuckDB's ASOF LEFT JOIN is the
     // reference semantics (<=, most recent); click ties pre-deduped
     // identically on both sides.
-    "attribution_last_touch" ->
+    Q("attribution_last_touch", attributionLastTouch _,
       """WITH c AS (SELECT user_id,
                            CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
                              AS ct,
@@ -3767,21 +3676,21 @@ object PipelineQueries {
                 c.click_id, c.ct AS click_ts
          FROM p ASOF LEFT JOIN c
            ON p.user_id = c.user_id AND c.ct <= p.pt
-         ORDER BY purchase_id""",
+         ORDER BY purchase_id"""),
     // Same 60-bit md5 permutation as the bucket samplers; the UBIGINT
     // sort order equals Spark's signed-long order because 15 hex chars
     // stay under 2^60.
-    "sample_uniform_k" ->
+    Q("sample_uniform_k", sampleUniformK _,
       """SELECT doc_id, lang, source FROM (
            SELECT doc_id, lang, source FROM documents
            ORDER BY ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
              18, 15))::UBIGINT, doc_id
            LIMIT 100)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // Efraimidis–Spirakis replayed: u = (h60+1)/2^60 from the same md5
     // permutation, key = round(ln(u)/w, 6) — the expression SHAPE
     // mirrors the Spark side so the doubles agree before the round.
-    "sample_weighted_k" ->
+    Q("sample_weighted_k", sampleWeightedK _,
       """SELECT doc_id, lang, n_tokens, es_key FROM (
            SELECT doc_id, lang, n_tokens,
                   round(ln((('0x' || substr(
@@ -3794,11 +3703,11 @@ object PipelineQueries {
                       AS n_tokens
              FROM documents)
            ORDER BY es_key DESC, doc_id LIMIT 100)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // Same quality CTE as sample_token_budget; stages compare the
     // ROUNDED score, position ranks the md5 permutation per
     // (stage, shard).
-    "sample_curriculum" ->
+    Q("sample_curriculum", sampleCurriculum _,
       """WITH t AS (
            SELECT doc_id, lang,
                   round(
@@ -3834,10 +3743,10 @@ object PipelineQueries {
                 CAST(h60 % 8 AS INT) AS shard,
                 CAST(row_number() OVER (PARTITION BY stage, h60 % 8
                   ORDER BY h60, doc_id) AS INT) AS pos
-         FROM h ORDER BY stage, shard, pos""",
+         FROM h ORDER BY stage, shard, pos"""),
     // Excision replayed: matched gram starts expand to covered word
     // indices; the rewrite keeps exactly the uncovered words in order.
-    "text_decontaminate_excise" ->
+    Q("text_decontaminate_excise", textDecontaminateExcise _,
       """WITH s AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -3869,20 +3778,20 @@ object PipelineQueries {
          SELECT doc_id, CAST(n_words AS INT) AS n_words,
                 CAST(n_words - len(kw) AS INT) AS n_removed,
                 coalesce(array_to_string(kw, ' '), '') AS clean_text
-         FROM kept ORDER BY doc_id""",
+         FROM kept ORDER BY doc_id"""),
     // The salted join must be semantically invisible: oracle = the
     // PLAIN lineitem×orders join, no salt anywhere.
-    "skew_salted_join" ->
+    Q("skew_salted_join", skewSaltedJoin _,
       """SELECT o_orderstatus, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS n_rows
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
+         GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
     // The flat greedy token budget: per lang, cumulative whitespace
     // tokens over (quality desc, doc_id) ≤ 10000 — the Spark side's
     // level-aggregate + boundary-prefix decomposition must equal this
     // naive global-order formulation exactly (same quality formula as
     // the text_quality oracle).
-    "sample_token_budget" ->
+    Q("sample_token_budget", sampleTokenBudget _,
       """WITH t AS (
            SELECT doc_id, lang,
                   CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
@@ -3914,10 +3823,10 @@ object PipelineQueries {
              ROWS UNBOUNDED PRECEDING) AS cum
            FROM t)
          SELECT doc_id, lang, n_tokens, quality_score
-         FROM r WHERE cum <= 10000 ORDER BY doc_id""",
+         FROM r WHERE cum <= 10000 ORDER BY doc_id"""),
     // Exact kNN graph: rank on the RAW cosine (round only in the
     // output), ties on neighbor id; mutual = reversed pair exists.
-    "knn_graph" ->
+    Q("knn_graph", knnGraph _,
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
                       list_cosine_similarity(a.v, b.v) AS cos
@@ -3929,11 +3838,11 @@ object PipelineQueries {
          SELECT k.src, CAST(k.rank AS INT) AS rank, k.dst,
                 round(k.cos, 6) AS cosine, (m.src IS NOT NULL) AS mutual
          FROM k LEFT JOIN k m ON m.src = k.dst AND m.dst = k.src
-         ORDER BY k.src, k.rank""",
+         ORDER BY k.src, k.rank"""),
     // The KMV estimator replayed end-to-end: shared sketch CTEs, then
     // the (k−1)·2⁶⁰/h_k estimate in the same double arithmetic —
     // exact-mode (k_used < 256) returns the sketch size itself.
-    "sketch_distinct_kmv" ->
+    Q("sketch_distinct_kmv", sketchDistinctKmv _,
       s"""WITH $KmvSketchCtes
          SELECT grp AS lang, CAST(count(*) AS INT) AS k_used,
                 max(h) AS kth_min,
@@ -3941,13 +3850,13 @@ object PipelineQueries {
                      ELSE CAST(round((count(*) - 1) * pow(2.0, 60)
                                      / max(h)) AS BIGINT) END
                   AS est_distinct
-         FROM sk GROUP BY grp ORDER BY lang""",
+         FROM sk GROUP BY grp ORDER BY lang"""),
     // KMV set algebra: combined sketch = 256 smallest of the two
     // member sketches' union; jaccard = both-flagged fraction of the
     // combined sketch; intersection = that fraction of the combined
     // sketch's own union estimate (reading the ROUNDED long, like the
     // Spark plan).
-    "sketch_jaccard_kmv" ->
+    Q("sketch_jaccard_kmv", sketchJaccardKmv _,
       s"""WITH $KmvSketchCtes,
          g AS (SELECT DISTINCT grp FROM sk),
          p AS (SELECT a.grp AS lang_a, b.grp AS lang_b
@@ -3978,12 +3887,12 @@ object PipelineQueries {
                 round(k_both::DOUBLE / k_used, 6) AS est_jaccard,
                 CAST(round(k_both::DOUBLE / k_used * est_union)
                   AS BIGINT) AS est_intersection
-         FROM e ORDER BY lang_a, lang_b""",
+         FROM e ORDER BY lang_a, lang_b"""),
     // The quantile sketch replayed: the bottom-256-by-md5(id) uniform
     // sample per language (DISTINCT hashes, the aggregate's dedup),
     // values joined back by re-derived hash, then the value at rank
     // ceil(p·n/100) in integer arithmetic.
-    "sketch_quantiles_kmv" ->
+    Q("sketch_quantiles_kmv", sketchQuantilesKmv _,
       """WITH r AS (SELECT lang, doc_id,
                 CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
                   AS n_tokens,
@@ -4012,7 +3921,7 @@ object PipelineQueries {
                       THEN n_tokens END) AS p75_tokens,
                 max(CASE WHEN rn = (n * 90 + 99) // 100
                       THEN n_tokens END) AS p90_tokens
-         FROM rk GROUP BY lang ORDER BY lang""",
+         FROM rk GROUP BY lang ORDER BY lang"""),
     // The count-min sketch replayed grid-and-all: 4 md5 hash rows mod
     // 1024 counters over the token stream (merged per-lang grids ==
     // one global GROUP BY — counter addition is associative, so the
@@ -4020,7 +3929,7 @@ object PipelineQueries {
     // estimate is min-over-rows, the overcount its distance from
     // truth. CMS never undercounts, so a single negative overcount
     // anywhere fails the hash.
-    "sketch_freq_cms" ->
+    Q("sketch_freq_cms", sketchFreqCms _,
       """WITH w AS (SELECT lower(unnest(string_split_regex(trim(text),
                       '\s+'))) AS word
                     FROM documents),
@@ -4044,14 +3953,14 @@ object PipelineQueries {
                   AS rk,
                 word, n AS n_true, CAST(cms_est AS BIGINT) AS cms_est,
                 CAST(cms_est - n AS BIGINT) AS overcount
-         FROM est ORDER BY rk""",
+         FROM est ORDER BY rk"""),
     // The corpus diff replayed axis-by-axis on the shared gate CTEs:
     // exact doc/token sums over the keep verdict, both KMV shingle
     // sketches (global distinct → bottom-256), the pair's combined-
     // sketch resemblance, both CMS grids as conditional counters, and
     // the before-top-20 probe mass. Every estimator is deterministic,
     // so the single report row hash-checks end-to-end.
-    "sketch_corpus_diff" -> (QualityGateCtes + """,
+    Q("sketch_corpus_diff", sketchCorpusDiff _, (QualityGateCtes + """,
          base AS (SELECT len(v.hit) = 0 AS keep, w.words
                   FROM w JOIN v USING (doc_id)),
          """ + CorpusDiffChainCtes + """
@@ -4059,13 +3968,13 @@ object PipelineQueries {
                 cnt.n_tokens_after, ev.est_vocab_before,
                 ev.est_vocab_after, jac.est_jaccard,
                 mass.top20_mass_before, mass.top20_mass_after
-         FROM cnt, ev, jac, mass"""),
+         FROM cnt, ev, jac, mass""")),
     // The SQL-text sketch composition replayed chain-for-chain: the
     // KMV vocabulary estimator (shared 3-shingle md5 idiom), the CMS
     // grid + exact-top-5 probe, and the dhash sketch's 65-window byte
     // chain (the BlobDhashPairCtes `sk` stage) folded to a distinct
     // count.
-    "sketch_sql_text" ->
+    Q("sketch_sql_text", sketchSqlText _,
       """WITH d AS (SELECT doc_id, text FROM documents
                     WHERE text IS NOT NULL),
          ws AS (SELECT string_split_regex(trim(lower(text)), '\s+')
@@ -4125,13 +4034,13 @@ object PipelineQueries {
                  FROM nbr WHERE i < 64 GROUP BY blob_id),
          dhc AS (SELECT count(DISTINCT dh) AS n_dhash FROM skb)
          SELECT ev.est_vocab, mass.top5_mass, dhc.n_dhash
-         FROM ev, mass, dhc""",
+         FROM ev, mass, dhc"""),
     // The SQL-text MinHash LSH route is held to the SAME exact
     // all-pairs answer as dedup_minhash_pairs (identical parameters,
     // identical semantics): banded recall is total at verify scale, so
     // a recall regression in the SQL surface hash-mismatches instead
     // of silently shrinking the row count.
-    "dedup_sql_text" ->
+    Q("dedup_sql_text", dedupSqlText _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -4155,14 +4064,14 @@ object PipelineQueries {
          WHERE len(list_intersect(sha, shb))::DOUBLE /
                (len(sha) + len(shb) - len(list_intersect(sha, shb)))
                >= 0.5
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
     // The IVF graph replayed index-and-all (the shared nlist=16 fit
     // CTEs): every vector probes its 2 nearest cells by centroid L2,
     // scores only the vectors ASSIGNED to those cells (cells are
     // disjoint, so no (src,dst) dedup is needed), ranks on the raw
     // cosine with id tie-break — approximate by construction, exact
     // to replay.
-    "knn_graph_ivf" ->
+    Q("knn_graph_ivf", knnGraphIvf _,
       s"""WITH $IvfFit16Ctes,
          probe AS (SELECT vec_id AS src, v AS qvec, cell FROM
                     (SELECT a.vec_id, a.v, c.cell,
@@ -4182,12 +4091,12 @@ object PipelineQueries {
          SELECT k.src, CAST(k.rank AS INT) AS rank, k.dst,
                 round(k.cos, 6) AS cosine, (m.src IS NOT NULL) AS mutual
          FROM k LEFT JOIN k m ON m.src = k.dst AND m.dst = k.src
-         ORDER BY k.src, k.rank""",
+         ORDER BY k.src, k.rank"""),
     // BM25 replayed term-identically: same tokenization, same Lucene
     // idf expression SHAPE (double math agrees before the micro-unit
     // round), integer micro-unit per-term contributions so the
     // cross-term sum is order-independent in both engines.
-    "pipeline_bm25" ->
+    Q("pipeline_bm25", pipelineBm25 _,
       """WITH toks AS (
            SELECT doc_id,
                   len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
@@ -4228,11 +4137,11 @@ object PipelineQueries {
            FROM s)
          SELECT query_id, CAST(rank AS INT) AS rank, doc_id,
                 round(score_micro / 1000000.0, 6) AS bm25
-         FROM r WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM r WHERE rank <= 10 ORDER BY query_id, rank"""),
     // The whole retrieval chain replayed: the text_chunks grid, the
     // md5-projection embedder (same hex-prefix arithmetic as
     // sample_dsir's buckets), and rounded-cosine ranking.
-    "pipeline_rag" ->
+    Q("pipeline_rag", pipelineRag _,
       """WITH s AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
                     FROM documents),
          k AS (SELECT doc_id, w,
@@ -4261,13 +4170,13 @@ object PipelineQueries {
                FROM sc)
          SELECT query_id, CAST(rank AS INT) AS rank, doc_id, chunk_idx,
                 round(cos, 6) AS cosine
-         FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
+         FROM r WHERE rank <= 5 ORDER BY query_id, rank"""),
     // RRF fusion with BOTH member chains nested verbatim (b_ = the
     // pipeline_bm25 CTEs, d_ = the pipeline_rag CTEs): doc-level dense
     // ranks via min chunk rank, reciprocal ranks in integer micro-units
     // (1000000 // (60+rank) — pure long arithmetic on both engines),
     // full-outer fusion, micro-sum ranking with doc-id tie-break.
-    "pipeline_hybrid_rrf" ->
+    Q("pipeline_hybrid_rrf", pipelineHybridRrf _,
       """WITH b_toks AS (
            SELECT doc_id,
                   len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
@@ -4352,12 +4261,12 @@ object PipelineQueries {
                 round(rrf_micro / 1000000.0, 6) AS rrf,
                 CAST(bm25_rank AS INT) AS bm25_rank,
                 CAST(dense_rank AS INT) AS dense_rank
-         FROM ranked ORDER BY query_id, rank""",
+         FROM ranked ORDER BY query_id, rank"""),
     // DSIR replayed bucket-for-bucket: word bigrams, md5-prefix bucket
     // hash (first 8 hex chars as an int, mod B — identical arithmetic
     // on both engines), add-one smoothing over B, per-doc occurrence
     // log-ratio sums ranked ROUNDED with id tie-break.
-    "sample_dsir" ->
+    Q("sample_dsir", sampleDsir _,
       """WITH w AS (SELECT doc_id, lang = 'en' AS is_t,
                            string_split_regex(trim(lower(text)), '\s+') AS ws
                     FROM documents),
@@ -4388,12 +4297,12 @@ object PipelineQueries {
            SELECT doc_id, score, row_number() OVER
              (ORDER BY score DESC, doc_id) AS rk
            FROM sc)
-         WHERE rk <= 100 ORDER BY rk""",
+         WHERE rk <= 100 ORDER BY rk"""),
     // Label propagation with BOTH voting rounds unrolled over the same
     // kNN edges: majority of labeled out-neighbors, ties to the
     // smallest label, seeds clamped, all-unlabeled neighborhoods stay
     // NULL — integral comparisons only, so the labels hash exactly.
-    "knn_label_prop" ->
+    Q("knn_label_prop", knnLabelProp _,
       """WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
                       list_cosine_similarity(a.v, b.v) AS cos
@@ -4426,11 +4335,11 @@ object PipelineQueries {
          l2 AS (SELECT nodes.node, coalesce(seed.lbl, w2.lbl) AS lbl
                 FROM nodes LEFT JOIN seed USING (node)
                 LEFT JOIN w2 USING (node))
-         SELECT node AS vec_id, lbl AS label FROM l2 ORDER BY vec_id""",
+         SELECT node AS vec_id, lbl AS label FROM l2 ORDER BY vec_id"""),
     // PageRank with the 3 iterations UNROLLED over the same kNN edges;
     // per-iteration 1e-12 rounding keeps both engines on one grid (the
     // kmeans stance), output at 1e-6.
-    "knn_pagerank" ->
+    Q("knn_pagerank", knnPagerank _,
       """WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
                       list_cosine_similarity(a.v, b.v) AS cos
@@ -4468,10 +4377,10 @@ object PipelineQueries {
                          CAST(0.85 AS DOUBLE) * coalesce(c3.cs, 0), 12) AS rank
                 FROM nodes CROSS JOIN n
                 LEFT JOIN c3 ON c3.node = nodes.node)
-         SELECT node, round(rank, 6) AS rank FROM r3 ORDER BY node""",
+         SELECT node, round(rank, 6) AS rank FROM r3 ORDER BY node"""),
     // Hard negatives: rank on the RAW cross-label cosine, ties on
     // neighbor id, round only in the output (the knn_graph stance).
-    "sim_hard_negatives" ->
+    Q("sim_hard_negatives", simHardNegatives _,
       """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                     FROM embeddings),
          s AS (SELECT a.vec_id, b.vec_id AS neighbor,
@@ -4482,11 +4391,11 @@ object PipelineQueries {
                FROM s)
          SELECT vec_id, CAST(rank AS INT) AS rank, neighbor,
                 round(cos, 6) AS cosine
-         FROM r WHERE rank <= 3 ORDER BY vec_id, rank""",
+         FROM r WHERE rank <= 3 ORDER BY vec_id, rank"""),
     // Per-label mean vector: avg per (label, position), then first
     // coordinate and L2 norm of the mean — 1e-6 display rounding over
     // means of dozens of doubles (ulp noise ~1e-15).
-    "embedding_prototypes" ->
+    Q("embedding_prototypes", embeddingPrototypes _,
       """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                     FROM embeddings),
          u AS (SELECT label, pos, avg(x) AS m FROM
@@ -4499,11 +4408,11 @@ object PipelineQueries {
          SELECT n.label, n.n_members, round(p.mv[1], 6) AS c0,
                 round(sqrt(list_sum(list_transform(p.mv, x -> x * x))), 6)
                   AS norm
-         FROM n JOIN p USING (label) ORDER BY n.label""",
+         FROM n JOIN p USING (label) ORDER BY n.label"""),
     // Shannon entropy over the per-doc character distribution; both
     // engines sum -(p·log2 p) over the same (doc, char) counts, rounded
     // to 6 (the checker compares floats at 1e-9 rel)
-    "text_char_entropy" ->
+    Q("text_char_entropy", textCharEntropy _,
       """WITH ch AS (
            SELECT doc_id, unnest(regexp_extract_all(lower(text), '.'))
              AS c
@@ -4514,8 +4423,8 @@ object PipelineQueries {
          SELECT doc_id,
                 round(sum(-(n / tot) * log2(n / tot)), 6) AS char_entropy
          FROM cnt JOIN tot USING (doc_id)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "text_pii_mask" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    Q("text_pii_mask", textPiiMask _,
       """WITH planted AS (
            SELECT doc_id,
                   text || ' contact user' || doc_id || '@example.com' ||
@@ -4542,33 +4451,33 @@ object PipelineQueries {
                       '<IP>', 'g'),
                     '\+?[0-9][0-9()\-\s]{7,}[0-9]', '<PHONE>', 'g'),
                   '@|\+1 555|10\.0\.') AS clean
-         FROM planted ORDER BY doc_id""",
-    "multimodal_features" ->
+         FROM planted ORDER BY doc_id"""),
+    Q("multimodal_features", multimodalFeatures _,
       """SELECT doc_id AS blob_id,
                 CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
                   ELSE 'video' END AS modality,
                 CAST(strlen(text) AS INT) AS n_bytes
-         FROM documents ORDER BY blob_id""",
+         FROM documents ORDER BY blob_id"""),
     // stub resize keeps min(bytes, 16x16) payload bytes of each image
-    "multimodal_resize" ->
+    Q("multimodal_resize", multimodalResize _,
       """SELECT doc_id AS blob_id, CAST(16 AS INT) AS width,
                 CAST(16 AS INT) AS height,
                 CAST(least(strlen(text), 256) AS INT) AS n_bytes_out
-         FROM documents WHERE doc_id % 3 = 0 ORDER BY blob_id""",
-    "multimodal_frames" ->
+         FROM documents WHERE doc_id % 3 = 0 ORDER BY blob_id"""),
+    Q("multimodal_frames", multimodalFrames _,
       """SELECT doc_id AS blob_id, CAST(i AS INT) AS frame_idx,
                 CAST(i * greatest(strlen(text) // 4, 1) AS INT)
                   AS frame_offset
          FROM documents, UNNEST([0,1,2,3]) AS t(i)
-         WHERE doc_id % 3 = 2 ORDER BY blob_id, frame_idx""",
+         WHERE doc_id % 3 = 2 ORDER BY blob_id, frame_idx"""),
     // Exact blob-content dedup: the blob payload is the document text's
     // UTF-8 bytes, so sha256(text) in DuckDB hashes the identical byte
     // string Spark's sha2(content, 256) does.
-    "dedup_blob_exact" ->
+    Q("dedup_blob_exact", dedupBlobExact _,
       """SELECT sha256(text) AS digest, min(doc_id) AS keep_id,
                 count(*) AS n_copies
          FROM documents WHERE text IS NOT NULL
-         GROUP BY sha256(text) ORDER BY keep_id""",
+         GROUP BY sha256(text) ORDER BY keep_id"""),
     // Byte-dHash replayed bit-for-bit: byte p of the payload (via
     // hex(text::BLOB) — UTF-8, the exact bytes Spark's binary cast
     // carries) lands in window p*65//n, windows reduce to unsigned
@@ -4576,13 +4485,13 @@ object PipelineQueries {
     // win_i > win_{i+1}; then the SAME 4×16 banding, df<=50 cap, and
     // hamming<=3 verify the Spark plan runs — the cap drops buckets,
     // so the banding must be replayed, not pigeonhole-skipped.
-    "dedup_blob_near" ->
+    Q("dedup_blob_near", dedupBlobNear _,
       (BlobDhashPairCtes + """
          SELECT modality, id_a, id_b, hamming FROM npairs
-         ORDER BY modality, id_a, id_b"""),
+         ORDER BY modality, id_a, id_b""")),
     // The pair graph's transitive closure on top of the shared dhash
     // CTEs — the dedup_minhash_clusters reach idiom.
-    "dedup_blob_clusters" -> (BlobDhashPairCtes + """,
+    Q("dedup_blob_clusters", dedupBlobClusters _, (BlobDhashPairCtes + """,
          e AS (SELECT id_a AS a, id_b AS b FROM npairs
                UNION SELECT id_b, id_a FROM npairs),
          reach(id, r) AS (
@@ -4591,12 +4500,12 @@ object PipelineQueries {
            SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id
            WHERE reach.r < e.b)
          SELECT id AS blob_id, min(r) AS component
-         FROM reach GROUP BY id ORDER BY component, blob_id"""),
+         FROM reach GROUP BY id ORDER BY component, blob_id""")),
     // The composed multimodal chain replayed stage-for-stage: sha-256
     // keep-min-per-digest, then the dedup_blob_near dhash/band/cap
     // machinery over the exact survivors, keep-if-no-smaller-neighbor,
     // per-modality attrition fold.
-    "pipeline_multimodal_curate" ->
+    Q("pipeline_multimodal_curate", pipelineMultimodalCurate _,
       """WITH b AS (
            SELECT doc_id AS blob_id,
                   CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
@@ -4667,12 +4576,12 @@ object PipelineQueries {
                 n_kept, CAST(bytes_kept AS BIGINT) AS bytes_kept
          FROM agg_in JOIN agg_ek USING (modality)
                      JOIN agg_k USING (modality)
-         ORDER BY modality""",
+         ORDER BY modality"""),
     // Full simhash replay: word hash = low 64 bits of md5 (the operator
     // uses the same primitive precisely so this oracle exists). The
     // 4×16-bit banding is complete for hamming <= 3 by pigeonhole, so
     // the oracle skips it and takes all pairs with hamming <= 3.
-    "dedup_simhash_pairs" ->
+    Q("dedup_simhash_pairs", dedupSimhash _,
       """WITH w AS (
            SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
              '\s+')) AS w
@@ -4694,10 +4603,10 @@ object PipelineQueries {
                 CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
     // Smooth-idf TF-IDF replayed: identical double math, identical
     // (tfidf desc, term) tie-break.
-    "text_tfidf" ->
+    Q("text_tfidf", textTfidf _,
       """WITH w AS (
            SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
              '\s+')) AS term
@@ -4717,10 +4626,10 @@ object PipelineQueries {
                     ORDER BY tf.tf * (ln((n.n_docs + 1)::DOUBLE / (df.df + 1))
                       + 1) DESC, tf.term) AS rk
            FROM tf JOIN df USING (term) CROSS JOIN n)
-         WHERE rk <= 5 ORDER BY doc_id, rk""",
+         WHERE rk <= 5 ORDER BY doc_id, rk"""),
     // Same short-text convention as the shingle oracles: fewer than n
     // words collapse to one gram of all words.
-    "text_repetition" ->
+    Q("text_repetition", textRepetition _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -4735,8 +4644,8 @@ object PipelineQueries {
                 CAST(len(list_distinct(grams)) AS INT) AS n_distinct,
                 round(1.0::DOUBLE - len(list_distinct(grams))::DOUBLE /
                   greatest(len(grams), 1), 4) AS dup_gram_frac
-         FROM g ORDER BY doc_id""",
-    "text_common_ngrams" ->
+         FROM g ORDER BY doc_id"""),
+    Q("text_common_ngrams", textCommonNgrams _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -4749,10 +4658,10 @@ object PipelineQueries {
            FROM w)
          SELECT gram, count(*) AS doc_freq
          FROM g GROUP BY gram
-         ORDER BY doc_freq DESC, gram LIMIT 20""",
+         ORDER BY doc_freq DESC, gram LIMIT 20"""),
     // The split hash is low-60-bits-of-md5 — positive in a signed long,
     // so Spark's pmod and DuckDB's unsigned % agree exactly.
-    "sample_split" ->
+    Q("sample_split", sampleSplit _,
       """WITH h AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -4762,52 +4671,13 @@ object PipelineQueries {
                 CASE WHEN bucket < 80 THEN 'train'
                      WHEN bucket < 90 THEN 'valid'
                      ELSE 'test' END AS split
-         FROM h ORDER BY doc_id""",
-    // the whole curation chain replayed as one CTE: dedup → blocklist →
-    // quality ≥ 0.8 → stratified sample → per-(lang, source) accounting
-    "pipeline_curate" ->
-      """WITH allowed AS (
-           SELECT * FROM documents
-           WHERE source IS NULL OR source NOT IN ('src3','src7','src11')),
-         dedup AS (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (PARTITION BY md5(text)
-               ORDER BY doc_id) AS rn
-             FROM allowed) WHERE rn = 1),
-         quality AS (
-           SELECT * FROM dedup
-           WHERE round(
-             (CASE WHEN length(text) BETWEEN 100 AND 20000
-                   THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(list_filter(
-                     string_split_regex(trim(lower(text)), '\s+'),
-                     w -> list_contains(['the','a','an','and','or','of',
-                       'to','in','is','it','that','for','on','with','as',
-                       'at','by'], w)))::DOUBLE
-                   / greatest(len(string_split_regex(trim(lower(text)),
-                       '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
-                   / greatest(length(text), 1) <= 0.2
-                   THEN 0.2 ELSE 0 END) +
-             (CASE WHEN list_sum(list_transform(
-                     string_split_regex(trim(lower(text)), '\s+'),
-                     w -> length(w)))::DOUBLE
-                   / greatest(len(string_split_regex(trim(lower(text)),
-                       '\s+')), 1) BETWEEN 2.0 AND 12.0
-                   THEN 0.2 ELSE 0 END), 2) >= 0.8),
-         sampled AS (
-           SELECT * FROM quality
-           WHERE ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                   18, 15))::UBIGINT % 100
-             < CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 60 ELSE 100 END)
-         SELECT lang, source, count(*) AS n_docs,
-                CAST(sum(len(string_split_regex(trim(text), '\s+')))
-                  AS BIGINT) AS n_tokens
-         FROM sampled GROUP BY 1, 2 ORDER BY lang, source""",
+         FROM h ORDER BY doc_id"""),
+    Q("pipeline_curate", pipelineCurate _, CurateOracle),
+    Q("pipeline_curate_sql", pipelineCurateSql _, CurateOracle),
     // attrition = the curate funnel's flags refolded as cumulative
     // conjunctions; each stage row recounts the same per-doc verdicts
     // the pipeline_curate CTE chain filters on
-    "pipeline_attrition" ->
+    Q("pipeline_attrition", pipelineAttrition _,
       """WITH f AS (
            SELECT doc_id, lang,
                   len(string_split_regex(trim(text), '\s+'))::BIGINT
@@ -4873,12 +4743,12 @@ object PipelineQueries {
          UNION ALL SELECT 2, 'exact_dedup', n2, t2, n1 - n2 FROM a
          UNION ALL SELECT 3, 'quality_gate', n3, t3, n2 - n3 FROM a
          UNION ALL SELECT 4, 'stratified_sample', n4, t4, n3 - n4 FROM a
-         ORDER BY stage_ord""",
+         ORDER BY stage_ord"""),
     // The five-stage chain replayed exactly: blocklist, exact all-pairs
     // Jaccard graph + recursive-CTE closure (the LSH's banded recall is
     // total at this sf — any miss hash-mismatches), per-cluster argmax
     // by (quality desc, id), quality gate, √count temperature mix.
-    "pipeline_curate_neardup" ->
+    Q("pipeline_curate_neardup", pipelineCurateNearDup _,
       """WITH RECURSIVE allowed AS (
            SELECT * FROM documents
            WHERE source IS NULL OR source NOT IN ('src3','src7','src11')),
@@ -4954,7 +4824,7 @@ object PipelineQueries {
          SELECT lang, source, count(*) AS n_docs,
                 CAST(sum(len(string_split_regex(trim(text), '\s+')))
                   AS BIGINT) AS n_tokens
-         FROM mixed GROUP BY 1, 2 ORDER BY lang, source""",
+         FROM mixed GROUP BY 1, 2 ORDER BY lang, source"""),
     // The full chain replayed: the ingest-dedup waves' kept set (same
     // CTEs as stream_dedup_ingest), quality-scored (same arithmetic as
     // text_quality / stream_token_budget), gated at 0.5, DSIR-resampled
@@ -4963,7 +4833,7 @@ object PipelineQueries {
     // flat-greedy token budget per lang (cum over quality desc, id —
     // the level decomposition's exact flat equivalent), then the pack
     // layout (same md5-shard + prefix-sum arithmetic as pack_sequences).
-    "pipeline_pretrain" ->
+    Q("pipeline_pretrain", pipelinePretrain _,
       (PretrainChainCtes + """
          t AS (SELECT doc_id, lang, quality_score, n_tokens,
                  CAST(('0x' || substr(md5('pack:' ||
@@ -4977,12 +4847,12 @@ object PipelineQueries {
          SELECT doc_id, lang, quality_score, shard, n_tokens, start_offset,
                 start_offset // 512 AS first_seq,
                 (start_offset + n_tokens - 1) // 512 AS last_seq
-         FROM c ORDER BY doc_id"""),
+         FROM c ORDER BY doc_id""")),
     // The pretrain chain's attrition rows: the SAME kept/gate/DSIR/
     // budget CTEs as pipeline_pretrain, refolded into per-stage
     // survivor/token/drop counts (stage k's n_dropped = stage k−1's
     // survivors minus its own).
-    "pipeline_pretrain_attrition" ->
+    Q("pipeline_pretrain_attrition", pipelinePretrainAttrition _,
       (PretrainChainCtes + """
          st AS (SELECT
            (SELECT count(*) FROM q) AS n0,
@@ -5002,10 +4872,10 @@ object PipelineQueries {
          UNION ALL SELECT 1, 'quality_gate', n1, t1, n0 - n1 FROM st
          UNION ALL SELECT 2, 'dsir_pool', n2, t2, n1 - n2 FROM st
          UNION ALL SELECT 3, 'token_budget', n3, t3, n2 - n3 FROM st
-         ORDER BY stage_ord"""),
+         ORDER BY stage_ord""")),
     // membership vs the same deterministically-ranked top-50; NOT IN is
     // null-free here (every word row is a non-null string)
-    "text_oov_rate" ->
+    Q("text_oov_rate", textOovRate _,
       """WITH w AS (
            SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
              '\s+')) AS word
@@ -5021,8 +4891,8 @@ object PipelineQueries {
                 round(count(*) FILTER (WHERE word NOT IN
                     (SELECT word FROM v))::DOUBLE / count(*), 6)
                   AS oov_rate
-         FROM w GROUP BY doc_id ORDER BY doc_id""",
-    "text_vocabulary" ->
+         FROM w GROUP BY doc_id ORDER BY doc_id"""),
+    Q("text_vocabulary", textVocabulary _,
       """WITH w AS (
            SELECT lang, unnest(string_split_regex(trim(lower(text)), '\s+'))
                     AS word
@@ -5032,8 +4902,8 @@ object PipelineQueries {
            SELECT lang, word, n, row_number() OVER
              (PARTITION BY lang ORDER BY n DESC, word) AS rk
            FROM c)
-         WHERE rk <= 10 ORDER BY lang, rk""",
-    "sample_stratified" ->
+         WHERE rk <= 10 ORDER BY lang, rk"""),
+    Q("sample_stratified", sampleStratified _,
       """WITH h AS (
            SELECT doc_id, lang,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -5043,23 +4913,23 @@ object PipelineQueries {
          FROM h
          WHERE bucket < CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 60
                                   ELSE 100 END
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // IS NULL OR: anti-join semantics KEEP null-source rows (a bare
     // NOT IN would drop them — NULL NOT IN (...) is NULL)
-    "filter_blocklist" ->
+    Q("filter_blocklist", filterBlocklist _,
       """SELECT doc_id, source, n_chars FROM documents
          WHERE source IS NULL OR source NOT IN ('src3', 'src7', 'src11')
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // Same 8-gram short-text convention as the shingle oracles; the
     // Spark side counts 64-bit hashed grams, the oracle counts the gram
     // strings — equal unless xxhash64 collides within a doc's grams.
     // ONE string for both keys: the Bloom-sketch probe must reproduce
     // the exact-set overlap bit for bit (fp-free at this sizing)
-    "text_decontaminate" -> DecontaminateOracle,
+    Q("text_decontaminate", textDecontaminate _, DecontaminateOracle),
     // Positional grams (DuckDB zips parallel unnests), benchmark side
     // pre-reduced to (bench doc, gram) -> min pos — the Spark side
     // joins 64-bit gram hashes instead of strings, same semantics.
-    "text_decontaminate_spans" ->
+    Q("text_decontaminate_spans", textDecontaminateSpans _,
       """WITH s AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -5086,9 +4956,10 @@ object PipelineQueries {
          SELECT doc_id, bench_id, count(*) AS n_shared,
                 CAST(min(cpos) AS INT) AS first_pos,
                 CAST(min(bpos) AS INT) AS first_bench_pos
-         FROM c GROUP BY doc_id, bench_id ORDER BY doc_id, bench_id""",
-    "text_decontaminate_bloom" -> DecontaminateOracle,
-    "text_bpe_pairs" ->
+         FROM c GROUP BY doc_id, bench_id ORDER BY doc_id, bench_id"""),
+    Q("text_decontaminate_bloom", textDecontaminateBloom _,
+      DecontaminateOracle),
+    Q("text_bpe_pairs", textBpePairs _,
       """WITH w AS (
            SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
            FROM documents),
@@ -5097,13 +4968,13 @@ object PipelineQueries {
              i -> substr(w, CAST(i AS INT), 2))) AS pair
            FROM w WHERE length(w) >= 2)
          SELECT pair, count(*) AS n
-         FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 30""",
-    "text_bpe_train" -> BpeTrainOracle,
-    "text_bpe_encode" -> BpeEncodeOracle,
-    "text_bpe_fertility" -> BpeFertilityOracle,
-    "sample_coreset" -> CoresetOracle,
-    "pipeline_fewshot" -> FewshotOracle,
-    "embedding_centroid_assign" ->
+         FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 30"""),
+    Q("text_bpe_train", textBpeTrain _, BpeTrainOracle),
+    Q("text_bpe_encode", textBpeEncode _, BpeEncodeOracle),
+    Q("text_bpe_fertility", textBpeFertility _, BpeFertilityOracle),
+    Q("sample_coreset", sampleCoreset _, CoresetOracle),
+    Q("pipeline_fewshot", pipelineFewshot _, FewshotOracle),
+    Q("embedding_centroid_assign", embeddingCentroidAssign _,
       """WITH c AS (SELECT vec_id AS cell, embedding::DOUBLE[] AS cvec
                     FROM embeddings WHERE vec_id < 8)
          SELECT vec_id, cell, cosine FROM (
@@ -5114,10 +4985,10 @@ object PipelineQueries {
                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[],
                       c.cvec) DESC, c.cell) AS rk
            FROM embeddings e, c)
-         WHERE rk = 1 ORDER BY vec_id""",
+         WHERE rk = 1 ORDER BY vec_id"""),
     // assignment (rank 1 per vector) then a per-cell top-10 by the
     // ROUNDED cosine (the Spark side caps on the rounded output column)
-    "sample_cluster_balanced" ->
+    Q("sample_cluster_balanced", sampleClusterBalanced _,
       """WITH c AS (SELECT vec_id AS cell, embedding::DOUBLE[] AS cvec
                     FROM embeddings WHERE vec_id < 8),
          assign AS (
@@ -5134,43 +5005,44 @@ object PipelineQueries {
            SELECT vec_id, cell, row_number() OVER (PARTITION BY cell
              ORDER BY cosine DESC, vec_id) AS rk
            FROM assign)
-         WHERE rk <= 10 ORDER BY cell, rk""",
-    "sample_domain_cap" ->
+         WHERE rk <= 10 ORDER BY cell, rk"""),
+    Q("sample_domain_cap", sampleDomainCap _,
       """SELECT doc_id, source, CAST(rk AS INT) AS rk FROM (
            SELECT doc_id, source,
                   row_number() OVER (PARTITION BY source
                     ORDER BY n_chars DESC, doc_id) AS rk
            FROM documents)
-         WHERE rk <= 50 ORDER BY source, rk""",
+         WHERE rk <= 50 ORDER BY source, rk"""),
     // Language-ID replay over RAW trigram strings — the operator's only
     // non-ANSI piece is the xxhash64 trigram key, which is injective on
     // this corpus (profile rank ties break on the trigram STRING on both
     // engines).
-    "text_langid" -> LangidOracle,
+    Q("text_langid", textLangId _, LangidOracle),
     // Accuracy per true language over the nested langid oracle.
-    "text_langid_eval" -> ("WITH li AS (" + LangidOracle + """)
+    Q("text_langid_eval", textLangidEval _,
+      ("WITH li AS (" + LangidOracle + """)
          SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(CASE WHEN li.correct THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_correct,
                 round(sum(CASE WHEN li.correct THEN 1 ELSE 0 END)::DOUBLE
                   / greatest(count(*), 1), 6) AS accuracy
          FROM documents d JOIN li USING (doc_id)
-         GROUP BY d.lang ORDER BY d.lang"""),
+         GROUP BY d.lang ORDER BY d.lang""")),
     // floor(log2(tokens)) via binary-string length: integer-exact at
     // power-of-two boundaries in both engines.
-    "text_token_histogram" ->
+    Q("text_token_histogram", textTokenHistogram _,
       """WITH t AS (SELECT greatest(len(string_split_regex(trim(text),
                       '\s+')), 1)::BIGINT AS t
                     FROM documents)
          SELECT CAST(length(bin(t)) - 1 AS INT) AS bucket,
                 CAST(count(*) AS BIGINT) AS n_docs,
                 min(t) AS min_tokens, max(t) AS max_tokens
-         FROM t GROUP BY 1 ORDER BY bucket""",
+         FROM t GROUP BY 1 ORDER BY bucket"""),
     // the ENTIRE 2-iteration Lloyd loop replayed: md5 seeding, two
     // argmax-cosine assignment rounds, two elementwise-mean updates,
     // final audit stats — cell membership must match integrally, so
     // any drift in any iteration breaks rows/hash, not just values
-    "embedding_kmeans" ->
+    Q("embedding_kmeans", embeddingKmeans _,
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                     FROM embeddings),
          seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
@@ -5214,12 +5086,12 @@ object PipelineQueries {
                 round(avg(a3.sim), 6) AS mean_cosine,
                 round(max(c2.v[1]), 6) AS c0
          FROM a3 JOIN c2 USING (cell)
-         GROUP BY a3.cell ORDER BY a3.cell""",
+         GROUP BY a3.cell ORDER BY a3.cell"""),
     // The kmeans fit CTEs verbatim through c2 (md5 seeding, two
     // assignment rounds, two gridded mean updates), then per-VECTOR
     // nearest-centroid cosine, ranked ascending on the ROUNDED score
     // with vec_id tie-break — the dominance-on-rounded stance.
-    "embedding_outliers" ->
+    Q("embedding_outliers", embeddingOutliers _,
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                     FROM embeddings),
          seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
@@ -5264,13 +5136,20 @@ object PipelineQueries {
          SELECT CAST(row_number() OVER
                   (ORDER BY centroid_cosine, vec_id) AS INT) AS rank,
                 vec_id, cell, centroid_cosine
-         FROM r ORDER BY centroid_cosine, vec_id LIMIT 50""",
+         FROM r ORDER BY centroid_cosine, vec_id LIMIT 50"""),
     // PSI drift replayed edge-for-edge: the capped mod-10 reference
     // sample, cutoff VALUES at ascending rank ceil(q*n/10), binning by
     // integer comparison (duplicate cutoffs skip bins identically),
     // add-one smoothing over the 10 decile cells, and the ln term in
     // the same operand order.
-    "text_drift_psi" ->
+    //
+    // text_drift_psi / text_nb_pr_curve (and lake_drift_psi in
+    // LakeQueries) carry a MINIMUM-SAMPLE contract: building the frame
+    // collects the decile sample eagerly and requires >= 10 sampled
+    // docs (mod-10 id slice), so they fail fast with an explicit
+    // message on sub-~100-doc fixtures instead of running to a
+    // meaningless curve. sf0.001+ clears the bar.
+    Q("text_drift_psi", textDriftPsi _,
       """WITH t AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -5311,8 +5190,8 @@ object PipelineQueries {
                          ((g2.ref_n + 1.0) / (tot.rt + 10.0))), 6)
                   AS psi_bin
          FROM g2 CROSS JOIN tot LEFT JOIN cuts c ON c.bin = g2.bin
-         ORDER BY g2.bin""",
-    "dedup_cross_corpus" ->
+         ORDER BY g2.bin"""),
+    Q("dedup_cross_corpus", dedupCrossCorpus _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -5336,8 +5215,8 @@ object PipelineQueries {
          WHERE len(list_intersect(sha, shb))::DOUBLE /
                (len(sha) + len(shb) - len(list_intersect(sha, shb)))
                >= 0.6
-         ORDER BY id_a, id_b""",
-    "sample_shard_export" ->
+         ORDER BY id_a, id_b"""),
+    Q("sample_shard_export", sampleShardExport _,
       """WITH h AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft-shard:' ||
@@ -5346,17 +5225,17 @@ object PipelineQueries {
          SELECT doc_id, CAST(hv % 8 AS INT) AS shard,
                 CAST(row_number() OVER (PARTITION BY hv % 8
                   ORDER BY hv, doc_id) AS INT) AS pos
-         FROM h ORDER BY shard, pos""",
-    "text_lm_score" -> lmScoreOracle,
+         FROM h ORDER BY shard, pos"""),
+    Q("text_lm_score", textLmScore _, lmScoreOracle),
     // The full banding replayed: LM scores (the shared lmScore CTEs),
     // the capped mod-10 sample, tercile cutoff VALUES by rank in the
     // sorted multiset (tie order can't matter), band by comparison of
     // rounded scores.
-    "text_ppl_buckets" -> PplBucketsOracle,
+    Q("text_ppl_buckets", textPplBuckets _, PplBucketsOracle),
     // Exact nearest-benchmark cosine per train vector, verdict on the
     // ROUNDED score — the same dominance arithmetic dedup_semantic
     // pins, against the static md5-bucketed benchmark slice.
-    "embedding_decontaminate" ->
+    Q("embedding_decontaminate", embeddingDecontaminate _,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                   ('0x' || substr(md5('graft:' ||
                      CAST(vec_id AS VARCHAR)), 18, 15))::UBIGINT % 100
@@ -5373,17 +5252,17 @@ object PipelineQueries {
          SELECT tid AS vec_id, bid AS bench_id,
                 round(cos, 6) AS cosine,
                 (round(cos, 6) >= 0.98) AS dropped
-         FROM sc WHERE r = 1 ORDER BY vec_id""",
+         FROM sc WHERE r = 1 ORDER BY vec_id"""),
     // Replays the whole NB training run: counts → capped vocabulary
     // (same (count desc, word) tie-break) → smoothed weights → per-doc
     // log-odds. A weight the Spark side learns differently breaks the
     // hash.
-    "text_nb_classifier" -> NbClassifierOracle,
+    Q("text_nb_classifier", textNbClassifier _, NbClassifierOracle),
     // The three quality oracles COMPOSED: the gate CTE chain plus the
     // classifier and banding oracles nested verbatim as subqueries —
     // the ensemble can only be green if each member is, under the
     // exact join/coalesce semantics the Spark plan uses.
-    "pipeline_quality_vote" -> (QualityGateCtes + """,
+    Q("pipeline_quality_vote", pipelineQualityVote _, (QualityGateCtes + """,
          nb AS (""" + NbClassifierOracle + """),
          band AS (""" + PplBucketsOracle + """)
          SELECT d.doc_id,
@@ -5402,11 +5281,11 @@ object PipelineQueries {
          JOIN v USING (doc_id)
          JOIN nb USING (doc_id)
          LEFT JOIN band USING (doc_id)
-         ORDER BY d.doc_id"""),
+         ORDER BY d.doc_id""")),
     // Both triplet legs replayed from all-pairs cosines with the
     // kernel's (cosine desc, id) tie-break; separation compares the
     // ROUNDED legs, as the Spark side does.
-    "sample_triplets" ->
+    Q("sample_triplets", sampleTriplets _,
       """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                     FROM embeddings),
          p AS (SELECT a.vec_id, b.vec_id AS pos_id,
@@ -5426,11 +5305,11 @@ object PipelineQueries {
                 n.neg_id, round(n.c, 6) AS neg_cosine,
                 (round(p.c, 6) > round(n.c, 6)) AS separated
          FROM p JOIN n ON p.vec_id = n.vec_id AND p.r = 1 AND n.r = 1
-         ORDER BY p.vec_id""",
+         ORDER BY p.vec_id"""),
     // Confusion of the nested classifier oracle against the nested
     // rule-gate chain; integer sums cast to BIGINT (DuckDB sums to
     // HUGEINT), ratios through DOUBLE division.
-    "text_nb_agreement" -> (QualityGateCtes + """,
+    Q("text_nb_agreement", textNbAgreement _, (QualityGateCtes + """,
          nb AS (""" + NbClassifierOracle + """),
          c AS (SELECT
                  CAST(sum(CASE WHEN nb.predicted AND len(v.hit) = 0
@@ -5447,12 +5326,12 @@ object PipelineQueries {
                   AS precision,
                 round(CAST(tp AS DOUBLE) / greatest(tp + fn, 1), 6)
                   AS recall
-         FROM c"""),
+         FROM c""")),
     // Decile sweep: cutoffs are VALUES at descending rank
     // ceil(q*n/10) of the capped sample (row_number ties can't change
     // the value picked), confusion cells fold in one aggregation per
     // decile; BIGINT casts as in the agreement oracle.
-    "text_nb_pr_curve" -> (QualityGateCtes + """,
+    Q("text_nb_pr_curve", textNbPrCurve _, (QualityGateCtes + """,
          nb AS (""" + NbClassifierOracle + """),
          j AS (SELECT nb.doc_id, nb.log_odds AS score,
                       len(v.hit) = 0 AS label
@@ -5488,11 +5367,11 @@ object PipelineQueries {
                   AS recall,
                 round(2.0 * tp / greatest(2 * tp + fp + fn, 1), 6)
                   AS f1
-         FROM c ORDER BY decile"""),
+         FROM c ORDER BY decile""")),
     // Mann-Whitney rank-sum AUC with average-rank tie correction —
     // integer arithmetic until the last division (2x the positive
     // rank sum = sum over distinct scores of p*(2*cum+c+1)).
-    "text_nb_auc" -> (QualityGateCtes + """,
+    Q("text_nb_auc", textNbAuc _, (QualityGateCtes + """,
          nb AS (""" + NbClassifierOracle + """),
          j AS (SELECT nb.log_odds AS score, len(v.hit) = 0 AS label
                FROM nb JOIN v USING (doc_id)),
@@ -5511,10 +5390,10 @@ object PipelineQueries {
          SELECT n_pos, n_neg,
                 round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE) /
                       (2.0 * greatest(n_pos * n_neg, 1)), 6) AS auc
-         FROM sa"""),
+         FROM sa""")),
     // The three n-gram orders with ngramsAll's exact short-doc
     // semantics (the same list_transform shape the gate oracle pins).
-    "text_distinct_ngrams" ->
+    Q("text_distinct_ngrams", textDistinctNgrams _,
       """WITH w AS (SELECT string_split_regex(trim(lower(text)), '\s+')
                       AS ws
                     FROM documents),
@@ -5545,9 +5424,10 @@ object PipelineQueries {
                 CAST(count(DISTINCT g) AS BIGINT),
                 round(count(DISTINCT g)::DOUBLE / greatest(count(*), 1), 6)
          FROM g3
-         ORDER BY n""",
+         ORDER BY n"""),
     // Domain means over the shared LM scores, softmaxed at T=1.
-    "sample_domain_weights" -> ("WITH scored AS (" + lmScoreOracle +
+    Q("sample_domain_weights", sampleDomainWeights _,
+      ("WITH scored AS (" + lmScoreOracle +
       """),
          m AS (SELECT d.source, avg(s.lm_score) AS mean_s,
                       count(*) AS n_docs
@@ -5556,10 +5436,10 @@ object PipelineQueries {
          z AS (SELECT sum(exp(mean_s)) AS z FROM m)
          SELECT m.source, m.n_docs, round(m.mean_s, 6) AS mean_lm_score,
                 round(exp(m.mean_s) / z.z, 6) AS weight
-         FROM m CROSS JOIN z ORDER BY m.source"""),
+         FROM m CROSS JOIN z ORDER BY m.source""")),
     // the persisted-model path must reproduce the inline scores exactly
-    "text_lm_score_persisted" -> lmScoreOracle,
-    "text_corpus_stats" ->
+    Q("text_lm_score_persisted", textLmScorePersisted _, lmScoreOracle),
+    Q("text_corpus_stats", textCorpusStats _,
       """WITH words AS (
            SELECT unnest(string_split_regex(trim(lower(text)), '\s+'))
              AS word
@@ -5578,8 +5458,6 @@ object PipelineQueries {
                   AS top_word_share,
                 round(t.total_tokens::DOUBLE / d.n_docs, 4)
                   AS avg_doc_tokens
-         FROM d, t, top"""
-    // sim_topk_ivf stays rows-only: approximate by design — tail ranks
-    // differ from brute force; recall is asserted in PipelineSpec.
+         FROM d, t, top""")
   )
 }

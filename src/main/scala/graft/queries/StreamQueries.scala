@@ -1550,36 +1550,7 @@ object StreamQueries {
     seedIvf(s, d)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_hourly_counts" -> streamHourly _,
-    "stream_sessions" -> streamSessions _,
-    "stream_funnel" -> streamFunnel _,
-    "stream_dedup" -> streamDedup _,
-    "stream_lake_ingest" -> streamLakeIngest _,
-    "stream_lake_upsert" -> streamLakeUpsert _,
-    "stream_mview" -> streamMview _,
-    "stream_enrich" -> streamEnrich _,
-    "stream_interval_join" -> streamIntervalJoin _,
-    "stream_interval_join_outer" -> streamIntervalJoinOuter _,
-    "stream_dedup_ingest" -> streamDedupIngest _,
-    "stream_decontaminate_ingest" -> streamDecontaminateIngest _,
-    "stream_quality_gate" -> streamQualityGate _,
-    "stream_classifier_gate" -> streamClassifierGate _,
-    "stream_curate_ingest" -> streamCurateIngest _,
-    "stream_curate_report" -> streamCurateReport _,
-    "stream_token_budget" -> streamTokenBudget _,
-    "stream_token_budget_report" -> streamBudgetReport _,
-    "stream_vocab_growth" -> streamVocabGrowth _,
-    "stream_vocab_growth_report" -> streamVocabReport _,
-    "stream_freq_sketch" -> streamFreqSketch _,
-    "stream_freq_sketch_report" -> streamFreqReport _,
-    "stream_ann_ingest" -> streamAnnIngest _,
-    "stream_ann_refit" -> streamAnnRefit _,
-    "stream_ann_report" -> streamAnnReport _,
-    "stream_semantic_dedup" -> streamSemanticDedup _
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val entries: Seq[Q] = Seq(
     // Per-document rule verdicts are wave-independent, so the door's
     // oracle is the batch gate's kept set — the shared CTE chain, with
     // the door's own projection.
@@ -1588,7 +1559,8 @@ object StreamQueries {
     // define the cleared set, then the dedup door's greedy wave replay
     // runs restricted to it -- earlier-wave admissions and smaller-id
     // batch-mates dominate, exactly the single-door semantics composed.
-    "stream_curate_ingest" -> (PipelineQueries.QualityGateCtes + """,
+    Q("stream_curate_ingest", streamCurateIngest _,
+      (PipelineQueries.QualityGateCtes + """,
          nb AS (""" + PipelineQueries.NbClassifierOracle + """),
          samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
                   ORDER BY doc_id LIMIT 1000),
@@ -1642,13 +1614,14 @@ object StreamQueries {
          FROM documents d
          JOIN (SELECT doc_id FROM kept1
                UNION ALL SELECT doc_id FROM kept2) k USING (doc_id)
-         ORDER BY doc_id"""),
+         ORDER BY doc_id""")),
     // The same composed replay, refolded as per-wave admission COUNTS
     // (wave 1 = even ids, wave 2 = odd — docWavesDir's split): this is
     // the oracle for the summary metadata the door stamps on each
     // commit, so a drifting count in the door's bookkeeping (not just
     // its kept rows) hash-mismatches.
-    "stream_curate_report" -> (PipelineQueries.QualityGateCtes + """,
+    Q("stream_curate_report", streamCurateReport _,
+      (PipelineQueries.QualityGateCtes + """,
          nb AS (""" + PipelineQueries.NbClassifierOracle + """),
          samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
                   ORDER BY doc_id LIMIT 1000),
@@ -1715,11 +1688,11 @@ object StreamQueries {
                 ((SELECT count(*) FROM stat WHERE doc_id % 2 = 1) -
                  (SELECT count(*) FROM kept2))::BIGINT,
                 (SELECT count(*) FROM kept2)::BIGINT
-         ORDER BY batch_id"""),
+         ORDER BY batch_id""")),
     // Static model + offline-calibrated threshold, wave-independent
     // verdicts: the batch classifier scores with the sample-median cut
     // replayed (rounded scores both sides).
-    "stream_classifier_gate" -> ("WITH nb AS (" +
+    Q("stream_classifier_gate", streamClassifierGate _, ("WITH nb AS (" +
       PipelineQueries.NbClassifierOracle + """),
          samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
                   ORDER BY doc_id LIMIT 1000),
@@ -1732,15 +1705,16 @@ object StreamQueries {
                FROM r)
          SELECT d.doc_id, d.lang, d.source
          FROM documents d JOIN nb USING (doc_id) CROSS JOIN t
-         WHERE nb.log_odds >= t.thr ORDER BY d.doc_id"""),
-    "stream_quality_gate" -> (PipelineQueries.QualityGateCtes + """
+         WHERE nb.log_odds >= t.thr ORDER BY d.doc_id""")),
+    Q("stream_quality_gate", streamQualityGate _,
+      (PipelineQueries.QualityGateCtes + """
          SELECT d.doc_id, d.lang, d.source
          FROM documents d JOIN v USING (doc_id)
-         WHERE len(v.hit) = 0 ORDER BY d.doc_id"""),
+         WHERE len(v.hit) = 0 ORDER BY d.doc_id""")),
     // The door's verdicts are wave-independent (static benchmark), so
     // the oracle is the plain batch decontamination filter: train-side
     // docs minus those sharing any 8-gram with the bucket>=90 slice.
-    "stream_decontaminate_ingest" ->
+    Q("stream_decontaminate_ingest", streamDecontaminateIngest _,
       """WITH s AS (
            SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
@@ -1760,17 +1734,17 @@ object StreamQueries {
          FROM documents d JOIN s USING (doc_id)
               LEFT JOIN bad ON bad.doc_id = d.doc_id
          WHERE s.bucket < 80 AND bad.doc_id IS NULL
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id"""),
     // Deterministic properties of the streamed index: every source
     // vector indexed exactly once (multiset equality, computed
     // in-scenario), and probe recall@10 >= 50% vs exact brute force —
     // same bar shape as sim_topk_ivf_recall, with real margin on this
     // corpus even though the streamed half never saw the quantizer fit.
-    "stream_ann_ingest" ->
+    Q("stream_ann_ingest", streamAnnIngest _,
       """SELECT CAST(count(*) AS BIGINT) AS n_vectors,
                 CAST(1 AS BOOLEAN) AS ids_exact,
                 CAST(1 AS BOOLEAN) AS recall_ge_05
-         FROM embeddings""",
+         FROM embeddings"""),
     // The WHOLE re-fit-on-drift loop replayed: seed fit (md5-seeded
     // 2-round cosine-Lloyd on the even half), the ×5+shift drift
     // waves (pure IEEE arithmetic), the fit-time and last-batch
@@ -1782,7 +1756,7 @@ object StreamQueries {
     // stream_ann_ingest stance): recall replay would hinge on
     // unrounded-cosine tie order, and commit-replay semantics are
     // lake-layer state DuckDB cannot see.
-    "stream_ann_refit" ->
+    Q("stream_ann_refit", streamAnnRefit _,
       """WITH v AS MATERIALIZED (
            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          sv AS MATERIALIZED (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
@@ -1932,13 +1906,13 @@ object StreamQueries {
                 CAST(fpre.f >= 0.75 AS BOOLEAN) AS probe_degenerate_pre,
                 round(fpost.f, 6) AS scan_frac_post,
                 CAST(1 AS BOOLEAN) AS refit_idempotent
-         FROM fitm, prem, postm, fpre, fpost""",
+         FROM fitm, prem, postm, fpre, fpost"""),
     // The drift report's stats recomputed from scratch: the seed
     // quantizer fit replayed (md5-seeded 2-round cosine-Lloyd on the
     // even half — the same CTEs as stream_semantic_dedup's), then each
     // wave's mean squared L2 distance to its nearest fitted centroid.
     // Wave 1 = vec_id ≡ 1 (mod 4), wave 2 = ≡ 3 (vecWavesDir's split).
-    "stream_ann_report" ->
+    Q("stream_ann_report", streamAnnReport _,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
                     FROM embeddings),
          sv AS (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
@@ -1985,7 +1959,7 @@ object StreamQueries {
          SELECT CAST(batch_id AS BIGINT) AS batch_id,
                 count(*)::BIGINT AS n_vectors,
                 round(avg(dd), 6) AS mean_sq_dist
-         FROM d GROUP BY batch_id ORDER BY batch_id""",
+         FROM d GROUP BY batch_id ORDER BY batch_id"""),
     // The ENTIRE semantic-dedup ingest replayed: md5-seeded 2-round
     // cosine-Lloyd quantizer fit on the even half (the sim_topk_ivf
     // CTEs), float-jittered twins (the dedup_semantic CTE), L2 cell
@@ -1993,7 +1967,7 @@ object StreamQueries {
     // dominance — dropped iff an admitted same-cell vector (seed or
     // wave-1 admission) or a smaller-id same-cell wave-mate sits at
     // rounded cosine >= 0.98.
-    "stream_semantic_dedup" ->
+    Q("stream_semantic_dedup", streamSemanticDedup _,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
                     FROM embeddings),
          sv AS (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
@@ -2082,50 +2056,50 @@ object StreamQueries {
                               >= 0.98))
          SELECT vec_id, cell FROM k1
          UNION ALL SELECT vec_id, cell FROM k2
-         ORDER BY vec_id""",
+         ORDER BY vec_id"""),
     // every event arrives twice in the stream; the oracle is the plain
     // table — exactly-once or the row counts diverge
-    "stream_dedup" ->
+    Q("stream_dedup", streamDedup _,
       """SELECT event_id, user_id, event_type, round(value, 4) AS value
-         FROM events ORDER BY event_id""",
+         FROM events ORDER BY event_id"""),
     // the whole stream must land in the lake table exactly once
-    "stream_lake_ingest" ->
+    Q("stream_lake_ingest", streamLakeIngest _,
       """SELECT event_id, user_id, event_type, round(value, 4) AS value
-         FROM events ORDER BY event_id""",
+         FROM events ORDER BY event_id"""),
     // the MV maintained from streamed commits = the full aggregate
-    "stream_mview" ->
+    Q("stream_mview", streamMview _,
       """SELECT user_id, count(*) AS n_events,
                 round(sum(value), 4) AS total
-         FROM events GROUP BY user_id ORDER BY user_id""",
+         FROM events GROUP BY user_id ORDER BY user_id"""),
     // upsert: every seeded stale row (-999) must be overwritten by the
     // stream, every unseeded row inserted, nothing duplicated — the
     // final table is exactly the plain events table
-    "stream_lake_upsert" ->
+    Q("stream_lake_upsert", streamLakeUpsert _,
       """SELECT event_id, user_id, event_type, round(value, 4) AS value
-         FROM events ORDER BY event_id""",
-    "stream_enrich" ->
+         FROM events ORDER BY event_id"""),
+    Q("stream_enrich", streamEnrich _,
       """SELECT event_id, e.user_id, c_mktsegment AS mktsegment,
                 round(value, 4) AS value
          FROM events e JOIN customer c ON e.user_id = c.c_custkey
-         ORDER BY event_id""",
-    "stream_interval_join" ->
+         ORDER BY event_id"""),
+    Q("stream_interval_join", streamIntervalJoin _,
       """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
          FROM events v JOIN events c
            ON v.user_id = c.user_id
           AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 4 HOUR
          WHERE v.event_type = 'view' AND c.event_type = 'click'
-         ORDER BY v.user_id, view_id, click_id""",
-    "stream_interval_join_outer" ->
+         ORDER BY v.user_id, view_id, click_id"""),
+    Q("stream_interval_join_outer", streamIntervalJoinOuter _,
       """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id
          FROM (SELECT * FROM events WHERE event_type = 'view') v
          LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
            ON v.user_id = c.user_id
           AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 4 HOUR
-         ORDER BY v.user_id, view_id, click_id""",
+         ORDER BY v.user_id, view_id, click_id"""),
     // the batch greedy-earliest funnel (see funnel_conversion),
     // reshaped to one row per completed step — the stream's append-mode
     // output format
-    "stream_funnel" ->
+    Q("stream_funnel", streamFunnel _,
       """WITH e AS (
            SELECT user_id, event_type,
                   CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
@@ -2145,12 +2119,12 @@ object StreamQueries {
          SELECT user_id, CAST(2 AS INT), t2 FROM s2
          UNION ALL
          SELECT user_id, CAST(3 AS INT), t3 FROM s3
-         ORDER BY user_id, step""",
+         ORDER BY user_id, step"""),
     // Two-phase greedy budget: wave-1 (even ids) cumsum <= 5000 per
     // lang over (quality desc, id), wave-2 continues into the remaining
     // budget — exactly what the commit-summary-folded streaming totals
     // must reproduce.
-    "stream_token_budget" ->
+    Q("stream_token_budget", streamTokenBudget _,
       """WITH t AS (
            SELECT doc_id, lang, doc_id % 2 AS wave,
                   CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
@@ -2191,11 +2165,11 @@ object StreamQueries {
          SELECT doc_id, lang, n_tokens, quality_score FROM k1
          UNION ALL
          SELECT doc_id, lang, n_tokens, quality_score FROM k2
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
     // The budget LEDGER refolded from the same two-wave greedy CTEs:
     // per-(batch, stratum) admitted-token deltas (wave 0 = batch 0),
     // running per-stratum totals, and the 5000-token budget remaining.
-    "stream_token_budget_report" ->
+    Q("stream_token_budget_report", streamBudgetReport _,
       """WITH t AS (
            SELECT doc_id, lang, doc_id % 2 AS wave,
                   CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
@@ -2246,14 +2220,14 @@ object StreamQueries {
                FROM d)
          SELECT batch_id, lang, admitted_tokens, cum_tokens,
                 CAST(5000 - cum_tokens AS BIGINT) AS remaining_tokens
-         FROM c ORDER BY batch_id, lang""",
+         FROM c ORDER BY batch_id, lang"""),
     // The cumulative KMV sketch replayed per wave prefix: merging the
     // running sketch with a batch equals sketching the union (the KMV
     // merge property PropertySpec fuzzes), so batch 0 = the 256
     // smallest distinct gram hashes of the even-id wave, batch 1 = of
     // the whole corpus. Same gram + h60 arithmetic as the batch KMV
     // rows.
-    "stream_vocab_growth" ->
+    Q("stream_vocab_growth", streamVocabGrowth _,
       """WITH ws AS (SELECT doc_id,
                 string_split_regex(trim(lower(text)), '\s+') AS words
               FROM documents),
@@ -2271,11 +2245,11 @@ object StreamQueries {
          SELECT CAST(0 AS BIGINT) AS batch_id, h FROM b0
          UNION ALL
          SELECT CAST(1 AS BIGINT) AS batch_id, h FROM b1
-         ORDER BY batch_id, h""",
+         ORDER BY batch_id, h"""),
     // The saturation ledger refolded from the same per-prefix sketches:
     // fill, k-th-min hash, and the (k-1)*2^60/h_k estimate in the same
     // double arithmetic as the door's driver-side stamp.
-    "stream_vocab_growth_report" ->
+    Q("stream_vocab_growth_report", streamVocabReport _,
       """WITH ws AS (SELECT doc_id,
                 string_split_regex(trim(lower(text)), '\s+') AS words
               FROM documents),
@@ -2307,12 +2281,12 @@ object StreamQueries {
                          AS est_distinct
                 FROM b1)
          SELECT * FROM s0 UNION ALL SELECT * FROM s1
-         ORDER BY batch_id""",
+         ORDER BY batch_id"""),
     // Each wave's count-min grid replayed directly (even docs = batch
     // 0, odd = batch 1): the door appends exactly the per-batch grid,
     // so no prefix folding is needed here — addition is the READ-side
     // property, checked by the report row's cumulative column.
-    "stream_freq_sketch" ->
+    Q("stream_freq_sketch", streamFreqSketch _,
       """WITH w AS (SELECT CAST(doc_id % 2 AS BIGINT) AS batch_id,
                   lower(unnest(string_split_regex(trim(text), '\s+')))
                     AS word
@@ -2325,12 +2299,12 @@ object StreamQueries {
                   AS cell,
                 count(*) AS cnt
          FROM w CROSS JOIN hd
-         GROUP BY 1, 2 ORDER BY batch_id, cell""",
+         GROUP BY 1, 2 ORDER BY batch_id, cell"""),
     // The mass ledger refolded: per-batch and cumulative (batches ≤ b,
     // counter ADDITION) grids probed at the corpus's exact top-5 words
     // with the door's absent-cell-is-zero semantics (LEFT JOIN +
     // coalesce), summed per batch.
-    "stream_freq_sketch_report" ->
+    Q("stream_freq_sketch_report", streamFreqReport _,
       """WITH w AS (SELECT CAST(doc_id % 2 AS BIGINT) AS batch_id,
                   lower(unnest(string_split_regex(trim(text), '\s+')))
                     AS word
@@ -2374,11 +2348,11 @@ object StreamQueries {
                 CAST((SELECT sum(est) FROM cm
                       WHERE cm.batch_id = bt.batch_id) AS BIGINT)
                   AS cum_probe_mass
-         FROM bt ORDER BY batch_id""",
+         FROM bt ORDER BY batch_id"""),
     // The ingest-dedup waves replayed with exact all-pairs Jaccard (the
     // same 3-word-shingle sets as the dedup_* oracles): kept = docs not
     // matching an admitted earlier-wave doc nor a smaller-id wave-mate.
-    "stream_dedup_ingest" ->
+    Q("stream_dedup_ingest", streamDedupIngest _,
       """WITH w AS (
            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
                     AS words
@@ -2412,16 +2386,16 @@ object StreamQueries {
          FROM documents d
          JOIN (SELECT doc_id FROM kept1
                UNION ALL SELECT doc_id FROM kept2) k USING (doc_id)
-         ORDER BY doc_id""",
-    "stream_hourly_counts" ->
+         ORDER BY doc_id"""),
+    Q("stream_hourly_counts", streamHourly _,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_bucket,
                 event_type, count(*) AS n_events,
                 round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type""",
+         FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type"""),
     // 10-minute-gap sessionization as batch gaps-and-islands SQL — the
     // sentinel-flushed stream emits every session, so the incremental
     // stateful path is held to the exact batch answer.
-    "stream_sessions" ->
+    Q("stream_sessions", streamSessions _,
       """WITH x AS (
            SELECT user_id, CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
                     AS t, value,
@@ -2438,6 +2412,5 @@ object StreamQueries {
          SELECT user_id, min(t) AS session_start, max(t) AS session_end,
                 CAST(count(*) AS INT) AS n_events,
                 round(sum(value), 4) AS sum_value
-         FROM g GROUP BY user_id, grp ORDER BY user_id, session_start"""
-  )
+         FROM g GROUP BY user_id, grp ORDER BY user_id, session_start"""))
 }

@@ -36,3 +36,10 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = table(s, d, "events")
 }
+
+/** One registry row: its name, the Spark frame it builds from an sf
+  * directory, and the ANSI SQL DuckDB runs on the same parquet tables to
+  * check that frame. A row cannot be registered without its oracle.
+  */
+final case class Q(name: String, run: (SparkSession, String) => DataFrame,
+    oracle: String)

@@ -59,6 +59,9 @@ object ScaleProbe {
         case s => Seq(s)
       }.distinct
       else DefaultTargets
+    require(targets.nonEmpty, "no target rows")
+    val qs = graft.SparkEntry.select(targets).map(q => q.name -> q.run)
+      .sortBy(_._1)
     val spark = graft.SparkEnv.session()
     val base = java.nio.file.Files.createTempDirectory("graft-scale-")
     def rekey(table: String, idCol: String): Unit = {
@@ -75,9 +78,6 @@ object ScaleProbe {
       if (!java.nio.file.Files.exists(dst))
         java.nio.file.Files.createSymbolicLink(dst, f.toPath)
     }
-    val qs = graft.SparkEntry.queries.filter {
-      case (k, _) => targets.contains(k)
-    }.toSeq.sortBy(_._1)
     // Shuffle-write accounting per timed run (the scale evidence next
     // to wall-clock: a banded/bucketed op's exchanges must grow with
     // the BOUNDED work, not the corpus). Stage-completion metrics are

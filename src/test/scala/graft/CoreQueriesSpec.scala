@@ -30,11 +30,6 @@ class CoreQueriesSpec extends AnyFunSuite {
     }
   }
 
-  test("every oracle key has a matching query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
-  }
-
   test("no query plan contains a CartesianProduct") {
     // Suite-wide scale guard: every deliberate cross join in the repo
     // broadcasts a metadata-sized side (scalar rows, query sets,

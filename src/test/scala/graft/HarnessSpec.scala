@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The r6 failure mode must stay dead: a query that throws has to be
   * LOUD in every artifact. Verify must leave a red sentinel in the
   * query's output slot (not an absent directory the driver's compare
-  * silently skips), and the registry/oracle maps must stay consistent
-  * so no query can fall through the comparison.
+  * silently skips), and a misspelt row name must fail instead of
+  * quietly running fewer rows.
   */
 class HarnessSpec extends AnyFunSuite {
   import TestSpark._
@@ -73,16 +73,13 @@ class HarnessSpec extends AnyFunSuite {
     assert(Bench.parseFloorLedger("not json at all").isEmpty)
   }
 
-  test("EVERY query has an oracle — no exceptions remain") {
-    // sim_topk_ivf was the last documented exception until its
-    // quantizer became the deterministic in-house Lloyd loop and the
-    // oracle learned to replay the whole probe; full coverage is now
-    // the invariant, and any new un-oracled query must argue its case
-    // here.
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle.isEmpty, s"un-oracled queries: $noOracle")
-    val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphanOracles.isEmpty,
-      s"oracles with no query to check: $orphanOracles")
+  test("row selection: empty means every row, an unknown name fails") {
+    assert(SparkEntry.select(Nil).map(_.name) == SparkEntry.entries.map(_.name))
+    assert(SparkEntry.select(Seq("stream_funnel", "q_set_ops", "q_set_ops"))
+      .map(_.name) == Seq("q_set_ops", "stream_funnel"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q_set_ops", "q_set_opz", "lake_nope")))
+    assert(e.getMessage.contains("unknown query name(s): lake_nope, q_set_opz"),
+      e.getMessage)
   }
 }
