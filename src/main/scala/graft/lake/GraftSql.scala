@@ -176,11 +176,11 @@ class GraftSql(val cat: LakeCatalog) {
           .filter(_.startsWith(s"$sc.")).map(_.split("\\.").last))
       case Rx.ctas(orReplace, name, props, sel) =>
         val (partitioning, properties) = parseTableProps(Option(props))
-        cat.createTable(resolve(name), select(sel), partitioning, properties,
-          replace = orReplace != null)
+        cat.createTable(resolve(name, create = true), select(sel),
+          partitioning, properties, replace = orReplace != null)
         spark.emptyDataFrame
       case Rx.dropTable(ifExists, name) =>
-        val existed = cat.dropTable(resolve(name))
+        val existed = cat.dropTable(resolve(name, create = true))
         require(existed || ifExists != null, s"no table $name")
         spark.emptyDataFrame
       case Rx.showCreateTable(name) =>
@@ -285,35 +285,6 @@ class GraftSql(val cat: LakeCatalog) {
 
   // ---- SELECT planning -----------------------------------------------
 
-  /** Plan a SELECT: dialect-rewrite, then bind every referenced catalog
-    * table / metadata table / view / versioned read / change feed as a
-    * call-scoped temp view and hand the text to Catalyst.
-    */
-  private def select(raw: String): DataFrame = {
-    val binds = scala.collection.mutable.LinkedHashMap[String, () => DataFrame]()
-    val sqlText = rewriteAndCollect(raw, binds)
-    // resolve nested plans (views re-plan via the catalog) BEFORE
-    // creating this statement's scoped views, so the nested planner's
-    // own scoped bindings can't collide with ours
-    val resolved = binds.toSeq.map { case (n, f) => n -> f() }
-    val created = scala.collection.mutable.Buffer[String]()
-    try {
-      resolved.foreach { case (n, df) =>
-        // A pre-existing session view with a bound name would silently
-        // shadow the catalog table (the query would read the user's
-        // temp view, not the lake table). Fail loudly instead — same
-        // contract as LakeCatalog.execSql. GraftSql's own `_src_*`
-        // source views never appear in `binds`, so anything found here
-        // is a genuine conflict.
-        if (spark.catalog.tableExists(n))
-          throw new IllegalStateException(
-            s"session object `$n` shadows a catalog binding — drop or rename it")
-        df.createTempView(n); created += n
-      }
-      spark.sql(sqlText)
-    } finally created.foreach(spark.catalog.dropTempView(_))
-  }
-
   /** Dialect rewrites that need no table knowledge — applied to stored
     * view bodies and DML sub-expressions as well.
     */
@@ -377,9 +348,13 @@ class GraftSql(val cat: LakeCatalog) {
     out.toString
   }
 
-  private def rewriteAndCollect(raw: String,
-      binds: scala.collection.mutable.LinkedHashMap[String, () => DataFrame])
-      : String = {
+  /** Plan a SELECT: dialect-rewrite, bind each versioned read and
+    * change feed under a name unique to its version or range, and let
+    * [[LakeCatalog.plan]] bind the tables and views the text names
+    * (a bare name resolves in the current schema first) and plan it.
+    */
+  private def select(raw: String): DataFrame = {
+    val binds = scala.collection.mutable.LinkedHashMap[String, () => DataFrame]()
     var s = rewrite(raw)
     // TABLE(system.table_changes(...)) -> bound change-feed view
     s = "(?is)TABLE\\s*\\(\\s*system\\.table_changes\\s*\\((.*?)\\)\\s*\\)".r
@@ -424,46 +399,7 @@ class GraftSql(val cat: LakeCatalog) {
           else table(t).asOf(ver.toLong)
         view
       })
-    // bare catalog tables, their metadata tables, and stored views
-    val idents = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(s).toSet
-    val metaKinds = Seq("snapshots", "history", "refs", "files",
-      "partitions", "properties", "manifests", "entries",
-      "metadata_log_entries")
-    val referenced = cat.listTables.filter(n =>
-      idents.contains(n.split("\\.").last))
-    // Meta-column reads are scoped to the table(s) that actually
-    // reference a `$...` column — a statement-global flip would leak
-    // $-columns into every other table's star expansion (schema drift
-    // on t2.* while reading t1's lineage). A qualified `q.`$...``
-    // attributes to table q directly or through a FROM/JOIN alias; an
-    // unqualified `$...` attributes to the sole referenced base table
-    // (with several tables it is ambiguous and fails resolution loudly).
-    val metaQualifiers =
-      "(\\w+)\\s*\\.\\s*`\\$".r.findAllMatchIn(s).map(_.group(1)).toSet
-    val anyMetaRef = s.contains("`$")
-    def wantsMeta(short: String): Boolean = anyMetaRef && (
-      metaQualifiers.contains(short) ||
-      metaQualifiers.exists(q => q != short &&
-        (s"(?i)\\b$short\\s+(?:AS\\s+)?$q\\b").r.findFirstIn(s).isDefined) ||
-      (metaQualifiers.isEmpty && referenced.size == 1))
-    referenced.foreach { n =>
-      val short = n.split("\\.").last
-      binds.getOrElseUpdate(short, () =>
-        if (wantsMeta(short)) cat.table(n).readWithMetaColumns()
-        else cat.table(n).read())
-    }
-    // metadata tables bind independently of the base table being
-    // referenced (`"t$snapshots"` rewrites to the single ident
-    // `t_snapshots` — `t` itself never appears)
-    cat.listTables.foreach { n =>
-      val short = n.split("\\.").last
-      metaKinds.filter(mt => idents.contains(s"${short}_$mt")).foreach(mt =>
-        binds.getOrElseUpdate(s"${short}_$mt",
-          () => cat.table(n).metaTable(mt)))
-    }
-    cat.listViews.filter(idents.contains).foreach(v =>
-      binds.getOrElseUpdate(v, () => cat.readView(v)))
-    s
+    cat.plan(s, Some(currentSchema), binds.toSeq)
   }
 
   // ---- INSERT / MERGE ------------------------------------------------
@@ -495,7 +431,7 @@ class GraftSql(val cat: LakeCatalog) {
       src: String, srcAlias: Option[String], on: String, whens: String)
       : Unit = {
     val sourceDf = sources.get(src).map(spark.table)
-      .getOrElse(cat.table(resolve(src)).read())
+      .getOrElse(table(src).read())
     val tgtNames = (tgtAlias.toSeq :+ tgt.split("\\.").last).distinct
     val srcNames = (srcAlias.toSeq :+ src.split("\\.").last).distinct
     def quoted(a: String) = java.util.regex.Pattern.quote(a)
@@ -534,7 +470,7 @@ class GraftSql(val cat: LakeCatalog) {
     val matchedCondition =
       matched.flatMap(m => Option(m.group(1)))
         .map(c => expr(rewrite(resolveRefs(c))))
-    cat.table(resolve(tgt)).merge(sourceDf, keys,
+    table(tgt).merge(sourceDf, keys,
       matchedCondition = matchedCondition,
       whenMatchedSet = whenMatchedSet,
       whenNotMatchedInsert = notMatched)
@@ -544,12 +480,15 @@ class GraftSql(val cat: LakeCatalog) {
 
   private def table(name: String): LakeTable = cat.table(resolve(name))
 
-  /** bare -> current schema; schema.table kept; catalog.schema.table ->
-    * catalog prefix dropped (single-process engine, one catalog).
+  /** bare -> as a SELECT binds it ([[LakeCatalog.qualify]]), or the
+    * current schema for CREATE and DROP; schema.table kept;
+    * catalog.schema.table -> catalog prefix dropped (single-process
+    * engine, one catalog).
     */
-  private def resolve(name: String): String =
+  private def resolve(name: String, create: Boolean = false): String =
     name.replace("\"", "").split("\\.").toSeq match {
-      case Seq(t) => s"$currentSchema.$t"
+      case Seq(t) if create => s"$currentSchema.$t"
+      case Seq(t) => cat.qualify(t, currentSchema)
       case Seq(sc, t) => s"$sc.$t"
       case parts => parts.takeRight(2).mkString(".")
     }

@@ -2,10 +2,11 @@ package graft.lake
 
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.Serialization
+import scala.util.Try
 
 /** Catalog → schema → table namespace over a warehouse directory
   * (`iceberg_trino_sqldemo.sql:6-9`: CREATE SCHEMA / USE), plus views and
@@ -169,14 +170,18 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
   // ---- views (`sql:53-55, 85-96`) ------------------------------------
 
   /** CREATE OR REPLACE VIEW: stored SQL text, re-planned at every read.
-    * The SQL may reference catalog tables by bare table name and
-    * metadata tables as `<table>$snapshots` etc. — they're registered
-    * as temp views before execution.
+    * The SQL may reference catalog tables by bare table name, metadata
+    * tables as `<table>_snapshots` etc. and other views — [[plan]]
+    * binds them at every read.
     */
   def createView(name: String, sql: String): Unit =
     save(state.copy(views = state.views + (name -> sql)))
 
-  def readView(name: String): DataFrame = {
+  def readView(name: String): DataFrame = readView(name, Set.empty)
+
+  /** [[plan]] binds no view in `reading` (the views being planned
+    * around this read) again: a body may name its own view. */
+  private def readView(name: String, reading: Set[String]): DataFrame = {
     val s = state
     val sql = s.views.get(name)
       .orElse(s.mviews.get(name).map(_.sql))
@@ -186,7 +191,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
     s.mviews.get(name) match {
       case Some(mv) if Meta.currentVersion(mv.location).isDefined =>
         LakeTable.forLocation(spark, mv.location).read()
-      case _ => execSql(sql)
+      case _ => plan(sql, reading = reading + name)
     }
   }
 
@@ -205,70 +210,126 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
   def refreshMaterializedView(name: String): Unit = {
     val mv = state.mviews.getOrElse(name,
       throw new IllegalArgumentException(s"no materialized view $name"))
-    LakeTable.create(spark, mv.location, Right(execSql(mv.sql)),
-      replace = true)
+    LakeTable.create(spark, mv.location,
+      Right(plan(mv.sql, reading = Set(name))), replace = true)
   }
 
   /** Public SQL entry point: plan an arbitrary SELECT over the
-    * catalog's tables (and their `<table>_snapshots`-style metadata
-    * tables) by bare table name — the reference script's `SELECT`
-    * statements run verbatim modulo catalog prefixes. Registration is
-    * lazy and token-matched: only tables the query actually names are
-    * bound, each as its current-snapshot read (so time travel, branches
+    * catalog's tables, their `<table>_snapshots`-style metadata tables
+    * and its stored views, by bare name — the reference script's
+    * `SELECT` statements run verbatim modulo catalog prefixes. Each
+    * table binds as its current-snapshot read (so time travel, branches
     * and MoR deletes are all visible exactly as `table(n).read()` shows
-    * them).
+    * them); a table name held in several schemas fails, naming them.
     */
-  def sql(query: String): DataFrame = execSql(query)
+  def sql(query: String): DataFrame = plan(query)
 
-  private def execSql(sql: String): DataFrame = {
-    // Register every catalog table (+ its metadata tables) the SQL
-    // mentions as temp views, then let Spark SQL plan it. Mentions are
-    // matched on whole identifier tokens, not substrings — a view over
-    // `orders` must not also register (and read) `orders_2`.
-    // maximal word-char runs, so digit-leading names ("2024_sales")
-    // still tokenize whole
-    val idents = "[A-Za-z0-9_]+".r.findAllIn(sql).toSet
-    val metaKinds = Seq("snapshots", "history", "refs", "files",
-      "partitions", "properties", "manifests", "entries",
-      "metadata_log_entries")
-    val bindings = listTables.flatMap { n =>
-      val short = n.split("\\.").last
-      val needsBase = idents.contains(short)
-      val metaRefs = metaKinds.filter(mt => idents.contains(s"${short}_$mt"))
-      if (needsBase || metaRefs.nonEmpty) {
-        val t = table(n)
-        (if (needsBase) Seq(short -> t.read()) else Nil) ++
-          metaRefs.map(mt => s"${short}_$mt" -> MetaTables(t, mt))
-      } else Nil
+  /** The one SELECT binder, behind [[sql]], [[readView]] and
+    * `GraftSql`'s SELECTs: every catalog table, `<table>_<kind>`
+    * metadata table and stored view the text names — plus the caller's
+    * `extra` bindings, which win a name clash — becomes a temp view
+    * scoped to this call, then Spark SQL plans the text.
+    *
+    * Mentions are whole `[A-Za-z0-9_]+` tokens, not substrings: a view
+    * over `orders` must not also bind (and read) `orders_2`, and
+    * digit-leading names (`2024_sales`) stay whole. A bare table name
+    * resolves as [[qualify]] says. A token may be a column or an alias,
+    * so a binding that fails (several tables hold the name, or a view
+    * body names a view this read is planning) is only reported if Spark
+    * then finds no relation by that name.
+    */
+  private[lake] def plan(sql: String, schema: Option[String] = None,
+      extra: Seq[(String, () => DataFrame)] = Nil,
+      reading: Set[String] = Set.empty): DataFrame = {
+    val s = state
+    val all = tablesOf(s)
+    val idents = "[A-Za-z0-9_]+".r.findAllIn(sql).toSeq.distinct.sorted
+    // (token, metadata kind, candidate tables) for each token naming a
+    // base table or a `<table>_<kind>` metadata table, whether or not
+    // the base is named: `"t$snapshots"` is the one token `t_snapshots`
+    val named = idents.flatMap { id =>
+      val kinds = MetaTables.kinds.keys.toSeq.filter(k => id.endsWith(s"_$k"))
+      ((id, None) +: kinds.map(k => (id.stripSuffix(s"_$k"), Some(k))))
+        .map { case (short, kind) => (id, kind, candidates(short, schema, all)) }
+    }.filter(_._3.nonEmpty)
+    val bases = named.collect { case (id, None, Seq(_)) => id }
+    // Meta-column reads are scoped to the table(s) that actually
+    // reference a `$...` column — a statement-global flip would leak
+    // $-columns into every other table's star expansion (schema drift
+    // on t2.* while reading t1's lineage). A qualified `q.`$...``
+    // attributes to table q directly or through a FROM/JOIN alias; an
+    // unqualified `$...` attributes to the sole referenced base table
+    // (with several tables it is ambiguous and fails resolution loudly).
+    val metaQualifiers =
+      "(\\w+)\\s*\\.\\s*`\\$".r.findAllMatchIn(sql).map(_.group(1)).toSet
+    def wantsMeta(short: String): Boolean = sql.contains("`$") && (
+      metaQualifiers.contains(short) ||
+      metaQualifiers.exists(q => q != short &&
+        (s"(?i)\\b$short\\s+(?:AS\\s+)?$q\\b").r.findFirstIn(sql).isDefined) ||
+      (metaQualifiers.isEmpty && bases.size == 1))
+    val tables = named.map { case (id, kind, cands) =>
+      val n = cands.head
+      id -> (() => kind match {
+        case _ if cands.size > 1 => throw ambiguous(id, cands)
+        case Some(k) => MetaTables(table(n), k)
+        case None if wantsMeta(id) => table(n).readWithMetaColumns()
+        case None => table(n).read()
+      })
     }
-    // The bindings are scoped to THIS call: clobbering a session temp
-    // view the user created (createOrReplaceTempView) — or leaving our
-    // views behind to shadow names for later spark.sql calls — would
-    // leak the binding outside catalog.sql. Resolution is eager in
-    // spark.sql, so dropping the views after planning is safe for the
-    // returned (lazy) DataFrame.
+    val views = (s.views.keySet ++ s.mviews.keySet -- reading)
+      .filter(idents.contains).toSeq.sorted
+      .map(v => v -> (() => readView(v, reading)))
+    // Resolve every binding first: a view re-plans through this binder,
+    // and its scoped views must come and go before ours exist.
+    val (ok, failed) = (extra ++ tables ++ views).distinctBy(_._1)
+      .map { case (n, f) => n -> Try(f()) }.partition(_._2.isSuccess)
+    val frames = ok.map { case (n, df) => n -> df.get }
+    // A session view under a bound name would be shadowed by — or
+    // clobbered with — the catalog binding; fail loudly instead.
+    frames.map(_._1).find(spark.catalog.tableExists(_)).foreach(n =>
+      throw new IllegalStateException(
+        s"session object `$n` shadows a catalog binding — drop or rename it"))
+    // Resolution is eager in spark.sql, so dropping the views after
+    // planning is safe for the returned (lazy) DataFrame.
     val created = scala.collection.mutable.Buffer[String]()
     try {
-      bindings.foreach { case (name, df) =>
-        if (spark.catalog.tableExists(name))
-          throw new IllegalStateException(s"catalog.sql: the session " +
-            s"already has a table or view named '$name', which this query " +
-            "would bind to the catalog table — drop or rename it first")
-        df.createTempView(name)
-        created += name
-      }
+      frames.foreach { case (n, df) => df.createTempView(n); created += n }
       spark.sql(sql)
+    } catch {
+      case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" =>
+        val name = e.getMessageParameters.get("relationName").replace("`", "")
+        throw failed.toMap.get(name).fold[Throwable](e)(_.failed.get)
     } finally created.foreach(spark.catalog.dropTempView(_))
   }
 
-  def listViews: Seq[String] = {
-    val s = state
-    (s.views.keys ++ s.mviews.keys).toSeq.distinct.sorted
+  /** A bare table name as every SELECT, time-travel read and row-level
+    * change resolves it: one of [[candidates]] is the table; several
+    * fail, naming each; none leaves `schema.name` for the caller.
+    */
+  private[lake] def qualify(name: String, schema: String): String =
+    if (tableExists(s"$schema.$name")) s"$schema.$name"
+    else candidates(name, None, listTables) match {
+      case Seq() => s"$schema.$name"
+      case Seq(one) => one
+      case many => throw ambiguous(name, many)
+    }
+
+  /** The tables a bare name may mean: `schema.name` if that table
+    * exists, else every table with that short name. */
+  private def candidates(name: String, schema: Option[String],
+      tables: Seq[String]): Seq[String] = {
+    val held = tables.filter(_.split("\\.").last == name)
+    schema.map(sc => s"$sc.$name").filter(held.contains).fold(held)(Seq(_))
   }
 
-  def listTables: Seq[String] = {
+  private def ambiguous(name: String, tables: Seq[String]) =
+    new IllegalArgumentException(
+      s"table name '$name' is ambiguous: ${tables.mkString(", ")}")
+
+  def listTables: Seq[String] = tablesOf(state)
+
+  private def tablesOf(s: CatalogState): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val s = state
     val managed = s.schemas.toSeq.flatMap { case (schema, loc) =>
       val p = Paths.get(loc)
       if (!Files.isDirectory(p)) Nil

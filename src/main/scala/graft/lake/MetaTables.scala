@@ -10,22 +10,20 @@ import org.apache.spark.sql.functions._
 object MetaTables {
   import Meta._
 
+  /** Every metadata-table kind by its SQL name (`"t$<kind>"`) — the one
+    * list both [[apply]] and the catalog's SELECT binder read.
+    */
+  val kinds: Map[String, (SparkSession, TableMetadata) => DataFrame] =
+    scala.collection.immutable.ListMap(
+      "snapshots" -> snapshots _, "history" -> history _,
+      "refs" -> refs _, "manifests" -> manifests _, "files" -> files _,
+      "partitions" -> partitions _, "properties" -> properties _,
+      "metadata_log_entries" -> metadataLog _, "entries" -> entries _)
+
   def apply(table: LakeTable, name: String): DataFrame = {
-    val spark = table.spark
-    val m = table.meta
-    name.stripPrefix("$") match {
-      case "snapshots" => snapshots(spark, m)
-      case "history" => history(spark, m)
-      case "refs" => refs(spark, m)
-      case "manifests" => manifests(spark, m)
-      case "files" => files(spark, m)
-      case "partitions" => partitions(spark, m)
-      case "properties" => properties(spark, m)
-      case "metadata_log_entries" => metadataLog(spark, m)
-      case "entries" => entries(spark, m)
-      case other =>
-        throw new IllegalArgumentException(s"unknown metadata table $$$other")
-    }
+    val kind = name.stripPrefix("$")
+    kinds.getOrElse(kind, throw new IllegalArgumentException(
+      s"unknown metadata table $$$kind"))(table.spark, table.meta)
   }
 
   /** `$snapshots` (`sql:75,87-94,112`). */

@@ -72,6 +72,48 @@ class CatalogSpec extends AnyFunSuite {
       "a view over vorders_2 must not register vorders")
   }
 
+  test("sql reads a stored view and the `$row_id` meta column") {
+    val cat = freshCatalog()
+    cat.createSchema("demo")
+    cat.createTable("demo.rcust", customers20)
+    cat.createView("v_low", "SELECT custkey FROM rcust WHERE custkey < 5")
+    assert(cat.sql("SELECT count(*) FROM v_low").head().getLong(0) ==
+      customers20.filter(col("custkey") < 5).count())
+    assert(cat.sql("SELECT `$row_id` FROM rcust").distinct().count() ==
+      customers20.count())
+  }
+
+  test("a view or materialized view body may name its own view") {
+    val cat = freshCatalog()
+    cat.createSchema("demo")
+    cat.createTable("demo.vcust", customers20)
+    cat.createView("revenue", "SELECT sum(custkey) AS revenue FROM vcust")
+    assert(cat.readView("revenue").head().getLong(0) ==
+      customers20.agg(sum("custkey")).head().getLong(0))
+    // the first refresh plans the body before any materialization exists
+    cat.createMaterializedView("mv_n", "SELECT count(*) AS mv_n FROM vcust")
+    assert(cat.readView("mv_n").head().getLong(0) == customers20.count())
+  }
+
+  test("sql binds views that name themselves and each other") {
+    val cat = freshCatalog()
+    cat.createSchema("demo")
+    cat.createTable("demo.vcust", customers20)
+    cat.createView("revenue", "SELECT sum(custkey) AS revenue FROM vcust")
+    assert(cat.sql("SELECT revenue FROM revenue").head().getLong(0) ==
+      customers20.agg(sum("custkey")).head().getLong(0))
+    // v_a names v_b only as an alias; v_b reads v_a
+    cat.createView("v_a", "SELECT count(*) AS v_b FROM vcust")
+    cat.createView("v_b", "SELECT v_b AS v_a FROM v_a")
+    Seq("v_a", "v_b").foreach(v =>
+      assert(cat.readView(v).head().getLong(0) == customers20.count(), v))
+    assert(cat.sql("SELECT v_a FROM v_b").head().getLong(0) == customers20.count())
+    // a true cycle fails as Spark fails any missing relation
+    cat.createView("v_c", "SELECT * FROM v_d")
+    cat.createView("v_d", "SELECT * FROM v_c")
+    intercept[org.apache.spark.sql.AnalysisException](cat.readView("v_c"))
+  }
+
   test("view over metadata tables — the script's history view (sql:85-96)") {
     val cat = freshCatalog()
     cat.createSchema("demo")

@@ -383,6 +383,50 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(gs.execute("SELECT * FROM shadowed").count() == 25)
   }
 
+  test("a digit-leading table name binds as one whole token") {
+    val gs = freshSql()
+    gs.execute("CREATE SCHEMA s1")
+    gs.execute("CREATE TABLE s1.2024_sales AS SELECT * FROM tpch.tiny.nation")
+    assert(gs.execute("""SELECT count(*) FROM "2024_sales"""").head()
+      .getLong(0) == 25L)
+  }
+
+  test("a bare name binds the current schema's table, as time travel does") {
+    val gs = freshSql()
+    gs.execute("CREATE SCHEMA s1")
+    gs.execute("CREATE SCHEMA s2")
+    gs.execute("CREATE TABLE s1.t AS SELECT * FROM tpch.tiny.region WHERE r_regionkey = 0")
+    gs.execute("CREATE TABLE s2.t AS SELECT * FROM tpch.tiny.nation WHERE n_nationkey < 5")
+    gs.execute("USE s2")
+    val head = gs.cat.table("s2.t").meta.currentSnapshotId.get
+    def count(sql: String) = gs.execute(sql).head().getLong(0)
+    assert(count("SELECT count(*) FROM t") == 5L)
+    assert(count(s"SELECT count(*) FROM t FOR VERSION AS OF $head") == 5L)
+    // no current schema: the bare name is ambiguous, and the error says
+    // which tables it could mean
+    val err = intercept[IllegalArgumentException](
+      gs.cat.sql("SELECT count(*) FROM t"))
+    assert(err.getMessage.contains("s1.t") && err.getMessage.contains("s2.t"),
+      err.getMessage)
+    // a table only another schema holds: a plain read, time travel and
+    // DML all resolve the bare name to it
+    gs.execute("CREATE TABLE s1.u AS SELECT * FROM tpch.tiny.nation WHERE n_nationkey < 3")
+    val uHead = gs.cat.table("s1.u").meta.currentSnapshotId.get
+    assert(count("SELECT count(*) FROM u") == 3L)
+    assert(count(s"SELECT count(*) FROM u FOR VERSION AS OF $uHead") == 3L)
+    gs.execute("DELETE FROM u WHERE n_nationkey = 0")
+    assert(gs.cat.table("s1.u").read().count() == 2L)
+    // in a schema holding neither `t`, the word still works as a column;
+    // only a table reference to it fails, naming both tables
+    gs.execute("CREATE SCHEMA s3")
+    gs.execute("USE s3")
+    assert(count("SELECT count(t) FROM (SELECT 1 AS t)") == 1L)
+    val err3 = intercept[IllegalArgumentException](
+      gs.execute("SELECT count(*) FROM t"))
+    assert(err3.getMessage.contains("s1.t") && err3.getMessage.contains("s2.t"),
+      err3.getMessage)
+  }
+
   test("meta-column read is scoped to the referencing table only") {
     val gs = freshSql()
     gs.execute("CREATE OR REPLACE TABLE mt1 AS SELECT * FROM tpch.tiny.nation")
