@@ -592,21 +592,19 @@ object StreamQueries {
     */
   def streamCurateReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    import graft.streaming.StreamIngest.{ledger, AdmittedKey, DocsInKey,
+      StaticsClearedKey}
     val t = graft.lake.LakeTable.forLocation(s, curateIngestLoc(s, d))
-    val prefix = "docs_curate_ingest:"
     // metric keys via Option: a pre-metrics snapshot (an older table
     // read by this query) yields no report row instead of throwing
-    val rows = t.meta.snapshots.flatMap { sn =>
-      for {
-        st <- sn.summary.get(graft.streaming.StreamIngest.BatchStamp)
-        if st.startsWith(prefix)
-        in <- sn.summary.get(graft.streaming.StreamIngest.DocsInKey)
-        cl <- sn.summary.get(
-          graft.streaming.StreamIngest.StaticsClearedKey)
-        ad <- sn.summary.get(graft.streaming.StreamIngest.AdmittedKey)
-      } yield (st.substring(prefix.length).toLong,
-        in.toLong, cl.toLong, ad.toLong)
-    }
+    val rows = ledger(t).filter(_.query == "docs_curate_ingest")
+      .flatMap { e =>
+        for {
+          in <- e.summary.get(DocsInKey)
+          cl <- e.summary.get(StaticsClearedKey)
+          ad <- e.summary.get(AdmittedKey)
+        } yield (e.batch, in.toLong, cl.toLong, ad.toLong)
+      }
     rows.toDF("batch_id", "docs_in", "statics_cleared", "admitted")
       .withColumn("dedup_suppressed",
         col("statics_cleared") - col("admitted"))
@@ -875,17 +873,16 @@ object StreamQueries {
   def streamAnnReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val loc = annIngestLoc(s, d)
+    import graft.streaming.StreamIngest.{ledger, MeanSqDistKey,
+      NVectorsKey}
     val t = graft.pipeline.Similarity.loadIvf(s, loc).table.get
-    val prefix = "vec_ann_ingest:"
     // metric keys via Option: a pre-metrics snapshot (an older index
     // read by this query) yields no report row instead of throwing
-    val rows = t.meta.snapshots.flatMap { sn =>
+    val rows = ledger(t).filter(_.query == "vec_ann_ingest").flatMap { e =>
       for {
-        st <- sn.summary.get(graft.streaming.StreamIngest.BatchStamp)
-        if st.startsWith(prefix)
-        n <- sn.summary.get(graft.streaming.StreamIngest.NVectorsKey)
-        m <- sn.summary.get(graft.streaming.StreamIngest.MeanSqDistKey)
-      } yield (st.substring(prefix.length).toLong, n.toLong, m.toDouble)
+        n <- e.summary.get(NVectorsKey)
+        m <- e.summary.get(MeanSqDistKey)
+      } yield (e.batch, n.toLong, m.toDouble)
     }
     rows.toDF("batch_id", "n_vectors", "mean_sq_dist")
       .orderBy("batch_id")
@@ -1272,17 +1269,11 @@ object StreamQueries {
     */
   def streamBudgetReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    import graft.streaming.StreamIngest.{ledger, parseDelta, BudgetDelta}
     val t = graft.lake.LakeTable.forLocation(s, budgetIngestLoc(s, d))
-    val prefix = "docs_budget:"
-    val rows = t.meta.snapshots.flatMap { sn =>
-      for {
-        st <- sn.summary.get(graft.streaming.StreamIngest.BatchStamp)
-        if st.startsWith(prefix)
-        dl <- sn.summary.get(graft.streaming.StreamIngest.BudgetDelta)
-      } yield (st.substring(prefix.length).toLong,
-        graft.streaming.StreamIngest.parseDelta(dl))
-    }.flatMap { case (b, m) =>
-      m.toSeq.map { case (k, v) => (b, k, v) }
+    val rows = ledger(t).filter(_.query == "docs_budget").flatMap { e =>
+      e.summary.get(BudgetDelta).toSeq.flatMap(dl =>
+        parseDelta(dl).toSeq.map { case (k, v) => (e.batch, k, v) })
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("batch_id"))
@@ -1347,17 +1338,12 @@ object StreamQueries {
     */
   def streamVocabReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    import graft.streaming.StreamIngest.{ledger, VocabEstKey}
     val t = graft.lake.LakeTable.forLocation(s, vocabIngestLoc(s, d))
-    val prefix = "docs_vocab:"
-    val rows = t.meta.snapshots.flatMap { sn =>
-      for {
-        st <- sn.summary.get(graft.streaming.StreamIngest.BatchStamp)
-        if st.startsWith(prefix)
-        b <- st.substring(prefix.length).toLongOption
-        v <- sn.summary.get(graft.streaming.StreamIngest.VocabEstKey)
-      } yield {
+    val rows = ledger(t).filter(_.query == "docs_vocab").flatMap { e =>
+      e.summary.get(VocabEstKey).map { v =>
         val parts = v.split(":")
-        (b, parts(0).toInt, parts(1).toLong, parts(2).toLong)
+        (e.batch, parts(0).toInt, parts(1).toLong, parts(2).toLong)
       }
     }
     rows.toDF("batch_id", "k_used", "kth_min", "est_distinct")
@@ -1422,17 +1408,12 @@ object StreamQueries {
     */
   def streamFreqReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    import graft.streaming.StreamIngest.{ledger, FreqMassKey}
     val t = graft.lake.LakeTable.forLocation(s, freqIngestLoc(s, d))
-    val prefix = "docs_freq:"
-    val rows = t.meta.snapshots.flatMap { sn =>
-      for {
-        st <- sn.summary.get(graft.streaming.StreamIngest.BatchStamp)
-        if st.startsWith(prefix)
-        b <- st.substring(prefix.length).toLongOption
-        v <- sn.summary.get(graft.streaming.StreamIngest.FreqMassKey)
-      } yield {
+    val rows = ledger(t).filter(_.query == "docs_freq").flatMap { e =>
+      e.summary.get(FreqMassKey).map { v =>
         val parts = v.split(":")
-        (b, parts(0).toLong, parts(1).toLong, parts(2).toLong)
+        (e.batch, parts(0).toLong, parts(1).toLong, parts(2).toLong)
       }
     }
     rows.toDF("batch_id", "batch_tokens", "probe_mass",

@@ -25,7 +25,8 @@ import graft.pipeline.{IncrementalDedup, Similarity, TextAnalysis}
   */
 object StreamIngest {
 
-  /** Summary key carrying `<queryName>:<batchId>` on ingest snapshots. */
+  /** Summary key carrying `<queryName>:<batchId>` on ingest snapshots.
+    * [[stamp]] writes it; [[ledger]] is the only parser. */
   val BatchStamp = "graft.streaming.batch"
 
   /** Summary keys for the composed door's per-batch admission metrics
@@ -56,20 +57,33 @@ object StreamIngest {
 
   private def stamp(queryName: String, batchId: Long) = s"$queryName:$batchId"
 
-  /** Already-committed batch ids for `queryName` (all branches' history
-    * — summaries live on snapshots, which rollback keeps reachable).
-    * The batch id is everything after the LAST ':' — query names may
-    * themselves contain ':' (`a` must not claim `a:v2`'s stamps).
+  /** One [[BatchStamp]] entry of the stream ledger: the stamping query,
+    * its batch id, and the whole commit summary the stamp rode on (the
+    * budget deltas, drift, vocabulary and frequency stamps). */
+  final case class Stamp(query: String, batch: Long,
+      summary: Map[String, String])
+
+  /** The stream ledger of `table`: every snapshot carrying a
+    * [[BatchStamp]] (all branches' history — summaries live on
+    * snapshots, which rollback keeps reachable), sorted by (query,
+    * batch). One metadata load, no data scan. The batch id is
+    * everything after the LAST ':' — query names may themselves contain
+    * ':' (`a` must not claim `a:v2`'s stamps); a stamp whose batch id
+    * does not parse is skipped.
     */
-  def committedBatches(table: LakeTable, queryName: String): Set[Long] =
-    table.meta.snapshots.flatMap(_.summary.get(BatchStamp))
-      .flatMap { s =>
+  private[graft] def ledger(table: LakeTable): Seq[Stamp] =
+    table.meta.snapshots.flatMap { sn =>
+      sn.summary.get(BatchStamp).flatMap { s =>
         val cut = s.lastIndexOf(':')
-        if (cut == queryName.length && s.substring(0, cut) == queryName)
-          s.substring(cut + 1).toLongOption
-        else None
+        if (cut < 0) None
+        else s.substring(cut + 1).toLongOption
+          .map(Stamp(s.substring(0, cut), _, sn.summary))
       }
-      .toSet
+    }.sortBy(e => (e.query, e.batch))
+
+  /** Already-committed batch ids for `queryName`, from the [[ledger]]. */
+  def committedBatches(table: LakeTable, queryName: String): Set[Long] =
+    ledger(table).filter(_.query == queryName).map(_.batch).toSet
 
   /** The one door skeleton every ingest door runs on: start `stream`
     * under `checkpointDir`, hand each non-empty micro-batch to
@@ -79,7 +93,7 @@ object StreamIngest {
     * committed; a commit adds `batchId` to `seen`.
     *
     * `seen` starts as `stamps`' [[committedBatches]] — one metadata
-    * read up front; this writer is the only one stamping `queryName`,
+    * read at start; this writer is the only one stamping `queryName`,
     * so tracking its own commits locally avoids an O(# snapshots)
     * metadata load + parse per micro-batch. Two replay modes:
     *  - skip on replay (`rerunOnReplay = false`): a batch id in `seen`
@@ -88,13 +102,13 @@ object StreamIngest {
     *    crash left uncommitted gets filled in) and the door guards its
     *    own stamped append with `seen`.
     */
-  private def runDoor(stream: DataFrame, stamps: Option[LakeTable],
+  private def runDoor(stream: DataFrame, stamps: LakeTable,
       queryName: String, checkpointDir: String, rerunOnReplay: Boolean)(
       perBatch: (DataFrame, Long, scala.collection.Set[Long]) => Boolean)
       : Long = {
     var committed = 0L
     val seen = scala.collection.mutable.Set.empty[Long] ++=
-      stamps.fold(Set.empty[Long])(committedBatches(_, queryName))
+      committedBatches(stamps, queryName)
     val q = stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -204,7 +218,7 @@ object StreamIngest {
     */
   def upsertAvailable(stream: DataFrame, table: LakeTable, keys: Seq[String],
       queryName: String, checkpointDir: String): Long =
-    runDoor(stream, Some(table), queryName, checkpointDir,
+    runDoor(stream, table, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       table.merge(batch.dropDuplicates(keys), keys,
         summary = stamped(queryName, batchId)).nonEmpty
@@ -237,7 +251,7 @@ object StreamIngest {
   def dedupIngestAvailable(stream: DataFrame, indexLoc: String,
       kept: LakeTable, threshold: Double, queryName: String,
       checkpointDir: String): Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = true) { (batch, batchId, seen) =>
       lshAdmit(batch, indexLoc, threshold, kept, queryName, batchId,
         seen)(_ => Map.empty)
@@ -260,7 +274,7 @@ object StreamIngest {
   def decontaminateIngestAvailable(stream: DataFrame,
       benchGrams: DataFrame, kept: LakeTable, k: Int, queryName: String,
       checkpointDir: String): Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       // one materialization (see qualityGateIngestAvailable): the
       // gram probe must not re-run inside append's lineage pass
@@ -282,7 +296,7 @@ object StreamIngest {
     */
   def qualityGateIngestAvailable(stream: DataFrame, kept: LakeTable,
       queryName: String, checkpointDir: String): Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       // one materialization: append's lineage pass (dense row-id
       // assignment counts its input) would otherwise re-run the
@@ -307,7 +321,7 @@ object StreamIngest {
       weights: DataFrame, prior: DataFrame, threshold: Double,
       kept: LakeTable, queryName: String,
       checkpointDir: String): Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       // one materialization (see qualityGateIngestAvailable): the
       // score plan must not re-run inside append's lineage pass
@@ -341,7 +355,7 @@ object StreamIngest {
       benchK: Int, indexLoc: String, kept: LakeTable,
       dedupThreshold: Double, queryName: String,
       checkpointDir: String): Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = true) { (batch, batchId, seen) =>
       import scala.concurrent.{Await, ExecutionContext, Future, blocking}
       import scala.concurrent.duration.Duration
@@ -400,42 +414,38 @@ object StreamIngest {
     */
   def annIngestAvailable(stream: DataFrame, indexLoc: String,
       queryName: String, checkpointDir: String): Long =
-    // no up-front stamp read: the index table is re-loaded (and its
-    // stamps re-read) every batch
-    runDoor(stream, None, queryName, checkpointDir,
-        rerunOnReplay = true) { (batch, batchId, _) =>
+    runDoor(stream, LakeTable.forLocation(stream.sparkSession, indexLoc),
+        queryName, checkpointDir, rerunOnReplay = false) {
+      (batch, batchId, _) =>
       val idx = Similarity.loadIvf(batch.sparkSession, indexLoc)
-      !committedBatches(idx.table.get, queryName).contains(batchId) && {
-        // Drift signal on the commit: the batch's assignment quality
-        // against the FIXED centroids (count + mean squared L2 to the
-        // nearest cell) rides the snapshot summary, so "has the
-        // arriving distribution walked away from the quantizer" is
-        // answerable from the index table alone — the observable
-        // behind refreshIvf's documented re-fit-on-drift maintenance
-        // decision. ONE O(batch×nlist) expansion serves both the stats
-        // and the index layout (assignCellsDist; stats + refreshIvf's
-        // assignCells previously each ran the full expansion).
-        // Replayed batches skip the append, so replay cannot
-        // double-report.
-        val assigned = batch
-          .select(col("vec_id"), col("embedding"))
-          .transform(Similarity.assignCellsDist(
-            idx.centroids, "embedding", "vec_id"))
-          .localCheckpoint(true)
-        // same estimator (and 6-dp rounding) as
-        // Similarity.assignmentStats — the stamped mean must stay
-        // oracle-identical
-        val statsRow = assigned
-          .agg(count(lit(1)).cast("long").as("n"),
-            round(coalesce(avg(col("_dist")), lit(0.0d)), 6).as("m"))
-          .head()
-        idx.table.get.append(
-          assigned.drop("_dist").repartition(col("cell")),
-          summary = stamped(queryName, batchId) ++ Map(
-            NVectorsKey -> statsRow.getLong(0).toString,
-            MeanSqDistKey -> statsRow.getDouble(1).toString))
-        true
-      }
+      // Drift signal on the commit: the batch's assignment quality
+      // against the FIXED centroids (count + mean squared L2 to the
+      // nearest cell) rides the snapshot summary, so "has the arriving
+      // distribution walked away from the quantizer" is answerable
+      // from the index table alone — the observable behind
+      // refreshIvf's documented re-fit-on-drift maintenance decision.
+      // ONE O(batch×nlist) expansion serves both the stats and the
+      // index layout (assignCellsDist; stats + refreshIvf's assignCells
+      // previously each ran the full expansion). Replayed batches are
+      // skipped by the runner, so replay cannot double-report.
+      val assigned = batch
+        .select(col("vec_id"), col("embedding"))
+        .transform(Similarity.assignCellsDist(
+          idx.centroids, "embedding", "vec_id"))
+        .localCheckpoint(true)
+      // same estimator (and 6-dp rounding) as
+      // Similarity.assignmentStats — the stamped mean must stay
+      // oracle-identical
+      val statsRow = assigned
+        .agg(count(lit(1)).cast("long").as("n"),
+          round(coalesce(avg(col("_dist")), lit(0.0d)), 6).as("m"))
+        .head()
+      idx.table.get.append(
+        assigned.drop("_dist").repartition(col("cell")),
+        summary = stamped(queryName, batchId) ++ Map(
+          NVectorsKey -> statsRow.getLong(0).toString,
+          MeanSqDistKey -> statsRow.getDouble(1).toString))
+      true
     }
 
   /** Streaming SEMANTIC dedup at ingest — the cosine mirror of
@@ -470,8 +480,13 @@ object StreamIngest {
   def semanticDedupIngestAvailable(stream: DataFrame, indexLoc: String,
       kept: LakeTable, cosineThreshold: Double, queryName: String,
       checkpointDir: String, vecCol: String = "embedding",
-      idCol: String = "vec_id"): Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+      idCol: String = "vec_id"): Long = {
+    // the index half's own stamps, read once at start like the runner's
+    // `seen` (this door is the only writer stamping `queryName` there)
+    val indexed = scala.collection.mutable.Set.empty[Long] ++=
+      committedBatches(LakeTable.forLocation(stream.sparkSession, indexLoc),
+        queryName)
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = true) { (batch, batchId, seen) =>
       import graft.functions.VectorExpressions.cosineNative
       val idx = Similarity.loadIvf(batch.sparkSession, indexLoc)
@@ -517,11 +532,14 @@ object StreamIngest {
           kept.append(keptRows, summary = stamped(queryName, batchId))
           true
         },
-        if (!committedBatches(idxTable, queryName).contains(batchId))
+        if (!indexed.contains(batchId)) {
           idxTable.append(keptRows.repartition(col("cell")),
-            summary = stamped(queryName, batchId)))
+            summary = stamped(queryName, batchId))
+          indexed += batchId
+        })
       appended
     }
+  }
 
   /** Summary key carrying a batch's admitted-token deltas per stratum
     * (`en:123|fr:45`) on budget-ingest snapshots. The running totals
@@ -550,11 +568,11 @@ object StreamIngest {
       decodeKey(kv.substring(0, i)) -> kv.substring(i + 1).toLong
     }.toMap
 
-  /** Tokens already admitted per stratum: deltas folded over the
-    * snapshot chain (metadata-only).
+  /** Tokens already admitted per stratum, across every query: deltas
+    * folded over the [[ledger]] (metadata-only).
     */
   def spentTokens(table: LakeTable): Map[String, Long] =
-    table.meta.snapshots.flatMap(_.summary.get(BudgetDelta))
+    ledger(table).flatMap(_.summary.get(BudgetDelta))
       .map(parseDelta)
       .foldLeft(Map.empty[String, Long]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (k, v)) => a + (k -> (a.getOrElse(k, 0L) + v)) }
@@ -578,7 +596,7 @@ object StreamIngest {
       budgetTokens: Long, queryName: String, checkpointDir: String,
       stratumCol: String = "lang", tokensCol: String = "n_tokens")
       : Long =
-    runDoor(stream, Some(kept), queryName, checkpointDir,
+    runDoor(stream, kept, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       val admitted = graft.pipeline.Sampling.tokenBudgetMix(
           batch, budgetTokens, stratumCol = stratumCol,
@@ -610,7 +628,7 @@ object StreamIngest {
     */
   def ingestAvailable(stream: DataFrame, table: LakeTable,
       queryName: String, checkpointDir: String): Long =
-    runDoor(stream, Some(table), queryName, checkpointDir,
+    runDoor(stream, table, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       table.append(batch, summary = stamped(queryName, batchId))
       true
@@ -643,7 +661,7 @@ object StreamIngest {
     */
   def vocabSketchIngestAvailable(stream: DataFrame, sketch: LakeTable,
       k: Int, queryName: String, checkpointDir: String): Long =
-    runDoor(stream, Some(sketch), queryName, checkpointDir,
+    runDoor(stream, sketch, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, seen) =>
       val spark = batch.sparkSession
       import graft.functions.ShingleExpressions.winnowFingerprints
@@ -717,7 +735,7 @@ object StreamIngest {
       depth: Int, width: Int, probes: Seq[String], queryName: String,
       checkpointDir: String): Long = {
     require(probes.nonEmpty, "freqSketchIngest: probe set is empty")
-    runDoor(stream, Some(grid), queryName, checkpointDir,
+    runDoor(stream, grid, queryName, checkpointDir,
         rerunOnReplay = false) { (batch, batchId, _) =>
       val spark = batch.sparkSession
       import graft.functions.ShingleKernel.cmsCell
@@ -797,21 +815,11 @@ object StreamIngest {
         s"refitIvfOnDrift: index at $indexLoc carries no $FitMeanSqKey " +
           "baseline — stamp the fit-time assignment mean when persisting")
     }
-    val prefix = queryName + ":"
-    // toLongOption, not toLong: a LONGER query name sharing this one as
-    // a prefix (the `a` vs `a:v2` hazard [[committedBatches]] documents)
-    // must be skipped, not crash the maintenance job
-    val batchMeans = t.meta.snapshots.flatMap { sn =>
-      for {
-        st <- sn.summary.get(BatchStamp)
-        if st.startsWith(prefix)
-        b <- st.substring(prefix.length).toLongOption
-        m <- sn.summary.get(MeanSqDistKey)
-      } yield (b, m.toDouble)
-    }
+    val batchMeans = ledger(t).filter(_.query == queryName).flatMap(e =>
+      e.summary.get(MeanSqDistKey).map(m => (e.batch, m.toDouble)))
     if (batchMeans.isEmpty)
       return (RefitDecision(refit = false, -1L, fitMean), fitMean)
-    val (lastBatch, lastMean) = batchMeans.maxBy(_._1)
+    val (lastBatch, lastMean) = batchMeans.last
     val covered = t.properties.get(RefitAfterBatchKey)
       .exists(_.toLong >= lastBatch)
     if (covered || lastMean <= driftFactor * fitMean)

@@ -382,6 +382,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamIngest.committedBatches(table, "t:v2") == Set(0L, 1L))
   }
 
+  test("ledger parses each stamp once: by query, batch-ordered, " +
+      "unparseable and unstamped snapshots skipped") {
+    import s.implicits._
+    val base = java.nio.file.Files.createTempDirectory("ledger-test-")
+    val row = Seq(1L).toDF("x")
+    val table = graft.lake.LakeTable.create(s,
+      base.resolve("table").toString, Left(row.schema))
+    for (st <- Seq("a:1", "a:0", "a:v2:0", "a:x"))
+      table.append(row,
+        summary = Map(StreamIngest.BatchStamp -> st, "k" -> st))
+    table.append(row)
+    val ledger = StreamIngest.ledger(table)
+    assert(ledger.filter(_.query == "a").map(e => (e.batch, e.summary("k")))
+      == Seq((0L, "a:0"), (1L, "a:1")))
+    assert(ledger.filter(_.query == "a:v2").map(_.batch) == Seq(0L))
+    assert(ledger.size == 3, s"only the three parseable stamps: $ledger")
+  }
+
   test("streaming upsert: updates stale rows, idempotent under replay") {
     val base = java.nio.file.Files.createTempDirectory("upsert-test-")
     val src = s"$sf/events.parquet"
@@ -797,6 +815,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.lake.LakeTable.forLocation(spark, loc)
       .meta.snapshots.size == snapsBefore,
       "a no-op maintenance run must not commit")
+    // 4) a LONGER query name sharing `edge` as a prefix is another
+    // stream: its drifted stamp must not trigger a re-fit for `edge`
+    graft.pipeline.Similarity.refreshIvf(spark, loc, calm,
+      summary = Map(StreamIngest.BatchStamp -> "edge:v2:1",
+        StreamIngest.NVectorsKey -> n.toString,
+        StreamIngest.MeanSqDistKey -> (mean * 1e6 + 1.0).toString))
+    val (d2, m2) = StreamIngest
+      .refitIvfOnDrift(spark, loc, driftFactor = 2.0,
+        queryName = "edge", nlist = 4)
+    assert(!d2.refit && d2.lastBatch == 0L && d2.lastMean == mean &&
+      m2 == fitMean, s"another query's stamp must not trigger: $d2")
   }
 
   test("vocab sketch door: cumulative sketch equals the one-shot union " +
