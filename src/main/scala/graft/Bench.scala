@@ -435,8 +435,8 @@ object Bench {
     // tables), amortized across passes per the r13-verdict-sanctioned
     // stance — are stamped into the artifact so a grader can see which
     // rows' pass-2 timings exclude those builds without reading code.
-    val exemptCaches =
-      """["seedIvf","annTruth","refitTruth"]"""
+    val exemptCaches = graft.queries.StreamQueries.timedRegionExemptCaches
+      .map(jstr).mkString("[", ",", "]")
     val perQueryLine =
       s"""{"metric":"per_query","methodology":${jstr(Methodology)},"timed_region_exempt_caches":$exemptCaches,"parallelism":$parallelism,"master":${jstr(master)},"host":${jstr(host)},"source":${jstr(source)},"queries":$qs,"batch_samples":$samplesJson,"stream_split":$splitJson,"over_floor":$overFloorJson,"failed":$failedJson,"sf":${jstr(sfDir)}}"""
     // The per-query breakdown also lands in a FILE: a fixed-size tail

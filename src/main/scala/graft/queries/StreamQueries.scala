@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStreams
+import org.apache.spark.sql.types.StructType
+import graft.lake.LakeTable
+import graft.pipeline.Similarity
+import graft.streaming.{EventStreams, StreamIngest}
 
 /** Structured Streaming surfaced through the driver contract: the
   * streaming plans execute to completion against the static event files
@@ -56,10 +59,18 @@ object StreamQueries {
   val streamBatchSecs =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
 
-  /** Drop every ingest SCENARIO cache — the caches whose fill runs the
-    * timed stream — so the next invocation of each ingest row re-runs
-    * its door end-to-end against a fresh temp table. Input-side caches
-    * (wave dirs, sentinel dirs) are deliberately KEPT: they are setup
+  /** The product location of every ingest SCENARIO — a build whose fill
+    * runs the timed stream — keyed by (row, dataset dir). Every
+    * scenario is memoized here and only here ([[scenario]]), so
+    * [[resetScenarioCaches]] cannot miss one.
+    */
+  private val scenarios =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** Drop every ingest scenario, so the next invocation of each ingest
+    * row re-runs its door end-to-end against a fresh temp table.
+    * Input-side caches (wave dirs, sentinel dirs,
+    * [[timedRegionExemptCaches]]) are deliberately KEPT: they are setup
     * the bench's scenario_s split already attributes separately, and
     * re-deriving them would re-time parquet rewrites, not streams.
     * Bench calls this between stream passes: without it, pass 2 of an
@@ -69,13 +80,40 @@ object StreamQueries {
     * non-stream number. Re-fills are safe: each fill creates its own
     * temp base (table + checkpoint), so passes never share state.
     */
-  def resetScenarioCaches(): Unit = {
-    Seq(ingestCache, upsertCache, mviewStreamCache).foreach(_.clear())
-    Seq(dedupIngestCache, decontIngestCache, qgateIngestCache,
-      clsGateIngestCache, curateIngestCache, annIngestCache,
-      annRefitCache, semDedupCache, budgetIngestCache,
-      vocabIngestCache, freqIngestCache).foreach(_.clear())
+  def resetScenarioCaches(): Unit = scenarios.clear()
+
+  /** One ingest scenario being built: its fresh temp base (tables and
+    * checkpoint live under it) and the row whose stream phase it times.
+    */
+  private final class Scenario(val row: String, base: java.nio.file.Path) {
+    def at(part: String): String = base.resolve(part).toString
+
+    /** The door call, timed as the row's stream phase. */
+    def drain(door: => Long): Long = timedStream(row)(door)
+
+    /** [[drain]] for a waves scenario, which must commit both waves. */
+    def drainWaves(door: => Long): Unit = {
+      val batches = drain(door)
+      require(batches == 2, s"expected 2 ingest waves, got $batches")
+    }
   }
+
+  /** Build `row`'s scenario over dataset `d` once per reset: `build`
+    * gets a fresh temp base and returns the product location the row
+    * reads. A build must not start another scenario: it runs inside
+    * `computeIfAbsent`, which forbids a nested update of the same map.
+    */
+  private def scenario(row: String, d: String)(build: Scenario => String)
+      : String =
+    scenarios.computeIfAbsent((row, d), _ => build(new Scenario(row,
+      java.nio.file.Files.createTempDirectory(s"graft-$row-"))))
+
+  /** A file stream over a waves dir ([[buildWavesDir]]), one wave per
+    * trigger.
+    */
+  private def waveStream(s: SparkSession, schema: StructType, dir: String)
+      : DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
 
   private def timedStream[T](name: String)(body: => T): T = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -116,21 +154,29 @@ object StreamQueries {
     }
   }
 
+  /** Row `row`'s timed stream phase: start `df` into a memory sink,
+    * drain it, stop it; then the sink's table.
+    */
+  private def memoryStream(s: SparkSession, d: String, row: String,
+      mode: String, df: Dataset[_]): DataFrame = {
+    val name = s"graft_${row}_${Math.abs(d.hashCode)}"
+    timedStream(row) {
+      val q = df.writeStream.outputMode(mode)
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    s.table(name)
+  }
+
   /** Watermarked hourly tumbling windows, streaming execution; same
     * oracle as the batch `q_events_hourly`.
     */
-  def streamHourly(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_hourly_" + Math.abs(d.hashCode)
+  def streamHourly(s: SparkSession, d: String): DataFrame =
     withStatePartitions(s, 8) {
-      timedStream("stream_hourly_counts") {
-        val q = EventStreams.hourlyCounts(EventStreams.readEvents(s, s"$d/events.parquet"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    }
-    s.table(name).orderBy("hour_bucket", "event_type")
-  }
+      memoryStream(s, d, "stream_hourly_counts", "complete",
+        EventStreams.hourlyCounts(
+          EventStreams.readEvents(s, s"$d/events.parquet")))
+    }.orderBy("hour_bucket", "event_type")
 
   /** Stateful gap sessionization (flatMapGroupsWithState with event-time
     * timeouts). A far-future sentinel event appended to the stream
@@ -162,19 +208,13 @@ object StreamQueries {
 
   def streamSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val name = "graft_stream_sessions_" + Math.abs(d.hashCode)
     val stream = EventStreams.readEvents(s, sessionStreamDir(s, d))
       .select(col("user_id"), col("event_time"), col("value"))
       .as[EventStreams.Event]
     withStatePartitions(s, 8) {
-      timedStream("stream_sessions") {
-        val q = EventStreams.sessionize(stream, gapMs = 600000L)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      memoryStream(s, d, "stream_sessions", "append",
+        EventStreams.sessionize(stream, gapMs = 600000L))
     }
-    s.table(name)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), round(col("sum_value"), 4).as("sum_value"))
@@ -212,21 +252,15 @@ object StreamQueries {
   def streamFunnel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val windowMs = 45L * 86400 * 1000
-    val name = "graft_stream_funnel_" + Math.abs(d.hashCode)
     val stream = EventStreams
       .readEvents(s, funnelStreamDir(s, d, windowMs))
       .select(col("user_id"), col("event_time"), col("event_type"))
       .as[EventStreams.FEvent]
     withStatePartitions(s, 8) {
-      timedStream("stream_funnel") {
-        val q = EventStreams.funnelStream(stream,
-            steps = Seq("view", "click", "purchase"), windowMs = windowMs)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      memoryStream(s, d, "stream_funnel", "append",
+        EventStreams.funnelStream(stream,
+          steps = Seq("view", "click", "purchase"), windowMs = windowMs))
     }
-    s.table(name)
       .filter(col("user_id") >= 0)
       .orderBy("user_id", "step")
   }
@@ -251,25 +285,16 @@ object StreamQueries {
     * exactly once.
     */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_dedup_" + Math.abs(d.hashCode)
     val stream = EventStreams.readEvents(s, dedupStreamDir(d))
       .withWatermark("event_time", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
     withStatePartitions(s, 8) {
-      timedStream("stream_dedup") {
-        val q = stream.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      memoryStream(s, d, "stream_dedup", "append", stream)
     }
-    s.table(name)
       .select(col("event_id"), col("user_id"), col("event_type"),
         round(col("value"), 4).as("value"))
       .orderBy("event_id")
   }
-
-  private val ingestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.lake.LakeTable]()
 
   /** Streaming ingestion into a lake table: `foreachBatch` → one
     * batch-id-stamped append snapshot per micro-batch (exactly-once
@@ -278,27 +303,20 @@ object StreamQueries {
     * drop nor duplicate a row.
     */
   def streamLakeIngest(s: SparkSession, d: String): DataFrame = {
-    val t = ingestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ingest-")
+    val loc = scenario("stream_lake_ingest", d) { sc =>
       val stream = EventStreams.readEvents(s, s"$d/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
-      val table = graft.lake.LakeTable.create(s,
-        base.resolve("table").toString, Left(stream.schema))
-      timedStream("stream_lake_ingest") {
-        graft.streaming.StreamIngest.ingestAvailable(stream, table,
-          "events_ingest", base.resolve("ckpt").toString)
-      }
-      table
-    })
-    t.read()
+      val table = LakeTable.create(s, sc.at("table"), Left(stream.schema))
+      sc.drain(StreamIngest.ingestAvailable(stream, table,
+        "events_ingest", sc.at("ckpt")))
+      table.location
+    }
+    LakeTable.forLocation(s, loc).read()
       .select(col("event_id"), col("user_id"), col("event_type"),
         round(col("value"), 4).as("value"))
       .orderBy("event_id")
   }
-
-  private val upsertCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.lake.LakeTable]()
 
   /** Streaming UPSERT into a lake table: the target is seeded with a
     * STALE copy of half the events (value = -999), then the full event
@@ -308,32 +326,24 @@ object StreamQueries {
     * no row may appear twice (idempotent stamps + in-batch dedup).
     */
   def streamLakeUpsert(s: SparkSession, d: String): DataFrame = {
-    val t = upsertCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-upsert-")
+    val loc = scenario("stream_lake_upsert", d) { sc =>
       val batch = s.read.parquet(s"$d/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
       val stale = batch.filter(col("event_id") % 2 === 0)
         .withColumn("value", lit(-999.0))
-      val table = graft.lake.LakeTable.create(s,
-        base.resolve("table").toString, Right(stale))
+      val table = LakeTable.create(s, sc.at("table"), Right(stale))
       val stream = s.readStream.schema(batch.schema)
         .parquet(EventStreams.streamDir(s"$d/events.parquet", copies = 2))
-      timedStream("stream_lake_upsert") {
-        graft.streaming.StreamIngest.upsertAvailable(stream, table,
-          keys = Seq("event_id"), "events_upsert",
-          base.resolve("ckpt").toString)
-      }
-      table
-    })
-    t.read()
+      sc.drain(StreamIngest.upsertAvailable(stream, table,
+        keys = Seq("event_id"), "events_upsert", sc.at("ckpt")))
+      table.location
+    }
+    LakeTable.forLocation(s, loc).read()
       .select(col("event_id"), col("user_id"), col("event_type"),
         round(col("value"), 4).as("value"))
       .orderBy("event_id")
   }
-
-  private val mviewStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.lake.LakeTable]()
 
   /** Streaming ingest feeding an INCREMENTALLY-maintained materialized
     * aggregate: seed a source lake table with an early event slice,
@@ -346,43 +356,33 @@ object StreamQueries {
     * downstream-MV answer to "don't rescan the table per refresh".
     */
   def streamMview(s: SparkSession, d: String): DataFrame = {
-    val t = mviewStreamCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-smv-")
+    val mvLoc = scenario("stream_mview", d) { sc =>
       val batch = s.read.parquet(s"$d/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       // modulo split: both halves are non-empty at every SF (an
       // id-threshold split left the streamed half empty at sf0.001,
       // where all event ids are < 1000)
-      val table = graft.lake.LakeTable.create(s,
-        base.resolve("table").toString,
+      val table = LakeTable.create(s, sc.at("table"),
         Right(batch.filter(col("event_id") % 5 === 0)))
-      val mvLoc = base.resolve("mv").toString
-      graft.lake.IncrementalMv.create(s, mvLoc, table,
+      graft.lake.IncrementalMv.create(s, sc.at("mv"), table,
         groupCols = Seq("user_id"), sumCols = Seq("value"))
       val stream = EventStreams.readEvents(s, s"$d/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
         .filter(col("event_id") % 5 =!= 0)
-      timedStream("stream_mview") {
-        graft.streaming.StreamIngest.ingestAvailable(stream, table,
-          "events_mv", base.resolve("ckpt").toString)
-      }
-      val mode = graft.lake.IncrementalMv.refresh(s, mvLoc)
+      sc.drain(StreamIngest.ingestAvailable(stream, table,
+        "events_mv", sc.at("ckpt")))
+      val mode = graft.lake.IncrementalMv.refresh(s, sc.at("mv"))
       require(mode == "incremental",
         s"streamed append commits must refresh incrementally, got $mode")
-      table.setProperties(Map("graft.test.mv" -> mvLoc))
-      table
-    })
-    graft.lake.IncrementalMv.read(s, t.properties("graft.test.mv"))
+      sc.at("mv")
+    }
+    graft.lake.IncrementalMv.read(s, mvLoc)
       .select(col("user_id"), col("n_rows").as("n_events"),
         round(col("sum_value"), 4).as("total"))
       .orderBy("user_id")
   }
 
-  private val dedupIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val docWavesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val decontIngestCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val decontWavesCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -402,6 +402,41 @@ object StreamQueries {
         docs.filter(col("doc_id") % 2 === 1)))
     })
 
+  /** The static benchmark set of the decontamination doors: the
+    * distinct hashed 8-grams of the bucket ≥ 90 slice. Unmaterialized:
+    * each scenario checkpoints it inside its own pass, so every pass
+    * still pays for it.
+    */
+  private def benchGrams(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("bucket",
+        graft.pipeline.Sampling.bucketCol(col("doc_id")))
+      .filter(col("bucket") >= 90)
+      .select(explode(graft.functions.ShingleExpressions.hashedShingles(
+        trim(lower(col("text"))), 8)).as("_gram"))
+      .distinct()
+
+  /** The reference classifier of the classifier doors (the
+    * text_nb_classifier model — src0/src1 as the curated reference):
+    * unmaterialized weight table and prior.
+    */
+  private def referenceNb(docs: DataFrame): (DataFrame, DataFrame) =
+    graft.pipeline.TextAnalysis.nbTrain(docs,
+      col("source").isin("src0", "src1"))
+
+  /** Offline threshold calibration: the median rounded score of the
+    * capped mod-10 sample (same estimator shape as pplBuckets'
+    * cutoffs — bounded collect, deterministic).
+    */
+  private def nbThreshold(docs: DataFrame, weights: DataFrame,
+      prior: DataFrame): Double = {
+    val xs = graft.pipeline.TextAnalysis.nbScore(docs, weights, prior)
+      .filter(col("doc_id") % 10 === 0).orderBy("doc_id").limit(1000)
+      .select(col("log_odds")).collect().map(_.getDouble(0))
+      .sortBy(x => -x)
+    xs((xs.length + 1) / 2 - 1)
+  }
+
   /** Benchmark decontamination AT INGEST: the train-side corpus
     * arrives as two micro-batch waves; each batch's hashed 8-grams
     * probe the broadcast benchmark gram set and contaminated docs are
@@ -412,37 +447,20 @@ object StreamQueries {
     * filter itself — no wave replay needed, unlike the dedup door.
     */
   private def decontIngestLoc(s: SparkSession, d: String): String =
-    decontIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-sdecont-")
+    scenario("stream_decontaminate_ingest", d) { sc =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val bench = docs
-        .withColumn("bucket",
-          graft.pipeline.Sampling.bucketCol(col("doc_id")))
-        .filter(col("bucket") >= 90)
-        .select(explode(graft.functions.ShingleExpressions.hashedShingles(
-          trim(lower(col("text"))), 8)).as("_gram"))
-        .distinct()
-        .localCheckpoint(true)
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString, Left(docs.schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(decontWavesDir(s, d))
-      val batches = timedStream("stream_decontaminate_ingest") {
-        graft.streaming.StreamIngest.decontaminateIngestAvailable(
-          stream, bench, keptT, k = 8, "docs_decont_ingest",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
+      val bench = benchGrams(docs).localCheckpoint(true)
+      val keptT = LakeTable.create(s, sc.at("kept"), Left(docs.schema))
+      val stream = waveStream(s, docs.schema, decontWavesDir(s, d))
+      sc.drainWaves(StreamIngest.decontaminateIngestAvailable(
+        stream, bench, keptT, k = 8, "docs_decont_ingest", sc.at("ckpt")))
+      keptT.location
+    }
 
   def streamDecontaminateIngest(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, decontIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, decontIngestLoc(s, d)).read()
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy("doc_id")
-
-  private val qgateIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Rule-gated ingest: the corpus arrives as the same two waves as the
     * dedup door, each micro-batch quality-gated at the door
@@ -452,33 +470,22 @@ object StreamQueries {
     * set, wave-independent.
     */
   private def qgateIngestLoc(s: SparkSession, d: String): String =
-    qgateIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-sqgate-")
+    scenario("stream_quality_gate", d) { sc =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString, Left(docs.schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(docWavesDir(s, d))
-      val batches = timedStream("stream_quality_gate") {
-        graft.streaming.StreamIngest.qualityGateIngestAvailable(
-          stream, keptT, "docs_qgate_ingest",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
+      val keptT = LakeTable.create(s, sc.at("kept"), Left(docs.schema))
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      sc.drainWaves(StreamIngest.qualityGateIngestAvailable(
+        stream, keptT, "docs_qgate_ingest", sc.at("ckpt")))
+      keptT.location
+    }
 
   def streamQualityGate(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, qgateIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, qgateIngestLoc(s, d)).read()
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy("doc_id")
 
-  private val clsGateIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Classifier-gated ingest: the reference classifier is trained ONCE
-    * on the static corpus (the text_nb_classifier model — src0/src1
-    * as the curated reference), its weight table and prior
+    * on the static corpus ([[referenceNb]]), its weight table and prior
     * materialized, then every arriving micro-batch is scored at the
     * door and only reference-like docs land
     * ([[graft.streaming.StreamIngest.classifierGateIngestAvailable]]).
@@ -486,45 +493,28 @@ object StreamQueries {
     * batch classifier's kept set.
     */
   private def clsGateIngestLoc(s: SparkSession, d: String): String =
-    clsGateIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-scgate-")
+    scenario("stream_classifier_gate", d) { sc =>
       val docs = s.read.parquet(s"$d/documents.parquet")
       // materialized: weights are vocabCap-sized, prior is one row —
       // without this each micro-batch would re-aggregate the corpus
-      val (w, p) = graft.pipeline.TextAnalysis.nbTrain(docs,
-        col("source").isin("src0", "src1"))
+      val (w, p) = referenceNb(docs)
       // two independent eager checkpoints — overlap (guide §2.6); the
       // scenario is rebuilt inside the timed region every pass
       val (weights, prior) = graft.SparkEnv.overlap(
         w.localCheckpoint(), p.localCheckpoint())
-      // offline threshold calibration: the median rounded score of the
-      // capped mod-10 sample (same estimator shape as pplBuckets'
-      // cutoffs — bounded collect, deterministic)
-      val xs = graft.pipeline.TextAnalysis.nbScore(docs, weights, prior)
-        .filter(col("doc_id") % 10 === 0).orderBy("doc_id").limit(1000)
-        .select(col("log_odds")).collect().map(_.getDouble(0))
-        .sortBy(x => -x)
-      val thr = xs((xs.length + 1) / 2 - 1)
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString, Left(docs.schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(docWavesDir(s, d))
-      val batches = timedStream("stream_classifier_gate") {
-        graft.streaming.StreamIngest.classifierGateIngestAvailable(
-          stream, weights, prior, thr, keptT, "docs_cls_ingest",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
+      val thr = nbThreshold(docs, weights, prior)
+      val keptT = LakeTable.create(s, sc.at("kept"), Left(docs.schema))
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      sc.drainWaves(StreamIngest.classifierGateIngestAvailable(
+        stream, weights, prior, thr, keptT, "docs_cls_ingest",
+        sc.at("ckpt")))
+      keptT.location
+    }
 
   def streamClassifierGate(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, clsGateIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, clsGateIngestLoc(s, d)).read()
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy("doc_id")
-
-  private val curateIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The composed ingest funnel: benchmark decontamination + rule gate
     * + calibrated classifier (static artifacts, built once here) in
@@ -532,47 +522,27 @@ object StreamQueries {
     * ([[graft.streaming.StreamIngest.curateIngestAvailable]]).
     */
   private def curateIngestLoc(s: SparkSession, d: String): String =
-    curateIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-scurate-")
+    scenario("stream_curate_ingest", d) { sc =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val benchLazy = docs
-        .withColumn("bucket",
-          graft.pipeline.Sampling.bucketCol(col("doc_id")))
-        .filter(col("bucket") >= 90)
-        .select(explode(graft.functions.ShingleExpressions.hashedShingles(
-          trim(lower(col("text"))), 8)).as("_gram"))
-        .distinct()
-      val (w, p) = graft.pipeline.TextAnalysis.nbTrain(docs,
-        col("source").isin("src0", "src1"))
+      val (w, p) = referenceNb(docs)
       // three independent eager materializations (bench gram set,
       // classifier weights, prior) — overlap all three (guide §2.6);
       // this scenario is rebuilt inside the timed region every pass
       val (bench, (weights, prior)) = graft.SparkEnv.overlap(
-        benchLazy.localCheckpoint(true),
+        benchGrams(docs).localCheckpoint(true),
         graft.SparkEnv.overlap(w.localCheckpoint(), p.localCheckpoint()))
-      val xs = graft.pipeline.TextAnalysis.nbScore(docs, weights, prior)
-        .filter(col("doc_id") % 10 === 0).orderBy("doc_id").limit(1000)
-        .select(col("log_odds")).collect().map(_.getDouble(0))
-        .sortBy(x => -x)
-      val thr = xs((xs.length + 1) / 2 - 1)
-      val idxLoc = base.resolve("index").toString
-      graft.pipeline.IncrementalDedup.build(docs.limit(0), idxLoc)
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString, Left(docs.schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(docWavesDir(s, d))
-      val batches = timedStream("stream_curate_ingest") {
-        graft.streaming.StreamIngest.curateIngestAvailable(
-          stream, bench, weights, prior, thr, benchK = 8, idxLoc,
-          keptT, dedupThreshold = 0.5, "docs_curate_ingest",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
+      val thr = nbThreshold(docs, weights, prior)
+      graft.pipeline.IncrementalDedup.build(docs.limit(0), sc.at("index"))
+      val keptT = LakeTable.create(s, sc.at("kept"), Left(docs.schema))
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      sc.drainWaves(StreamIngest.curateIngestAvailable(
+        stream, bench, weights, prior, thr, benchK = 8, sc.at("index"),
+        keptT, dedupThreshold = 0.5, "docs_curate_ingest", sc.at("ckpt")))
+      keptT.location
+    }
 
   def streamCurateIngest(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, curateIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, curateIngestLoc(s, d)).read()
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy("doc_id")
 
@@ -592,9 +562,8 @@ object StreamQueries {
     */
   def streamCurateReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.streaming.StreamIngest.{ledger, AdmittedKey, DocsInKey,
-      StaticsClearedKey}
-    val t = graft.lake.LakeTable.forLocation(s, curateIngestLoc(s, d))
+    import StreamIngest.{ledger, AdmittedKey, DocsInKey, StaticsClearedKey}
+    val t = LakeTable.forLocation(s, curateIngestLoc(s, d))
     // metric keys via Option: a pre-metrics snapshot (an older table
     // read by this query) yields no report row instead of throwing
     val rows = ledger(t).filter(_.query == "docs_curate_ingest")
@@ -637,27 +606,19 @@ object StreamQueries {
     * hash-checked.
     */
   private def dedupIngestLoc(s: SparkSession, d: String): String =
-    dedupIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-sdedup-")
+    scenario("stream_dedup_ingest", d) { sc =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val waves = docWavesDir(s, d)
-      val idxLoc = base.resolve("index").toString
-      graft.pipeline.IncrementalDedup.build(docs.limit(0), idxLoc)
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString, Left(docs.schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(waves)
-      val batches = timedStream("stream_dedup_ingest") {
-        graft.streaming.StreamIngest.dedupIngestAvailable(
-          stream, idxLoc, keptT, threshold = 0.5, "docs_dedup_ingest",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      graft.pipeline.IncrementalDedup.build(docs.limit(0), sc.at("index"))
+      val keptT = LakeTable.create(s, sc.at("kept"), Left(docs.schema))
+      sc.drainWaves(StreamIngest.dedupIngestAvailable(
+        stream, sc.at("index"), keptT, threshold = 0.5,
+        "docs_dedup_ingest", sc.at("ckpt")))
+      keptT.location
+    }
 
   def streamDedupIngest(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, dedupIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, dedupIngestLoc(s, d)).read()
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy("doc_id")
 
@@ -666,7 +627,7 @@ object StreamQueries {
     * (`pipeline_pretrain` composes it with gate → budget → pack).
     */
   def dedupIngestKept(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, dedupIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, dedupIngestLoc(s, d)).read()
 
   /** Build a file-stream dir of ordered arrival waves: each frame lands
     * as one parquet file whose mtime pins its trigger order (the file
@@ -694,14 +655,29 @@ object StreamQueries {
     waves.toString
   }
 
-  private val annIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val vecWavesCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val seedIvfCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Double)]()
   private val refitWavesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+
+  /** The names of the input caches that deliberately SURVIVE
+    * [[resetScenarioCaches]] although a timed row reads them —
+    * deterministic oracle INPUTS ([[seedIvf]], [[annTruthCache]],
+    * [[refitTruth]]) amortized across passes. Bench stamps this list
+    * into its artifact so a reader sees which rows' pass-2 timings
+    * exclude those builds.
+    */
+  val timedRegionExemptCaches: Seq[String] =
+    Seq("seedIvf", "annTruth", "refitTruth")
+
+  /** The embeddings as the ANN doors' vector rows: (vec_id, embedding
+    * as array<double>).
+    */
+  private def doubleVecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
 
   /** The shared SEED index (even-id half, deterministic fit, nlist=16)
     * persisted ONCE per JVM per dataset dir, plus its fit-time mean
@@ -720,17 +696,14 @@ object StreamQueries {
     */
   private def seedIvf(s: SparkSession, d: String): (String, Double) =
     seedIvfCache.computeIfAbsent(d, _ => {
-      val seed = s.read.parquet(s"$d/embeddings.parquet")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
+      val seed = doubleVecs(s.read.parquet(s"$d/embeddings.parquet"))
         .filter(col("vec_id") % 2 === 0)
-      val idx = graft.pipeline.Similarity.buildIvfDeterministic(
+      val idx = Similarity.buildIvfDeterministic(
         seed, nlist = 16, maxTrainRows = 4096)
       val loc = java.nio.file.Files.createTempDirectory("graft-seedivf-")
         .resolve("index").toString
-      graft.pipeline.Similarity.persistIvf(idx, loc)
-      val (_, fitMean) = graft.pipeline.Similarity
-        .assignmentStats(seed, idx.centroids)
+      Similarity.persistIvf(idx, loc)
+      val (_, fitMean) = Similarity.assignmentStats(seed, idx.centroids)
       (loc, fitMean)
     })
 
@@ -779,29 +752,19 @@ object StreamQueries {
     * index table), and probe recall@10 ≥ 50 % against exact brute force
     * — the same deterministic-bar shape as `sim_topk_ivf_recall`, now
     * over an index whose second half never saw the quantizer fit.
+    * The scenario is shared by the ingest row and the drift report row.
     */
-  /** The ANN ingest scenario (seed index build + two streamed waves),
-    * cached per dataset dir — shared by the ingest row and the drift
-    * report row.
-    */
-  private def annIngestLoc(s: SparkSession, d: String): String = {
-    val raw = s.read.parquet(s"$d/embeddings.parquet")
-    annIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-sann-")
-      val idxLoc = base.resolve("index").toString
+  private def annIngestLoc(s: SparkSession, d: String): String =
+    scenario("stream_ann_ingest", d) { sc =>
+      val raw = s.read.parquet(s"$d/embeddings.parquet")
+      val idxLoc = sc.at("index")
       copyTree(seedIvf(s, d)._1, idxLoc)
-      val stream = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1").parquet(vecWavesDir(s, d))
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val batches = timedStream("stream_ann_ingest") {
-        graft.streaming.StreamIngest.annIngestAvailable(
-          stream, idxLoc, "vec_ann_ingest", base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
+      val stream = doubleVecs(waveStream(s, raw.schema, vecWavesDir(s, d)))
+      sc.drainWaves(StreamIngest.annIngestAvailable(
+        stream, idxLoc, "vec_ann_ingest", sc.at("ckpt")))
       // exactly-once: index ids = source ids as a MULTISET (except is
       // set-based; the count equality catches duplicates)
-      val t = graft.pipeline.Similarity.loadIvf(s, idxLoc).table.get
+      val t = Similarity.loadIvf(s, idxLoc).table.get
       val idxIds = t.read().select("vec_id")
       val srcIds = raw.select("vec_id")
       // four independent read-only actions (two counts, two excepts) —
@@ -814,8 +777,7 @@ object StreamQueries {
       val exactlyOnce = nIdx == nSrc && abEmpty && baEmpty
       t.setProperties(Map("graft.test.ids_exact" -> exactlyOnce.toString))
       idxLoc
-    })
-  }
+    }
 
   /** Exact-recall TRUTH for the ANN ingest certificate (brute-force
     * top-10 of the first five query vectors over the full static
@@ -828,18 +790,16 @@ object StreamQueries {
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   def streamAnnIngest(s: SparkSession, d: String): DataFrame = {
-    val raw = s.read.parquet(s"$d/embeddings.parquet")
-    val emb = raw.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("embedding"))
+    val emb = doubleVecs(s.read.parquet(s"$d/embeddings.parquet"))
     val loc = annIngestLoc(s, d)
-    val idx = graft.pipeline.Similarity.loadIvf(s, loc)
+    val idx = Similarity.loadIvf(s, loc)
     val queries = emb.filter(col("vec_id") < 5)
     val exact = annTruthCache.computeIfAbsent(d, _ =>
-      graft.pipeline.Similarity
+      Similarity
         .bruteForceTopK(emb, queries, k = 10)
         .select("query_id", "neighbor")
         .localCheckpoint(true))
-    val approx = graft.pipeline.Similarity
+    val approx = Similarity
       .ivfTopK(idx, queries, k = 10, nprobe = 4)
       .select("query_id", "neighbor")
     val hits = exact.join(approx, Seq("query_id", "neighbor"))
@@ -873,9 +833,8 @@ object StreamQueries {
   def streamAnnReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val loc = annIngestLoc(s, d)
-    import graft.streaming.StreamIngest.{ledger, MeanSqDistKey,
-      NVectorsKey}
-    val t = graft.pipeline.Similarity.loadIvf(s, loc).table.get
+    import StreamIngest.{ledger, MeanSqDistKey, NVectorsKey}
+    val t = Similarity.loadIvf(s, loc).table.get
     // metric keys via Option: a pre-metrics snapshot (an older index
     // read by this query) yields no report row instead of throwing
     val rows = ledger(t).filter(_.query == "vec_ann_ingest").flatMap { e =>
@@ -888,8 +847,76 @@ object StreamQueries {
       .orderBy("batch_id")
   }
 
-  private val annRefitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The drift id-space base for the refit scenario: 30 M at every
+    * standard SF (matching the oracle's literal `vec_id + 30000000`),
+    * derived from the observed max id so a RE-KEYED scale fixture
+    * (ScaleProbe offsets ids by k·100 M) keeps a correct drifted-vs-
+    * seed discriminator instead of sweeping rekeyed seed vectors into
+    * the "drifted" population.
+    */
+  private def refitDriftBase(s: SparkSession, d: String): Long = {
+    val maxId = s.read.parquet(s"$d/embeddings.parquet")
+      .agg(max(col("vec_id").cast("long"))).head().getLong(0)
+    ((maxId / 30000000L) + 1L) * 30000000L
+  }
+
+  /** One refit drift wave: `src` re-keyed past `driftBase`, every
+    * coordinate scaled ×5 and translated by `off`.
+    */
+  private def shifted(src: DataFrame, driftBase: Long, off: Double)
+      : DataFrame =
+    src.select((col("vec_id") + lit(driftBase)).as("vec_id"),
+      transform(col("embedding"), x => x * lit(5.0) + lit(off))
+        .as("embedding"))
+
+  /** The refit scenario's two TRANSLATED drift waves plus their drift
+    * id-space base (input-side setup, cached across passes like
+    * [[vecWavesDir]] and pre-built by [[warmupDirs]] so pass 1 times
+    * neither the parquet writes nor the base's max-id scan).
+    *
+    * Drift = scale ×5 + translate: WIDE (5× the fitted spread, so a
+    * competent re-fit must spend many cells on it — a tight translated
+    * blob would legitimately refit into one cell and leave nothing for
+    * the probe-cost certificate to show) and FAR (+3 then +4 per
+    * coordinate — the stamped mean jumps ~3 orders of magnitude over
+    * the 2× trigger).
+    */
+  private def refitWavesDir(s: SparkSession, d: String): (String, Long) =
+    refitWavesCache.computeIfAbsent(d, _ => {
+      val emb = doubleVecs(s.read.parquet(s"$d/embeddings.parquet"))
+      val driftBase = refitDriftBase(s, d)
+      (buildWavesDir("graft-refitw-", Seq(
+        shifted(emb.filter(col("vec_id") % 4 === 1), driftBase, 3.0),
+        shifted(emb.filter(col("vec_id") % 4 === 3), driftBase, 4.0))),
+        driftBase)
+    })
+
+  /** The refit certificate's BRUTE-FORCE TRUTH (exact top-10 of the
+    * drifted queries over seed ∪ both drift waves) plus the collected
+    * query vectors, cached per dataset dir like [[seedIvf]] — oracle
+    * INPUTS, not the operator under test: every scenario pass ingests
+    * the identical deterministic corpus, so its truth table is
+    * byte-identical and recomputing it per pass timed the CERTIFICATE,
+    * not the refit door (the same argument that hoisted the seed index
+    * build — production amortizes ground-truth eval sets across runs).
+    * Deliberately NOT in [[resetScenarioCaches]].
+    */
+  private val refitTruthCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (DataFrame, Long, Array[Array[Double]])]()
+
+  private def refitTruth(s: SparkSession, d: String,
+      corpus: => DataFrame, queries: DataFrame)
+      : (DataFrame, Long, Array[Array[Double]]) =
+    refitTruthCache.computeIfAbsent(d, _ => {
+      val exact = Similarity
+        .bruteForceTopK(corpus, queries, k = 10)
+        .select(col("query_id"), col("neighbor"))
+        .localCheckpoint(true)
+      // the queries ride driver-side probe folds — ≤10 rows by the
+      // id-cut contract
+      val qLocal = queries.collect().map(_.getSeq[Double](1).toArray)
+      (exact, exact.count(), qLocal)
+    })
 
   /** The re-fit-on-drift loop END-TO-END, on a PLANTED drifted
     * distribution: the even-id half seeds a deterministic IVF (fit
@@ -913,113 +940,34 @@ object StreamQueries {
     * pin idempotency (the covered-batch stamp makes it a no-op). All
     * drift arithmetic is deterministic doubles — no randomness.
     */
-  /** The drift id-space base for the refit scenario: 30 M at every
-    * standard SF (matching the oracle's literal `vec_id + 30000000`),
-    * derived from the observed max id so a RE-KEYED scale fixture
-    * (ScaleProbe offsets ids by k·100 M) keeps a correct drifted-vs-
-    * seed discriminator instead of sweeping rekeyed seed vectors into
-    * the "drifted" population.
-    */
-  private def refitDriftBase(s: SparkSession, d: String): Long = {
-    val maxId = s.read.parquet(s"$d/embeddings.parquet")
-      .agg(max(col("vec_id").cast("long"))).head().getLong(0)
-    ((maxId / 30000000L) + 1L) * 30000000L
-  }
-
-  /** The refit scenario's two TRANSLATED drift waves (input-side
-    * setup, cached across passes like [[vecWavesDir]] and pre-built by
-    * [[warmupDirs]] so pass 1 doesn't time the parquet writes).
-    *
-    * Drift = scale ×5 + translate: WIDE (5× the fitted spread, so a
-    * competent re-fit must spend many cells on it — a tight translated
-    * blob would legitimately refit into one cell and leave nothing for
-    * the probe-cost certificate to show) and FAR (+3 then +4 per
-    * coordinate — the stamped mean jumps ~3 orders of magnitude over
-    * the 2× trigger).
-    */
-  private def refitWavesDir(s: SparkSession, d: String): String =
-    refitWavesCache.computeIfAbsent(d, _ => {
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val driftBase = refitDriftBase(s, d)
-      def shifted(src: org.apache.spark.sql.DataFrame, off: Double) =
-        src.select((col("vec_id") + lit(driftBase)).as("vec_id"),
-          transform(col("embedding"), x => x * lit(5.0) + lit(off))
-            .as("embedding"))
-      buildWavesDir("graft-refitw-", Seq(
-        shifted(emb.filter(col("vec_id") % 4 === 1), 3.0),
-        shifted(emb.filter(col("vec_id") % 4 === 3), 4.0)))
-    })
-
-  /** The refit certificate's BRUTE-FORCE TRUTH (exact top-10 of the
-    * drifted queries over seed ∪ both drift waves) plus the collected
-    * query vectors, cached per dataset dir like [[seedIvf]] — oracle
-    * INPUTS, not the operator under test: every scenario pass ingests
-    * the identical deterministic corpus, so its truth table is
-    * byte-identical and recomputing it per pass timed the CERTIFICATE,
-    * not the refit door (the same argument that hoisted the seed index
-    * build — production amortizes ground-truth eval sets across runs).
-    * Deliberately NOT in [[resetScenarioCaches]].
-    */
-  private val refitTruthCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Long, Array[Array[Double]])]()
-
-  private def refitTruth(s: SparkSession, d: String,
-      corpus: => DataFrame, queries: DataFrame)
-      : (DataFrame, Long, Array[Array[Double]]) =
-    refitTruthCache.computeIfAbsent(d, _ => {
-      val exact = graft.pipeline.Similarity
-        .bruteForceTopK(corpus, queries, k = 10)
-        .select(col("query_id"), col("neighbor"))
-        .localCheckpoint(true)
-      // the queries ride driver-side probe folds — ≤10 rows by the
-      // id-cut contract
-      val qLocal = queries.collect().map(_.getSeq[Double](1).toArray)
-      (exact, exact.count(), qLocal)
-    })
-
   private def annRefitLoc(s: SparkSession, d: String): String =
-    annRefitCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-srefit-")
-      val idxLoc = base.resolve("index").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
+    scenario("stream_ann_refit", d) { sc =>
+      val idxLoc = sc.at("index")
+      val emb = doubleVecs(s.read.parquet(s"$d/embeddings.parquet"))
       // same shared seed index as the ingest scenario ([[seedIvf]]):
       // built+persisted once per JVM, byte-copied here so this pass's
       // re-fit mutates its own files
       val (seedLoc, fitMean) = seedIvf(s, d)
       copyTree(seedLoc, idxLoc)
-      graft.lake.LakeTable.forLocation(s, idxLoc).setProperties(Map(
-        graft.streaming.StreamIngest.FitMeanSqKey -> fitMean.toString))
-      val driftBase = refitDriftBase(s, d)
-      def shifted(src: org.apache.spark.sql.DataFrame, off: Double) =
-        src.select((col("vec_id") + lit(driftBase)).as("vec_id"),
-          transform(col("embedding"), x => x * lit(5.0) + lit(off))
-            .as("embedding"))
-      val w1 = shifted(emb.filter(col("vec_id") % 4 === 1), 3.0)
-      val wavesDir = refitWavesDir(s, d)
-      val stream = s.readStream.schema(w1.schema)
-        .option("maxFilesPerTrigger", "1").parquet(wavesDir)
-      val batches = timedStream("stream_ann_refit") {
-        graft.streaming.StreamIngest.annIngestAvailable(
-          stream, idxLoc, "vec_ann_refit",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 drift waves, got $batches")
+      LakeTable.forLocation(s, idxLoc).setProperties(Map(
+        StreamIngest.FitMeanSqKey -> fitMean.toString))
+      val (wavesDir, driftBase) = refitWavesDir(s, d)
+      val w1 = shifted(emb.filter(col("vec_id") % 4 === 1), driftBase, 3.0)
+      val stream = waveStream(s, w1.schema, wavesDir)
+      sc.drainWaves(StreamIngest.annIngestAvailable(
+        stream, idxLoc, "vec_ann_refit", sc.at("ckpt")))
       // certificate truth inputs ([[refitTruth]]): brute-force top-10
       // over the table's contents (which the re-fit re-partitions but
       // never changes) — computed once per JVM per dataset dir; every
       // pass's ingested corpus is deterministic-identical
       val queries = w1.filter(col("vec_id") < lit(driftBase + 40L))
       val (exact, nExact, qLocal) = refitTruth(s, d,
-        graft.pipeline.Similarity.loadIvf(s, idxLoc)
+        Similarity.loadIvf(s, idxLoc)
           .table.get.read().select(col("vec_id"), col("embedding"))
           .localCheckpoint(true),
         queries)
-      def recall(index: graft.pipeline.Similarity.IvfIndex): Double = {
-        val approx = graft.pipeline.Similarity
+      def recall(index: Similarity.IvfIndex): Double = {
+        val approx = Similarity
           .ivfTopK(index, queries, k = 10, nprobe = 4)
           .select(col("query_id"), col("neighbor"))
         exact.join(approx, Seq("query_id", "neighbor")).count()
@@ -1032,7 +980,7 @@ object StreamQueries {
       // ~all of it — the degeneration the re-fit exists to undo.
       // Integer-exact: one division of summed counts (never an average
       // of per-query doubles), so the ANSI replay matches bit-for-bit.
-      def scanFrac(index: graft.pipeline.Similarity.IvfIndex): Double = {
+      def scanFrac(index: Similarity.IvfIndex): Double = {
         val drifted = index.assignments
           .filter(col("vec_id") >= lit(driftBase))
           .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
@@ -1051,19 +999,19 @@ object StreamQueries {
         }.sum
         scanned.toDouble / (qLocal.length.toLong * total)
       }
-      val idxPre = graft.pipeline.Similarity.loadIvf(s, idxLoc)
+      val idxPre = Similarity.loadIvf(s, idxLoc)
       // recall and scanFrac are independent read-only certificates over
       // the same frozen index — overlap each pre/post pair (guide §2.6)
       val (recallPre, scanPre) = graft.SparkEnv.overlap(
         recall(idxPre), scanFrac(idxPre))
-      val (dec, postMean) = graft.streaming.StreamIngest.refitIvfOnDrift(
+      val (dec, postMean) = StreamIngest.refitIvfOnDrift(
         s, idxLoc, "vec_ann_refit", driftFactor = 2.0, nlist = 16)
-      val idxPost = graft.pipeline.Similarity.loadIvf(s, idxLoc)
+      val idxPost = Similarity.loadIvf(s, idxLoc)
       val (recallPost, scanPost) = graft.SparkEnv.overlap(
         recall(idxPost), scanFrac(idxPost))
-      val (dec2, _) = graft.streaming.StreamIngest.refitIvfOnDrift(
+      val (dec2, _) = StreamIngest.refitIvfOnDrift(
         s, idxLoc, "vec_ann_refit", driftFactor = 2.0, nlist = 16)
-      graft.lake.LakeTable.forLocation(s, idxLoc).setProperties(Map(
+      LakeTable.forLocation(s, idxLoc).setProperties(Map(
         "graft.test.refit_triggered" -> dec.refit.toString,
         "graft.test.pre_mean_sq" -> dec.lastMean.toString,
         "graft.test.fit_mean_sq" -> fitMean.toString,
@@ -1074,7 +1022,7 @@ object StreamQueries {
         "graft.test.scan_frac_post" -> scanPost.toString,
         "graft.test.refit_idempotent" -> (!dec2.refit).toString))
       idxLoc
-    })
+    }
 
   /** The drift-maintenance certificate row (see [[annRefitLoc]]): one
     * row of deterministic scalars — the trigger fired; the re-fit cut
@@ -1103,7 +1051,7 @@ object StreamQueries {
     */
   def streamAnnRefit(s: SparkSession, d: String): DataFrame = {
     val loc = annRefitLoc(s, d)
-    val t = graft.lake.LakeTable.forLocation(s, loc)
+    val t = LakeTable.forLocation(s, loc)
     def p(k: String) = t.properties("graft.test." + k)
     s.range(1).select(
       lit(p("refit_triggered").toBoolean).as("refit_triggered"),
@@ -1119,8 +1067,6 @@ object StreamQueries {
       lit(p("refit_idempotent").toBoolean).as("refit_idempotent"))
   }
 
-  private val semDedupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val semWavesCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -1170,41 +1116,26 @@ object StreamQueries {
     * index-state round-trip are all hash-checked.
     */
   def streamSemanticDedup(s: SparkSession, d: String): DataFrame = {
-    val loc = semDedupCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-semdedup-")
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val idxLoc = base.resolve("index").toString
-      graft.pipeline.Similarity.persistIvf(
-        graft.pipeline.Similarity.buildIvfDeterministic(
-          emb.filter(col("vec_id") % 2 === 0), nlist = 16, iters = 2),
-        idxLoc)
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString,
-        Left(graft.pipeline.Similarity.loadIvf(s, idxLoc)
-          .table.get.read().schema))
-      val waveSchema = s.read.parquet(s"$d/embeddings.parquet")
-        .select("vec_id", "embedding").schema
-      val stream = s.readStream.schema(waveSchema)
-        .option("maxFilesPerTrigger", "1").parquet(semWavesDir(s, d))
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val batches = timedStream("stream_semantic_dedup") {
-        graft.streaming.StreamIngest.semanticDedupIngestAvailable(
-          stream, idxLoc, keptT, cosineThreshold = 0.98,
-          "vec_sem_dedup", base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
-    graft.lake.LakeTable.forLocation(s, loc).read()
+    val loc = scenario("stream_semantic_dedup", d) { sc =>
+      val raw = s.read.parquet(s"$d/embeddings.parquet")
+        .select(col("vec_id"), col("embedding"))
+      val idxLoc = sc.at("index")
+      Similarity.persistIvf(Similarity.buildIvfDeterministic(
+        doubleVecs(raw).filter(col("vec_id") % 2 === 0),
+        nlist = 16, iters = 2), idxLoc)
+      val keptT = LakeTable.create(s, sc.at("kept"),
+        Left(Similarity.loadIvf(s, idxLoc).table.get.read().schema))
+      val stream =
+        doubleVecs(waveStream(s, raw.schema, semWavesDir(s, d)))
+      sc.drainWaves(StreamIngest.semanticDedupIngestAvailable(
+        stream, idxLoc, keptT, cosineThreshold = 0.98,
+        "vec_sem_dedup", sc.at("ckpt")))
+      keptT.location
+    }
+    LakeTable.forLocation(s, loc).read()
       .select(col("vec_id"), col("cell"))
       .orderBy("vec_id")
   }
-
-  private val budgetIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Token-budget admission ACROSS micro-batches: the document waves
     * stream through a scoring select into
@@ -1216,7 +1147,7 @@ object StreamQueries {
     * tokens, per lang.
     */
   def streamTokenBudget(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, budgetIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, budgetIngestLoc(s, d)).read()
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         col("quality_score"))
       .orderBy("doc_id")
@@ -1229,27 +1160,21 @@ object StreamQueries {
   private val BudgetScenarioTokens = 5000L
 
   private def budgetIngestLoc(s: SparkSession, d: String): String =
-    budgetIngestCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-sbudget-")
+    scenario("stream_token_budget", d) { sc =>
       def score(df: DataFrame): DataFrame =
         graft.pipeline.TextAnalysis.qualityScore(df)
           .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")))
           .select(col("doc_id"), col("lang"), col("n_tokens"),
             col("quality_score"))
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val keptT = graft.lake.LakeTable.create(s,
-        base.resolve("kept").toString, Left(score(docs).schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(docWavesDir(s, d))
-      val batches = timedStream("stream_token_budget") {
-        graft.streaming.StreamIngest.budgetIngestAvailable(
-          score(stream), keptT, budgetTokens = BudgetScenarioTokens,
-          "docs_budget",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("kept").toString
-    })
+      val keptT = LakeTable.create(s, sc.at("kept"),
+        Left(score(docs).schema))
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      sc.drainWaves(StreamIngest.budgetIngestAvailable(
+        score(stream), keptT, budgetTokens = BudgetScenarioTokens,
+        "docs_budget", sc.at("ckpt")))
+      keptT.location
+    }
 
   /** The cross-batch token-budget LEDGER read back from the kept
     * table's commit summaries — one row per (batch, stratum) admitted
@@ -1269,8 +1194,8 @@ object StreamQueries {
     */
   def streamBudgetReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.streaming.StreamIngest.{ledger, parseDelta, BudgetDelta}
-    val t = graft.lake.LakeTable.forLocation(s, budgetIngestLoc(s, d))
+    import StreamIngest.{ledger, parseDelta, BudgetDelta}
+    val t = LakeTable.forLocation(s, budgetIngestLoc(s, d))
     val rows = ledger(t).filter(_.query == "docs_budget").flatMap { e =>
       e.summary.get(BudgetDelta).toSeq.flatMap(dl =>
         parseDelta(dl).toSeq.map { case (k, v) => (e.batch, k, v) })
@@ -1286,9 +1211,6 @@ object StreamQueries {
       .orderBy("batch_id", "lang")
   }
 
-  private val vocabIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Vocabulary-growth scenario: the documents corpus arrives as the
     * shared two-wave file stream (even doc ids, then odd) and each
     * micro-batch's KMV gram sketch merges into the persisted corpus
@@ -1296,23 +1218,16 @@ object StreamQueries {
     * table location is the scenario product; both vocab rows read it.
     */
   private def vocabIngestLoc(s: SparkSession, d: String): String =
-    vocabIngestCache.computeIfAbsent(d, _ => {
+    scenario("stream_vocab_growth", d) { sc =>
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-svocab-")
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val skT = graft.lake.LakeTable.create(s,
-        base.resolve("sketch").toString,
+      val skT = LakeTable.create(s, sc.at("sketch"),
         Left(Seq.empty[(Long, Long)].toDF("batch_id", "h").schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(docWavesDir(s, d))
-      val batches = timedStream("stream_vocab_growth") {
-        graft.streaming.StreamIngest.vocabSketchIngestAvailable(
-          stream, skT, k = 256, "docs_vocab",
-          base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("sketch").toString
-    })
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      sc.drainWaves(StreamIngest.vocabSketchIngestAvailable(
+        stream, skT, k = 256, "docs_vocab", sc.at("ckpt")))
+      skT.location
+    }
 
   /** The append-only cumulative sketch table itself: batch 0's rows are
     * the KMV sketch of the first wave, batch 1's the sketch of BOTH
@@ -1322,7 +1237,7 @@ object StreamQueries {
     * order directly.
     */
   def streamVocabGrowth(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, vocabIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, vocabIngestLoc(s, d)).read()
       .orderBy("batch_id", "h")
 
   /** The vocabulary-saturation LEDGER read back from the sketch
@@ -1338,8 +1253,8 @@ object StreamQueries {
     */
   def streamVocabReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.streaming.StreamIngest.{ledger, VocabEstKey}
-    val t = graft.lake.LakeTable.forLocation(s, vocabIngestLoc(s, d))
+    import StreamIngest.{ledger, VocabEstKey}
+    val t = LakeTable.forLocation(s, vocabIngestLoc(s, d))
     val rows = ledger(t).filter(_.query == "docs_vocab").flatMap { e =>
       e.summary.get(VocabEstKey).map { v =>
         val parts = v.split(":")
@@ -1350,9 +1265,6 @@ object StreamQueries {
       .orderBy("batch_id")
   }
 
-  private val freqIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Frequency-monitor scenario: the shared two-wave document stream
     * through [[StreamIngest.freqSketchIngestAvailable]] — each
     * micro-batch's 4×1024 count-min grid appends to the grid table
@@ -1362,29 +1274,23 @@ object StreamQueries {
     * the scenario product; both freq rows read it.
     */
   private def freqIngestLoc(s: SparkSession, d: String): String =
-    freqIngestCache.computeIfAbsent(d, _ => {
+    scenario("stream_freq_sketch", d) { sc =>
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-sfreq-")
       val docs = s.read.parquet(s"$d/documents.parquet")
       val probes = docs.select(
           explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .groupBy("w").count()
         .orderBy(col("count").desc, col("w")).limit(5)
         .collect().map(_.getString(0)).toSeq
-      val gridT = graft.lake.LakeTable.create(s,
-        base.resolve("grid").toString,
+      val gridT = LakeTable.create(s, sc.at("grid"),
         Left(Seq.empty[(Long, Long, Long)]
           .toDF("batch_id", "cell", "cnt").schema))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(docWavesDir(s, d))
-      val batches = timedStream("stream_freq_sketch") {
-        graft.streaming.StreamIngest.freqSketchIngestAvailable(
-          stream, gridT, depth = 4, width = 1024, probes,
-          "docs_freq", base.resolve("ckpt").toString)
-      }
-      require(batches == 2, s"expected 2 ingest waves, got $batches")
-      base.resolve("grid").toString
-    })
+      val stream = waveStream(s, docs.schema, docWavesDir(s, d))
+      sc.drainWaves(StreamIngest.freqSketchIngestAvailable(
+        stream, gridT, depth = 4, width = 1024, probes,
+        "docs_freq", sc.at("ckpt")))
+      gridT.location
+    }
 
   /** The append-only per-batch grid table: batch 0's rows are the
     * count-min grid of the first wave, batch 1's of the second — the
@@ -1393,7 +1299,7 @@ object StreamQueries {
     * each wave's grid directly.
     */
   def streamFreqSketch(s: SparkSession, d: String): DataFrame =
-    graft.lake.LakeTable.forLocation(s, freqIngestLoc(s, d)).read()
+    LakeTable.forLocation(s, freqIngestLoc(s, d)).read()
       .orderBy("batch_id", "cell")
 
   /** The boilerplate-mass LEDGER read back from the grid table's
@@ -1408,8 +1314,8 @@ object StreamQueries {
     */
   def streamFreqReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.streaming.StreamIngest.{ledger, FreqMassKey}
-    val t = graft.lake.LakeTable.forLocation(s, freqIngestLoc(s, d))
+    import StreamIngest.{ledger, FreqMassKey}
+    val t = LakeTable.forLocation(s, freqIngestLoc(s, d))
     val rows = ledger(t).filter(_.query == "docs_freq").flatMap { e =>
       e.summary.get(FreqMassKey).map { v =>
         val parts = v.split(":")
@@ -1427,20 +1333,15 @@ object StreamQueries {
     * shuffling). The standard "attach dimensions on ingest" shape.
     */
   def streamEnrich(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_enrich_" + Math.abs(d.hashCode)
     val dims = broadcast(s.read.parquet(s"$d/customer.parquet")
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("mktsegment")))
     val events = EventStreams.readEvents(s, s"$d/events.parquet")
-    timedStream("stream_enrich") {
-      val q = events.join(dims, Seq("user_id"))
+    memoryStream(s, d, "stream_enrich", "append",
+      events.join(dims, Seq("user_id"))
         .select(col("event_id"), col("user_id"), col("mktsegment"),
-          round(col("value"), 4).as("value"))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy("event_id")
+          round(col("value"), 4).as("value")))
+      .orderBy("event_id")
   }
 
   /** Stream-stream interval join (views ⋈ same-user clicks within 4 h),
@@ -1450,19 +1351,13 @@ object StreamQueries {
     * the DuckDB oracle.
     */
   def streamIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_ijoin_" + Math.abs(d.hashCode)
     val events = EventStreams.readEvents(s, s"$d/events.parquet")
     val joined = EventStreams.intervalJoin(
       events.filter(col("event_type") === "view"),
       events.filter(col("event_type") === "click"))
     withStatePartitions(s, 8) {
-      timedStream("stream_interval_join") {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    }
-    s.table(name).orderBy("user_id", "view_id", "click_id")
+      memoryStream(s, d, "stream_interval_join", "append", joined)
+    }.orderBy("user_id", "view_id", "click_id")
   }
 
   private val ijoinDirCache =
@@ -1494,20 +1389,14 @@ object StreamQueries {
     * Oracled against the batch LEFT JOIN.
     */
   def streamIntervalJoinOuter(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_ijoin_outer_" + Math.abs(d.hashCode)
     val events = EventStreams.readEvents(s, ijoinStreamDir(s, d))
     val joined = EventStreams.intervalJoin(
       events.filter(col("event_type") === "view"),
       events.filter(col("event_type") === "click"),
       joinType = "left_outer")
     withStatePartitions(s, 8) {
-      timedStream("stream_interval_join_outer") {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      memoryStream(s, d, "stream_interval_join_outer", "append", joined)
     }
-    s.table(name)
       .filter(col("user_id") >= 0)
       .orderBy("user_id", "view_id", "click_id")
   }
@@ -1531,18 +1420,12 @@ object StreamQueries {
     seedIvf(s, d)
   }
 
-  val entries: Seq[Q] = Seq(
-    // Per-document rule verdicts are wave-independent, so the door's
-    // oracle is the batch gate's kept set — the shared CTE chain, with
-    // the door's own projection.
-    // The COMPOSED funnel replayed: static verdicts (gate chain + nested
-    // classifier oracle with its calibrated cut + benchmark gram overlap)
-    // define the cleared set, then the dedup door's greedy wave replay
-    // runs restricted to it -- earlier-wave admissions and smaller-id
-    // batch-mates dominate, exactly the single-door semantics composed.
-    Q("stream_curate_ingest", streamCurateIngest _,
-      (PipelineQueries.QualityGateCtes + """,
-         nb AS (""" + PipelineQueries.NbClassifierOracle + """),
+  /** The calibrated reference classifier replayed in SQL: `nb` scores
+    * every document ([[referenceNb]]), `t.thr` is the median of the
+    * capped mod-10 sample ([[nbThreshold]]).
+    */
+  private val NbCutCtes: String =
+    """nb AS (""" + PipelineQueries.NbClassifierOracle + """),
          samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
                   ORDER BY doc_id LIMIT 1000),
          r AS (SELECT log_odds,
@@ -1551,7 +1434,17 @@ object StreamQueries {
                FROM samp),
          t AS (SELECT max(CASE WHEN rk = CAST(ceil(cnt / 2.0) AS INT)
                       THEN log_odds END) AS thr
-               FROM r),
+               FROM r)"""
+
+  /** The composed curate door replayed, shared by its ingest and report
+    * rows: the static verdicts (gate chain, calibrated classifier,
+    * benchmark 8-gram overlap) define the cleared set `stat`, then the
+    * dedup door's greedy wave replay over it admits `kept1` (wave 1,
+    * even ids) and `kept2` (wave 2, odd ids).
+    */
+  private val CurateReplayCtes: String =
+    PipelineQueries.QualityGateCtes + """,
+         """ + NbCutCtes + """,
          dws AS (SELECT doc_id,
                   ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
                     18, 15))::UBIGINT % 100 AS bucket,
@@ -1590,7 +1483,127 @@ object StreamQueries {
                        ON (p.id_a = k.doc_id AND p.id_b = st.doc_id)
                        OR (p.id_b = k.doc_id AND p.id_a = st.doc_id))
                      AND NOT EXISTS (SELECT 1 FROM p
-                       WHERE p.id_b = st.doc_id AND p.id_a % 2 = 1))
+                       WHERE p.id_b = st.doc_id AND p.id_a % 2 = 1))"""
+
+  /** Two md5-seeded cosine-Lloyd rounds over `src(vec_id, v)` — the
+    * deterministic IVF fit replayed up to the round-2 cell means
+    * `${p}u2`. Every CTE name carries the prefix `p`, so one query can
+    * replay two fits.
+    */
+  private def lloydCtes(p: String, src: String): String =
+    s"""${p}seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
+                  FROM $src ORDER BY h, vec_id LIMIT 16),
+         ${p}init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
+                    AS INT) AS cell, v FROM ${p}seed),
+         ${p}s1 AS (SELECT a.vec_id, a.v, i.cell,
+                       list_cosine_similarity(a.v, i.v) AS sim
+                FROM $src a CROSS JOIN ${p}init i),
+         ${p}a1 AS (SELECT vec_id, v, cell FROM
+                 (SELECT *, row_number() OVER (PARTITION BY vec_id
+                    ORDER BY sim DESC, cell) AS rn FROM ${p}s1)
+                WHERE rn = 1),
+         ${p}u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
+                 (SELECT cell, unnest(v) AS x,
+                         generate_subscripts(v, 1) AS pos FROM ${p}a1)
+                GROUP BY cell, pos),
+         ${p}c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM ${p}u1
+                GROUP BY cell),
+         ${p}s2 AS (SELECT a.vec_id, a.v, c.cell,
+                       list_cosine_similarity(a.v, c.v) AS sim
+                FROM $src a CROSS JOIN ${p}c1 c),
+         ${p}a2 AS (SELECT vec_id, v, cell FROM
+                 (SELECT *, row_number() OVER (PARTITION BY vec_id
+                    ORDER BY sim DESC, cell) AS rn FROM ${p}s2)
+                WHERE rn = 1),
+         ${p}u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
+                 (SELECT cell, unnest(v) AS x,
+                         generate_subscripts(v, 1) AS pos FROM ${p}a2)
+                GROUP BY cell, pos)"""
+
+  /** The ANN scenarios' seed index replayed: [[lloydCtes]] over the
+    * even-id half `sv`, centroids `c2`. Not PipelineQueries'
+    * IvfFit16Ctes, which fits over every vector.
+    */
+  private val SeedIvfCtes: String =
+    """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
+                    FROM embeddings),
+         sv AS (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
+         """ + lloydCtes("", "sv") + """,
+         c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
+                GROUP BY cell)"""
+
+  /** The two-phase token-budget greedy replayed, shared by the budget
+    * row and its ledger report: per lang over (quality desc, id), wave
+    * 1 (even ids) admits `k1` while its running sum stays within 5000
+    * tokens, wave 2 admits `k2` into what `s1` left.
+    */
+  private val BudgetGreedyCtes: String =
+    """WITH t AS (
+           SELECT doc_id, lang, doc_id % 2 AS wave,
+                  CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
+                    AS n_tokens,
+                  round(
+                    (CASE WHEN length(text) BETWEEN 100 AND 20000
+                          THEN 0.3 ELSE 0 END) +
+                    (CASE WHEN len(list_filter(
+                        string_split_regex(trim(lower(text)), '\s+'),
+                        w -> list_contains(['the','a','an','and','or','of',
+                          'to','in','is','it','that','for','on','with','as',
+                          'at','by'], w)))::DOUBLE
+                      / greatest(len(string_split_regex(trim(lower(text)),
+                          '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
+                    (CASE WHEN len(regexp_extract_all(text,
+                        '[^A-Za-z0-9\s]'))::DOUBLE
+                      / greatest(length(text), 1) <= 0.2
+                      THEN 0.2 ELSE 0 END) +
+                    (CASE WHEN list_sum(list_transform(
+                        string_split_regex(trim(lower(text)), '\s+'),
+                        w -> length(w)))::DOUBLE
+                      / greatest(len(string_split_regex(trim(lower(text)),
+                          '\s+')), 1) BETWEEN 2.0 AND 12.0
+                      THEN 0.2 ELSE 0 END), 2) AS quality_score
+           FROM documents),
+         r1 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
+                  ORDER BY quality_score DESC, doc_id
+                  ROWS UNBOUNDED PRECEDING) AS cum
+                FROM t WHERE wave = 0),
+         k1 AS (SELECT * FROM r1 WHERE cum <= 5000),
+         s1 AS (SELECT lang, sum(n_tokens) AS spent FROM k1 GROUP BY lang),
+         r2 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
+                  ORDER BY quality_score DESC, doc_id
+                  ROWS UNBOUNDED PRECEDING) AS cum
+                FROM t WHERE wave = 1),
+         k2 AS (SELECT r2.* FROM r2 LEFT JOIN s1 USING (lang)
+                WHERE cum <= 5000 - coalesce(spent, 0))"""
+
+  /** The KMV sketch of each wave prefix, shared by the vocab rows: `b0`
+    * = the 256 smallest distinct 3-gram hashes of the even-id wave,
+    * `b1` = of the whole corpus.
+    */
+  private val KmvPrefixCtes: String =
+    """WITH ws AS (SELECT doc_id,
+                string_split_regex(trim(lower(text)), '\s+') AS words
+              FROM documents),
+         sh AS (SELECT doc_id,
+                  unnest(list_transform(
+                    range(1, greatest(len(words) - 2, 0) + 1),
+                    i -> array_to_string(words[i:i+2], ' '))) AS gram
+                FROM ws),
+         hh AS (SELECT doc_id,
+                  ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
+                FROM sh),
+         b0 AS (SELECT DISTINCT h FROM hh WHERE doc_id % 2 = 0
+                ORDER BY h LIMIT 256),
+         b1 AS (SELECT DISTINCT h FROM hh ORDER BY h LIMIT 256)"""
+
+  val entries: Seq[Q] = Seq(
+    // The COMPOSED funnel replayed: static verdicts (gate chain + nested
+    // classifier oracle with its calibrated cut + benchmark gram overlap)
+    // define the cleared set, then the dedup door's greedy wave replay
+    // runs restricted to it -- earlier-wave admissions and smaller-id
+    // batch-mates dominate, exactly the single-door semantics composed.
+    Q("stream_curate_ingest", streamCurateIngest _,
+      (CurateReplayCtes + """
          SELECT d.doc_id, d.lang, d.source
          FROM documents d
          JOIN (SELECT doc_id FROM kept1
@@ -1602,56 +1615,7 @@ object StreamQueries {
     // commit, so a drifting count in the door's bookkeeping (not just
     // its kept rows) hash-mismatches.
     Q("stream_curate_report", streamCurateReport _,
-      (PipelineQueries.QualityGateCtes + """,
-         nb AS (""" + PipelineQueries.NbClassifierOracle + """),
-         samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
-                  ORDER BY doc_id LIMIT 1000),
-         r AS (SELECT log_odds,
-                      row_number() OVER (ORDER BY log_odds DESC) AS rk,
-                      count(*) OVER () AS cnt
-               FROM samp),
-         t AS (SELECT max(CASE WHEN rk = CAST(ceil(cnt / 2.0) AS INT)
-                      THEN log_odds END) AS thr
-               FROM r),
-         dws AS (SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-                 FROM documents),
-         dg AS (SELECT doc_id, bucket, unnest(list_distinct(
-                  list_transform(range(1, greatest(len(words) - 7, 1) + 1),
-                    i -> array_to_string(words[i:least(i+7, len(words))], ' '))))
-                  AS gram
-                FROM dws),
-         bgrams AS (SELECT DISTINCT gram FROM dg WHERE bucket >= 90),
-         bad AS (SELECT DISTINCT dg.doc_id FROM dg JOIN bgrams USING (gram)),
-         stat AS (SELECT d.doc_id FROM documents d
-                  JOIN v USING (doc_id)
-                  JOIN nb USING (doc_id) CROSS JOIN t
-                  LEFT JOIN bad ON bad.doc_id = d.doc_id
-                  WHERE len(v.hit) = 0 AND nb.log_odds >= t.thr
-                    AND bad.doc_id IS NULL),
-         sh AS (SELECT doc_id, list_distinct(
-                  list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-                    i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-                  AS sh
-                FROM dws JOIN stat USING (doc_id)),
-         p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-               WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-                     (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                     >= 0.5),
-         kept1 AS (SELECT st.doc_id FROM stat st
-                   WHERE st.doc_id % 2 = 0
-                     AND NOT EXISTS (SELECT 1 FROM p
-                       WHERE p.id_b = st.doc_id AND p.id_a % 2 = 0)),
-         kept2 AS (SELECT st.doc_id FROM stat st
-                   WHERE st.doc_id % 2 = 1
-                     AND NOT EXISTS (SELECT 1 FROM p JOIN kept1 k
-                       ON (p.id_a = k.doc_id AND p.id_b = st.doc_id)
-                       OR (p.id_b = k.doc_id AND p.id_a = st.doc_id))
-                     AND NOT EXISTS (SELECT 1 FROM p
-                       WHERE p.id_b = st.doc_id AND p.id_a % 2 = 1))
+      (CurateReplayCtes + """
          SELECT CAST(0 AS BIGINT) AS batch_id,
                 (SELECT count(*) FROM documents
                  WHERE doc_id % 2 = 0)::BIGINT AS docs_in,
@@ -1673,20 +1637,14 @@ object StreamQueries {
     // Static model + offline-calibrated threshold, wave-independent
     // verdicts: the batch classifier scores with the sample-median cut
     // replayed (rounded scores both sides).
-    Q("stream_classifier_gate", streamClassifierGate _, ("WITH nb AS (" +
-      PipelineQueries.NbClassifierOracle + """),
-         samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
-                  ORDER BY doc_id LIMIT 1000),
-         r AS (SELECT log_odds,
-                      row_number() OVER (ORDER BY log_odds DESC) AS rk,
-                      count(*) OVER () AS cnt
-               FROM samp),
-         t AS (SELECT max(CASE WHEN rk = CAST(ceil(cnt / 2.0) AS INT)
-                      THEN log_odds END) AS thr
-               FROM r)
+    Q("stream_classifier_gate", streamClassifierGate _,
+      ("WITH " + NbCutCtes + """
          SELECT d.doc_id, d.lang, d.source
          FROM documents d JOIN nb USING (doc_id) CROSS JOIN t
          WHERE nb.log_odds >= t.thr ORDER BY d.doc_id""")),
+    // Per-document rule verdicts are wave-independent, so the door's
+    // oracle is the batch gate's kept set — the shared CTE chain, with
+    // the door's own projection.
     Q("stream_quality_gate", streamQualityGate _,
       (PipelineQueries.QualityGateCtes + """
          SELECT d.doc_id, d.lang, d.source
@@ -1741,34 +1699,7 @@ object StreamQueries {
       """WITH v AS MATERIALIZED (
            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          sv AS MATERIALIZED (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
-         seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                  FROM sv ORDER BY h, vec_id LIMIT 16),
-         init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                    AS INT) AS cell, v FROM seed),
-         s1 AS (SELECT a.vec_id, a.v, i.cell,
-                       list_cosine_similarity(a.v, i.v) AS sim
-                FROM sv a CROSS JOIN init i),
-         a1 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s1)
-                WHERE rn = 1),
-         u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a1)
-                GROUP BY cell, pos),
-         c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u1
-                GROUP BY cell),
-         s2 AS (SELECT a.vec_id, a.v, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM sv a CROSS JOIN c1 c),
-         a2 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s2)
-                WHERE rn = 1),
-         u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a2)
-                GROUP BY cell, pos),
+         """ + lloydCtes("", "sv") + """,
          c2 AS MATERIALIZED (SELECT cell, list(m ORDER BY pos) AS v
                              FROM u2 GROUP BY cell),
          fitm AS (SELECT round(avg(dd), 6) AS fit_mean FROM
@@ -1793,34 +1724,7 @@ object StreamQueries {
          comb AS MATERIALIZED (
            SELECT vec_id, v FROM sv
            UNION ALL SELECT vec_id, v FROM drift),
-         rseed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                   FROM comb ORDER BY h, vec_id LIMIT 16),
-         rinit AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                     AS INT) AS cell, v FROM rseed),
-         rs1 AS (SELECT a.vec_id, a.v, i.cell,
-                        list_cosine_similarity(a.v, i.v) AS sim
-                 FROM comb a CROSS JOIN rinit i),
-         ra1 AS (SELECT vec_id, v, cell FROM
-                  (SELECT *, row_number() OVER (PARTITION BY vec_id
-                     ORDER BY sim DESC, cell) AS rn FROM rs1)
-                 WHERE rn = 1),
-         ru1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                  (SELECT cell, unnest(v) AS x,
-                          generate_subscripts(v, 1) AS pos FROM ra1)
-                 GROUP BY cell, pos),
-         rc1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM ru1
-                 GROUP BY cell),
-         rs2 AS (SELECT a.vec_id, a.v, c.cell,
-                        list_cosine_similarity(a.v, c.v) AS sim
-                 FROM comb a CROSS JOIN rc1 c),
-         ra2 AS (SELECT vec_id, v, cell FROM
-                  (SELECT *, row_number() OVER (PARTITION BY vec_id
-                     ORDER BY sim DESC, cell) AS rn FROM rs2)
-                 WHERE rn = 1),
-         ru2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                  (SELECT cell, unnest(v) AS x,
-                          generate_subscripts(v, 1) AS pos FROM ra2)
-                 GROUP BY cell, pos),
+         """ + lloydCtes("r", "comb") + """,
          rc2 AS MATERIALIZED (SELECT cell, list(m ORDER BY pos) AS v
                               FROM ru2 GROUP BY cell),
          postm AS (SELECT round(avg(dd), 6) AS post_mean FROM
@@ -1890,43 +1794,11 @@ object StreamQueries {
          FROM fitm, prem, postm, fpre, fpost"""),
     // The drift report's stats recomputed from scratch: the seed
     // quantizer fit replayed (md5-seeded 2-round cosine-Lloyd on the
-    // even half — the same CTEs as stream_semantic_dedup's), then each
+    // even half — SeedIvfCtes, shared with stream_semantic_dedup), then each
     // wave's mean squared L2 distance to its nearest fitted centroid.
     // Wave 1 = vec_id ≡ 1 (mod 4), wave 2 = ≡ 3 (vecWavesDir's split).
     Q("stream_ann_report", streamAnnReport _,
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                    FROM embeddings),
-         sv AS (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
-         seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                  FROM sv ORDER BY h, vec_id LIMIT 16),
-         init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                    AS INT) AS cell, v FROM seed),
-         s1 AS (SELECT a.vec_id, a.v, i.cell,
-                       list_cosine_similarity(a.v, i.v) AS sim
-                FROM sv a CROSS JOIN init i),
-         a1 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s1)
-                WHERE rn = 1),
-         u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a1)
-                GROUP BY cell, pos),
-         c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u1
-                GROUP BY cell),
-         s2 AS (SELECT a.vec_id, a.v, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM sv a CROSS JOIN c1 c),
-         a2 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s2)
-                WHERE rn = 1),
-         u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a2)
-                GROUP BY cell, pos),
-         c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
-                GROUP BY cell),
+      SeedIvfCtes + """,
          waves AS (SELECT vec_id, v,
                           CASE WHEN vec_id % 4 = 1 THEN 0 ELSE 1 END
                             AS batch_id
@@ -1949,39 +1821,7 @@ object StreamQueries {
     // wave-1 admission) or a smaller-id same-cell wave-mate sits at
     // rounded cosine >= 0.98.
     Q("stream_semantic_dedup", streamSemanticDedup _,
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                    FROM embeddings),
-         sv AS (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
-         seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                  FROM sv ORDER BY h, vec_id LIMIT 16),
-         init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                    AS INT) AS cell, v FROM seed),
-         s1 AS (SELECT a.vec_id, a.v, i.cell,
-                       list_cosine_similarity(a.v, i.v) AS sim
-                FROM sv a CROSS JOIN init i),
-         a1 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s1)
-                WHERE rn = 1),
-         u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a1)
-                GROUP BY cell, pos),
-         c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u1
-                GROUP BY cell),
-         s2 AS (SELECT a.vec_id, a.v, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM sv a CROSS JOIN c1 c),
-         a2 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s2)
-                WHERE rn = 1),
-         u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a2)
-                GROUP BY cell, pos),
-         c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
-                GROUP BY cell),
+      SeedIvfCtes + """,
          tw1 AS (SELECT vec_id + 10000000 AS vec_id,
                         (list_transform(range(1, len(embedding) + 1),
                           i -> embedding[i] *
@@ -2106,43 +1946,7 @@ object StreamQueries {
     // budget — exactly what the commit-summary-folded streaming totals
     // must reproduce.
     Q("stream_token_budget", streamTokenBudget _,
-      """WITH t AS (
-           SELECT doc_id, lang, doc_id % 2 AS wave,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
-                    AS n_tokens,
-                  round(
-                    (CASE WHEN length(text) BETWEEN 100 AND 20000
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> list_contains(['the','a','an','and','or','of',
-                          'to','in','is','it','that','for','on','with','as',
-                          'at','by'], w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text,
-                        '[^A-Za-z0-9\s]'))::DOUBLE
-                      / greatest(length(text), 1) <= 0.2
-                      THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> length(w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) BETWEEN 2.0 AND 12.0
-                      THEN 0.2 ELSE 0 END), 2) AS quality_score
-           FROM documents),
-         r1 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                  ORDER BY quality_score DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t WHERE wave = 0),
-         k1 AS (SELECT * FROM r1 WHERE cum <= 5000),
-         s1 AS (SELECT lang, sum(n_tokens) AS spent FROM k1 GROUP BY lang),
-         r2 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                  ORDER BY quality_score DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t WHERE wave = 1),
-         k2 AS (SELECT r2.* FROM r2 LEFT JOIN s1 USING (lang)
-                WHERE cum <= 5000 - coalesce(spent, 0))
+      BudgetGreedyCtes + """
          SELECT doc_id, lang, n_tokens, quality_score FROM k1
          UNION ALL
          SELECT doc_id, lang, n_tokens, quality_score FROM k2
@@ -2151,43 +1955,7 @@ object StreamQueries {
     // per-(batch, stratum) admitted-token deltas (wave 0 = batch 0),
     // running per-stratum totals, and the 5000-token budget remaining.
     Q("stream_token_budget_report", streamBudgetReport _,
-      """WITH t AS (
-           SELECT doc_id, lang, doc_id % 2 AS wave,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
-                    AS n_tokens,
-                  round(
-                    (CASE WHEN length(text) BETWEEN 100 AND 20000
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> list_contains(['the','a','an','and','or','of',
-                          'to','in','is','it','that','for','on','with','as',
-                          'at','by'], w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text,
-                        '[^A-Za-z0-9\s]'))::DOUBLE
-                      / greatest(length(text), 1) <= 0.2
-                      THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> length(w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) BETWEEN 2.0 AND 12.0
-                      THEN 0.2 ELSE 0 END), 2) AS quality_score
-           FROM documents),
-         r1 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                  ORDER BY quality_score DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t WHERE wave = 0),
-         k1 AS (SELECT * FROM r1 WHERE cum <= 5000),
-         s1 AS (SELECT lang, sum(n_tokens) AS spent FROM k1 GROUP BY lang),
-         r2 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                  ORDER BY quality_score DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t WHERE wave = 1),
-         k2 AS (SELECT r2.* FROM r2 LEFT JOIN s1 USING (lang)
-                WHERE cum <= 5000 - coalesce(spent, 0)),
+      BudgetGreedyCtes + """,
          d AS (SELECT CAST(0 AS BIGINT) AS batch_id, lang,
                       CAST(sum(n_tokens) AS BIGINT) AS admitted_tokens
                FROM k1 GROUP BY lang
@@ -2209,20 +1977,7 @@ object StreamQueries {
     // the whole corpus. Same gram + h60 arithmetic as the batch KMV
     // rows.
     Q("stream_vocab_growth", streamVocabGrowth _,
-      """WITH ws AS (SELECT doc_id,
-                string_split_regex(trim(lower(text)), '\s+') AS words
-              FROM documents),
-         sh AS (SELECT doc_id,
-                  unnest(list_transform(
-                    range(1, greatest(len(words) - 2, 0) + 1),
-                    i -> array_to_string(words[i:i+2], ' '))) AS gram
-                FROM ws),
-         hh AS (SELECT doc_id,
-                  ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
-                FROM sh),
-         b0 AS (SELECT DISTINCT h FROM hh WHERE doc_id % 2 = 0
-                ORDER BY h LIMIT 256),
-         b1 AS (SELECT DISTINCT h FROM hh ORDER BY h LIMIT 256)
+      KmvPrefixCtes + """
          SELECT CAST(0 AS BIGINT) AS batch_id, h FROM b0
          UNION ALL
          SELECT CAST(1 AS BIGINT) AS batch_id, h FROM b1
@@ -2231,20 +1986,7 @@ object StreamQueries {
     // fill, k-th-min hash, and the (k-1)*2^60/h_k estimate in the same
     // double arithmetic as the door's driver-side stamp.
     Q("stream_vocab_growth_report", streamVocabReport _,
-      """WITH ws AS (SELECT doc_id,
-                string_split_regex(trim(lower(text)), '\s+') AS words
-              FROM documents),
-         sh AS (SELECT doc_id,
-                  unnest(list_transform(
-                    range(1, greatest(len(words) - 2, 0) + 1),
-                    i -> array_to_string(words[i:i+2], ' '))) AS gram
-                FROM ws),
-         hh AS (SELECT doc_id,
-                  ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
-                FROM sh),
-         b0 AS (SELECT DISTINCT h FROM hh WHERE doc_id % 2 = 0
-                ORDER BY h LIMIT 256),
-         b1 AS (SELECT DISTINCT h FROM hh ORDER BY h LIMIT 256),
+      KmvPrefixCtes + """,
          s0 AS (SELECT CAST(0 AS BIGINT) AS batch_id,
                        CAST(count(*) AS INT) AS k_used,
                        max(h) AS kth_min,
