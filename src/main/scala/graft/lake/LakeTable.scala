@@ -656,8 +656,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
             // only files that actually lost rows, not the whole parent
             // snapshot.
             val posPre: Option[DataFrame] = if (posDels.isEmpty) None else {
-              val delDf = broadcast(spark.read.parquet(
-                posDels.map(d => s"$location/${d.path}"): _*))
+              val delDf = broadcast(Scan.readDeletes(spark, location, posDels))
               val b = delDf.agg(min(col("_del_row_id")), max(col("_del_row_id")))
                 .head()
               val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -687,8 +686,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
                       s"equality delete references dropped field id $id"))
                     .name
                 }
-                val delDf = broadcast(spark.read.parquet(
-                  fs.map(d => s"$location/${d.path}"): _*))
+                val delDf = broadcast(Scan.readDeletes(spark, location, fs))
                 val prunedParent = keyCandidates(m, pData, delDf,
                   ids.map(id => s"k_$id"), names, nullSafe = true)
                 val parent = Scan.readEntries(spark, m, prunedParent, pDels)
@@ -834,9 +832,11 @@ class LakeTable(val spark: SparkSession, val location: String) {
     * plus metadata-dir debris: `manifest-*.json` no snapshot references
     * (manifests are written BEFORE the commit CAS, so a losing
     * concurrent commit orphans them) and `*.tmp` siblings left by a
-    * writer that died between createTempFile and the atomic publish.
-    * Live files never end in `.tmp` (the publish renames/links away
-    * immediately), and the mtime cutoff protects in-flight writers.
+    * writer that died between createTempFile and the atomic publish,
+    * and the `.stage-*` directories of data and delete writes that died
+    * before their cleanup (reported by directory name). Live files never
+    * end in `.tmp` (the publish renames/links away immediately), and the
+    * mtime cutoff protects in-flight writers.
     */
   def removeOrphanFiles(olderThanMs: Long): Seq[String] = {
     val m = meta
@@ -873,7 +873,24 @@ class LakeTable(val spark: SparkSession, val location: String) {
         Files.delete(p); Some(rel)
       } else None
     }
-    removed ++ removedMeta
+    // A write that died before its cleanup leaves its stage directory
+    // (`Writer` stages under `.stage-*` and `.stage-del-*`). It is debris
+    // once nothing in it has changed since the cutoff; one that vanishes
+    // mid-walk belonged to a write that just finished.
+    def newest(d: java.nio.file.Path): Long = {
+      val walk = Files.walk(d)
+      try walk.iterator().asScala
+        .map(Files.getLastModifiedTime(_).toMillis).max
+      finally walk.close()
+    }
+    val removedStages = listDir(Paths.get(location)).flatMap { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith(".stage-") && Files.isDirectory(p) &&
+          scala.util.Try(newest(p)).getOrElse(Long.MaxValue) < cutoff) {
+        Writer.deleteRecursively(p); Some(name)
+      } else None
+    }
+    removed ++ removedMeta ++ removedStages
   }
 }
 

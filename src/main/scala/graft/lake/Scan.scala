@@ -1,6 +1,14 @@
 package graft.lake
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,10 +16,12 @@ import org.apache.spark.sql.types._
   * ref/time-travel resolution → manifest file pruning → schema-evolution
   * projection → MoR delete application → metadata/lineage columns.
   *
-  * File pruning happens *before* `spark.read`, so Catalyst receives a
+  * File pruning happens before Spark sees the read, so Catalyst receives a
   * pre-pruned file list and still does its own parquet row-group skipping
   * on the residual filter — two pruning layers, like Iceberg-on-Spark
-  * (`iceberg_trino_sqldemo.sql:15` + SURVEY §4). The delete-file
+  * (`iceberg_trino_sqldemo.sql:15` + SURVEY §4). That list is the
+  * manifest's own ([[ManifestIndex]]): binding a read lists, globs and
+  * infers nothing, and starts no Spark job. The delete-file
   * anti-join broadcasts the delete side (deletion vectors are
   * metadata-sized), so MoR reads never shuffle the data side.
   */
@@ -107,8 +117,7 @@ object Scan {
     if (deletes.nonEmpty && lineage) {
       val (eqDels, posDels) = deletes.partition(_.content == "equality")
       if (posDels.nonEmpty) {
-        val delDf = broadcast(spark.read
-          .parquet(posDels.map(d => s"${meta.location}/${d.path}"): _*))
+        val delDf = broadcast(readDeletes(spark, meta.location, posDels))
         df = df.join(delDf,
           df(RowId) === delDf("_del_row_id") &&
             df(LastUpdatedSeq) < delDf("_del_seq"),
@@ -129,8 +138,7 @@ object Scan {
               s"equality delete references dropped field id $id"))
             .name
         }
-        val delDf = broadcast(spark.read
-          .parquet(files.map(d => s"${meta.location}/${d.path}"): _*))
+        val delDf = broadcast(readDeletes(spark, meta.location, files))
         val keyEq = ids.zip(names).map { case (id, n) =>
           df(n) <=> delDf(s"k_$id")
         }.reduce(_ && _)
@@ -206,8 +214,9 @@ object Scan {
         StructType(fileStruct.fields ++ Seq(
           StructField(RowId, LongType), StructField(LastUpdatedSeq, LongType)))
       else fileStruct
-    val paths = files.map(f => s"${meta.location}/${f.path}")
-    var df = spark.read.schema(readSchema).parquet(paths: _*)
+    val fs = fileSystem(spark, meta.location)
+    var df = parquetFrame(spark, readSchema, files.map(f => fileStatus(fs,
+      meta.location, f.path, if (withPath) None else Some(f.sizeBytes))))
     if (withPath)
       df = df.withColumn(GraftPath, col("_metadata.file_path"))
         .withColumn(GraftMtime, col("_metadata.file_modification_time"))
@@ -227,6 +236,97 @@ object Scan {
       (if (withPath) Seq(col(GraftPath), col(GraftMtime)) else Nil)
     df.select(projected ++ extras: _*)
   }
+
+  /** Spark's file list for a lake read: the manifest entries themselves,
+    * so planning lists, globs and stats nothing (Iceberg's "the manifests
+    * are the file list"). One partition directory with no values: graft's
+    * partition tuples live in the manifest, not in the paths. `listFiles`
+    * receives Catalyst's partition and data filters and ignores them.
+    */
+  private final case class ManifestIndex(files: Seq[FileStatus])
+      extends FileIndex {
+    def rootPaths: Seq[HPath] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty,
+        files.map(FileStatusWithMetadata(_))))
+    def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+  }
+
+  /** A parquet frame over lake files whose schema is known up front:
+    * every lake-file read gets its Spark relation here.
+    */
+  private def parquetFrame(spark: SparkSession, schema: StructType,
+      files: Seq[FileStatus]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(ManifestIndex(files),
+      new StructType(), nullable(schema).asInstanceOf[StructType], None,
+      new ParquetFileFormat, Map.empty)(spark))
+
+  /** Every level nullable, as a parquet relation's data schema always is
+    * (a file may predate a column, or hold nulls a stricter schema bans).
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  private def fileSystem(spark: SparkSession, location: String): FileSystem =
+    new HPath(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** `location/rel` qualified as Spark's own listing names it (`file:/…`
+    * on a local table, so `_metadata.file_path`, `$path` and `inputFiles`
+    * match a listed parquet read). With `size`, the manifest's
+    * byte count and no file-system call; without, a stat — for the real
+    * mtime behind `$file_modified_time`, and for delete files, whose
+    * entries carry no size.
+    */
+  private def fileStatus(fs: FileSystem, location: String, rel: String,
+      size: Option[Long]): FileStatus = {
+    val path = fs.makeQualified(new HPath(s"$location/$rel"))
+    size.fold(fs.getFileStatus(path))(new FileStatus(_, false, 0, 0, 0L, path))
+  }
+
+  private val PositionDeleteSchema = StructType(Seq(
+    StructField("_del_row_id", LongType), StructField("_del_seq", LongType)))
+
+  /** Delete files of one content as a frame. Position deletes have the
+    * fixed schema [[Writer.writeDeleteFile]] writes. Equality deletes are
+    * typed from the first file's footer, read in-process — the footer
+    * Spark's schema inference would open, without its job — since a
+    * caller's key frame may carry another type than the table column.
+    */
+  private[lake] def readDeletes(spark: SparkSession, location: String,
+      deletes: Seq[DeleteFileEntry]): DataFrame = {
+    val fs = fileSystem(spark, location)
+    val files = deletes.map(d => fileStatus(fs, location, d.path, None))
+    val schema =
+      if (deletes.head.content == "equality") footerSchema(spark, files.head)
+      else PositionDeleteSchema
+    parquetFrame(spark, schema, files)
+  }
+
+  /** The row schema Spark stores in the footer of every file it writes
+    * (the schema its inference would return).
+    */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try {
+      val json = reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(SparkRowSchemaKey)
+      require(json != null, s"${file.getPath} carries no Spark row schema")
+      DataType.fromJson(json).asInstanceOf[StructType]
+    } finally reader.close()
+  }
+
+  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** `$partition` rendering: per-file partition tuple joined in via a
     * broadcast path→tuple map (metadata-sized, never a data shuffle).

@@ -29,7 +29,6 @@ object Writer {
 
   val RowId = "_row_id"
   val LastUpdatedSeq = "_last_updated_seq"
-  val lineageCols: Seq[String] = Seq(RowId, LastUpdatedSeq)
 
   /** Attach fresh `_row_id` (from `firstRowId`, dense and unique, stable
     * for the life of the row — `sql:65-68,133-135`) and
@@ -200,9 +199,12 @@ object Writer {
         !p.getFileName.toString.startsWith("."))
       .toSeq.sortBy(_.toString)
 
-  private def deleteRecursively(dir: Path): Unit =
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+  private[lake] def deleteRecursively(dir: Path): Unit = {
+    val walk = Files.walk(dir) // holds directory fds until closed
+    try walk.sorted(java.util.Comparator.reverseOrder())
       .iterator().asScala.foreach(Files.deleteIfExists(_))
+    finally walk.close()
+  }
 
   /** `_p_x=v/_p_y=w/part-....parquet` → Map(x -> v, y -> w), unescaping
     * Hive-style %XX sequences.

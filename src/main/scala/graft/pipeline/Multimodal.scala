@@ -180,16 +180,6 @@ object Multimodal {
     */
   def setCodec(c: BlobCodec): Unit = { codec = c }
 
-  val blobSchema: StructType = StructType(Seq(
-    StructField("blob_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false),
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType),
-      StructField("codec", StringType))))))
-
   /** Build a blob table from the documents fixture: text bytes stand in
     * for encoded media payloads; modality assigned round-robin so the
     * partition-by-modality path is exercised.
@@ -291,12 +281,6 @@ object Multimodal {
       }
     spark.createDataFrame(rdd, resizeSchema)
   }
-
-  val frameSchema: StructType = StructType(Seq(
-    StructField("blob_id", LongType, nullable = false),
-    StructField("frame_idx", IntegerType),
-    StructField("frame_bytes", BinaryType),
-    StructField("frame_offset", IntegerType)))
 
   /** Frame sampling for video-like payloads: n evenly spaced byte
     * windows per blob (the real version seeks keyframes; the slicing,

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.Try
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,10 +24,21 @@ class CoreQueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  /** One pass over the registry for the two registry-wide tests below:
+    * each row's frame is built once, then counted and planned. A row
+    * that throws fails both tests with its own exception.
+    */
+  private lazy val registryPass: Seq[(String, Try[(Long, String)])] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> Try {
+        val df = fn(spark, sf)
+        (df.count(), df.queryExecution.executedPlan.toString)
+      }
+    }
+
   test("every query runs and returns rows at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned 0 rows")
+    registryPass.foreach { case (name, run) =>
+      assert(run.get._1 > 0, s"$name returned 0 rows")
     }
   }
 
@@ -38,8 +50,8 @@ class CoreQueriesSpec extends AnyFunSuite {
     // broadcast (e.g. a size estimate pushed the small side past the
     // threshold), which at cluster scale is a partitions²-task job —
     // the regression this guard exists to catch at test time.
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+    registryPass.foreach { case (name, run) =>
+      val plan = run.get._2
       assert(!plan.contains("CartesianProduct"),
         s"$name degenerated to a cartesian product:\n${plan.take(600)}")
     }

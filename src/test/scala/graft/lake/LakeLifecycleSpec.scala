@@ -236,6 +236,30 @@ class LakeLifecycleSpec extends AnyFunSuite {
     assert(t.read().count() == 5)
   }
 
+  test("remove_orphan_files collects a crashed write's stage directories") {
+    val t = LakeTable.create(s, tmpLoc(), Right(customers(5)))
+    // `Writer` stages every write under `.stage-*` / `.stage-del-*`; a
+    // write that dies before its finally leaves the directory behind
+    def stage(name: String, mtime: Long): java.nio.file.Path = {
+      val d = Files.createDirectories(
+        java.nio.file.Paths.get(t.location, name, "_p_x=1"))
+      val f = Files.write(d.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+      val ft = java.nio.file.attribute.FileTime.fromMillis(mtime)
+      Seq(f, d, d.getParent).foreach(Files.setLastModifiedTime(_, ft))
+      d.getParent
+    }
+    val crashed = stage(".stage-1234", 0L)
+    val crashedDel = stage(".stage-del-5678", 0L)
+    val inFlight = stage(".stage-9999", System.currentTimeMillis())
+    val removed = t.removeOrphanFiles(olderThanMs = 60000)
+    assert(removed.contains(".stage-1234") &&
+      removed.contains(".stage-del-5678"), removed)
+    assert(!Files.exists(crashed) && !Files.exists(crashedDel))
+    assert(Files.exists(inFlight) && !removed.contains(".stage-9999"),
+      "a stage directory younger than the cutoff may be a live write")
+    assert(t.read().count() == 5)
+  }
+
   test("schema evolution: add w/ default, rename, drop (sql:166-189)") {
     import s.implicits._
     val t = LakeTable.create(s, tmpLoc(), Right(customers(5)))
