@@ -43,28 +43,21 @@ object Verify {
       runOne(spark, row.name, row.run, sfDir, outDir)
         .foreach(msg => failures(row.name) = msg)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // full JSON string escape: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
+    import Bench.jstr
     val json = selected
-      .map(row => s"${q(row.name)}: ${q(row.oracle)}").mkString("{", ",", "}")
+      .map(row => s"${jstr(row.name)}: ${jstr(row.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     if (failures.nonEmpty)
       System.err.println(
         s"[verify] ${failures.size} quer${if (failures.size == 1) "y" else "ies"} FAILED: " +
           failures.keys.mkString(", "))
     spark.stop()
+    graft.queries.RegistryState.close()
   }
 }

@@ -841,11 +841,12 @@ class LakeTable(val spark: SparkSession, val location: String) {
   def removeOrphanFiles(olderThanMs: Long): Seq[String] = {
     val m = meta
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val referenced = m.snapshots.flatMap { s =>
-      s.manifests.map(Meta.readManifest(location, _)).flatMap(mf =>
-        mf.addedData.map(_.path) ++ mf.addedDeletes.map(_.path))
-    }.toSet
+    // later snapshots share their parents' manifests: read each once
     val referencedManifests = m.snapshots.flatMap(_.manifests).toSet
+    val referenced = referencedManifests.flatMap { p =>
+      val mf = Meta.readManifest(location, p)
+      mf.addedData.map(_.path) ++ mf.addedDeletes.map(_.path)
+    }
     import scala.jdk.CollectionConverters._
     // list() streams hold a directory fd until closed — never rely on GC
     def listDir(d: java.nio.file.Path): Seq[java.nio.file.Path] =

@@ -193,13 +193,16 @@ object Writer {
 
   // ---- helpers --------------------------------------------------------
 
-  private def collectParquet(dir: Path): Seq[Path] =
-    Files.walk(dir).iterator().asScala
+  private def collectParquet(dir: Path): Seq[Path] = {
+    val walk = Files.walk(dir) // holds directory fds until closed
+    try walk.iterator().asScala
       .filter(p => p.getFileName.toString.endsWith(".parquet") &&
         !p.getFileName.toString.startsWith("."))
       .toSeq.sortBy(_.toString)
+    finally walk.close()
+  }
 
-  private[lake] def deleteRecursively(dir: Path): Unit = {
+  private[graft] def deleteRecursively(dir: Path): Unit = {
     val walk = Files.walk(dir) // holds directory fds until closed
     try walk.sorted(java.util.Comparator.reverseOrder())
       .iterator().asScala.foreach(Files.deleteIfExists(_))

@@ -1,7 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.lake.{LakeTable, Scan}
@@ -16,16 +15,20 @@ import graft.lake.{LakeTable, Scan}
   */
 object LakeQueries {
 
-  private val cache = new ConcurrentHashMap[String, LakeTable]()
-  private lazy val base = Files.createTempDirectory("graft-lake-queries-")
-
-  /** Build-once-per-JVM scenario table (Verify/Bench call every query
-    * function; the DML lifecycle runs once, reads re-plan each call).
+  /** Row `key`'s scenario table over dataset `d`, built once per process
+    * ([[RegistryState.input]]): Verify/Bench call every query function,
+    * the DML lifecycle runs once, reads re-plan each call. `build` gets
+    * the table location; a catalog the scenario needs lives beside it
+    * ([[warehouse]]).
     */
-  private def scenario(key: String, sfDir: String)(build: String => LakeTable)
+  private def table(key: String, d: String)(build: String => LakeTable)
       : LakeTable =
-    cache.computeIfAbsent(s"$key|$sfDir", _ =>
-      build(base.resolve(key + "-" + Math.abs(sfDir.hashCode)).toString))
+    RegistryState.input(s"lake_$key", d)(dir =>
+      build(dir.resolve("table").toString))
+
+  /** The catalog warehouse beside scenario table location `loc`. */
+  private def warehouse(loc: String): String =
+    Paths.get(loc).resolveSibling("warehouse").toString
 
   private def customerDf(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d).select(
@@ -39,7 +42,7 @@ object LakeQueries {
     * (`iceberg_trino_sqldemo.sql:19-44`), read back.
     */
   def ctasSelect(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("ctas", d) { loc =>
+    val t = table("ctas", d) { loc =>
       val src = Tables.customer(s, d)
         .join(broadcast(Tables.nation(s, d)),
           col("c_nationkey") === col("n_nationkey"))
@@ -55,7 +58,7 @@ object LakeQueries {
 
   /** MoR UPDATE (`sql:129`): balance := 1000 where custkey < 10. */
   def morUpdate(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("morupd", d) { loc =>
+    val t = table("morupd", d) { loc =>
       val t0 = LakeTable.create(s, loc, Right(customerDf(s, d)),
         properties = Map("merge_mode" -> "merge-on-read"))
       t0.update(col("custkey") < 10, Map("account_balance" -> lit(1000.0)))
@@ -66,7 +69,7 @@ object LakeQueries {
 
   /** MoR DELETE (`sql:137`): drop every 10th customer. */
   def morDelete(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("mordel", d) { loc =>
+    val t = table("mordel", d) { loc =>
       val t0 = LakeTable.create(s, loc, Right(customerDf(s, d)),
         properties = Map("merge_mode" -> "merge-on-read"))
       t0.delete(col("custkey") % 10 === 0)
@@ -84,7 +87,7 @@ object LakeQueries {
     * delete-then-reinsert CDC streams converge).
     */
   def equalityDelete(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("eqdel", d) { loc =>
+    val t = table("eqdel", d) { loc =>
       val src = customerDf(s, d)
       val t0 = LakeTable.create(s, loc, Right(src),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -99,7 +102,7 @@ object LakeQueries {
 
   /** CoW UPDATE+DELETE (`sql:25` copy-on-write mode). */
   def cowDml(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("cowdml", d) { loc =>
+    val t = table("cowdml", d) { loc =>
       val t0 = LakeTable.create(s, loc, Right(customerDf(s, d)),
         properties = Map("merge_mode" -> "copy-on-write"))
       t0.update(col("custkey") < 10, Map("account_balance" -> lit(1000.0)))
@@ -111,7 +114,7 @@ object LakeQueries {
 
   /** MERGE (`sql:146-157`): upsert shifted customer range. */
   def mergeUpsert(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("merge", d) { loc =>
+    val t = table("merge", d) { loc =>
       val target = customerDf(s, d).filter(col("custkey") < 100)
       val source = customerDf(s, d)
         .filter(col("custkey") >= 50 && col("custkey") < 150)
@@ -127,7 +130,7 @@ object LakeQueries {
 
   /** Time travel (`sql:216`): read the pre-append snapshot. */
   def timeTravel(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("travel", d) { loc =>
+    val t = table("travel", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 100)))
       t0.setProperties(Map("graft.test.snap1" ->
@@ -141,7 +144,7 @@ object LakeQueries {
 
   /** Branch isolation (`sql:238-247`): DML on dev, main untouched. */
   private def branchScenario(s: SparkSession, d: String): LakeTable =
-    scenario("branch", d) { loc =>
+    table("branch", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 100)),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -181,7 +184,7 @@ object LakeQueries {
 
   /** CDC (`sql:114-125`): append + delete, then table_changes. */
   def cdcChanges(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("cdc", d) { loc =>
+    val t = table("cdc", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 100)),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -228,7 +231,7 @@ object LakeQueries {
     */
   private def parityDocsScenario(s: SparkSession, d: String)
       : graft.lake.LakeTable =
-    scenario("paritydocs", d) { loc =>
+    table("paritydocs", d) { loc =>
       val docs = s.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id"), col("text"))
       val t0 = LakeTable.create(s, loc,
@@ -293,7 +296,7 @@ object LakeQueries {
     * a delete, optimize, results unchanged.
     */
   def optimizeInvariance(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("optimize", d) { loc =>
+    val t = table("optimize", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 40)),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -318,7 +321,7 @@ object LakeQueries {
     * LakeLifecycleSpec; this entry makes the end state driver-visible.
     */
   def maintenanceInvariance(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("maint", d) { loc =>
+    val t = table("maint", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 60)),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -347,7 +350,7 @@ object LakeQueries {
     * partitioning; the filter prunes year files before Spark plans.
     */
   def prunedScan(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("pruned", d) { loc =>
+    val t = table("pruned", d) { loc =>
       LakeTable.create(s, loc, Right(Tables.orders(s, d)),
         partitioning = Seq("year(o_orderdate)"))
     }
@@ -367,7 +370,7 @@ object LakeQueries {
     * invariant (oracle = plain SQL over the source).
     */
   def zorderCompaction(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("zorder", d) { loc =>
+    val t = table("zorder", d) { loc =>
       val t0 = graft.lake.LakeTable.create(s, loc,
         Right(Tables.orders(s, d).repartition(6)))
       t0.optimize(fileSizeThresholdBytes = 1L << 30,
@@ -383,7 +386,7 @@ object LakeQueries {
 
   /** Schema evolution with v3 defaults (`sql:166-169`). */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("schevo", d) { loc =>
+    val t = table("schevo", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 50)))
       t0.addColumn("phone", org.apache.spark.sql.types.StringType,
@@ -402,7 +405,7 @@ object LakeQueries {
     */
   def dropColumnCycle(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.StringType
-    val t = scenario("dropcol", d) { loc =>
+    val t = table("dropcol", d) { loc =>
       import s.implicits._
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 30)))
@@ -429,7 +432,7 @@ object LakeQueries {
     * columns, so one task holds each partition value.
     */
   def specEvolution(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("specevo", d) { loc =>
+    val t = table("specevo", d) { loc =>
       import s.implicits._
       val src = Tables.customer(s, d)
         .join(broadcast(Tables.nation(s, d)),
@@ -467,7 +470,7 @@ object LakeQueries {
     * observables ride every row next to the invariant content.
     */
   def filteredOptimize(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("filtopt", d) { loc =>
+    val t = table("filtopt", d) { loc =>
       def livePaths(t0: LakeTable): Seq[String] =
         t0.metaTable("files").filter(col("content") === 0)
           .select("file_path").collect().map(_.getString(0)).toSeq
@@ -507,7 +510,7 @@ object LakeQueries {
 
   /** Snapshot log shape (rows-only check; deterministic columns). */
   def snapshotLog(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("snaplog", d) { loc =>
+    val t = table("snaplog", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 30)),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -524,7 +527,7 @@ object LakeQueries {
 
   /** Row lineage across UPDATE (`sql:133-135`): ids stable, seq bumps. */
   def rowLineage(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("lineage", d) { loc =>
+    val t = table("lineage", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 20)),
         properties = Map("merge_mode" -> "merge-on-read"))
@@ -542,7 +545,7 @@ object LakeQueries {
     * row-level diffs incl. deletes → `lake_cdc_changes`).
     */
   def incrementalRead(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("increment", d) { loc =>
+    val t = table("increment", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 100)))
       t0.setProperties(Map("graft.test.base" ->
@@ -561,9 +564,8 @@ object LakeQueries {
     * snapshot-history view (`sql:85-96`), re-planned at read.
     */
   def catalogViewHistory(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("catview", d) { loc =>
-      val cat = new graft.lake.LakeCatalog(s,
-        java.nio.file.Files.createTempDirectory("catq-").toString)
+    val t = table("catview", d) { loc =>
+      val cat = new graft.lake.LakeCatalog(s, warehouse(loc))
       cat.createSchema("demo")
       val t0 = cat.createTable("demo.vcust",
         customerDf(s, d).filter(col("custkey") < 50))
@@ -588,9 +590,8 @@ object LakeQueries {
     * proving the SQL surface and the DataFrame surface agree.
     */
   def sqlFederation(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("sqlfed", d) { loc =>
-      val cat = new graft.lake.LakeCatalog(s,
-        java.nio.file.Files.createTempDirectory("sqlfed-").toString)
+    val t = table("sqlfed", d) { loc =>
+      val cat = new graft.lake.LakeCatalog(s, warehouse(loc))
       cat.createSchema("tpch")
       cat.createTable("tpch.nation", Tables.nation(s, d))
       cat.createTable("tpch.orders", Tables.orders(s, d))
@@ -616,7 +617,7 @@ object LakeQueries {
     * saw published snapshots.
     */
   private def wapScenario(s: SparkSession, d: String): graft.lake.LakeTable =
-    scenario("wap", d) { loc =>
+    table("wap", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") <= 1000)))
       // round 1: stage a clean batch → audit passes → publish + tag
@@ -653,7 +654,7 @@ object LakeQueries {
     * stays the 100 TB route, exercised in LakeLifecycleSpec).
     */
   def statsShow(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("stats", d) { loc =>
+    val t = table("stats", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 200)))
       t0.analyze(exactNdv = true)
@@ -671,9 +672,8 @@ object LakeQueries {
     * from the materialized lake table, not a live re-plan.
     */
   def mviewRefresh(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("mview", d) { loc =>
-      val cat = new graft.lake.LakeCatalog(s,
-        java.nio.file.Files.createTempDirectory("mvq-").toString)
+    val t = table("mview", d) { loc =>
+      val cat = new graft.lake.LakeCatalog(s, warehouse(loc))
       cat.createSchema("demo")
       val ord = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -706,7 +706,7 @@ object LakeQueries {
     * delta-partials + per-key summing ≡ a full recompute.
     */
   def mviewIncremental(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("mvinc", d) { loc =>
+    val t = table("mvinc", d) { loc =>
       val ord = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       val src = LakeTable.create(s, loc,
@@ -738,11 +738,10 @@ object LakeQueries {
     * no data rewrite — then read through the catalog path.
     */
   def registerRead(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("register", d) { loc =>
+    val t = table("register", d) { loc =>
       val t0 = LakeTable.create(s, loc,
         Right(customerDf(s, d).filter(col("custkey") < 120)))
-      val cat = new graft.lake.LakeCatalog(s,
-        java.nio.file.Files.createTempDirectory("regq-").toString)
+      val cat = new graft.lake.LakeCatalog(s, warehouse(loc))
       cat.createSchema("adopted")
       cat.registerTable("adopted.customer", loc)
       t0.setProperties(Map("graft.test.cat" -> cat.warehouse))
@@ -760,9 +759,8 @@ object LakeQueries {
     * CREATE surface makes with scripts that parse it.
     */
   def showCreateDdl(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("showcreate", d) { loc =>
-      val cat = new graft.lake.LakeCatalog(s,
-        Files.createTempDirectory("ddlq-").toString)
+    val t = table("showcreate", d) { loc =>
+      val cat = new graft.lake.LakeCatalog(s, warehouse(loc))
       cat.createSchema("demo")
       val t0 = cat.createTable("demo.customer_ddl",
         customerDf(s, d).filter(col("custkey") < 50),
@@ -783,14 +781,13 @@ object LakeQueries {
     * world-shared path, no cross-run collisions); the one
     * nondeterministic token — the warehouse prefix — is replaced by a
     * stable `<warehouse>` placeholder so the rendered DDL stays a
-    * byte-stable oracle literal. Cached through the scenario map like
+    * byte-stable oracle literal. Built once through [[table]] like
     * every other catalog scenario, so repeated calls share one
-    * warehouse instead of leaking a temp dir each.
+    * warehouse.
     */
   def showCreateSchemaDdl(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("showcreateschema", d) { loc =>
-      val cat = new graft.lake.LakeCatalog(s,
-        Files.createTempDirectory("ddlsq-").toString)
+    val t = table("showcreateschema", d) { loc =>
+      val cat = new graft.lake.LakeCatalog(s, warehouse(loc))
       cat.createSchema("demo_fixed")
       val t0 = cat.createTable("demo_fixed.anchor",
         customerDf(s, d).filter(col("custkey") < 5))
@@ -816,7 +813,7 @@ object LakeQueries {
     * orderkey and NONE pays the footprint for the unlisted totalprice.
     */
   def bloomPointLookup(s: SparkSession, d: String): DataFrame = {
-    val t = scenario("bloom", d) { loc =>
+    val t = table("bloom", d) { loc =>
       val ord = Tables.orders(s, d).select(
         col("o_orderkey").as("orderkey"), col("o_custkey").as("custkey"),
         round(col("o_totalprice"), 2).as("totalprice"))

@@ -356,9 +356,6 @@ object PipelineQueries {
         sum(col("pcnt")).as("n_rows")))
       .orderBy("l_returnflag")
 
-  private val dedupIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental dedup: docs with `doc_id % 5 == 4` arrive as a NEW
     * batch probed against a persisted LSH index of the other 80% — the
     * daily-ingest shape (corpus never re-shingled). The oracle is the
@@ -368,12 +365,11 @@ object PipelineQueries {
     */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val loc = dedupIdxCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-dedupidx-")
-        .resolve("index").toString
-      IncrementalDedup.build(docs.filter(col("doc_id") % 5 =!= 4), dir)
-      dir
-    })
+    val loc = RegistryState.input("dedupIdx", d) { dir =>
+      val loc = dir.resolve("index").toString
+      IncrementalDedup.build(docs.filter(col("doc_id") % 5 =!= 4), loc)
+      loc
+    }
     IncrementalDedup.nearDupPairs(IncrementalDedup.load(s, loc),
         docs.filter(col("doc_id") % 5 === 4), threshold = 0.5)
       .orderBy("id_a", "id_b")
@@ -458,9 +454,6 @@ object PipelineQueries {
     Similarity.rankTopK(scored, k = 10).orderBy("query_id", "rank")
   }
 
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** IVF ANN top-10 (16 cells, probe 4) — same queries; recall vs the
     * brute-force baseline is asserted in PipelineSpec. The index
     * (k-means fit + cell assignment) is built once and persisted as a
@@ -471,13 +464,12 @@ object PipelineQueries {
   def simTopKIvf(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val loc = ivfCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-")
-        .resolve("index").toString
+    val loc = RegistryState.input("ivf", d) { dir =>
+      val loc = dir.resolve("index").toString
       Similarity.persistIvf(
-        Similarity.buildIvfDeterministic(emb, nlist = 16), dir)
-      dir
-    })
+        Similarity.buildIvfDeterministic(emb, nlist = 16), loc)
+      loc
+    }
     Similarity.ivfTopK(Similarity.loadIvf(s, loc), emb.filter(col("vec_id") < 5),
       k = 10, nprobe = 4)
       .orderBy("query_id", "rank")
@@ -1551,30 +1543,28 @@ object PipelineQueries {
         tgtFilter = col("vec_id") % 2 === 1)
       .orderBy("src_id")
 
-  // Memoized PER JVM AND DATASET DIR, like dedupIdxCache/ivfCache: the
-  // fixture parquet under a dir is immutable for a process lifetime, so
-  // the trained model is too. A session that mutates `documents` in
-  // place and expects a fresh model must retrain via
-  // TextAnalysis.persistLm directly (or restart) — the registry path's
-  // real freshness story is refreshLm deltas, not silent retraining.
-  private val lmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The persisted-model LM path: train on the held split ONCE, persist
     * as a kind-partitioned lake table, score the corpus against the
     * loaded model. Same oracle as [[textLmScore]] — the registry round
     * trip (train → lake commit → delta-summing read → score) must
     * reproduce the inline scores bit-for-bit.
+    *
+    * The model is a [[RegistryState.input]], like the dedup and IVF
+    * indexes: the fixture parquet under a dir is immutable for a
+    * process lifetime, so the trained model is too. A session that
+    * mutates `documents` in place and expects a fresh model must
+    * retrain via TextAnalysis.persistLm directly (or restart) — the
+    * registry path's real freshness story is refreshLm deltas, not
+    * silent retraining.
     */
   def textLmScorePersisted(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val loc = lmCache.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lm-")
-        .resolve("model").toString
+    val loc = RegistryState.input("lm", d) { dir =>
+      val loc = dir.resolve("model").toString
       TextAnalysis.persistLm(
-        TextAnalysis.trainLm(docs.filter(col("doc_id") % 5 === 0)), dir)
-      dir
-    })
+        TextAnalysis.trainLm(docs.filter(col("doc_id") % 5 === 0)), loc)
+      loc
+    }
     TextAnalysis.scoreWithLm(s, loc, docs).orderBy("doc_id")
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.TrinoFunctions
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming counterparts of the batch event analytics: the
   * same logical transforms declared over `readStream`, so a pipeline
@@ -13,37 +15,34 @@ import graft.functions.TrinoFunctions
   */
 object EventStreams {
 
-  /** A directory the streaming file source can monitor: a bare parquet
-    * FILE is wrapped in a fresh temp dir via symlink(s); a dataset
-    * directory passes through. `copies > 1` links the file that many
-    * times — each link is its own source file, simulating
-    * at-least-once/duplicated delivery for dedup tests.
+  /** Fill `dir` so the streaming file source can monitor the parquet
+    * FILE `path` through it: a symlink to the file, or `copies` links —
+    * each its own source file, simulating at-least-once/duplicated
+    * delivery for dedup tests — and return `dir`. A dataset directory
+    * passes through and leaves `dir` empty.
     */
-  def streamDir(path: String, copies: Int = 1): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isRegularFile(p)) {
-      val d = java.nio.file.Files.createTempDirectory("events-stream-")
+  def streamDir(dir: Path, path: String, copies: Int = 1): String = {
+    val p = Paths.get(path)
+    if (Files.isRegularFile(p)) {
       (1 to copies).foreach { i =>
-        d.resolve(if (copies == 1) p.getFileName.toString
-          else s"copy$i-${p.getFileName}") match {
-          case link => java.nio.file.Files.createSymbolicLink(
-            link, p.toAbsolutePath)
-        }
+        Files.createSymbolicLink(dir.resolve(
+          if (copies == 1) p.getFileName.toString
+          else s"copy$i-${p.getFileName}"), p.toAbsolutePath)
       }
-      d.toString
+      dir.toString
     } else {
       require(copies == 1, s"cannot duplicate a dataset directory: $path")
       path
     }
   }
 
-  /** [[streamDir]] plus a sentinel parquet sorting AFTER the event file:
-    * `sentinel(maxEpochMicros)` builds the far-future row(s) that
-    * advance the stream's final watermark past every pending
-    * window/timeout — the end-of-stream flush trick shared by
-    * sessionization and outer joins. The sentinel file is named to
-    * arrive last so single-batch file sources still see it at max
-    * event-time.
+  /** Fill `dir` with a link to the events FILE plus a sentinel parquet
+    * sorting AFTER it, and return `dir`: `sentinel(maxEpochMicros)`
+    * builds the far-future row(s) that advance the stream's final
+    * watermark past every pending window/timeout — the end-of-stream
+    * flush trick shared by sessionization and outer joins. The sentinel
+    * file is named to arrive last so single-batch file sources still
+    * see it at max event-time.
     *
     * Fixture-type defense: the callback works purely in epoch-MICROS
     * (receives the stream's max event time as µs, builds its `ts` as a
@@ -53,40 +52,47 @@ object EventStreams {
     * type cannot desynchronize sentinel and stream schemas.
     */
   def streamDirWithSentinel(spark: SparkSession, eventsPath: String,
-      sentinel: Long => DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("events-sentinel-")
-    val p = java.nio.file.Paths.get(eventsPath)
-    java.nio.file.Files.createSymbolicLink(
-      dir.resolve(p.getFileName), p.toAbsolutePath)
+      dir: Path)(sentinel: Long => DataFrame): String = {
+    val p = Paths.get(eventsPath)
+    Files.createSymbolicLink(dir.resolve(p.getFileName), p.toAbsolutePath)
     val raw = spark.read.parquet(eventsPath)
     val maxUs = raw.agg(max(unix_micros(TrinoFunctions.eventTime(raw))))
       .head().getLong(0)
     val tsType = raw.schema("ts").dataType
-    val coerced = sentinel(maxUs).withColumn("ts", tsType match {
+    writeParquetFile(sentinel(maxUs).withColumn("ts", tsType match {
       case org.apache.spark.sql.types.LongType => col("ts") * lit(1000L)
       case dt => timestamp_micros(col("ts")).cast(dt)
-    })
-    val tmp = java.nio.file.Files.createTempDirectory("sentinel-build-")
-    coerced.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    import scala.jdk.CollectionConverters._
-    val part = java.nio.file.Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    java.nio.file.Files.move(part, dir.resolve("zz-sentinel.parquet"))
-    java.nio.file.Files.walk(tmp)
-      .sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+    }), dir.resolve("zz-sentinel.parquet"))
     dir.toString
   }
 
-  /** The events table as a stream: `ts` surfaces as `event_time` via
-    * the type-adaptive [[TrinoFunctions.eventTime]] — the fixture has
-    * shipped both ns-epoch longs and µs timestamps, and the streaming
-    * readers must survive either (µs truncation of ns stays explicit,
+  /** Write `df` as the one parquet file `dst`: Spark writes a single
+    * part file into a hidden scratch directory beside `dst`, the part
+    * file moves into place and the scratch directory is deleted.
+    */
+  def writeParquetFile(df: DataFrame, dst: Path): Unit = {
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.build")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val ls = Files.list(tmp) // holds a directory fd until closed
+    val part =
+      try ls.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      finally ls.close()
+    Files.move(part, dst)
+    graft.lake.Writer.deleteRecursively(tmp)
+  }
+
+  /** The events table as a stream over `dir`, a directory the file
+    * source can monitor ([[streamDir]], [[streamDirWithSentinel]]):
+    * `ts` surfaces as `event_time` via the type-adaptive
+    * [[TrinoFunctions.eventTime]] — the fixture has shipped both
+    * ns-epoch longs and µs timestamps, and the streaming readers must
+    * survive either (µs truncation of ns stays explicit,
     * `iceberg_trino_sqldemo.sql:185-187` gap).
     */
-  def readEvents(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    val stream = spark.readStream.schema(schema).parquet(streamDir(path))
+  def readEvents(spark: SparkSession, dir: String): DataFrame = {
+    val schema = spark.read.parquet(dir).schema
+    val stream = spark.readStream.schema(schema).parquet(dir)
     stream.withColumn("event_time", TrinoFunctions.eventTime(stream))
   }
 

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.queries.RegistryState
 
 /** Corpus-scale SLOPE probe for the heaviest corpus-pass rows: builds a
   * `copies`× documents/embeddings fixture by deterministic self-union
@@ -63,20 +64,24 @@ object ScaleProbe {
     val qs = graft.SparkEntry.select(targets).map(q => q.name -> q.run)
       .sortBy(_._1)
     val spark = graft.SparkEnv.session()
-    val base = java.nio.file.Files.createTempDirectory("graft-scale-")
-    def rekey(table: String, idCol: String): Unit = {
-      val df = spark.read.parquet(s"$src/$table.parquet")
-      (0 until copies).map(k => df.withColumn(idCol,
-          col(idCol) + lit(k.toLong * 100000000L)))
-        .reduce(_ unionByName _)
-        .write.parquet(base.resolve(s"$table.parquet").toString)
-    }
-    rekey("documents", "doc_id")
-    rekey("embeddings", "vec_id")
-    new java.io.File(src).listFiles().foreach { f =>
-      val dst = base.resolve(f.getName)
-      if (!java.nio.file.Files.exists(dst))
-        java.nio.file.Files.createSymbolicLink(dst, f.toPath)
+    // the scaled fixture lives under the registry root, which
+    // RegistryState.close() deletes at the end of the run
+    val scaled = RegistryState.input(s"scale$copies", src) { base =>
+      def rekey(table: String, idCol: String): Unit = {
+        val df = spark.read.parquet(s"$src/$table.parquet")
+        (0 until copies).map(k => df.withColumn(idCol,
+            col(idCol) + lit(k.toLong * 100000000L)))
+          .reduce(_ unionByName _)
+          .write.parquet(base.resolve(s"$table.parquet").toString)
+      }
+      rekey("documents", "doc_id")
+      rekey("embeddings", "vec_id")
+      new java.io.File(src).listFiles().foreach { f =>
+        val dst = base.resolve(f.getName)
+        if (!java.nio.file.Files.exists(dst))
+          java.nio.file.Files.createSymbolicLink(dst, f.toPath)
+      }
+      base.toString
     }
     // Shuffle-write accounting per timed run (the scale evidence next
     // to wall-clock: a banded/bucketed op's exchanges must grow with
@@ -107,20 +112,18 @@ object ScaleProbe {
     }
     // warmup both dirs (codegen, scan caches), then interleaved passes
     qs.foreach { case (_, fn) =>
-      timeOne(fn, src); timeOne(fn, base.toString)
+      timeOne(fn, src); timeOne(fn, scaled)
     }
     val samples = (1 to Passes).flatMap { _ =>
       qs.map { case (name, fn) =>
-        // stream rows cache their ingest scenario per dataset dir —
-        // drop those caches before each timed run (the Bench stance)
-        // so every pass re-runs the door end-to-end; input-side wave
-        // dirs and the shared seed index stay cached, as in Bench
-        if (name.startsWith("stream_"))
-          graft.queries.StreamQueries.resetScenarioCaches()
+        // stream rows memoize their ingest scenario per dataset dir —
+        // drop the scenarios before each timed run (the Bench stance)
+        // so every pass re-runs the door end-to-end; registry inputs
+        // (wave dirs, the shared seed index) stay, as in Bench
+        if (name.startsWith("stream_")) RegistryState.reset()
         val (tb, nb, bb) = timeOne(fn, src)
-        if (name.startsWith("stream_"))
-          graft.queries.StreamQueries.resetScenarioCaches()
-        val (ts, ns, bs) = timeOne(fn, base.toString)
+        if (name.startsWith("stream_")) RegistryState.reset()
+        val (ts, ns, bs) = timeOne(fn, scaled)
         (name, tb, ts, nb, ns, bb, bs)
       }
     }
@@ -138,5 +141,6 @@ object ScaleProbe {
         f"${bb / 1048576.0}%.1f,${bs / 1048576.0}%.1f,$sr%.1f")
     }
     spark.stop()
+    RegistryState.close()
   }
 }

@@ -36,7 +36,7 @@ object StreamCostProbe {
       val fn = graft.SparkEntry.queries(q)
       // warmup pass
       fn(spark, d).count()
-      graft.queries.StreamQueries.resetScenarioCaches()
+      graft.queries.RegistryState.reset()
       Thread.sleep(500); jobs.clear()
       val t0 = System.nanoTime()
       fn(spark, d).count()
@@ -51,5 +51,6 @@ object StreamCostProbe {
       }
     }
     spark.stop()
+    graft.queries.RegistryState.close()
   }
 }

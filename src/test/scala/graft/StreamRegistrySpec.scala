@@ -1,12 +1,12 @@
 package graft
 
-import graft.queries.{Q, StreamQueries}
+import graft.queries.{Q, RegistryState, StreamQueries}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scenario memo's reset contract, which Bench's second stream pass
   * relies on: an ingest row runs its stream on the first call, reads
   * the memoized product without streaming on later calls, and after
-  * `resetScenarioCaches` streams again into a fresh table with the same
+  * `RegistryState.reset()` streams again into a fresh table with the same
   * answer. A row whose scenario escaped the reset would time a hot read
   * as its stream.
   */
@@ -25,7 +25,7 @@ class StreamRegistrySpec extends AnyFunSuite {
   rows.foreach { name =>
     test(s"$name streams once, then reads its memo until a reset") {
       val q = row(name)
-      StreamQueries.resetScenarioCaches()
+      RegistryState.reset()
       StreamQueries.streamPhaseSecs.remove(name)
       val first = sortedRows(q)
       assert(streamed(name), "the first call ran no stream")
@@ -35,7 +35,7 @@ class StreamRegistrySpec extends AnyFunSuite {
       assert(sortedRows(q) == first)
       assert(!streamed(name), "a call without a reset ran the stream again")
 
-      StreamQueries.resetScenarioCaches()
+      RegistryState.reset()
       assert(sortedRows(q) == first)
       assert(streamed(name), "the call after a reset ran no stream")
     }

@@ -12,6 +12,11 @@ class StreamingSpec extends AnyFunSuite {
   import TestSpark._
   private lazy val s = spark
 
+  /** The events file as a fresh stream source dir. */
+  private def eventsDir: String = EventStreams.streamDir(
+    java.nio.file.Files.createTempDirectory("events-stream-"),
+    s"$sf/events.parquet")
+
   /** A file stream over `frames` as ordered arrival waves: each frame
     * lands as one parquet file whose mtime pins its trigger order (the
     * file source batches by modification time — write timing alone is
@@ -47,7 +52,7 @@ class StreamingSpec extends AnyFunSuite {
       docs.filter(col("doc_id") % 2 === 1)))
 
   test("streamed hourly counts equal the batch aggregation") {
-    val events = EventStreams.readEvents(s, s"$sf/events.parquet")
+    val events = EventStreams.readEvents(s, eventsDir)
     val q = EventStreams.hourlyCounts(events)
       .writeStream.outputMode("complete")
       .format("memory").queryName("hourly_out").start()
@@ -287,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
     val expected = EventStreams.sessionizeBatch(batchEvents, gapMs = 600000L)
       .orderBy("user_id", "session_start")
 
-    val stream = EventStreams.readEvents(s, s"$sf/events.parquet")
+    val stream = EventStreams.readEvents(s, eventsDir)
       .select(col("user_id"), col("event_time"), col("value"))
       .as[EventStreams.Event]
     val q = EventStreams.sessionize(stream, gapMs = 600000L)
@@ -353,7 +358,8 @@ class StreamingSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("ingest-test-")
     // two files, one per micro-batch
     val src = s"$sf/events.parquet"
-    val streamDir = EventStreams.streamDir(src, copies = 2)
+    val streamDir = EventStreams.streamDir(
+      java.nio.file.Files.createDirectory(base.resolve("src")), src, copies = 2)
     def stream = s.readStream
       .schema(s.read.parquet(src).schema)
       .option("maxFilesPerTrigger", "1")
@@ -410,9 +416,11 @@ class StreamingSpec extends AnyFunSuite {
     val stale = batch.withColumn("value", lit(-1.0))
     val table = graft.lake.LakeTable.create(s,
       base.resolve("table").toString, Right(stale))
+    val streamDir = EventStreams.streamDir(
+      java.nio.file.Files.createDirectory(base.resolve("src")), src, copies = 2)
     def stream = s.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(EventStreams.streamDir(src, copies = 2))
+      .parquet(streamDir)
       .select(col("event_id"), col("user_id"), col("value"))
     val n = StreamIngest.upsertAvailable(stream, table, Seq("event_id"),
       "u", base.resolve("ckpt").toString)
