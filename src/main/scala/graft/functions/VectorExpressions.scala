@@ -84,66 +84,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Fused dot product over two double-array columns — the factored form
-  * of [[CosineSimilarity]] for all-pairs scoring where the norms are
-  * HOISTED per row (`cosine = dot/(n_a·n_b)`): the accumulation order
-  * and the `√Σx²` norm arithmetic are identical to the fused kernel's,
-  * so `dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b)))` is bit-equal to
-  * `CosineSimilarity(a,b)` while doing a third of the per-pair work
-  * (and none of the per-pair casting).
-  */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot_product expects array<double> inputs, got $l / $r")
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      dot += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    java.lang.Double.valueOf(dot)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $dot += $a.getDouble($i) * $b.getDouble($i);
-        }
-        ${ev.value} = $dot;
-      """
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Argmax-cosine against a FIXED centroid matrix in one fused pass:
   * `struct(cell, cosine)` of the nearest centroid per input vector.
   *
@@ -907,11 +847,6 @@ object VectorExpressions {
   /** Column API for [[CosineSimilarity]]. */
   def cosineNative(a: Column, b: Column): Column =
     graftshim.columnOf(CosineSimilarity(
-      graftshim.columnExpr(a), graftshim.columnExpr(b)))
-
-  /** Column API for [[DotProduct]]. */
-  def dotNative(a: Column, b: Column): Column =
-    graftshim.columnOf(DotProduct(
       graftshim.columnExpr(a), graftshim.columnExpr(b)))
 
   /** Column API for [[HyperplaneCodes]]: `planes` row-major, flattened. */

@@ -24,6 +24,8 @@ import graft.functions.TrinoFunctions._
   *    sizes — cannot flip the compared value.
   */
 object CoreQueries {
+  import OracleCtes._
+
   import Tables._
 
   /** Flagship: the federation aggregate, `iceberg_trino_sqldemo.sql:286-295`.
@@ -1101,10 +1103,7 @@ object CoreQueries {
 
   val entries: Seq[Q] = Seq(
     Q("q_federation_agg", federationAgg _,
-      """SELECT n_name AS nation, round(sum(o_totalprice), 2) AS total_price
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         JOIN orders ON o_custkey = c_custkey
-         GROUP BY n_name ORDER BY total_price, nation"""),
+      FederationAggOracle),
     Q("q_euro_customers", euroCustomers _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 round(c_acctbal) AS account_balance,
@@ -1152,10 +1151,7 @@ object CoreQueries {
                   ORDER BY o_totalprice DESC, o_orderkey) AS rn
                FROM orders) WHERE rn <= 3 ORDER BY orderstatus, rn"""),
     Q("q_events_hourly", eventsHourly _,
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_bucket,
-                event_type, count(*) AS n_events,
-                round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type"""),
+      EventsHourlyOracle),
     Q("q_events_json", eventsJsonExtract _,
       """SELECT event_type, count(*) AS n,
                 CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
@@ -1369,24 +1365,10 @@ object CoreQueries {
                         ORDER BY o_totalprice DESC, o_orderkey))
          WHERE rnk <= 100 ORDER BY priority, rnk, orderkey"""),
     Q("q_pivot_status", pivotStatus _,
-      """SELECT o_orderpriority AS priority,
-                round(sum(CASE WHEN o_orderstatus = 'F'
-                  THEN o_totalprice END), 2) AS total_f,
-                round(sum(CASE WHEN o_orderstatus = 'O'
-                  THEN o_totalprice END), 2) AS total_o,
-                round(sum(CASE WHEN o_orderstatus = 'P'
-                  THEN o_totalprice END), 2) AS total_p
-         FROM orders GROUP BY o_orderpriority ORDER BY priority"""),
+      s"""$StatusPivot ORDER BY priority"""),
     Q("q_unpivot_status", unpivotStatus _,
-      """WITH p AS (
-           SELECT o_orderpriority AS priority,
-                  round(sum(CASE WHEN o_orderstatus = 'F'
-                    THEN o_totalprice END), 2) AS total_f,
-                  round(sum(CASE WHEN o_orderstatus = 'O'
-                    THEN o_totalprice END), 2) AS total_o,
-                  round(sum(CASE WHEN o_orderstatus = 'P'
-                    THEN o_totalprice END), 2) AS total_p
-           FROM orders GROUP BY o_orderpriority),
+      s"""WITH p AS (
+           $StatusPivot),
          u AS (
            SELECT priority, 'F' AS orderstatus, total_f AS total FROM p
            UNION ALL
@@ -1422,20 +1404,7 @@ object CoreQueries {
     // session_window semantics: merge on OVERLAP (strict), window end =
     // last event + gap — gaps-and-islands with `>=` and a shifted end
     Q("q_session_window", sessionWindows _,
-      """WITH x AS (
-           SELECT user_id,
-                  CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t,
-                  value,
-                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         IS NULL
-                       OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         >= INTERVAL 10 MINUTE
-                       THEN 1 ELSE 0 END AS new_s
-           FROM events),
-         g AS (
-           SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY t
-             ROWS UNBOUNDED PRECEDING) AS grp
-           FROM x)
+      s"""${sessionCtes(", value", ">=")}
          SELECT user_id, min(t) AS session_start,
                 max(t) + INTERVAL 10 MINUTE AS session_end,
                 CAST(count(*) AS INT) AS n_events,

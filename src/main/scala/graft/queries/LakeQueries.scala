@@ -14,6 +14,7 @@ import graft.lake.{LakeTable, Scan}
   * checks and are covered by LakeLifecycleSpec instead.
   */
 object LakeQueries {
+  import OracleCtes._
 
   /** Row `key`'s scenario table over dataset `d`, built once per process
     * ([[RegistryState.input]]): Verify/Bench call every query function,
@@ -862,10 +863,7 @@ object LakeQueries {
     */
   val entries: Seq[Q] = Seq(
     Q("q_sql_federation", sqlFederation _,
-      """SELECT n_name AS nation, round(sum(o_totalprice), 2) AS total_price
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         JOIN orders ON o_custkey = c_custkey
-         GROUP BY n_name ORDER BY total_price, nation"""),
+      FederationAggOracle),
     Q("lake_ctas_select", ctasSelect _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 c_mktsegment AS mktsegment, n_name AS nation
@@ -875,13 +873,9 @@ object LakeQueries {
     // main = base + the one audited-clean batch; the poisoned batch
     // (custkey < 50 re-staged with a nulled name) must be invisible
     Q("lake_wap_publish", wapPublish _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey <= 1200 ORDER BY custkey"""),
+      customerRows("c_custkey <= 1200")),
     Q("lake_tag_read", tagRead _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey <= 1200 ORDER BY custkey"""),
+      customerRows("c_custkey <= 1200")),
     Q("lake_mor_update", morUpdate _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 CASE WHEN c_custkey < 10 THEN 1000.0 ELSE c_acctbal END
@@ -889,16 +883,11 @@ object LakeQueries {
                 c_mktsegment AS mktsegment
          FROM customer ORDER BY custkey"""),
     Q("lake_mor_delete", morDelete _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey % 10 <> 0 ORDER BY custkey"""),
+      customerRows("c_custkey % 10 <> 0")),
     // survivors = keys not deleted, plus the re-appended half of the
     // deleted keys (identical values, later sequence → immune)
     Q("lake_equality_delete", equalityDelete _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey % 7 <> 0 OR c_custkey % 14 = 0
-         ORDER BY custkey"""),
+      customerRows("c_custkey % 7 <> 0 OR c_custkey % 14 = 0")),
     Q("lake_cow_dml", cowDml _,
       """SELECT c_custkey AS custkey, c_name AS name,
                 CASE WHEN c_custkey < 10 THEN 1000.0 ELSE c_acctbal END
@@ -914,18 +903,11 @@ object LakeQueries {
                 c_mktsegment AS mktsegment
          FROM customer WHERE c_custkey < 150 ORDER BY custkey"""),
     Q("lake_time_travel", timeTravel _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 100 ORDER BY custkey"""),
+      customerRows("c_custkey < 100")),
     Q("lake_branch_main", branchMain _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 100 ORDER BY custkey"""),
+      customerRows("c_custkey < 100")),
     Q("lake_branch_dev", branchDev _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey >= 5 AND c_custkey < 110
-         ORDER BY custkey"""),
+      customerRows("c_custkey >= 5 AND c_custkey < 110")),
     Q("lake_cdc_changes", cdcChanges _,
       """SELECT * FROM (
            SELECT 'insert' AS change_type, c_custkey AS custkey
@@ -954,45 +936,7 @@ object LakeQueries {
     // text_drift_psi CTE chain — same capped sample, integer decile
     // edges, add-one smoothing, and operand-for-operand ln term.
     Q("lake_drift_psi", lakeDriftPsi _,
-      """WITH t AS (
-           SELECT doc_id, doc_id % 2 = 0 AS isref,
-                  CAST(len(string_split_regex(trim(text), '\s+'))
-                    AS BIGINT) AS nt
-           FROM documents),
-         samp AS (SELECT doc_id, nt FROM t
-                  WHERE isref AND doc_id % 10 = 0 AND nt IS NOT NULL
-                  ORDER BY doc_id LIMIT 1000),
-         sn AS (SELECT count(*) AS n FROM samp),
-         sv AS (SELECT nt, row_number() OVER (ORDER BY nt) AS rk
-                FROM samp),
-         cuts AS (SELECT CAST(q.q AS INT) AS bin, sv.nt AS v
-                  FROM (SELECT unnest(range(1, 10)) AS q) q, sn, sv
-                  WHERE sv.rk = (q.q * sn.n + 9) // 10),
-         b AS (SELECT t.doc_id, t.isref,
-                      CAST(count(c.v) AS INT) AS bin
-               FROM t LEFT JOIN cuts c ON c.v <= t.nt
-               GROUP BY t.doc_id, t.isref),
-         g AS (SELECT bin,
-                      count(*) FILTER (WHERE isref) AS ref_n,
-                      count(*) FILTER (WHERE NOT isref) AS cur_n
-               FROM b GROUP BY bin),
-         tot AS (SELECT CAST(sum(ref_n) AS DOUBLE) AS rt,
-                        CAST(sum(cur_n) AS DOUBLE) AS ct FROM g),
-         bins AS (SELECT CAST(unnest(range(0, 10)) AS INT) AS bin),
-         g2 AS (SELECT bins.bin,
-                       coalesce(g.ref_n, 0) AS ref_n,
-                       coalesce(g.cur_n, 0) AS cur_n
-                FROM bins LEFT JOIN g ON g.bin = bins.bin)
-         SELECT g2.bin, c.v AS lo_tokens, g2.ref_n, g2.cur_n,
-                round((g2.ref_n + 1.0) / (tot.rt + 10.0), 6) AS p_ref,
-                round((g2.cur_n + 1.0) / (tot.ct + 10.0), 6) AS p_cur,
-                round(((g2.cur_n + 1.0) / (tot.ct + 10.0) -
-                       (g2.ref_n + 1.0) / (tot.rt + 10.0)) *
-                      ln(((g2.cur_n + 1.0) / (tot.ct + 10.0)) /
-                         ((g2.ref_n + 1.0) / (tot.rt + 10.0))), 6)
-                  AS psi_bin
-         FROM g2 CROSS JOIN tot LEFT JOIN cuts c ON c.bin = g2.bin
-         ORDER BY g2.bin"""),
+      tokenPsi("doc_id % 2 = 0")),
     // The parity replay of the corpus-diff scenario fed through the
     // sketch_corpus_diff CTE chain: before = the full corpus (baseline
     // ∪ insert delta = all documents), after (keep) = the even-id
@@ -1002,7 +946,7 @@ object LakeQueries {
       ("""WITH base AS (SELECT doc_id % 2 = 0 AS keep,
                   string_split_regex(trim(lower(text)), '\s+') AS words
                 FROM documents),
-         """ + PipelineQueries.CorpusDiffChainCtes + """
+         """ + CorpusDiffChainCtes + """
          SELECT cnt.n_docs_before AS n_docs,
                 cnt.n_docs_after AS n_docs_base,
                 cnt.n_tokens_before AS n_tokens,
@@ -1014,10 +958,7 @@ object LakeQueries {
                 mass.top20_mass_after AS top20_mass_base
          FROM cnt, ev, jac, mass""")),
     Q("lake_optimize_invariance", optimizeInvariance _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 80 AND c_custkey % 9 <> 0
-         ORDER BY custkey"""),
+      customerRows("c_custkey < 80 AND c_custkey % 9 <> 0")),
     Q("lake_zorder_compaction", zorderCompaction _,
       """SELECT o_orderkey AS orderkey, round(o_totalprice, 2) AS totalprice
          FROM orders WHERE o_totalprice < 20000.0 ORDER BY orderkey"""),
@@ -1029,8 +970,7 @@ object LakeQueries {
            AND o_orderdate <  TIMESTAMP '1998-01-01'
          ORDER BY orderkey"""),
     Q("lake_schema_evolution", schemaEvolution _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment,
+      s"""SELECT $CustomerCols,
                 '+33606060606' AS phone
          FROM customer WHERE c_custkey < 50 ORDER BY custkey"""),
     // Field-id stability: the pre-drop file's message bytes must NOT
@@ -1069,15 +1009,11 @@ object LakeQueries {
     // backdated generation's files survive untouched, the recent
     // generation collapsed to one file.
     Q("lake_filtered_optimize", filteredOptimize _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment,
+      s"""SELECT $CustomerCols,
                 TRUE AS old_files_untouched, TRUE AS recent_files_compacted
          FROM customer WHERE c_custkey < 120 ORDER BY custkey"""),
     Q("lake_incremental_read", incrementalRead _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey >= 100 AND c_custkey < 200
-         ORDER BY custkey"""),
+      customerRows("c_custkey >= 100 AND c_custkey < 200")),
     // The scenario's commit sequence is fully deterministic (ids are a
     // monotone counter): create+append, append, update, delete.
     Q("lake_snapshot_log", snapshotLog _,
@@ -1098,9 +1034,7 @@ object LakeQueries {
     // fixed-width types / Σlength for strings, min/max rendered as
     // strings (both engines print shortest-round-trip doubles).
     Q("lake_stats", statsShow _,
-      """WITH src AS (SELECT c_custkey AS custkey, c_name AS name,
-                             c_acctbal AS account_balance,
-                             c_mktsegment AS mktsegment
+      s"""WITH src AS (SELECT $CustomerCols
                       FROM customer WHERE c_custkey < 200),
               n AS (SELECT count(*) AS rc FROM src)
          SELECT * FROM (
@@ -1172,9 +1106,7 @@ object LakeQueries {
     // register_table is a metadata pointer — the read-back must be the
     // source slice, byte for byte
     Q("lake_register", registerRead _,
-      """SELECT c_custkey AS custkey, c_name AS name,
-                c_acctbal AS account_balance, c_mktsegment AS mktsegment
-         FROM customer WHERE c_custkey < 120 ORDER BY custkey"""),
+      customerRows("c_custkey < 120")),
     // Row ids are assigned in file order (customer.parquet is custkey-
     // ordered, keys from 0), so lineage is a pure function of custkey;
     // the custkey<5 UPDATE bumps those rows to sequence 2.

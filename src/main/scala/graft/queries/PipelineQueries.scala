@@ -11,6 +11,7 @@ import graft.pipeline._
   * assertions (recall vs brute force, determinism).
   */
 object PipelineQueries {
+  import OracleCtes._
 
   /** Exact dedup: representative id + dup count per distinct text. */
   def dedupExact(s: SparkSession, d: String): DataFrame =
@@ -2002,18 +2003,8 @@ object PipelineQueries {
   }
 
   private val DecontaminateOracle =
-    """WITH s AS (
-         SELECT doc_id,
-                ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                  18, 15))::UBIGINT % 100 AS bucket,
-                string_split_regex(trim(lower(text)), '\s+') AS words
-         FROM documents),
-       g AS (
-         SELECT doc_id, bucket, unnest(list_distinct(
-           list_transform(range(1, greatest(len(words) - 7, 1) + 1),
-             i -> array_to_string(words[i:least(i+7, len(words))], ' '))))
-             AS gram
-         FROM s),
+    s"""WITH ${bucketWords("s")},
+       ${gram8Set("g", "s")},
        bench AS (SELECT DISTINCT gram FROM g WHERE bucket >= 90)
        SELECT g.doc_id, count(*) AS n_shared
        FROM g JOIN bench USING (gram) WHERE g.bucket < 80
@@ -2098,9 +2089,7 @@ object PipelineQueries {
     val rounds = (2 to k).map { r =>
       s""",
          d$r AS (SELECT a.vec_id,
-                   round(min(list_sum(list_transform(
-                     range(1, len(a.v) + 1),
-                     i -> (a.v[i] - s.v[i]) * (a.v[i] - s.v[i])))), 6)
+                   round(min(${sqDist("a", "s")}), 6)
                      AS dist
                  FROM v a CROSS JOIN (${selu(r - 1)}) s
                  WHERE a.vec_id NOT IN
@@ -2130,32 +2119,10 @@ object PipelineQueries {
   private val FewshotOracle: String =
     s"""WITH v AS MATERIALIZED (
            SELECT doc_id AS vec_id,
-                  list_transform(range(0, 8), j ->
-                    list_sum(list_transform(
-                      list_transform(string_split_regex(trim(text),
-                        '\\s+'), t -> md5(t)),
-                      hh -> (CAST(('0x' || substr(hh,
-                          CAST(j * 4 + 1 AS INT), 4)) AS BIGINT)
-                        % 2001 - 1000) / 1000.0))) AS v
+                  ${md5Embed("list_transform(string_split_regex(trim(text), " +
+                    "'\\s+'), t -> md5(t))")} AS v
            FROM documents
-           WHERE round(
-             (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3
-               ELSE 0 END) +
-             (CASE WHEN len(list_filter(string_split_regex(
-                 trim(lower(text)), '\\s+'),
-                 w -> list_contains(['the','a','an','and','or','of','to',
-                   'in','is','it','that','for','on','with','as','at','by'],
-                   w)))::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)),
-                   '\\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
-                 ::DOUBLE
-               / greatest(length(text), 1) <= 0.2 THEN 0.2 ELSE 0 END) +
-             (CASE WHEN list_sum(list_transform(string_split_regex(
-                 trim(lower(text)), '\\s+'), w -> length(w)))::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)),
-                   '\\s+')), 1) BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END),
-             2) >= 0.5),
+           WHERE round(${qualitySum(Words)}, 2) >= 0.5),
          ${coresetTraversalSql(16)}
          SELECT rk, vec_id AS doc_id, dist FROM picks ORDER BY rk"""
 
@@ -2276,461 +2243,6 @@ object PipelineQueries {
               CROSS JOIN v
        GROUP BY b.doc_id ORDER BY b.doc_id"""
 
-  /** The rule-gate CTE chain (w → g → sig → v) shared by the
-    * batch gate oracle and the streaming quality-door oracle — one
-    * definition, so the two checks can never drift.
-    */
-  /** The rule-gate CTE chain (w -> g -> sig -> v) shared by the
-    * batch gate oracle and the streaming quality-door oracle - one
-    * definition, so the two checks can never drift.
-    */
-  /** The deterministic IVF index replayed in SQL — md5 seeding at
-    * nlist=16, two Lloyd rounds (cosine-argmax assignment, 1e-12
-    * gridded elementwise-mean update), final L2 cell assignment of
-    * every vector (`asg`) with the final centroid table exposed as
-    * `c2`. ONE definition consumed by `sim_topk_ivf` (query probing)
-    * and `knn_graph_ivf` (graph build): both rows probe the SAME
-    * index, so they share its replay text.
-    */
-  private[queries] val IvfFit16Ctes: String =
-    """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings),
-       seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                FROM v ORDER BY h, vec_id LIMIT 16),
-       init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                  AS INT) AS cell, v FROM seed),
-       s1 AS (SELECT a.vec_id, a.v, i.cell,
-                     list_cosine_similarity(a.v, i.v) AS sim
-              FROM v a CROSS JOIN init i),
-       a1 AS (SELECT vec_id, v, cell FROM
-               (SELECT *, row_number() OVER (PARTITION BY vec_id
-                  ORDER BY sim DESC, cell) AS rn FROM s1)
-              WHERE rn = 1),
-       u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-               (SELECT cell, unnest(v) AS x,
-                       generate_subscripts(v, 1) AS pos FROM a1)
-              GROUP BY cell, pos),
-       c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u1
-              GROUP BY cell),
-       s2 AS (SELECT a.vec_id, a.v, c.cell,
-                     list_cosine_similarity(a.v, c.v) AS sim
-              FROM v a CROSS JOIN c1 c),
-       a2 AS (SELECT vec_id, v, cell FROM
-               (SELECT *, row_number() OVER (PARTITION BY vec_id
-                  ORDER BY sim DESC, cell) AS rn FROM s2)
-              WHERE rn = 1),
-       u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-               (SELECT cell, unnest(v) AS x,
-                       generate_subscripts(v, 1) AS pos FROM a2)
-              GROUP BY cell, pos),
-       c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
-              GROUP BY cell),
-       asg AS (SELECT vec_id, v, cell FROM
-                (SELECT a.vec_id, a.v, c.cell,
-                        row_number() OVER (PARTITION BY a.vec_id
-                          ORDER BY list_distance(a.v, c.v), c.cell)
-                          AS rn
-                 FROM v a CROSS JOIN c2 c)
-               WHERE rn = 1)"""
-
-  /** The per-language KMV sketch replayed in SQL — word 3-shingles
-    * and the winnowing family's 60-bit md5 gram hash (the
-    * dedup_winnow_pairs `g`/`h` idiom), distinct (lang, hash), k=256
-    * smallest per language. ONE definition consumed by both sketch
-    * rows: the Jaccard row's set algebra must read the same member
-    * sketches the distinct-count row reports.
-    */
-  private[queries] val KmvSketchCtes: String =
-    """ws AS (SELECT lang, string_split_regex(trim(lower(text)), '\s+')
-                AS words
-              FROM documents),
-       sh AS (SELECT lang AS grp,
-                unnest(list_transform(
-                  range(1, greatest(len(words) - 2, 0) + 1),
-                  i -> array_to_string(words[i:i+2], ' '))) AS gram
-              FROM ws),
-       hh AS (SELECT DISTINCT grp,
-                ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
-              FROM sh),
-       sk AS (SELECT grp, h FROM
-               (SELECT grp, h, row_number() OVER
-                  (PARTITION BY grp ORDER BY h) AS rk FROM hh)
-              WHERE rk <= 256)"""
-
-  /** The pretrain chain's shared oracle CTEs (ingest-dedup kept set →
-    * quality gate → DSIR pool → token budget), ONE definition consumed
-    * by both pipeline_pretrain and pipeline_pretrain_attrition — the
-    * audit must replay the pipeline that ships, not a drifted copy.
-    * Multi-referenced CTEs are MATERIALIZED: DuckDB inlines CTEs by
-    * default, and the attrition fold reads q/g/pool/a twice each (and
-    * kept1/kept/bk up to five times), which re-evaluated the all-pairs
-    * Jaccard `p` chain per reference — the sf0.1 replay blew a 90-min
-    * budget that the materialized form finishes in minutes. Results
-    * are unchanged (materialization is an evaluation strategy, not a
-    * semantic).
-    */
-  // Every exact-Jaccard pair join below carries the EXACT length-ratio
-  // band (J >= t forces t·max(|A|,|B|) <= |A∩B| <= min(|A|,|B|), so
-  // min >= t·max — PPJoin's length filter): pairs outside the band are
-  // pruned BEFORE their intersection is computed, with zero recall
-  // loss. At sf0.1 this keeps the all-pairs oracles inside the
-  // standard sweep cap (r12 needed a 7200 s special case).
-  private[queries] val PretrainChainCtes: String =
-    """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         sh AS MATERIALIZED (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w),
-         p AS MATERIALIZED (
-           SELECT id_a, id_b FROM (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                    a.sh AS sha, b.sh AS shb
-             FROM sh a JOIN sh b
-               ON a.doc_id < b.doc_id
-              AND len(a.sh) <= 2 * len(b.sh)
-              AND len(b.sh) <= 2 * len(a.sh))
-           WHERE len(list_intersect(sha, shb))::DOUBLE /
-                 (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-                 >= 0.5),
-         kept1 AS MATERIALIZED (
-           SELECT d.doc_id FROM documents d
-           WHERE d.doc_id % 2 = 0
-             AND NOT EXISTS (SELECT 1 FROM p
-               WHERE p.id_b = d.doc_id AND p.id_a % 2 = 0)),
-         kept2 AS (
-           SELECT d.doc_id FROM documents d
-           WHERE d.doc_id % 2 = 1
-             AND NOT EXISTS (SELECT 1 FROM p JOIN kept1 k
-               ON (p.id_a = k.doc_id AND p.id_b = d.doc_id)
-               OR (p.id_b = k.doc_id AND p.id_a = d.doc_id))
-             AND NOT EXISTS (SELECT 1 FROM p
-               WHERE p.id_b = d.doc_id AND p.id_a % 2 = 1)),
-         kept AS MATERIALIZED (
-           SELECT d.* FROM documents d
-           JOIN (SELECT doc_id FROM kept1
-                 UNION ALL SELECT doc_id FROM kept2) k USING (doc_id)),
-         q AS MATERIALIZED (
-           SELECT doc_id, lang,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-                    AS n_tokens,
-                  CAST(round(
-             (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3 ELSE 0
-               END) +
-             (CASE WHEN len(list_filter(string_split_regex(trim(lower(text)),
-                 '\s+'),
-                 w -> list_contains(['the','a','an','and','or','of','to','in',
-                   'is','it','that','for','on','with','as','at','by'], w)))
-                 ::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)), '\s+')),
-                 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-                 ::DOUBLE
-               / greatest(length(text), 1) <= 0.2 THEN 0.2 ELSE 0 END) +
-             (CASE WHEN list_sum(list_transform(string_split_regex(
-                 trim(lower(text)), '\s+'), w -> length(w)))::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)), '\s+')),
-                 1) BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END), 2) AS DOUBLE)
-             AS quality_score
-           FROM kept),
-         g AS MATERIALIZED (SELECT * FROM q WHERE quality_score >= 0.5),
-         bk AS MATERIALIZED (SELECT bi.doc_id, bi.is_t,
-                  CAST(('0x' || substr(md5(bi.gram), 1, 8)) AS BIGINT)
-                    % 1024 AS bkt
-                FROM (
-                  SELECT k.doc_id, g2.quality_score >= 0.8 AS is_t,
-                         unnest(list_transform(range(1, len(
-                             string_split_regex(trim(lower(k.text)),
-                               '\s+'))),
-                           i -> string_split_regex(trim(lower(k.text)),
-                                  '\s+')[i] || ' ' ||
-                                string_split_regex(trim(lower(k.text)),
-                                  '\s+')[i + 1])) AS gram
-                  FROM kept k JOIN g g2 USING (doc_id)) bi),
-         dtc AS (SELECT bkt, count(*) AS tc FROM bk WHERE is_t
-                 GROUP BY bkt),
-         drc AS (SELECT bkt, count(*) AS rc FROM bk WHERE NOT is_t
-                 GROUP BY bkt),
-         dtt AS (SELECT count(*) AS t FROM bk WHERE is_t),
-         drt AS (SELECT count(*) AS r FROM bk WHERE NOT is_t),
-         dlam AS (SELECT drc.bkt,
-                    ln((coalesce(dtc.tc, 0) + 1.0) / (dtt.t + 1024)) -
-                    ln((drc.rc + 1.0) / (drt.r + 1024)) AS lam
-                  FROM drc LEFT JOIN dtc USING (bkt)
-                  CROSS JOIN dtt CROSS JOIN drt),
-         ddb AS (SELECT doc_id, bkt, count(*) AS c FROM bk
-                 WHERE NOT is_t GROUP BY 1, 2),
-         dsc AS (SELECT ddb.doc_id, round(sum(dlam.lam * ddb.c), 6)
-                   AS score
-                 FROM ddb JOIN dlam USING (bkt)
-                 GROUP BY ddb.doc_id),
-         dsel AS (SELECT doc_id FROM (
-                    SELECT doc_id, row_number() OVER
-                      (ORDER BY score DESC, doc_id) AS rk
-                    FROM dsc)
-                  WHERE rk <= 150),
-         pool AS MATERIALIZED (SELECT * FROM g WHERE quality_score >= 0.8
-                  UNION ALL
-                  SELECT g.* FROM g JOIN dsel USING (doc_id)
-                  WHERE g.quality_score < 0.8),
-         r AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                 ORDER BY quality_score DESC, doc_id
-                 ROWS UNBOUNDED PRECEDING) AS cum
-               FROM pool),
-         a AS MATERIALIZED (SELECT * FROM r WHERE cum <= 4000),"""
-
-  /** The dedup_blob_near oracle's dhash/band/cap/verify chain, shared
-    * with dedup_blob_clusters (which adds the recursive component
-    * closure on top) — one definition so the pair semantics cannot
-    * drift between the pair row and the cluster row. Ends in `npairs`
-    * (modality, id_a, id_b, hamming), the verified pair set.
-    */
-  /** The winnow near-dup candidate chain (fingerprints → df cap →
-    * fp-bucket self-join → shared-count filter), ONE definition
-    * consumed by dedup_winnow_pairs and the source-matrix fold — the
-    * shared-pair-CTE stance (BlobDhashPairCtes).
-    */
-  private[queries] val WinnowPairCtes: String =
-    """wdoc AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         g AS (
-           SELECT doc_id, list_transform(
-             range(1, greatest(len(words) - 2, 0) + 1),
-             i -> array_to_string(words[i:i+2], ' ')) AS grams
-           FROM wdoc),
-         h AS (
-           SELECT doc_id, list_transform(grams,
-             x -> ('0x' || substr(md5(x), 18, 15))::BIGINT) AS hs
-           FROM g),
-         f AS (
-           SELECT doc_id, list_filter(list_distinct(list_transform(
-             range(1, greatest(len(hs) - 4, 0) + 2),
-             i -> list_min(hs[i:i+3]))), x -> x IS NOT NULL) AS fps
-           FROM h),
-         e AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-         dfq AS (SELECT fp, count(*) AS dfreq FROM e GROUP BY fp),
-         kept AS (SELECT e.doc_id, e.fp FROM e JOIN dfq USING (fp)
-                  WHERE dfreq <= 50),
-         sz AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-         p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      count(*) AS n_shared
-               FROM kept a JOIN kept b
-                 ON a.fp = b.fp AND a.doc_id < b.doc_id
-               GROUP BY 1, 2
-               HAVING count(*) >= 3)"""
-
-  /** The corpus-diff estimator chain — exact doc/token counts, both
-    * KMV shingle sketches + their resemblance, both conditional CMS
-    * grids + before-top-20 probe mass — ONE definition reading a
-    * caller-supplied `base(keep BOOLEAN, words VARCHAR[])` CTE.
-    * Consumed by sketch_corpus_diff (gate flag) and lake_corpus_diff
-    * (snapshot-parity flag); canonical column names are the sketch
-    * row's before/after — version-diff consumers rename in their final
-    * SELECT. The shared-chain stance (QualityGateCtes/WinnowPairCtes):
-    * an estimator-constant change can't drift one replay from the
-    * other.
-    */
-  private[queries] val CorpusDiffChainCtes: String =
-    """cnt AS (SELECT count(*) AS n_docs_before,
-                        CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END)
-                          AS BIGINT) AS n_docs_after,
-                        CAST(sum(len(words)) AS BIGINT) AS n_tokens_before,
-                        CAST(sum(CASE WHEN keep THEN len(words) ELSE 0 END)
-                          AS BIGINT) AS n_tokens_after
-                 FROM base),
-         shb AS (SELECT keep, unnest(list_transform(
-                   range(1, greatest(len(words) - 2, 0) + 1),
-                   i -> array_to_string(words[i:i+2], ' '))) AS gram
-                 FROM base),
-         hb AS (SELECT DISTINCT
-                  ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
-                FROM shb),
-         ha AS (SELECT DISTINCT
-                  ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
-                FROM shb WHERE keep),
-         skb AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h)
-                   AS rk FROM hb) WHERE rk <= 256),
-         ska AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h)
-                   AS rk FROM ha) WHERE rk <= 256),
-         vb AS (SELECT count(*) AS fill, max(h) AS kth FROM skb),
-         va AS (SELECT count(*) AS fill, max(h) AS kth FROM ska),
-         ev AS (SELECT
-                  CASE WHEN vb.fill < 256 THEN vb.fill::BIGINT
-                       ELSE CAST(round((vb.fill - 1) * pow(2.0, 60)
-                                       / vb.kth) AS BIGINT) END
-                    AS est_vocab_before,
-                  CASE WHEN va.fill < 256 THEN va.fill::BIGINT
-                       ELSE CAST(round((va.fill - 1) * pow(2.0, 60)
-                                       / va.kth) AS BIGINT) END
-                    AS est_vocab_after
-                FROM vb, va),
-         comb AS (SELECT h, max(in_b) AS in_b, max(in_a) AS in_a FROM
-                   (SELECT h, 1 AS in_b, 0 AS in_a FROM skb
-                    UNION ALL SELECT h, 0, 1 FROM ska)
-                  GROUP BY h),
-         combk AS (SELECT * FROM (SELECT *, row_number() OVER
-                     (ORDER BY h) AS rk FROM comb) WHERE rk <= 256),
-         jac AS (SELECT round(sum(in_b * in_a)::DOUBLE / count(*), 6)
-                   AS est_jaccard FROM combk),
-         wt AS (SELECT keep, unnest(words) AS word FROM base),
-         hd AS (SELECT unnest([0, 1, 2, 3]) AS d),
-         cgrid AS (SELECT d,
-                     CAST(('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                       || word), 18, 15))::UBIGINT AS BIGINT) % 1024
-                       AS bkt,
-                     count(*) AS cnt_b,
-                     sum(CASE WHEN keep THEN 1 ELSE 0 END) AS cnt_a
-                   FROM wt CROSS JOIN hd GROUP BY d, bkt),
-         top AS (SELECT word FROM (SELECT word, count(*) AS n FROM wt
-                   GROUP BY word ORDER BY n DESC, word LIMIT 20)),
-         pbq AS (SELECT top.word, hd.d,
-                   CAST(('0x' || substr(md5(CAST(hd.d AS VARCHAR) || ':'
-                     || top.word), 18, 15))::UBIGINT AS BIGINT) % 1024
-                     AS bkt
-                 FROM top CROSS JOIN hd),
-         pe AS (SELECT word, min(cnt_b) AS eb, min(cnt_a) AS ea
-                FROM pbq JOIN cgrid USING (d, bkt) GROUP BY word),
-         mass AS (SELECT CAST(sum(eb) AS BIGINT) AS top20_mass_before,
-                         CAST(sum(ea) AS BIGINT) AS top20_mass_after
-                  FROM pe)"""
-
-  private[queries] val BlobDhashPairCtes: String =
-    """WITH RECURSIVE b AS (
-           SELECT doc_id AS blob_id,
-                  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                    ELSE 'video' END AS modality,
-                  hex(text::BLOB) AS hx, strlen(text) AS n
-           FROM documents WHERE text IS NOT NULL),
-         byv AS (
-           SELECT blob_id, CAST((p * 65) // n AS INT) AS w,
-                  ('0x' || substr(hx, CAST(2 * p + 1 AS INT), 2))::BIGINT
-                    AS v
-           FROM b, UNNEST(range(n)) AS t(p)),
-         wsum AS (SELECT blob_id, w, sum(v) AS s FROM byv GROUP BY 1, 2),
-         spine AS (
-           SELECT b.blob_id, b.modality, CAST(i AS INT) AS i
-           FROM b, UNNEST(range(65)) AS t(i)),
-         ws AS (
-           SELECT spine.blob_id, spine.modality, spine.i,
-                  coalesce(wsum.s, 0) AS s
-           FROM spine LEFT JOIN wsum
-             ON wsum.blob_id = spine.blob_id AND wsum.w = spine.i),
-         nbr AS (
-           SELECT blob_id, modality, i, s,
-                  lead(s) OVER (PARTITION BY blob_id ORDER BY i) AS ns
-           FROM ws),
-         sk AS (
-           SELECT blob_id, modality,
-                  CAST(coalesce(sum(CASE WHEN s > ns
-                    THEN (1::UBIGINT << i) ELSE 0::UBIGINT END),
-                    0) AS UBIGINT) AS dh
-           FROM nbr WHERE i < 64 GROUP BY blob_id, modality),
-         bands AS (
-           SELECT blob_id, modality, CAST(bd AS INT) AS band_idx,
-                  CAST((dh >> CAST(16 * bd AS INT)) & 65535 AS INT)
-                    AS band_val
-           FROM sk, UNNEST(range(4)) AS t(bd)),
-         dfq AS (SELECT modality, band_idx, band_val, count(*) AS dfreq
-                 FROM bands GROUP BY 1, 2, 3),
-         kept AS (SELECT bands.* FROM bands JOIN dfq
-                  USING (modality, band_idx, band_val) WHERE dfreq <= 50),
-         cand AS (
-           SELECT DISTINCT a.modality, a.blob_id AS id_a, c.blob_id AS id_b
-           FROM kept a JOIN kept c
-             ON a.modality = c.modality AND a.band_idx = c.band_idx
-                AND a.band_val = c.band_val AND a.blob_id < c.blob_id),
-         npairs AS (
-           SELECT cand.modality AS modality, id_a, id_b,
-                  CAST(bit_count(xor(x.dh, y.dh)) AS INT) AS hamming
-           FROM cand JOIN sk x ON x.blob_id = cand.id_a
-                     JOIN sk y ON y.blob_id = cand.id_b
-           WHERE bit_count(xor(x.dh, y.dh)) <= 3)"""
-
-  private[queries] val QualityGateCtes: String =
-    """WITH w AS (
-           SELECT doc_id, text,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-           FROM documents),
-         g AS (
-           SELECT doc_id, text, words,
-                  list_transform(range(1, greatest(len(words) - 9, 1) + 1),
-                    i -> array_to_string(words[i:least(i+9, len(words))], ' '))
-                    AS grams
-           FROM w),
-         sig AS (
-           SELECT doc_id, text,
-                  round(len(list_filter(words, w -> list_contains(
-                      ['the','a','an','and','or','of','to','in',
-                       'is','it','that','for','on','with','as','at','by'], w)))::DOUBLE
-                    / greatest(len(words), 1), 4) AS stopword_ratio,
-                  round(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
-                    / greatest(length(text), 1), 4) AS punct_ratio,
-                  round(list_sum(list_transform(words, w -> length(w)))::DOUBLE
-                    / greatest(len(words), 1), 4) AS mean_word_len,
-                  round((CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(words, w -> list_contains(
-                        ['the','a','an','and','or','of','to','in',
-                         'is','it','that','for','on','with','as','at','by'], w)))::DOUBLE
-                      / greatest(len(words), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
-                      / greatest(length(text), 1) <= 0.2 THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(words, w -> length(w)))::DOUBLE
-                      / greatest(len(words), 1) BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END), 2)
-                    AS quality_score,
-                  round(1.0::DOUBLE - len(list_distinct(grams))::DOUBLE
-                    / greatest(len(grams), 1), 4) AS dup_gram_frac
-           FROM g),
-         v AS (
-           SELECT doc_id, quality_score, dup_gram_frac,
-                  list_filter([
-                    CASE WHEN length(text) < 100 THEN 'too_short' END,
-                    CASE WHEN length(text) > 20000 THEN 'too_long' END,
-                    CASE WHEN stopword_ratio < 0.01 THEN 'low_stopword' END,
-                    CASE WHEN punct_ratio > 0.2 THEN 'high_punct' END,
-                    CASE WHEN mean_word_len < 2.0 OR mean_word_len > 12.0
-                      THEN 'odd_word_len' END,
-                    CASE WHEN dup_gram_frac > 0.3 THEN 'repetitive' END],
-                    x -> x IS NOT NULL) AS hit
-           FROM sig)"""
-
-  private[queries] val NbClassifierOracle =
-    """WITH tok AS (
-           SELECT doc_id, source IN ('src0', 'src1') AS pos,
-                  unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-           FROM documents),
-         cnt AS (SELECT w,
-                        sum(CASE WHEN pos THEN 1 ELSE 0 END) AS c_pos,
-                        sum(CASE WHEN pos THEN 0 ELSE 1 END) AS c_neg
-                 FROM tok GROUP BY 1),
-         vocab AS (SELECT * FROM cnt
-                   ORDER BY c_pos + c_neg DESC, w LIMIT 4096),
-         tot AS (SELECT sum(c_pos) AS n_pos, sum(c_neg) AS n_neg,
-                        count(*) AS v
-                 FROM vocab),
-         wt AS (SELECT w,
-                       ln((c_pos + 1.0) / (n_pos + v)) -
-                       ln((c_neg + 1.0) / (n_neg + v)) AS wt
-                FROM vocab CROSS JOIN tot),
-         pri AS (SELECT ln((sum(CASE WHEN source IN ('src0', 'src1')
-                                 THEN 1 ELSE 0 END) + 1.0) /
-                          (sum(CASE WHEN source IN ('src0', 'src1')
-                                 THEN 0 ELSE 1 END) + 1.0)) AS prior
-                 FROM documents),
-         m AS (SELECT doc_id, sum(wt) AS s, count(*) AS n_matched
-               FROM tok JOIN wt USING (w) GROUP BY 1)
-         SELECT d.doc_id,
-                round(coalesce(m.s, 0) + pri.prior, 6) AS log_odds,
-                (coalesce(m.s, 0) + pri.prior > 0) AS predicted,
-                coalesce(m.n_matched, 0) AS n_matched
-         FROM documents d LEFT JOIN m USING (doc_id) CROSS JOIN pri
-         ORDER BY d.doc_id"""
-
   private val PplBucketsOracle =
     ("WITH scored AS (" + lmScoreOracle + ")," +
       """
@@ -2795,9 +2307,7 @@ object PipelineQueries {
     * chain, so `pipeline_curate` and `pipeline_curate_sql` share it.
     */
   private val CurateOracle =
-    """WITH allowed AS (
-           SELECT * FROM documents
-           WHERE source IS NULL OR source NOT IN ('src3','src7','src11')),
+    s"""WITH $AllowedDocs,
          dedup AS (
            SELECT * FROM (
              SELECT *, row_number() OVER (PARTITION BY md5(text)
@@ -2805,34 +2315,12 @@ object PipelineQueries {
              FROM allowed) WHERE rn = 1),
          quality AS (
            SELECT * FROM dedup
-           WHERE round(
-             (CASE WHEN length(text) BETWEEN 100 AND 20000
-                   THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(list_filter(
-                     string_split_regex(trim(lower(text)), '\s+'),
-                     w -> list_contains(['the','a','an','and','or','of',
-                       'to','in','is','it','that','for','on','with','as',
-                       'at','by'], w)))::DOUBLE
-                   / greatest(len(string_split_regex(trim(lower(text)),
-                       '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
-                   / greatest(length(text), 1) <= 0.2
-                   THEN 0.2 ELSE 0 END) +
-             (CASE WHEN list_sum(list_transform(
-                     string_split_regex(trim(lower(text)), '\s+'),
-                     w -> length(w)))::DOUBLE
-                   / greatest(len(string_split_regex(trim(lower(text)),
-                       '\s+')), 1) BETWEEN 2.0 AND 12.0
-                   THEN 0.2 ELSE 0 END), 2) >= 0.8),
+           WHERE round(${qualitySum(Words)}, 2) >= 0.8),
          sampled AS (
            SELECT * FROM quality
-           WHERE ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                   18, 15))::UBIGINT % 100
+           WHERE $GraftBucket
              < CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 60 ELSE 100 END)
-         SELECT lang, source, count(*) AS n_docs,
-                CAST(sum(len(string_split_regex(trim(text), '\s+')))
-                  AS BIGINT) AS n_tokens
-         FROM sampled GROUP BY 1, 2 ORDER BY lang, source"""
+         ${langSourceTokens("sampled")}"""
 
   // Lazy: the oracles read this object's private vals, and a lazy list
   // cannot see one of them before it is set, wherever it is declared.
@@ -2885,56 +2373,39 @@ object PipelineQueries {
     // 60-bit md5 hashes, length-4 window minima (clamped tail for
     // short docs), distinct per doc, df<=50 cap, pair overlap count
     // and fingerprint-set Jaccard with the same thresholds.
-    Q("dedup_winnow_pairs", dedupWinnow _, (s"WITH $WinnowPairCtes" + """
+    Q("dedup_winnow_pairs", dedupWinnow _, s"""WITH $WinnowPairCtes
          SELECT p.id_a, p.id_b, p.n_shared,
-                round(CAST(p.n_shared AS DOUBLE) /
-                  (sa.n + sb.n - p.n_shared), 6) AS sim
-         FROM p JOIN sz sa ON sa.doc_id = p.id_a
-                JOIN sz sb ON sb.doc_id = p.id_b
-         WHERE round(CAST(p.n_shared AS DOUBLE) /
-               (sa.n + sb.n - p.n_shared), 6) >= 0.4
-         ORDER BY id_a, id_b""")),
+                $WinnowSim AS sim
+         $WinnowVerified
+         ORDER BY id_a, id_b"""),
     // The same verified pair set folded to the source level: which
     // crawl sources copy each other (mirror detection). Pair sources
     // are canonicalized least/greatest so the matrix is triangular.
     Q("dedup_source_matrix", dedupSourceMatrix _,
-      (s"WITH $WinnowPairCtes," + """
+      s"""WITH $WinnowPairCtes,
          pr AS (SELECT p.id_a, p.id_b
-                FROM p JOIN sz sa ON sa.doc_id = p.id_a
-                       JOIN sz sb ON sb.doc_id = p.id_b
-                WHERE round(CAST(p.n_shared AS DOUBLE) /
-                      (sa.n + sb.n - p.n_shared), 6) >= 0.4),
+                $WinnowVerified),
          m AS (SELECT least(da.source, db.source) AS source_a,
                       greatest(da.source, db.source) AS source_b
                FROM pr JOIN documents da ON da.doc_id = pr.id_a
                       JOIN documents db ON db.doc_id = pr.id_b)
          SELECT source_a, source_b, count(*) AS n_pairs,
                 (source_a <> source_b) AS cross_source
-         FROM m GROUP BY 1, 2 ORDER BY source_a, source_b""")),
+         FROM m GROUP BY 1, 2 ORDER BY source_a, source_b"""),
     // Novelty replayed: the winnow CTEs (same selection as
     // dedup_winnow_pairs), reference membership as a distinct-fp
     // left join, counts and the rounded fraction per current doc;
     // zero-fingerprint docs drop out of the unnest identically.
     Q("text_novelty", textNovelty _,
-      """WITH wdoc AS (
-           SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-           FROM documents),
+      s"""WITH ${bucketWords("wdoc")},
          g AS (
-           SELECT doc_id, bucket, list_transform(
-             range(1, greatest(len(words) - 2, 0) + 1),
-             i -> array_to_string(words[i:i+2], ' ')) AS grams
+           SELECT doc_id, bucket, $Trigrams AS grams
            FROM wdoc),
          h AS (
-           SELECT doc_id, bucket, list_transform(grams,
-             x -> ('0x' || substr(md5(x), 18, 15))::BIGINT) AS hs
+           SELECT doc_id, bucket, $GramHashes AS hs
            FROM g),
          f AS (
-           SELECT doc_id, bucket, list_filter(list_distinct(list_transform(
-             range(1, greatest(len(hs) - 4, 0) + 2),
-             i -> list_min(hs[i:i+3]))), x -> x IS NOT NULL) AS fps
+           SELECT doc_id, bucket, $Fingerprints AS fps
            FROM h),
          e AS (SELECT doc_id, unnest(fps) AS fp FROM f
                WHERE bucket >= 50),
@@ -2948,88 +2419,19 @@ object PipelineQueries {
          FROM e LEFT JOIN seen ON e.fp = seen.fp
          GROUP BY e.doc_id ORDER BY e.doc_id"""),
     Q("dedup_ngram_pairs", dedupNgram _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         s AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w)
-         SELECT id_a, id_b,
-                round(len(list_intersect(sha, shb))::DOUBLE /
-                  (len(sha) + len(shb) - len(list_intersect(sha, shb))),
-                  6) AS jaccard
-         FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      a.sh AS sha, b.sh AS shb
-               FROM s a JOIN s b
-                 ON a.doc_id < b.doc_id
-                AND 3 * len(a.sh) <= 5 * len(b.sh)
-                AND 3 * len(b.sh) <= 5 * len(a.sh))
-         WHERE len(list_intersect(sha, shb))::DOUBLE /
-               (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-               >= 0.6
-         ORDER BY id_a, id_b"""),
+      jaccardPairs("a.doc_id < b.doc_id", ThreeFifthsBand, 0.6)),
     // MinHash LSH is approximate, but at verify scale its banded recall
     // is total — hold it to the exact all-pairs answer so recall
     // regressions fail loudly instead of shrinking the row count.
     Q("dedup_minhash_pairs", dedupMinhash _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         s AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w)
-         SELECT id_a, id_b,
-                round(len(list_intersect(sha, shb))::DOUBLE /
-                  (len(sha) + len(shb) - len(list_intersect(sha, shb))),
-                  6) AS jaccard
-         FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      a.sh AS sha, b.sh AS shb
-               FROM s a JOIN s b
-                 ON a.doc_id < b.doc_id
-                AND len(a.sh) <= 2 * len(b.sh)
-                AND len(b.sh) <= 2 * len(a.sh))
-         WHERE len(list_intersect(sha, shb))::DOUBLE /
-               (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-               >= 0.5
-         ORDER BY id_a, id_b"""),
+      jaccardPairs("a.doc_id < b.doc_id", HalfBand, 0.5)),
     // Exact all-pairs Jaccard restricted to pairs touching the batch
     // (doc_id % 5 = 4): corpus-vs-batch pairs keep (old, new) order,
     // in-batch pairs keep (min, max).
     Q("dedup_incremental", dedupIncremental _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         s AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w)
-         SELECT id_a, id_b,
-                round(len(list_intersect(sha, shb))::DOUBLE /
-                  (len(sha) + len(shb) - len(list_intersect(sha, shb))),
-                  6) AS jaccard
-         FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      a.sh AS sha, b.sh AS shb
-               FROM s a JOIN s b
-                 ON b.doc_id % 5 = 4
-                AND ((a.doc_id % 5 <> 4 AND a.doc_id <> b.doc_id)
-                     OR (a.doc_id % 5 = 4 AND a.doc_id < b.doc_id))
-                AND len(a.sh) <= 2 * len(b.sh)
-                AND len(b.sh) <= 2 * len(a.sh))
-         WHERE len(list_intersect(sha, shb))::DOUBLE /
-               (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-               >= 0.5
-         ORDER BY id_a, id_b"""),
+      jaccardPairs("b.doc_id % 5 = 4 AND ((a.doc_id % 5 <> 4 AND " +
+        "a.doc_id <> b.doc_id) OR (a.doc_id % 5 = 4 AND a.doc_id < b.doc_id))",
+        HalfBand, 0.5)),
     // Transitive closure of the exact Jaccard graph via a recursive
     // CTE; min(r) per node IS the min-label component — the same
     // fixpoint the Spark side's pointer-doubling propagation computes.
@@ -3048,34 +2450,10 @@ object PipelineQueries {
     // recall loss (the same arithmetic bound PPJoin's length filter
     // uses).
     Q("dedup_minhash_clusters", dedupMinhashClusters _,
-      """WITH RECURSIVE w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         s AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w),
+      s"""WITH RECURSIVE ${shingleCtes("s")},
          p AS (
-           SELECT id_a, id_b FROM (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                    a.sh AS sha, b.sh AS shb
-             FROM s a JOIN s b
-               ON a.doc_id < b.doc_id
-              AND len(a.sh) <= 2 * len(b.sh)
-              AND len(b.sh) <= 2 * len(a.sh))
-           WHERE len(list_intersect(sha, shb))::DOUBLE /
-                 (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-                 >= 0.5),
-         e AS (SELECT id_a AS a, id_b AS b FROM p
-               UNION SELECT id_b, id_a FROM p),
-         reach(id, r) AS (
-           SELECT DISTINCT a, a FROM e
-           UNION
-           SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id
-           WHERE reach.r < e.b)
+           ${nearPairs("s")}),
+         $PairClosureCtes
          SELECT id AS doc_id, min(r) AS component
          FROM reach GROUP BY id ORDER BY component, doc_id"""),
     // Same deterministic 3-word segmentation (the regex is replicated
@@ -3163,39 +2541,19 @@ object PipelineQueries {
     // bucket arithmetic as sample_split (sqrt is IEEE
     // correctly-rounded, so both engines compute identical fractions).
     Q("sample_temperature", sampleTemperature _,
-      """WITH c AS (SELECT lang, CAST(count(*) AS DOUBLE) AS n_s
+      s"""WITH c AS (SELECT lang, CAST(count(*) AS DOUBLE) AS n_s
                     FROM documents GROUP BY lang),
-         t AS (SELECT sum(sqrt(n_s)) AS z, sum(n_s) AS n FROM c),
-         f AS (SELECT lang,
-                      least(1.0, 0.5 * n * sqrt(n_s) / z / n_s)
-                        AS keep_frac
-               FROM c, t)
+         ${temperatureMix("c")}
          SELECT d.doc_id, d.lang, round(f.keep_frac, 6) AS keep_frac
          FROM documents d JOIN f USING (lang)
-         WHERE CAST(('0x' || substr(md5('graft-temp:' ||
-                 CAST(doc_id AS VARCHAR)), 18, 15))::UBIGINT % 100
-                 AS DOUBLE)
-               < keep_frac * 100
+         WHERE ${temperatureKept("doc_id")}
          ORDER BY doc_id"""),
     Q("skew_salted_agg", skewSaltedAgg _,
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS n_rows
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     Q("funnel_reach", funnelReach _,
-      """WITH e AS (
-           SELECT user_id, event_type,
-                  CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
-           FROM events),
-         s1 AS (SELECT user_id, min(t) AS t1 FROM e
-                WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min(e.t) AS t2
-                FROM e JOIN s1 USING (user_id)
-                WHERE e.event_type = 'click' AND e.t > s1.t1
-                GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min(e.t) AS t3
-                FROM e JOIN s2 USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.t > s2.t2
-                GROUP BY e.user_id)
+      s"""$FunnelCtes
          SELECT (SELECT count(*) FROM s1) AS reached_view,
                 (SELECT count(*) FROM s2) AS reached_click,
                 (SELECT count(*) FROM s3) AS reached_purchase"""),
@@ -3231,35 +2589,12 @@ object PipelineQueries {
     // Greedy-earliest funnel: t_i = min event time of step i strictly
     // after t_{i-1}; LEFT joins keep the drop-offs with null times.
     Q("funnel_conversion", funnelConversion _,
-      """WITH e AS (
-           SELECT user_id, event_type,
-                  CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
-           FROM events),
-         s1 AS (SELECT user_id, min(t) AS t1 FROM e
-                WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min(e.t) AS t2
-                FROM e JOIN s1 USING (user_id)
-                WHERE e.event_type = 'click' AND e.t > s1.t1
-                GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min(e.t) AS t3
-                FROM e JOIN s2 USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.t > s2.t2
-                GROUP BY e.user_id)
-         SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
-                CAST((s1.t1 IS NOT NULL)::INT + (s2.t2 IS NOT NULL)::INT
-                  + (s3.t3 IS NOT NULL)::INT AS INT) AS depth
-         FROM s1 LEFT JOIN s2 USING (user_id)
-                 LEFT JOIN s3 USING (user_id)
-         ORDER BY user_id"""),
+      s"""$FunnelCtes
+         $FunnelDepthRows"""),
     // Same shape as funnel_conversion plus the window bound on t1:
     // both engines compare µs-precision timestamps, boundary inclusive.
     Q("funnel_windowed", funnelWindowed _,
-      """WITH e AS (
-           SELECT user_id, event_type,
-                  CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
-           FROM events),
-         s1 AS (SELECT user_id, min(t) AS t1 FROM e
-                WHERE event_type = 'view' GROUP BY user_id),
+      s"""WITH $FunnelView,
          s2 AS (SELECT e.user_id, min(e.t) AS t2
                 FROM e JOIN s1 USING (user_id)
                 WHERE e.event_type = 'click' AND e.t > s1.t1
@@ -3270,12 +2605,7 @@ object PipelineQueries {
                 WHERE e.event_type = 'purchase' AND e.t > s2.t2
                   AND e.t <= s1.t1 + INTERVAL 3 DAY
                 GROUP BY e.user_id)
-         SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
-                CAST((s1.t1 IS NOT NULL)::INT + (s2.t2 IS NOT NULL)::INT
-                  + (s3.t3 IS NOT NULL)::INT AS INT) AS depth
-         FROM s1 LEFT JOIN s2 USING (user_id)
-                 LEFT JOIN s3 USING (user_id)
-         ORDER BY user_id"""),
+         $FunnelDepthRows"""),
     Q("asof_join_orders", asofOrders _,
       """WITH o AS (SELECT o_custkey, CAST(o_orderdate AS TIMESTAMP) AS ots,
                            max(o_totalprice) AS last_order_price
@@ -3287,19 +2617,7 @@ object PipelineQueries {
           AND o.ots <= CAST(date_trunc('microseconds', e.ts) AS TIMESTAMP)
          ORDER BY event_id"""),
     Q("range_join_sessions", rangeJoinSessions _,
-      """WITH x AS (
-           SELECT user_id, CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
-                    AS t,
-                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         IS NULL
-                       OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         > INTERVAL 10 MINUTE
-                       THEN 1 ELSE 0 END AS new_s
-           FROM events),
-         g AS (
-           SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY t
-             ROWS UNBOUNDED PRECEDING) AS grp
-           FROM x),
+      s"""${sessionCtes("", ">")},
          sess AS (
            SELECT user_id, min(t) AS session_start, max(t) AS session_end,
                   CAST(count(*) AS INT) AS n_events
@@ -3315,25 +2633,10 @@ object PipelineQueries {
     // the Spark side computes (pairs → min-label components → keep-best)
     // collapses to GROUP BY text with an argmax over the quality score.
     Q("dedup_keep_best", dedupKeepBest _,
-      """WITH q AS (
-           SELECT doc_id, text, CAST(round(
-             (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3 ELSE 0
-               END) +
-             (CASE WHEN len(list_filter(string_split_regex(trim(lower(text)),
-                 '\s+'),
-                 w -> list_contains(['the','a','an','and','or','of','to','in',
-                   'is','it','that','for','on','with','as','at','by'], w)))
-                 ::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)), '\s+')),
-                 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-                 ::DOUBLE
-               / greatest(length(text), 1) <= 0.2 THEN 0.2 ELSE 0 END) +
-             (CASE WHEN list_sum(list_transform(string_split_regex(
-                 trim(lower(text)), '\s+'), w -> length(w)))::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)), '\s+')),
-                 1) BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END), 2) AS DOUBLE)
-             AS quality_score
+      s"""WITH q AS (
+           SELECT doc_id, text,
+                  CAST(round(${qualitySum(Words)}, 2) AS DOUBLE)
+                    AS quality_score
            FROM documents)
          SELECT doc_id, quality_score FROM (
            SELECT doc_id, quality_score,
@@ -3370,60 +2673,28 @@ object PipelineQueries {
     // Planted-twin scenario replayed in DuckDB float math: union base
     // vectors with their jittered twins, all pairs with cosine >= 0.98.
     Q("dedup_embedding_pairs", dedupEmbedding _,
-      """WITH u AS (
-           SELECT vec_id, embedding FROM embeddings
-           UNION ALL
-           SELECT vec_id + 10000000,
-                  list_transform(range(1, len(embedding) + 1),
-                    i -> embedding[i] * CAST(1.0 + ((i - 1) % 5) * 0.01
-                      AS FLOAT))
-           FROM embeddings)
+      s"""WITH $PlantedTwins
          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                 round(list_cosine_similarity(a.embedding::DOUBLE[],
                   b.embedding::DOUBLE[]), 6) AS cosine
-         FROM u a JOIN u b ON a.vec_id < b.vec_id
-         WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-                 b.embedding::DOUBLE[]) >= 0.98
+         $TwinPairJoin
          ORDER BY id_a, id_b"""),
     // The planted-twin pair set closed into components by a recursive
     // CTE — same closure idiom as dedup_minhash_clusters.
     Q("dedup_embedding_clusters", dedupEmbeddingClusters _,
-      """WITH RECURSIVE u AS (
-           SELECT vec_id, embedding FROM embeddings
-           UNION ALL
-           SELECT vec_id + 10000000,
-                  list_transform(range(1, len(embedding) + 1),
-                    i -> embedding[i] * CAST(1.0 + ((i - 1) % 5) * 0.01
-                      AS FLOAT))
-           FROM embeddings),
+      s"""WITH RECURSIVE $PlantedTwins,
          p AS (
            SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM u a JOIN u b ON a.vec_id < b.vec_id
-           WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-                   b.embedding::DOUBLE[]) >= 0.98),
-         e AS (SELECT id_a AS a, id_b AS b FROM p
-               UNION SELECT id_b, id_a FROM p),
-         reach(id, r) AS (
-           SELECT DISTINCT a, a FROM e
-           UNION
-           SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id
-           WHERE reach.r < e.b)
+           $TwinPairJoin),
+         $PairClosureCtes
          SELECT id AS vec_id, min(r) AS component
          FROM reach GROUP BY id ORDER BY component, vec_id"""),
     // SemDeDup replay: same planted-twin union, the first-8 centroid
     // assignment (exact-cosine argmax, ties to lowest cell), then the
     // cell-scoped dominance rule on the ROUNDED cosine.
     Q("dedup_semantic", dedupSemantic _,
-      """WITH u AS (
-           SELECT vec_id, embedding FROM embeddings
-           UNION ALL
-           SELECT vec_id + 10000000,
-                  list_transform(range(1, len(embedding) + 1),
-                    i -> embedding[i] * CAST(1.0 + ((i - 1) % 5) * 0.01
-                      AS FLOAT))
-           FROM embeddings),
-         c AS (SELECT vec_id AS cell, embedding::DOUBLE[] AS cvec
-               FROM embeddings WHERE vec_id < 8),
+      s"""WITH $PlantedTwins,
+         $FixedCentroids8,
          assign AS (
            SELECT vec_id, cell FROM (
              SELECT u.vec_id, c.cell,
@@ -3470,11 +2741,8 @@ object PipelineQueries {
     // missed a true top-20 word OR the certificate logic weakened, the
     // row goes red against this exact full-shuffle top-k
     Q("text_heavy_hitters", textHeavyHitters _,
-      """WITH w AS (SELECT lower(unnest(string_split_regex(trim(text),
-                      '\s+'))) AS word
-                    FROM documents),
-         top AS (SELECT word, count(*) AS n FROM w GROUP BY word
-                 ORDER BY n DESC, word LIMIT 20)
+      s"""WITH $LowerTokens,
+         $TopWordCounts
          SELECT CAST(row_number() OVER (ORDER BY n DESC, word) AS INT)
                   AS rk,
                 word, n, true AS provably_exact
@@ -3529,31 +2797,8 @@ object PipelineQueries {
                   AS chars_per_token
          FROM documents ORDER BY doc_id"""),
     Q("text_quality", textQuality _,
-      """SELECT doc_id,
-                round(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                    w -> list_contains(['the','a','an','and','or','of','to','in',
-                      'is','it','that','for','on','with','as','at','by'], w)))::DOUBLE
-                  / greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1), 4)
-                  AS stopword_ratio,
-                round(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
-                  / greatest(length(text), 1), 4) AS punct_ratio,
-                round(list_sum(list_transform(string_split_regex(trim(lower(text)),
-                    '\s+'), w -> length(w)))::DOUBLE
-                  / greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1), 4)
-                  AS mean_word_len,
-                round(
-                  (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3 ELSE 0 END) +
-                  (CASE WHEN len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                      w -> list_contains(['the','a','an','and','or','of','to','in',
-                        'is','it','that','for','on','with','as','at','by'], w)))::DOUBLE
-                    / greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1)
-                    >= 0.01 THEN 0.3 ELSE 0 END) +
-                  (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
-                    / greatest(length(text), 1) <= 0.2 THEN 0.2 ELSE 0 END) +
-                  (CASE WHEN list_sum(list_transform(string_split_regex(trim(lower(text)),
-                      '\s+'), w -> length(w)))::DOUBLE
-                    / greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1)
-                    BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END), 2) AS quality_score
+      s"""SELECT doc_id,
+                ${qualitySignals(Words)}
          FROM documents ORDER BY doc_id"""),
     Q("text_fingerprint", textFingerprint _,
       """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
@@ -3563,19 +2808,7 @@ object PipelineQueries {
     // the sampling bucket (mod 4); offsets are integer prefix sums, so
     // every column is exact — no FP anywhere.
     Q("pack_sequences", packSequences _,
-      """WITH t AS (
-           SELECT doc_id,
-                  CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 4 AS BIGINT) AS shard,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-                    AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, shard, n_tokens,
-                  CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    - n_tokens AS BIGINT) AS start_offset
-           FROM t)
+      s"""$PackCtes
          SELECT doc_id, shard, n_tokens, start_offset,
                 start_offset // 512 AS first_seq,
                 (start_offset + n_tokens - 1) // 512 AS last_seq
@@ -3585,19 +2818,7 @@ object PipelineQueries {
     // stream is gapless; tail waste is the only padding
     // concat-and-split produces
     Q("pack_report", packReport _,
-      """WITH t AS (
-           SELECT doc_id,
-                  CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 4 AS BIGINT) AS shard,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-                    AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, shard, n_tokens,
-                  CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    - n_tokens AS BIGINT) AS start_offset
-           FROM t),
+      s"""$PackCtes,
          a AS (
            SELECT shard, count(*)::BIGINT AS n_docs,
                   CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
@@ -3615,11 +2836,7 @@ object PipelineQueries {
     // Spark — both truncate at the token count; the md5 compares chunk
     // CONTENT, not just shape.
     Q("text_chunks", textChunks _,
-      """WITH s AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                    FROM documents),
-         k AS (SELECT doc_id, w,
-                      unnest(range(0, (len(w) - 1) // 48 + 1)) AS k
-               FROM s)
+      s"""WITH ${chunkCtes("")}
          SELECT doc_id, CAST(k AS INT) AS chunk_idx,
                 CAST(len(w[(k*48+1):least(k*48+64, len(w))]) AS INT)
                   AS chunk_tokens,
@@ -3671,10 +2888,9 @@ object PipelineQueries {
     // sort order equals Spark's signed-long order because 15 hex chars
     // stay under 2^60.
     Q("sample_uniform_k", sampleUniformK _,
-      """SELECT doc_id, lang, source FROM (
+      s"""SELECT doc_id, lang, source FROM (
            SELECT doc_id, lang, source FROM documents
-           ORDER BY ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-             18, 15))::UBIGINT, doc_id
+           ORDER BY $GraftHash, doc_id
            LIMIT 100)
          ORDER BY doc_id"""),
     // Efraimidis–Spirakis replayed: u = (h60+1)/2^60 from the same md5
@@ -3698,28 +2914,9 @@ object PipelineQueries {
     // ROUNDED score, position ranks the md5 permutation per
     // (stage, shard).
     Q("sample_curriculum", sampleCurriculum _,
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id, lang,
-                  round(
-                    (CASE WHEN length(text) BETWEEN 100 AND 20000
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> list_contains(['the','a','an','and','or','of',
-                          'to','in','is','it','that','for','on','with','as',
-                          'at','by'], w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text,
-                        '[^A-Za-z0-9\s]'))::DOUBLE
-                      / greatest(length(text), 1) <= 0.2
-                      THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> length(w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) BETWEEN 2.0 AND 12.0
-                      THEN 0.2 ELSE 0 END), 2) AS quality_score
+                  round(${qualitySum(Words)}, 2) AS quality_score
            FROM documents),
          h AS (
            SELECT doc_id, lang, quality_score,
@@ -3737,21 +2934,7 @@ object PipelineQueries {
     // Excision replayed: matched gram starts expand to covered word
     // indices; the rewrite keeps exactly the uncovered words in order.
     Q("text_decontaminate_excise", textDecontaminateExcise _,
-      """WITH s AS (
-           SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-           FROM documents),
-         g AS (
-           SELECT doc_id, bucket,
-                  CAST(unnest(range(1, greatest(len(words) - 7, 1) + 1))
-                    AS INT) AS pos,
-                  unnest(list_transform(
-                    range(1, greatest(len(words) - 7, 1) + 1),
-                    i -> array_to_string(words[i:least(i+7, len(words))],
-                      ' '))) AS gram
-           FROM s),
+      s"""$PositionalGram8Ctes,
          bench AS (SELECT DISTINCT gram FROM g WHERE bucket >= 90),
          m AS (SELECT g.doc_id, g.pos FROM g JOIN bench USING (gram)
                WHERE g.bucket < 80),
@@ -3782,53 +2965,21 @@ object PipelineQueries {
     // naive global-order formulation exactly (same quality formula as
     // the text_quality oracle).
     Q("sample_token_budget", sampleTokenBudget _,
-      """WITH t AS (
-           SELECT doc_id, lang,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
-                    AS n_tokens,
-                  round(
-                    (CASE WHEN length(text) BETWEEN 100 AND 20000
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> list_contains(['the','a','an','and','or','of',
-                          'to','in','is','it','that','for','on','with','as',
-                          'at','by'], w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text,
-                        '[^A-Za-z0-9\s]'))::DOUBLE
-                      / greatest(length(text), 1) <= 0.2
-                      THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> length(w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) BETWEEN 2.0 AND 12.0
-                      THEN 0.2 ELSE 0 END), 2) AS quality_score
-           FROM documents),
+      s"""WITH ${budgetScores("")},
          r AS (
-           SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-             ORDER BY quality_score DESC, doc_id
-             ROWS UNBOUNDED PRECEDING) AS cum
+           SELECT *, $LangTokenCum
            FROM t)
          SELECT doc_id, lang, n_tokens, quality_score
          FROM r WHERE cum <= 10000 ORDER BY doc_id"""),
     // Exact kNN graph: rank on the RAW cosine (round only in the
     // output), ties on neighbor id; mutual = reversed pair exists.
     Q("knn_graph", knnGraph _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
                       list_cosine_similarity(a.v, b.v) AS cos
                FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-         r AS (SELECT src, dst, cos, row_number() OVER
-                 (PARTITION BY src ORDER BY cos DESC, dst) AS rank
-               FROM s),
-         k AS (SELECT * FROM r WHERE rank <= 5)
-         SELECT k.src, CAST(k.rank AS INT) AS rank, k.dst,
-                round(k.cos, 6) AS cosine, (m.src IS NOT NULL) AS mutual
-         FROM k LEFT JOIN k m ON m.src = k.dst AND m.dst = k.src
-         ORDER BY k.src, k.rank"""),
+         ${rankedEdges("s")},
+         $MutualKnnRows"""),
     // The KMV estimator replayed end-to-end: shared sketch CTEs, then
     // the (k−1)·2⁶⁰/h_k estimate in the same double arithmetic —
     // exact-mode (k_used < 256) returns the sketch size itself.
@@ -3836,9 +2987,7 @@ object PipelineQueries {
       s"""WITH $KmvSketchCtes
          SELECT grp AS lang, CAST(count(*) AS INT) AS k_used,
                 max(h) AS kth_min,
-                CASE WHEN count(*) < 256 THEN count(*)::BIGINT
-                     ELSE CAST(round((count(*) - 1) * pow(2.0, 60)
-                                     / max(h)) AS BIGINT) END
+                $KmvEstimate
                   AS est_distinct
          FROM sk GROUP BY grp ORDER BY lang"""),
     // KMV set algebra: combined sketch = 256 smallest of the two
@@ -3920,22 +3069,16 @@ object PipelineQueries {
     // truth. CMS never undercounts, so a single negative overcount
     // anywhere fails the hash.
     Q("sketch_freq_cms", sketchFreqCms _,
-      """WITH w AS (SELECT lower(unnest(string_split_regex(trim(text),
-                      '\s+'))) AS word
-                    FROM documents),
-         hd AS (SELECT unnest([0, 1, 2, 3]) AS d),
+      s"""WITH $LowerTokens,
+         $CmsRows,
          c AS (SELECT d,
-                      CAST(('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                        || word), 18, 15))::UBIGINT AS BIGINT) % 1024
+                      ${cmsBucket("d", "word")}
                         AS bkt,
                       count(*) AS cnt
                FROM w CROSS JOIN hd GROUP BY d, bkt),
-         top AS (SELECT word, count(*) AS n FROM w GROUP BY word
-                 ORDER BY n DESC, word LIMIT 20),
+         $TopWordCounts,
          pb AS (SELECT top.word, top.n, hd.d,
-                       CAST(('0x' || substr(md5(CAST(hd.d AS VARCHAR)
-                         || ':' || top.word), 18, 15))::UBIGINT
-                         AS BIGINT) % 1024 AS bkt
+                       ${cmsBucket("hd.d", "top.word")} AS bkt
                 FROM top CROSS JOIN hd),
          est AS (SELECT word, n, min(cnt) AS cms_est
                  FROM pb JOIN c USING (d, bkt) GROUP BY word, n)
@@ -3965,38 +3108,30 @@ object PipelineQueries {
     // chain (the BlobDhashPairCtes `sk` stage) folded to a distinct
     // count.
     Q("sketch_sql_text", sketchSqlText _,
-      """WITH d AS (SELECT doc_id, text FROM documents
+      s"""WITH d AS (SELECT doc_id, text FROM documents
                     WHERE text IS NOT NULL),
-         ws AS (SELECT string_split_regex(trim(lower(text)), '\s+')
+         ws AS (SELECT string_split_regex(trim(lower(text)), '\\s+')
                   AS words FROM d),
-         sh AS (SELECT unnest(list_transform(
-                  range(1, greatest(len(words) - 2, 0) + 1),
-                  i -> array_to_string(words[i:i+2], ' '))) AS gram
+         sh AS (SELECT unnest($Trigrams) AS gram
                 FROM ws),
          hh AS (SELECT DISTINCT
                   ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
                 FROM sh),
          sk AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h)
                   AS rk FROM hh) WHERE rk <= 256),
-         ev AS (SELECT CASE WHEN count(*) < 256 THEN count(*)::BIGINT
-                       ELSE CAST(round((count(*) - 1) * pow(2.0, 60)
-                                       / max(h)) AS BIGINT) END
+         ev AS (SELECT $KmvEstimate
                   AS est_vocab
                 FROM sk),
          w AS (SELECT unnest(words) AS word FROM ws),
          hd AS (SELECT unnest([0, 1, 2, 3]) AS dd),
          grid AS (SELECT dd,
-                    CAST(('0x' || substr(md5(CAST(dd AS VARCHAR) || ':'
-                      || word), 18, 15))::UBIGINT AS BIGINT) % 1024
+                    ${cmsBucket("dd", "word")}
                       AS bkt,
                     count(*) AS cnt
                   FROM w CROSS JOIN hd GROUP BY dd, bkt),
-         top AS (SELECT word FROM (SELECT word, count(*) AS n FROM w
-                   GROUP BY word ORDER BY n DESC, word LIMIT 5)),
+         $TopWords5,
          probe AS (SELECT top.word, hd.dd,
-                     CAST(('0x' || substr(md5(CAST(hd.dd AS VARCHAR) ||
-                       ':' || top.word), 18, 15))::UBIGINT AS BIGINT)
-                       % 1024 AS bkt
+                     ${cmsBucket("hd.dd", "top.word")} AS bkt
                    FROM top CROSS JOIN hd),
          est AS (SELECT word, min(cnt) AS est FROM probe
                  JOIN grid USING (dd, bkt) GROUP BY word),
@@ -4018,9 +3153,7 @@ object PipelineQueries {
                    lead(s) OVER (PARTITION BY blob_id ORDER BY i) AS ns
                  FROM wss),
          skb AS (SELECT blob_id,
-                   CAST(coalesce(sum(CASE WHEN s > ns
-                     THEN (1::UBIGINT << i) ELSE 0::UBIGINT END),
-                     0) AS UBIGINT) AS dh
+                   $DhashBits
                  FROM nbr WHERE i < 64 GROUP BY blob_id),
          dhc AS (SELECT count(DISTINCT dh) AS n_dhash FROM skb)
          SELECT ev.est_vocab, mass.top5_mass, dhc.n_dhash
@@ -4031,30 +3164,7 @@ object PipelineQueries {
     // a recall regression in the SQL surface hash-mismatches instead
     // of silently shrinking the row count.
     Q("dedup_sql_text", dedupSqlText _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         s AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w)
-         SELECT id_a, id_b,
-                round(len(list_intersect(sha, shb))::DOUBLE /
-                  (len(sha) + len(shb) - len(list_intersect(sha, shb))),
-                  6) AS jaccard
-         FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      a.sh AS sha, b.sh AS shb
-               FROM s a JOIN s b
-                 ON a.doc_id < b.doc_id
-                AND len(a.sh) <= 2 * len(b.sh)
-                AND len(b.sh) <= 2 * len(a.sh))
-         WHERE len(list_intersect(sha, shb))::DOUBLE /
-               (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-               >= 0.5
-         ORDER BY id_a, id_b"""),
+      jaccardPairs("a.doc_id < b.doc_id", HalfBand, 0.5)),
     // The IVF graph replayed index-and-all (the shared nlist=16 fit
     // CTEs): every vector probes its 2 nearest cells by centroid L2,
     // scores only the vectors ASSIGNED to those cells (cells are
@@ -4074,52 +3184,14 @@ object PipelineQueries {
                        list_cosine_similarity(a.v, p.qvec) AS cos
                 FROM probe p JOIN asg a USING (cell)
                 WHERE a.vec_id <> p.src),
-         r AS (SELECT src, dst, cos, row_number() OVER
-                 (PARTITION BY src ORDER BY cos DESC, dst) AS rank
-               FROM sc),
-         k AS (SELECT * FROM r WHERE rank <= 5)
-         SELECT k.src, CAST(k.rank AS INT) AS rank, k.dst,
-                round(k.cos, 6) AS cosine, (m.src IS NOT NULL) AS mutual
-         FROM k LEFT JOIN k m ON m.src = k.dst AND m.dst = k.src
-         ORDER BY k.src, k.rank"""),
+         ${rankedEdges("sc")},
+         $MutualKnnRows"""),
     // BM25 replayed term-identically: same tokenization, same Lucene
     // idf expression SHAPE (double math agrees before the micro-unit
     // round), integer micro-unit per-term contributions so the
     // cross-term sum is order-independent in both engines.
     Q("pipeline_bm25", pipelineBm25 _,
-      """WITH toks AS (
-           SELECT doc_id,
-                  len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
-                  unnest(string_split_regex(trim(lower(text)), '\s+'))
-                    AS term
-           FROM documents WHERE doc_id >= 3),
-         tf AS (
-           SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-           FROM toks GROUP BY doc_id, term),
-         dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         stats AS (
-           SELECT count(*) AS n_docs,
-                  avg(len(string_split_regex(trim(lower(text)), '\s+')))
-                    AS avgdl
-           FROM documents WHERE doc_id >= 3),
-         qt AS (
-           SELECT DISTINCT doc_id AS query_id,
-                  unnest(list_slice(
-                    string_split_regex(trim(lower(text)), '\s+'), 1, 16))
-                    AS term
-           FROM documents WHERE doc_id < 3),
-         c AS (
-           SELECT qt.query_id, tf.doc_id,
-                  CAST(round(
-                    ln(1.0 + (stats.n_docs - dfq.df + 0.5) / (dfq.df + 0.5))
-                      * tf.tf * 2.2
-                      / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / stats.avgdl))
-                      * 1000000.0) AS BIGINT) AS micro
-           FROM tf JOIN qt USING (term) JOIN dfq USING (term)
-                CROSS JOIN stats),
-         s AS (
-           SELECT query_id, doc_id, sum(micro) AS score_micro
-           FROM c GROUP BY query_id, doc_id),
+      s"""WITH ${bm25Ctes("")},
          r AS (
            SELECT query_id, doc_id, score_micro,
                   row_number() OVER (PARTITION BY query_id
@@ -4132,32 +3204,8 @@ object PipelineQueries {
     // md5-projection embedder (same hex-prefix arithmetic as
     // sample_dsir's buckets), and rounded-cosine ranking.
     Q("pipeline_rag", pipelineRag _,
-      """WITH s AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                    FROM documents),
-         k AS (SELECT doc_id, w,
-                      unnest(range(0, (len(w) - 1) // 48 + 1)) AS k
-               FROM s),
-         c AS (SELECT doc_id, CAST(k AS INT) AS chunk_idx,
-                      w[(k*48+1):least(k*48+64, len(w))] AS ctoks
-               FROM k),
-         h AS (SELECT doc_id, chunk_idx,
-                      list_transform(ctoks, t -> md5(t)) AS hs
-               FROM c),
-         e AS (SELECT doc_id, chunk_idx,
-                      list_transform(range(0, 8), j ->
-                        list_sum(list_transform(hs, hh ->
-                          (CAST(('0x' || substr(hh,
-                             CAST(j * 4 + 1 AS INT), 4)) AS BIGINT)
-                           % 2001 - 1000) / 1000.0))) AS vec
-               FROM h),
-         q AS (SELECT doc_id AS query_id, vec AS qvec FROM e
-               WHERE doc_id < 3 AND chunk_idx = 0),
-         sc AS (SELECT q.query_id, e.doc_id, e.chunk_idx,
-                       list_cosine_similarity(e.vec, q.qvec) AS cos
-                FROM e CROSS JOIN q WHERE e.doc_id <> q.query_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, doc_id, chunk_idx) AS rank
-               FROM sc)
+      s"""WITH ${chunkCtes("")},
+         ${chunkRankCtes("")}
          SELECT query_id, CAST(rank AS INT) AS rank, doc_id, chunk_idx,
                 round(cos, 6) AS cosine
          FROM r WHERE rank <= 5 ORDER BY query_id, rank"""),
@@ -4167,41 +3215,7 @@ object PipelineQueries {
     // (1000000 // (60+rank) — pure long arithmetic on both engines),
     // full-outer fusion, micro-sum ranking with doc-id tie-break.
     Q("pipeline_hybrid_rrf", pipelineHybridRrf _,
-      """WITH b_toks AS (
-           SELECT doc_id,
-                  len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
-                  unnest(string_split_regex(trim(lower(text)), '\s+'))
-                    AS term
-           FROM documents WHERE doc_id >= 3),
-         b_tf AS (
-           SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-           FROM b_toks GROUP BY doc_id, term),
-         b_dfq AS (SELECT term, count(*) AS df FROM b_tf GROUP BY term),
-         b_stats AS (
-           SELECT count(*) AS n_docs,
-                  avg(len(string_split_regex(trim(lower(text)), '\s+')))
-                    AS avgdl
-           FROM documents WHERE doc_id >= 3),
-         b_qt AS (
-           SELECT DISTINCT doc_id AS query_id,
-                  unnest(list_slice(
-                    string_split_regex(trim(lower(text)), '\s+'), 1, 16))
-                    AS term
-           FROM documents WHERE doc_id < 3),
-         b_c AS (
-           SELECT b_qt.query_id, b_tf.doc_id,
-                  CAST(round(
-                    ln(1.0 + (b_stats.n_docs - b_dfq.df + 0.5)
-                        / (b_dfq.df + 0.5))
-                      * b_tf.tf * 2.2
-                      / (b_tf.tf + 1.2 *
-                         (0.25 + 0.75 * b_tf.dl / b_stats.avgdl))
-                      * 1000000.0) AS BIGINT) AS micro
-           FROM b_tf JOIN b_qt USING (term) JOIN b_dfq USING (term)
-                CROSS JOIN b_stats),
-         b_s AS (
-           SELECT query_id, doc_id, sum(micro) AS score_micro
-           FROM b_c GROUP BY query_id, doc_id),
+      s"""WITH ${bm25Ctes("b_")},
          b_r AS (
            SELECT query_id, doc_id,
                   row_number() OVER (PARTITION BY query_id
@@ -4209,33 +3223,8 @@ object PipelineQueries {
            FROM b_s),
          b_list AS (SELECT query_id, doc_id, bm25_rank FROM b_r
                     WHERE bm25_rank <= 10),
-         d_s AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                 FROM documents),
-         d_k AS (SELECT doc_id, w,
-                        unnest(range(0, (len(w) - 1) // 48 + 1)) AS k
-                 FROM d_s),
-         d_c AS (SELECT doc_id, CAST(k AS INT) AS chunk_idx,
-                        w[(k*48+1):least(k*48+64, len(w))] AS ctoks
-                 FROM d_k),
-         d_h AS (SELECT doc_id, chunk_idx,
-                        list_transform(ctoks, t -> md5(t)) AS hs
-                 FROM d_c),
-         d_e AS (SELECT doc_id, chunk_idx,
-                        list_transform(range(0, 8), j ->
-                          list_sum(list_transform(hs, hh ->
-                            (CAST(('0x' || substr(hh,
-                               CAST(j * 4 + 1 AS INT), 4)) AS BIGINT)
-                             % 2001 - 1000) / 1000.0))) AS vec
-                 FROM d_h),
-         d_q AS (SELECT doc_id AS query_id, vec AS qvec FROM d_e
-                 WHERE doc_id < 3 AND chunk_idx = 0),
-         d_sc AS (SELECT d_q.query_id, d_e.doc_id, d_e.chunk_idx,
-                         list_cosine_similarity(d_e.vec, d_q.qvec) AS cos
-                  FROM d_e CROSS JOIN d_q
-                  WHERE d_e.doc_id <> d_q.query_id),
-         d_r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos DESC, doc_id, chunk_idx) AS rank
-                 FROM d_sc),
+         ${chunkCtes("d_")},
+         ${chunkRankCtes("d_")},
          d_list AS (SELECT query_id, doc_id, min(rank) AS dense_rank
                     FROM d_r WHERE rank <= 5 GROUP BY query_id, doc_id),
          fused AS (
@@ -4293,16 +3282,7 @@ object PipelineQueries {
     // smallest label, seeds clamped, all-unlabeled neighborhoods stay
     // NULL — integral comparisons only, so the labels hash exactly.
     Q("knn_label_prop", knnLabelProp _,
-      """WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-                      list_cosine_similarity(a.v, b.v) AS cos
-               FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         r AS (SELECT src, dst, cos, row_number() OVER
-                 (PARTITION BY src ORDER BY cos DESC, dst) AS rank
-               FROM s),
-         e AS (SELECT src, dst FROM r WHERE rank <= 5),
-         nodes AS (SELECT src AS node FROM e
-                   UNION SELECT dst FROM e),
+      s"""$KnnEdgeCtes,
          seed AS (SELECT vec_id AS node, CAST(label AS INT) AS lbl
                   FROM embeddings WHERE vec_id % 5 = 0),
          l0 AS (SELECT nodes.node, seed.lbl FROM nodes
@@ -4330,16 +3310,7 @@ object PipelineQueries {
     // per-iteration 1e-12 rounding keeps both engines on one grid (the
     // kmeans stance), output at 1e-6.
     Q("knn_pagerank", knnPagerank _,
-      """WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-                      list_cosine_similarity(a.v, b.v) AS cos
-               FROM e0 a JOIN e0 b ON a.vec_id <> b.vec_id),
-         r AS (SELECT src, dst, cos, row_number() OVER
-                 (PARTITION BY src ORDER BY cos DESC, dst) AS rank
-               FROM s),
-         e AS (SELECT src, dst FROM r WHERE rank <= 5),
-         nodes AS (SELECT src AS node FROM e
-                   UNION SELECT dst FROM e),
+      s"""$KnnEdgeCtes,
          n AS (SELECT count(*) AS nn FROM nodes),
          outd AS (SELECT src, count(*) AS od FROM e GROUP BY src),
          r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / n.nn AS rank FROM nodes CROSS JOIN n),
@@ -4443,9 +3414,8 @@ object PipelineQueries {
                   '@|\+1 555|10\.0\.') AS clean
          FROM planted ORDER BY doc_id"""),
     Q("multimodal_features", multimodalFeatures _,
-      """SELECT doc_id AS blob_id,
-                CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                  ELSE 'video' END AS modality,
+      s"""SELECT doc_id AS blob_id,
+                $BlobModality AS modality,
                 CAST(strlen(text) AS INT) AS n_bytes
          FROM documents ORDER BY blob_id"""),
     // stub resize keeps min(bytes, 16x16) payload bytes of each image
@@ -4496,10 +3466,9 @@ object PipelineQueries {
     // machinery over the exact survivors, keep-if-no-smaller-neighbor,
     // per-modality attrition fold.
     Q("pipeline_multimodal_curate", pipelineMultimodalCurate _,
-      """WITH b AS (
+      s"""WITH b AS (
            SELECT doc_id AS blob_id,
-                  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                    ELSE 'video' END AS modality,
+                  $BlobModality AS modality,
                   text, strlen(text) AS n
            FROM documents WHERE text IS NOT NULL),
          ek AS MATERIALIZED (
@@ -4510,49 +3479,14 @@ object PipelineQueries {
            WHERE rn = 1),
          hxs AS (SELECT blob_id, modality, hex(text::BLOB) AS hx, n
                  FROM ek),
-         byv AS (
-           SELECT blob_id, CAST((p * 65) // n AS INT) AS w,
-                  ('0x' || substr(hx, CAST(2 * p + 1 AS INT), 2))::BIGINT
-                    AS v
-           FROM hxs, UNNEST(range(n)) AS t(p)),
-         wsum AS (SELECT blob_id, w, sum(v) AS s FROM byv GROUP BY 1, 2),
-         spine AS (
-           SELECT hxs.blob_id, hxs.modality, CAST(i AS INT) AS i
-           FROM hxs, UNNEST(range(65)) AS t(i)),
-         ws AS (
-           SELECT spine.blob_id, spine.modality, spine.i,
-                  coalesce(wsum.s, 0) AS s
-           FROM spine LEFT JOIN wsum
-             ON wsum.blob_id = spine.blob_id AND wsum.w = spine.i),
-         nbr AS (
-           SELECT blob_id, modality, i, s,
-                  lead(s) OVER (PARTITION BY blob_id ORDER BY i) AS ns
-           FROM ws),
-         sk AS MATERIALIZED (
-           SELECT blob_id, modality,
-                  CAST(coalesce(sum(CASE WHEN s > ns
-                    THEN (1::UBIGINT << i) ELSE 0::UBIGINT END),
-                    0) AS UBIGINT) AS dh
-           FROM nbr WHERE i < 64 GROUP BY blob_id, modality),
-         bands AS (
-           SELECT blob_id, modality, CAST(bd AS INT) AS band_idx,
-                  CAST((dh >> CAST(16 * bd AS INT)) & 65535 AS INT)
-                    AS band_val
-           FROM sk, UNNEST(range(4)) AS t(bd)),
-         dfq AS (SELECT modality, band_idx, band_val, count(*) AS dfreq
-                 FROM bands GROUP BY 1, 2, 3),
-         keptb AS (SELECT bands.* FROM bands JOIN dfq
-                   USING (modality, band_idx, band_val) WHERE dfreq <= 50),
+         ${dhashBandCtes("hxs", " MATERIALIZED", "keptb")},
          cand AS (
            SELECT DISTINCT a.blob_id AS id_a, c.blob_id AS id_b
            FROM keptb a JOIN keptb c
-             ON a.modality = c.modality AND a.band_idx = c.band_idx
-                AND a.band_val = c.band_val AND a.blob_id < c.blob_id),
+             ON $BandMatch),
          dropn AS (
            SELECT DISTINCT cand.id_b AS blob_id
-           FROM cand JOIN sk x ON x.blob_id = cand.id_a
-                     JOIN sk y ON y.blob_id = cand.id_b
-           WHERE bit_count(xor(x.dh, y.dh)) <= 3),
+           $DhashVerified),
          kept2 AS (SELECT * FROM ek
                    WHERE blob_id NOT IN (SELECT blob_id FROM dropn)),
          agg_in AS (SELECT modality, count(*) AS n_in FROM b GROUP BY 1),
@@ -4620,26 +3554,18 @@ object PipelineQueries {
     // Same short-text convention as the shingle oracles: fewer than n
     // words collapse to one gram of all words.
     Q("text_repetition", textRepetition _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
+      s"""WITH ${docWords()},
          g AS (
            SELECT doc_id,
-                  list_transform(range(1, greatest(len(words) - 9, 1) + 1),
-                    i -> array_to_string(words[i:least(i+9, len(words))], ' '))
+                  $Grams10
                     AS grams
            FROM w)
          SELECT doc_id, CAST(len(grams) AS INT) AS n_grams,
                 CAST(len(list_distinct(grams)) AS INT) AS n_distinct,
-                round(1.0::DOUBLE - len(list_distinct(grams))::DOUBLE /
-                  greatest(len(grams), 1), 4) AS dup_gram_frac
+                $DupGramFrac
          FROM g ORDER BY doc_id"""),
     Q("text_common_ngrams", textCommonNgrams _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
+      s"""WITH ${docWords()},
          g AS (
            SELECT doc_id, unnest(list_distinct(
              list_transform(range(1, greatest(len(words) - 4, 1) + 1),
@@ -4652,10 +3578,9 @@ object PipelineQueries {
     // The split hash is low-60-bits-of-md5 — positive in a signed long,
     // so Spark's pmod and DuckDB's unsigned % agree exactly.
     Q("sample_split", sampleSplit _,
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket
+                  $GraftBucket AS bucket
            FROM documents)
          SELECT doc_id, CAST(bucket AS INT) AS bucket,
                 CASE WHEN bucket < 80 THEN 'train'
@@ -4668,37 +3593,15 @@ object PipelineQueries {
     // conjunctions; each stage row recounts the same per-doc verdicts
     // the pipeline_curate CTE chain filters on
     Q("pipeline_attrition", pipelineAttrition _,
-      """WITH f AS (
+      s"""WITH f AS (
            SELECT doc_id, lang,
-                  len(string_split_regex(trim(text), '\s+'))::BIGINT
+                  len(string_split_regex(trim(text), '\\s+'))::BIGINT
                     AS toks,
                   (source IS NULL OR
                    source NOT IN ('src3','src7','src11')) AS ok_block,
                   md5(text) AS th,
-                  round(
-                    (CASE WHEN length(text) BETWEEN 100 AND 20000
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(
-                            string_split_regex(trim(lower(text)), '\s+'),
-                            w -> list_contains(['the','a','an','and','or',
-                              'of','to','in','is','it','that','for','on',
-                              'with','as','at','by'], w)))::DOUBLE
-                          / greatest(len(string_split_regex(
-                              trim(lower(text)), '\s+')), 1) >= 0.01
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text,
-                            '[^A-Za-z0-9\s]'))::DOUBLE
-                          / greatest(length(text), 1) <= 0.2
-                          THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(
-                            string_split_regex(trim(lower(text)), '\s+'),
-                            w -> length(w)))::DOUBLE
-                          / greatest(len(string_split_regex(
-                              trim(lower(text)), '\s+')), 1)
-                            BETWEEN 2.0 AND 12.0
-                          THEN 0.2 ELSE 0 END), 2) AS q,
-                  ('0x' || substr(md5('graft:' ||
-                      CAST(doc_id AS VARCHAR)), 18, 15))::UBIGINT % 100
+                  round(${qualitySum(Words)}, 2) AS q,
+                  $GraftBucket
                     AS bucket,
                   CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 60
                     ELSE 100 END AS rate
@@ -4739,55 +3642,15 @@ object PipelineQueries {
     // total at this sf — any miss hash-mismatches), per-cluster argmax
     // by (quality desc, id), quality gate, √count temperature mix.
     Q("pipeline_curate_neardup", pipelineCurateNearDup _,
-      """WITH RECURSIVE allowed AS (
-           SELECT * FROM documents
-           WHERE source IS NULL OR source NOT IN ('src3','src7','src11')),
+      s"""WITH RECURSIVE $AllowedDocs,
          q AS (
-           SELECT doc_id, lang, source, text, CAST(round(
-             (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.3 ELSE 0
-               END) +
-             (CASE WHEN len(list_filter(string_split_regex(trim(lower(text)),
-                 '\s+'),
-                 w -> list_contains(['the','a','an','and','or','of','to','in',
-                   'is','it','that','for','on','with','as','at','by'], w)))
-                 ::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)), '\s+')),
-                 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-             (CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-                 ::DOUBLE
-               / greatest(length(text), 1) <= 0.2 THEN 0.2 ELSE 0 END) +
-             (CASE WHEN list_sum(list_transform(string_split_regex(
-                 trim(lower(text)), '\s+'), w -> length(w)))::DOUBLE
-               / greatest(len(string_split_regex(trim(lower(text)), '\s+')),
-                 1) BETWEEN 2.0 AND 12.0 THEN 0.2 ELSE 0 END), 2) AS DOUBLE)
-             AS quality_score
+           SELECT doc_id, lang, source, text,
+                  CAST(round(${qualitySum(Words)}, 2) AS DOUBLE)
+                    AS quality_score
            FROM allowed),
-         w AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                 AS words
-               FROM allowed),
-         sh AS (SELECT doc_id, list_distinct(
-                  list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-                    i -> array_to_string(words[i:least(i+2, len(words))],
-                      ' ')))
-                  AS sh
-                FROM w),
-         p AS (SELECT id_a, id_b FROM (
-                 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                        a.sh AS sha, b.sh AS shb
-                 FROM sh a JOIN sh b
-                   ON a.doc_id < b.doc_id
-                  AND len(a.sh) <= 2 * len(b.sh)
-                  AND len(b.sh) <= 2 * len(a.sh))
-               WHERE len(list_intersect(sha, shb))::DOUBLE /
-                     (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-                     >= 0.5),
-         e AS (SELECT id_a AS a, id_b AS b FROM p
-               UNION SELECT id_b, id_a FROM p),
-         reach(id, r) AS (
-           SELECT DISTINCT a, a FROM e
-           UNION
-           SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id
-           WHERE reach.r < e.b),
+         ${shingleCtes("sh", "allowed")},
+         p AS (${nearPairs("sh")}),
+         $PairClosureCtes,
          comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
          losers AS (
            SELECT id AS doc_id FROM (
@@ -4801,20 +3664,11 @@ object PipelineQueries {
              AND quality_score >= 0.8),
          c2 AS (SELECT lang, CAST(count(*) AS DOUBLE) AS n_s
                 FROM gated GROUP BY lang),
-         t AS (SELECT sum(sqrt(n_s)) AS z, sum(n_s) AS n FROM c2),
-         f AS (SELECT lang, least(1.0, 0.5 * n * sqrt(n_s) / z / n_s)
-                 AS keep_frac
-               FROM c2, t),
+         ${temperatureMix("c2")},
          mixed AS (
            SELECT g.* FROM gated g JOIN f USING (lang)
-           WHERE CAST(('0x' || substr(md5('graft-temp:' ||
-                   CAST(g.doc_id AS VARCHAR)), 18, 15))::UBIGINT % 100
-                   AS DOUBLE)
-                 < keep_frac * 100)
-         SELECT lang, source, count(*) AS n_docs,
-                CAST(sum(len(string_split_regex(trim(text), '\s+')))
-                  AS BIGINT) AS n_tokens
-         FROM mixed GROUP BY 1, 2 ORDER BY lang, source"""),
+           WHERE ${temperatureKept("g.doc_id")})
+         ${langSourceTokens("mixed")}"""),
     // The full chain replayed: the ingest-dedup waves' kept set (same
     // CTEs as stream_dedup_ingest), quality-scored (same arithmetic as
     // text_quality / stream_token_budget), gated at 0.5, DSIR-resampled
@@ -4824,11 +3678,9 @@ object PipelineQueries {
     // the level decomposition's exact flat equivalent), then the pack
     // layout (same md5-shard + prefix-sum arithmetic as pack_sequences).
     Q("pipeline_pretrain", pipelinePretrain _,
-      (PretrainChainCtes + """
+      (PretrainChainCtes + s"""
          t AS (SELECT doc_id, lang, quality_score, n_tokens,
-                 CAST(('0x' || substr(md5('pack:' ||
-                   CAST(doc_id AS VARCHAR)), 18, 15))::UBIGINT % 4
-                   AS BIGINT) AS shard
+                 $PackShard AS shard
                FROM a),
          c AS (SELECT *, CAST(sum(n_tokens) OVER (PARTITION BY shard
                  ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens
@@ -4894,10 +3746,9 @@ object PipelineQueries {
            FROM c)
          WHERE rk <= 10 ORDER BY lang, rk"""),
     Q("sample_stratified", sampleStratified _,
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT doc_id, lang,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket
+                  $GraftBucket AS bucket
            FROM documents)
          SELECT doc_id, lang, CAST(bucket AS INT) AS bucket
          FROM h
@@ -4920,21 +3771,7 @@ object PipelineQueries {
     // pre-reduced to (bench doc, gram) -> min pos — the Spark side
     // joins 64-bit gram hashes instead of strings, same semantics.
     Q("text_decontaminate_spans", textDecontaminateSpans _,
-      """WITH s AS (
-           SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-           FROM documents),
-         g AS (
-           SELECT doc_id, bucket,
-                  CAST(unnest(range(1, greatest(len(words) - 7, 1) + 1))
-                    AS INT) AS pos,
-                  unnest(list_transform(
-                    range(1, greatest(len(words) - 7, 1) + 1),
-                    i -> array_to_string(words[i:least(i+7, len(words))],
-                      ' '))) AS gram
-           FROM s),
+      s"""$PositionalGram8Ctes,
          bench AS (
            SELECT doc_id AS bench_id, gram, min(pos) AS bench_pos
            FROM g WHERE bucket >= 90 GROUP BY doc_id, gram),
@@ -4965,32 +3802,14 @@ object PipelineQueries {
     Q("sample_coreset", sampleCoreset _, CoresetOracle),
     Q("pipeline_fewshot", pipelineFewshot _, FewshotOracle),
     Q("embedding_centroid_assign", embeddingCentroidAssign _,
-      """WITH c AS (SELECT vec_id AS cell, embedding::DOUBLE[] AS cvec
-                    FROM embeddings WHERE vec_id < 8)
-         SELECT vec_id, cell, cosine FROM (
-           SELECT e.vec_id, c.cell,
-                  round(list_cosine_similarity(e.embedding::DOUBLE[],
-                    c.cvec), 6) AS cosine,
-                  row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.embedding::DOUBLE[],
-                      c.cvec) DESC, c.cell) AS rk
-           FROM embeddings e, c)
-         WHERE rk = 1 ORDER BY vec_id"""),
+      s"""WITH $FixedCentroids8
+         $NearestCentroid ORDER BY vec_id"""),
     // assignment (rank 1 per vector) then a per-cell top-10 by the
     // ROUNDED cosine (the Spark side caps on the rounded output column)
     Q("sample_cluster_balanced", sampleClusterBalanced _,
-      """WITH c AS (SELECT vec_id AS cell, embedding::DOUBLE[] AS cvec
-                    FROM embeddings WHERE vec_id < 8),
+      s"""WITH $FixedCentroids8,
          assign AS (
-           SELECT vec_id, cell, cosine FROM (
-             SELECT e.vec_id, c.cell,
-                    round(list_cosine_similarity(e.embedding::DOUBLE[],
-                      c.cvec), 6) AS cosine,
-                    row_number() OVER (PARTITION BY e.vec_id
-                      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[],
-                        c.cvec) DESC, c.cell) AS rk
-             FROM embeddings e, c)
-           WHERE rk = 1)
+           $NearestCentroid)
          SELECT vec_id, cell, CAST(rk AS INT) AS rk FROM (
            SELECT vec_id, cell, row_number() OVER (PARTITION BY cell
              ORDER BY cosine DESC, vec_id) AS rk
@@ -5033,45 +3852,9 @@ object PipelineQueries {
     // final audit stats — cell membership must match integrally, so
     // any drift in any iteration breaks rows/hash, not just values
     Q("embedding_kmeans", embeddingKmeans _,
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                  FROM v ORDER BY h, vec_id LIMIT 8),
-         init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                    AS INT) AS cell, v FROM seed),
-         s1 AS (SELECT a.vec_id, a.v, i.cell,
-                       list_cosine_similarity(a.v, i.v) AS sim
-                FROM v a CROSS JOIN init i),
-         a1 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s1)
-                WHERE rn = 1),
-         u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a1)
-                GROUP BY cell, pos),
-         c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u1
-                GROUP BY cell),
-         s2 AS (SELECT a.vec_id, a.v, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM v a CROSS JOIN c1 c),
-         a2 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s2)
-                WHERE rn = 1),
-         u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a2)
-                GROUP BY cell, pos),
-         c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
-                GROUP BY cell),
-         s3 AS (SELECT a.vec_id, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM v a CROSS JOIN c2 c),
+      s"""$Kmeans8Ctes,
          a3 AS (SELECT cell, sim FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s3)
-                WHERE rn = 1)
+                 ${argmaxCell("s3")})
          SELECT a3.cell, count(*) AS n_members,
                 round(avg(a3.sim), 6) AS mean_cosine,
                 round(max(c2.v[1]), 6) AS c0
@@ -5082,45 +3865,9 @@ object PipelineQueries {
     // nearest-centroid cosine, ranked ascending on the ROUNDED score
     // with vec_id tie-break — the dominance-on-rounded stance.
     Q("embedding_outliers", embeddingOutliers _,
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                  FROM v ORDER BY h, vec_id LIMIT 8),
-         init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                    AS INT) AS cell, v FROM seed),
-         s1 AS (SELECT a.vec_id, a.v, i.cell,
-                       list_cosine_similarity(a.v, i.v) AS sim
-                FROM v a CROSS JOIN init i),
-         a1 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s1)
-                WHERE rn = 1),
-         u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a1)
-                GROUP BY cell, pos),
-         c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u1
-                GROUP BY cell),
-         s2 AS (SELECT a.vec_id, a.v, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM v a CROSS JOIN c1 c),
-         a2 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s2)
-                WHERE rn = 1),
-         u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM a2)
-                GROUP BY cell, pos),
-         c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
-                GROUP BY cell),
-         s3 AS (SELECT a.vec_id, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM v a CROSS JOIN c2 c),
+      s"""$Kmeans8Ctes,
          a3 AS (SELECT vec_id, cell, sim FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM s3)
-                WHERE rn = 1),
+                 ${argmaxCell("s3")}),
          r AS (SELECT vec_id, cell, round(sim, 6) AS centroid_cosine
                FROM a3)
          SELECT CAST(row_number() OVER
@@ -5140,72 +3887,10 @@ object PipelineQueries {
     // message on sub-~100-doc fixtures instead of running to a
     // meaningless curve. sf0.001+ clears the bar.
     Q("text_drift_psi", textDriftPsi _,
-      """WITH t AS (
-           SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 < 50 AS isref,
-                  CAST(len(string_split_regex(trim(text), '\s+'))
-                    AS BIGINT) AS nt
-           FROM documents),
-         samp AS (SELECT doc_id, nt FROM t
-                  WHERE isref AND doc_id % 10 = 0 AND nt IS NOT NULL
-                  ORDER BY doc_id LIMIT 1000),
-         sn AS (SELECT count(*) AS n FROM samp),
-         sv AS (SELECT nt, row_number() OVER (ORDER BY nt) AS rk
-                FROM samp),
-         cuts AS (SELECT CAST(q.q AS INT) AS bin, sv.nt AS v
-                  FROM (SELECT unnest(range(1, 10)) AS q) q, sn, sv
-                  WHERE sv.rk = (q.q * sn.n + 9) // 10),
-         b AS (SELECT t.doc_id, t.isref,
-                      CAST(count(c.v) AS INT) AS bin
-               FROM t LEFT JOIN cuts c ON c.v <= t.nt
-               GROUP BY t.doc_id, t.isref),
-         g AS (SELECT bin,
-                      count(*) FILTER (WHERE isref) AS ref_n,
-                      count(*) FILTER (WHERE NOT isref) AS cur_n
-               FROM b GROUP BY bin),
-         tot AS (SELECT CAST(sum(ref_n) AS DOUBLE) AS rt,
-                        CAST(sum(cur_n) AS DOUBLE) AS ct FROM g),
-         bins AS (SELECT CAST(unnest(range(0, 10)) AS INT) AS bin),
-         g2 AS (SELECT bins.bin,
-                       coalesce(g.ref_n, 0) AS ref_n,
-                       coalesce(g.cur_n, 0) AS cur_n
-                FROM bins LEFT JOIN g ON g.bin = bins.bin)
-         SELECT g2.bin, c.v AS lo_tokens, g2.ref_n, g2.cur_n,
-                round((g2.ref_n + 1.0) / (tot.rt + 10.0), 6) AS p_ref,
-                round((g2.cur_n + 1.0) / (tot.ct + 10.0), 6) AS p_cur,
-                round(((g2.cur_n + 1.0) / (tot.ct + 10.0) -
-                       (g2.ref_n + 1.0) / (tot.rt + 10.0)) *
-                      ln(((g2.cur_n + 1.0) / (tot.ct + 10.0)) /
-                         ((g2.ref_n + 1.0) / (tot.rt + 10.0))), 6)
-                  AS psi_bin
-         FROM g2 CROSS JOIN tot LEFT JOIN cuts c ON c.bin = g2.bin
-         ORDER BY g2.bin"""),
+      tokenPsi(s"$GraftBucket < 50")),
     Q("dedup_cross_corpus", dedupCrossCorpus _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         s AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w)
-         SELECT id_a, id_b,
-                round(len(list_intersect(sha, shb))::DOUBLE /
-                  (len(sha) + len(shb) - len(list_intersect(sha, shb))),
-                  6) AS jaccard
-         FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      a.sh AS sha, b.sh AS shb
-               FROM s a JOIN s b
-                 ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-                AND 3 * len(a.sh) <= 5 * len(b.sh)
-                AND 3 * len(b.sh) <= 5 * len(a.sh))
-         WHERE len(list_intersect(sha, shb))::DOUBLE /
-               (len(sha) + len(shb) - len(list_intersect(sha, shb)))
-               >= 0.6
-         ORDER BY id_a, id_b"""),
+      jaccardPairs("a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0",
+        ThreeFifthsBand, 0.6)),
     Q("sample_shard_export", sampleShardExport _,
       """WITH h AS (
            SELECT doc_id,
@@ -5252,8 +3937,7 @@ object PipelineQueries {
     // classifier and banding oracles nested verbatim as subqueries —
     // the ensemble can only be green if each member is, under the
     // exact join/coalesce semantics the Spark plan uses.
-    Q("pipeline_quality_vote", pipelineQualityVote _, (QualityGateCtes + """,
-         nb AS (""" + NbClassifierOracle + """),
+    Q("pipeline_quality_vote", pipelineQualityVote _, (GateNbCtes + """,
          band AS (""" + PplBucketsOracle + """)
          SELECT d.doc_id,
                 (len(v.hit) = 0) AS rule_keep,
@@ -5299,8 +3983,7 @@ object PipelineQueries {
     // Confusion of the nested classifier oracle against the nested
     // rule-gate chain; integer sums cast to BIGINT (DuckDB sums to
     // HUGEINT), ratios through DOUBLE division.
-    Q("text_nb_agreement", textNbAgreement _, (QualityGateCtes + """,
-         nb AS (""" + NbClassifierOracle + """),
+    Q("text_nb_agreement", textNbAgreement _, (GateNbCtes + s""",
          c AS (SELECT
                  CAST(sum(CASE WHEN nb.predicted AND len(v.hit) = 0
                       THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -5312,17 +3995,13 @@ object PipelineQueries {
                       THEN 1 ELSE 0 END) AS BIGINT) AS tn
                FROM v JOIN nb USING (doc_id))
          SELECT tp, fp, fn, tn,
-                round(CAST(tp AS DOUBLE) / greatest(tp + fp, 1), 6)
-                  AS precision,
-                round(CAST(tp AS DOUBLE) / greatest(tp + fn, 1), 6)
-                  AS recall
+                $PrecisionRecall
          FROM c""")),
     // Decile sweep: cutoffs are VALUES at descending rank
     // ceil(q*n/10) of the capped sample (row_number ties can't change
     // the value picked), confusion cells fold in one aggregation per
     // decile; BIGINT casts as in the agreement oracle.
-    Q("text_nb_pr_curve", textNbPrCurve _, (QualityGateCtes + """,
-         nb AS (""" + NbClassifierOracle + """),
+    Q("text_nb_pr_curve", textNbPrCurve _, (GateNbCtes + s""",
          j AS (SELECT nb.doc_id, nb.log_odds AS score,
                       len(v.hit) = 0 AS label
                FROM nb JOIN v USING (doc_id)),
@@ -5351,18 +4030,14 @@ object PipelineQueries {
                            THEN 1 ELSE 0 END) AS BIGINT) AS tn
                FROM j CROSS JOIN cuts GROUP BY 1, 2)
          SELECT decile, thresh, tp, fp, fn, tn,
-                round(CAST(tp AS DOUBLE) / greatest(tp + fp, 1), 6)
-                  AS precision,
-                round(CAST(tp AS DOUBLE) / greatest(tp + fn, 1), 6)
-                  AS recall,
+                $PrecisionRecall,
                 round(2.0 * tp / greatest(2 * tp + fp + fn, 1), 6)
                   AS f1
          FROM c ORDER BY decile""")),
     // Mann-Whitney rank-sum AUC with average-rank tie correction —
     // integer arithmetic until the last division (2x the positive
     // rank sum = sum over distinct scores of p*(2*cum+c+1)).
-    Q("text_nb_auc", textNbAuc _, (QualityGateCtes + """,
-         nb AS (""" + NbClassifierOracle + """),
+    Q("text_nb_auc", textNbAuc _, (GateNbCtes + """,
          j AS (SELECT nb.log_odds AS score, len(v.hit) = 0 AS label
                FROM nb JOIN v USING (doc_id)),
          sg AS (SELECT score, count(*) AS c,

@@ -15,6 +15,7 @@ import java.nio.file.Path
   * DuckDB SQL as its batch twin.
   */
 object StreamQueries {
+  import OracleCtes._
 
   /** Run `body` (which starts and drains a streaming query) with the
     * session's shuffle-partition count — which fixes the STATE-STORE
@@ -1344,182 +1345,6 @@ object StreamQueries {
     seedIvf(s, d)
   }
 
-  /** The calibrated reference classifier replayed in SQL: `nb` scores
-    * every document ([[referenceNb]]), `t.thr` is the median of the
-    * capped mod-10 sample ([[nbThreshold]]).
-    */
-  private val NbCutCtes: String =
-    """nb AS (""" + PipelineQueries.NbClassifierOracle + """),
-         samp AS (SELECT log_odds FROM nb WHERE doc_id % 10 = 0
-                  ORDER BY doc_id LIMIT 1000),
-         r AS (SELECT log_odds,
-                      row_number() OVER (ORDER BY log_odds DESC) AS rk,
-                      count(*) OVER () AS cnt
-               FROM samp),
-         t AS (SELECT max(CASE WHEN rk = CAST(ceil(cnt / 2.0) AS INT)
-                      THEN log_odds END) AS thr
-               FROM r)"""
-
-  /** The composed curate door replayed, shared by its ingest and report
-    * rows: the static verdicts (gate chain, calibrated classifier,
-    * benchmark 8-gram overlap) define the cleared set `stat`, then the
-    * dedup door's greedy wave replay over it admits `kept1` (wave 1,
-    * even ids) and `kept2` (wave 2, odd ids).
-    */
-  private val CurateReplayCtes: String =
-    PipelineQueries.QualityGateCtes + """,
-         """ + NbCutCtes + """,
-         dws AS (SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-                 FROM documents),
-         dg AS (SELECT doc_id, bucket, unnest(list_distinct(
-                  list_transform(range(1, greatest(len(words) - 7, 1) + 1),
-                    i -> array_to_string(words[i:least(i+7, len(words))], ' '))))
-                  AS gram
-                FROM dws),
-         bgrams AS (SELECT DISTINCT gram FROM dg WHERE bucket >= 90),
-         bad AS (SELECT DISTINCT dg.doc_id FROM dg JOIN bgrams USING (gram)),
-         stat AS (SELECT d.doc_id FROM documents d
-                  JOIN v USING (doc_id)
-                  JOIN nb USING (doc_id) CROSS JOIN t
-                  LEFT JOIN bad ON bad.doc_id = d.doc_id
-                  WHERE len(v.hit) = 0 AND nb.log_odds >= t.thr
-                    AND bad.doc_id IS NULL),
-         sh AS (SELECT doc_id, list_distinct(
-                  list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-                    i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-                  AS sh
-                FROM dws JOIN stat USING (doc_id)),
-         p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-               WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-                     (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                     >= 0.5),
-         kept1 AS (SELECT st.doc_id FROM stat st
-                   WHERE st.doc_id % 2 = 0
-                     AND NOT EXISTS (SELECT 1 FROM p
-                       WHERE p.id_b = st.doc_id AND p.id_a % 2 = 0)),
-         kept2 AS (SELECT st.doc_id FROM stat st
-                   WHERE st.doc_id % 2 = 1
-                     AND NOT EXISTS (SELECT 1 FROM p JOIN kept1 k
-                       ON (p.id_a = k.doc_id AND p.id_b = st.doc_id)
-                       OR (p.id_b = k.doc_id AND p.id_a = st.doc_id))
-                     AND NOT EXISTS (SELECT 1 FROM p
-                       WHERE p.id_b = st.doc_id AND p.id_a % 2 = 1))"""
-
-  /** Two md5-seeded cosine-Lloyd rounds over `src(vec_id, v)` — the
-    * deterministic IVF fit replayed up to the round-2 cell means
-    * `${p}u2`. Every CTE name carries the prefix `p`, so one query can
-    * replay two fits.
-    */
-  private def lloydCtes(p: String, src: String): String =
-    s"""${p}seed AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h
-                  FROM $src ORDER BY h, vec_id LIMIT 16),
-         ${p}init AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1
-                    AS INT) AS cell, v FROM ${p}seed),
-         ${p}s1 AS (SELECT a.vec_id, a.v, i.cell,
-                       list_cosine_similarity(a.v, i.v) AS sim
-                FROM $src a CROSS JOIN ${p}init i),
-         ${p}a1 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM ${p}s1)
-                WHERE rn = 1),
-         ${p}u1 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM ${p}a1)
-                GROUP BY cell, pos),
-         ${p}c1 AS (SELECT cell, list(m ORDER BY pos) AS v FROM ${p}u1
-                GROUP BY cell),
-         ${p}s2 AS (SELECT a.vec_id, a.v, c.cell,
-                       list_cosine_similarity(a.v, c.v) AS sim
-                FROM $src a CROSS JOIN ${p}c1 c),
-         ${p}a2 AS (SELECT vec_id, v, cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cell) AS rn FROM ${p}s2)
-                WHERE rn = 1),
-         ${p}u2 AS (SELECT cell, pos, round(avg(x), 12) AS m FROM
-                 (SELECT cell, unnest(v) AS x,
-                         generate_subscripts(v, 1) AS pos FROM ${p}a2)
-                GROUP BY cell, pos)"""
-
-  /** The ANN scenarios' seed index replayed: [[lloydCtes]] over the
-    * even-id half `sv`, centroids `c2`. Not PipelineQueries'
-    * IvfFit16Ctes, which fits over every vector.
-    */
-  private val SeedIvfCtes: String =
-    """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                    FROM embeddings),
-         sv AS (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
-         """ + lloydCtes("", "sv") + """,
-         c2 AS (SELECT cell, list(m ORDER BY pos) AS v FROM u2
-                GROUP BY cell)"""
-
-  /** The two-phase token-budget greedy replayed, shared by the budget
-    * row and its ledger report: per lang over (quality desc, id), wave
-    * 1 (even ids) admits `k1` while its running sum stays within 5000
-    * tokens, wave 2 admits `k2` into what `s1` left.
-    */
-  private val BudgetGreedyCtes: String =
-    """WITH t AS (
-           SELECT doc_id, lang, doc_id % 2 AS wave,
-                  CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
-                    AS n_tokens,
-                  round(
-                    (CASE WHEN length(text) BETWEEN 100 AND 20000
-                          THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(list_filter(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> list_contains(['the','a','an','and','or','of',
-                          'to','in','is','it','that','for','on','with','as',
-                          'at','by'], w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) >= 0.01 THEN 0.3 ELSE 0 END) +
-                    (CASE WHEN len(regexp_extract_all(text,
-                        '[^A-Za-z0-9\s]'))::DOUBLE
-                      / greatest(length(text), 1) <= 0.2
-                      THEN 0.2 ELSE 0 END) +
-                    (CASE WHEN list_sum(list_transform(
-                        string_split_regex(trim(lower(text)), '\s+'),
-                        w -> length(w)))::DOUBLE
-                      / greatest(len(string_split_regex(trim(lower(text)),
-                          '\s+')), 1) BETWEEN 2.0 AND 12.0
-                      THEN 0.2 ELSE 0 END), 2) AS quality_score
-           FROM documents),
-         r1 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                  ORDER BY quality_score DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t WHERE wave = 0),
-         k1 AS (SELECT * FROM r1 WHERE cum <= 5000),
-         s1 AS (SELECT lang, sum(n_tokens) AS spent FROM k1 GROUP BY lang),
-         r2 AS (SELECT *, sum(n_tokens) OVER (PARTITION BY lang
-                  ORDER BY quality_score DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t WHERE wave = 1),
-         k2 AS (SELECT r2.* FROM r2 LEFT JOIN s1 USING (lang)
-                WHERE cum <= 5000 - coalesce(spent, 0))"""
-
-  /** The KMV sketch of each wave prefix, shared by the vocab rows: `b0`
-    * = the 256 smallest distinct 3-gram hashes of the even-id wave,
-    * `b1` = of the whole corpus.
-    */
-  private val KmvPrefixCtes: String =
-    """WITH ws AS (SELECT doc_id,
-                string_split_regex(trim(lower(text)), '\s+') AS words
-              FROM documents),
-         sh AS (SELECT doc_id,
-                  unnest(list_transform(
-                    range(1, greatest(len(words) - 2, 0) + 1),
-                    i -> array_to_string(words[i:i+2], ' '))) AS gram
-                FROM ws),
-         hh AS (SELECT doc_id,
-                  ('0x' || substr(md5(gram), 18, 15))::BIGINT AS h
-                FROM sh),
-         b0 AS (SELECT DISTINCT h FROM hh WHERE doc_id % 2 = 0
-                ORDER BY h LIMIT 256),
-         b1 AS (SELECT DISTINCT h FROM hh ORDER BY h LIMIT 256)"""
-
   val entries: Seq[Q] = Seq(
     // The COMPOSED funnel replayed: static verdicts (gate chain + nested
     // classifier oracle with its calibrated cut + benchmark gram overlap)
@@ -1527,12 +1352,8 @@ object StreamQueries {
     // runs restricted to it -- earlier-wave admissions and smaller-id
     // batch-mates dominate, exactly the single-door semantics composed.
     Q("stream_curate_ingest", streamCurateIngest _,
-      (CurateReplayCtes + """
-         SELECT d.doc_id, d.lang, d.source
-         FROM documents d
-         JOIN (SELECT doc_id FROM kept1
-               UNION ALL SELECT doc_id FROM kept2) k USING (doc_id)
-         ORDER BY doc_id""")),
+      s"""$CurateReplayCtes
+         $KeptWavesRows"""),
     // The same composed replay, refolded as per-wave admission COUNTS
     // (wave 1 = even ids, wave 2 = odd — docWavesDir's split): this is
     // the oracle for the summary metadata the door stamps on each
@@ -1570,7 +1391,7 @@ object StreamQueries {
     // oracle is the batch gate's kept set — the shared CTE chain, with
     // the door's own projection.
     Q("stream_quality_gate", streamQualityGate _,
-      (PipelineQueries.QualityGateCtes + """
+      (QualityGateCtes + """
          SELECT d.doc_id, d.lang, d.source
          FROM documents d JOIN v USING (doc_id)
          WHERE len(v.hit) = 0 ORDER BY d.doc_id""")),
@@ -1578,18 +1399,8 @@ object StreamQueries {
     // the oracle is the plain batch decontamination filter: train-side
     // docs minus those sharing any 8-gram with the bucket>=90 slice.
     Q("stream_decontaminate_ingest", streamDecontaminateIngest _,
-      """WITH s AS (
-           SELECT doc_id,
-                  ('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                    18, 15))::UBIGINT % 100 AS bucket,
-                  string_split_regex(trim(lower(text)), '\s+') AS words
-           FROM documents),
-         g AS (
-           SELECT doc_id, bucket, unnest(list_distinct(
-             list_transform(range(1, greatest(len(words) - 7, 1) + 1),
-               i -> array_to_string(words[i:least(i+7, len(words))], ' '))))
-               AS gram
-           FROM s),
+      s"""WITH ${bucketWords("s")},
+         ${gram8Set("g", "s")},
          bench AS (SELECT DISTINCT gram FROM g WHERE bucket >= 90),
          bad AS (SELECT DISTINCT g.doc_id FROM g JOIN bench USING (gram)
                  WHERE g.bucket < 80)
@@ -1620,16 +1431,13 @@ object StreamQueries {
     // unrounded-cosine tie order, and commit-replay semantics are
     // lake-layer state DuckDB cannot see.
     Q("stream_ann_refit", streamAnnRefit _,
-      """WITH v AS MATERIALIZED (
+      s"""WITH v AS MATERIALIZED (
            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          sv AS MATERIALIZED (SELECT vec_id, v FROM v WHERE vec_id % 2 = 0),
-         """ + lloydCtes("", "sv") + """,
-         c2 AS MATERIALIZED (SELECT cell, list(m ORDER BY pos) AS v
-                             FROM u2 GROUP BY cell),
+         ${lloydCtes("", "sv", 16)},
+         ${centroids("", mat = " MATERIALIZED")},
          fitm AS (SELECT round(avg(dd), 6) AS fit_mean FROM
-                   (SELECT min(list_sum(list_transform(
-                      range(1, len(a.v) + 1),
-                      i -> (a.v[i] - c.v[i]) * (a.v[i] - c.v[i])))) AS dd
+                   (SELECT min(${sqDist("a", "c")}) AS dd
                     FROM sv a CROSS JOIN c2 c GROUP BY a.vec_id)),
          drift AS MATERIALIZED (
            SELECT vec_id + 30000000 AS vec_id,
@@ -1640,21 +1448,16 @@ object StreamQueries {
                   list_transform(v, x -> x * 5.0 + 4.0), 2
            FROM v WHERE vec_id % 4 = 3),
          prem AS (SELECT round(avg(dd), 6) AS pre_mean FROM
-                   (SELECT min(list_sum(list_transform(
-                      range(1, len(w.v) + 1),
-                      i -> (w.v[i] - c.v[i]) * (w.v[i] - c.v[i])))) AS dd
+                   (SELECT min(${sqDist("w", "c")}) AS dd
                     FROM (SELECT * FROM drift WHERE wave = 2) w
                     CROSS JOIN c2 c GROUP BY w.vec_id)),
          comb AS MATERIALIZED (
            SELECT vec_id, v FROM sv
            UNION ALL SELECT vec_id, v FROM drift),
-         """ + lloydCtes("r", "comb") + """,
-         rc2 AS MATERIALIZED (SELECT cell, list(m ORDER BY pos) AS v
-                              FROM ru2 GROUP BY cell),
+         ${lloydCtes("r", "comb", 16)},
+         ${centroids("r", mat = " MATERIALIZED")},
          postm AS (SELECT round(avg(dd), 6) AS post_mean FROM
-                    (SELECT min(list_sum(list_transform(
-                       range(1, len(a.v) + 1),
-                       i -> (a.v[i] - c.v[i]) * (a.v[i] - c.v[i])))) AS dd
+                    (SELECT min(${sqDist("a", "c")}) AS dd
                      FROM comb a CROSS JOIN rc2 c GROUP BY a.vec_id)),
          q AS MATERIALIZED (SELECT vec_id, v FROM drift
                             WHERE wave = 1 AND vec_id < 30000040),
@@ -1662,8 +1465,7 @@ object StreamQueries {
          dpre AS (SELECT vec_id, cell FROM
                    (SELECT d.vec_id, c.cell, row_number() OVER
                       (PARTITION BY d.vec_id ORDER BY
-                        list_sum(list_transform(range(1, len(d.v) + 1),
-                          i -> (d.v[i] - c.v[i]) * (d.v[i] - c.v[i]))),
+                        ${sqDist("d", "c")},
                         c.cell) AS rn
                     FROM drift d CROSS JOIN c2 c)
                   WHERE rn = 1),
@@ -1672,8 +1474,7 @@ object StreamQueries {
          qppre AS (SELECT qid, cell FROM
                     (SELECT q.vec_id AS qid, c.cell, row_number() OVER
                        (PARTITION BY q.vec_id ORDER BY
-                         list_sum(list_transform(range(1, len(q.v) + 1),
-                           i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i]))),
+                         ${sqDist("q", "c")},
                          c.cell) AS rn
                      FROM q CROSS JOIN c2 c)
                    WHERE rn <= 4),
@@ -1684,8 +1485,7 @@ object StreamQueries {
          dpost AS (SELECT vec_id, cell FROM
                     (SELECT d.vec_id, c.cell, row_number() OVER
                        (PARTITION BY d.vec_id ORDER BY
-                         list_sum(list_transform(range(1, len(d.v) + 1),
-                           i -> (d.v[i] - c.v[i]) * (d.v[i] - c.v[i]))),
+                         ${sqDist("d", "c")},
                          c.cell) AS rn
                      FROM drift d CROSS JOIN rc2 c)
                    WHERE rn = 1),
@@ -1694,8 +1494,7 @@ object StreamQueries {
          qppost AS (SELECT qid, cell FROM
                      (SELECT q.vec_id AS qid, c.cell, row_number() OVER
                         (PARTITION BY q.vec_id ORDER BY
-                          list_sum(list_transform(range(1, len(q.v) + 1),
-                            i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i]))),
+                          ${sqDist("q", "c")},
                           c.cell) AS rn
                       FROM q CROSS JOIN rc2 c)
                     WHERE rn <= 4),
@@ -1722,14 +1521,13 @@ object StreamQueries {
     // wave's mean squared L2 distance to its nearest fitted centroid.
     // Wave 1 = vec_id ≡ 1 (mod 4), wave 2 = ≡ 3 (vecWavesDir's split).
     Q("stream_ann_report", streamAnnReport _,
-      SeedIvfCtes + """,
+      SeedIvfCtes + s""",
          waves AS (SELECT vec_id, v,
                           CASE WHEN vec_id % 4 = 1 THEN 0 ELSE 1 END
                             AS batch_id
                    FROM v WHERE vec_id % 2 = 1),
          d AS (SELECT w.batch_id, w.vec_id,
-                      min(list_sum(list_transform(range(1, len(w.v) + 1),
-                        i -> (w.v[i] - c.v[i]) * (w.v[i] - c.v[i]))))
+                      min(${sqDist("w", "c")})
                         AS dd
                FROM waves w CROSS JOIN c2 c
                GROUP BY w.batch_id, w.vec_id)
@@ -1745,11 +1543,9 @@ object StreamQueries {
     // wave-1 admission) or a smaller-id same-cell wave-mate sits at
     // rounded cosine >= 0.98.
     Q("stream_semantic_dedup", streamSemanticDedup _,
-      SeedIvfCtes + """,
+      SeedIvfCtes + s""",
          tw1 AS (SELECT vec_id + 10000000 AS vec_id,
-                        (list_transform(range(1, len(embedding) + 1),
-                          i -> embedding[i] *
-                            CAST(1.0 + ((i - 1) % 5) * 0.01 AS FLOAT)))
+                        ($TwinJitter)
                           ::DOUBLE[] AS v
                  FROM embeddings),
          tw2 AS (SELECT vec_id + 20000000 AS vec_id,
@@ -1805,12 +1601,10 @@ object StreamQueries {
     // every event arrives twice in the stream; the oracle is the plain
     // table — exactly-once or the row counts diverge
     Q("stream_dedup", streamDedup _,
-      """SELECT event_id, user_id, event_type, round(value, 4) AS value
-         FROM events ORDER BY event_id"""),
+      EventRows),
     // the whole stream must land in the lake table exactly once
     Q("stream_lake_ingest", streamLakeIngest _,
-      """SELECT event_id, user_id, event_type, round(value, 4) AS value
-         FROM events ORDER BY event_id"""),
+      EventRows),
     // the MV maintained from streamed commits = the full aggregate
     Q("stream_mview", streamMview _,
       """SELECT user_id, count(*) AS n_events,
@@ -1820,8 +1614,7 @@ object StreamQueries {
     // stream, every unseeded row inserted, nothing duplicated — the
     // final table is exactly the plain events table
     Q("stream_lake_upsert", streamLakeUpsert _,
-      """SELECT event_id, user_id, event_type, round(value, 4) AS value
-         FROM events ORDER BY event_id"""),
+      EventRows),
     Q("stream_enrich", streamEnrich _,
       """SELECT event_id, e.user_id, c_mktsegment AS mktsegment,
                 round(value, 4) AS value
@@ -1845,20 +1638,7 @@ object StreamQueries {
     // reshaped to one row per completed step — the stream's append-mode
     // output format
     Q("stream_funnel", streamFunnel _,
-      """WITH e AS (
-           SELECT user_id, event_type,
-                  CAST(date_trunc('microseconds', ts) AS TIMESTAMP) AS t
-           FROM events),
-         s1 AS (SELECT user_id, min(t) AS t1 FROM e
-                WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min(e.t) AS t2
-                FROM e JOIN s1 USING (user_id)
-                WHERE e.event_type = 'click' AND e.t > s1.t1
-                GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min(e.t) AS t3
-                FROM e JOIN s2 USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.t > s2.t2
-                GROUP BY e.user_id)
+      s"""$FunnelCtes
          SELECT user_id, CAST(1 AS INT) AS step, t1 AS step_time FROM s1
          UNION ALL
          SELECT user_id, CAST(2 AS INT), t2 FROM s2
@@ -1910,21 +1690,17 @@ object StreamQueries {
     // fill, k-th-min hash, and the (k-1)*2^60/h_k estimate in the same
     // double arithmetic as the door's driver-side stamp.
     Q("stream_vocab_growth_report", streamVocabReport _,
-      KmvPrefixCtes + """,
+      KmvPrefixCtes + s""",
          s0 AS (SELECT CAST(0 AS BIGINT) AS batch_id,
                        CAST(count(*) AS INT) AS k_used,
                        max(h) AS kth_min,
-                       CASE WHEN count(*) < 256 THEN count(*)::BIGINT
-                            ELSE CAST(round((count(*) - 1) *
-                              pow(2.0, 60) / max(h)) AS BIGINT) END
+                       $KmvEstimate
                          AS est_distinct
                 FROM b0),
          s1 AS (SELECT CAST(1 AS BIGINT) AS batch_id,
                        CAST(count(*) AS INT) AS k_used,
                        max(h) AS kth_min,
-                       CASE WHEN count(*) < 256 THEN count(*)::BIGINT
-                            ELSE CAST(round((count(*) - 1) *
-                              pow(2.0, 60) / max(h)) AS BIGINT) END
+                       $KmvEstimate
                          AS est_distinct
                 FROM b1)
          SELECT * FROM s0 UNION ALL SELECT * FROM s1
@@ -1934,15 +1710,11 @@ object StreamQueries {
     // so no prefix folding is needed here — addition is the READ-side
     // property, checked by the report row's cumulative column.
     Q("stream_freq_sketch", streamFreqSketch _,
-      """WITH w AS (SELECT CAST(doc_id % 2 AS BIGINT) AS batch_id,
-                  lower(unnest(string_split_regex(trim(text), '\s+')))
-                    AS word
-                FROM documents),
-         hd AS (SELECT unnest([0, 1, 2, 3]) AS d)
+      s"""WITH $BatchTokens,
+         $CmsRows
          SELECT batch_id,
                 CAST(d AS BIGINT) * 1024 +
-                  CAST(('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                    || word), 18, 15))::UBIGINT AS BIGINT) % 1024
+                  ${cmsBucket("d", "word")}
                   AS cell,
                 count(*) AS cnt
          FROM w CROSS JOIN hd
@@ -1952,24 +1724,17 @@ object StreamQueries {
     // with the door's absent-cell-is-zero semantics (LEFT JOIN +
     // coalesce), summed per batch.
     Q("stream_freq_sketch_report", streamFreqReport _,
-      """WITH w AS (SELECT CAST(doc_id % 2 AS BIGINT) AS batch_id,
-                  lower(unnest(string_split_regex(trim(text), '\s+')))
-                    AS word
-                FROM documents),
-         top AS (SELECT word FROM (SELECT word, count(*) AS n FROM w
-                   GROUP BY word ORDER BY n DESC, word LIMIT 5)),
-         hd AS (SELECT unnest([0, 1, 2, 3]) AS d),
+      s"""WITH $BatchTokens,
+         $TopWords5,
+         $CmsRows,
          g AS (SELECT batch_id, d,
-                      CAST(('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                        || word), 18, 15))::UBIGINT AS BIGINT) % 1024
+                      ${cmsBucket("d", "word")}
                         AS bkt,
                       count(*) AS cnt
                FROM w CROSS JOIN hd GROUP BY 1, 2, 3),
          bs AS (SELECT DISTINCT batch_id FROM g),
          pq AS (SELECT top.word, hd.d,
-                       CAST(('0x' || substr(md5(CAST(hd.d AS VARCHAR)
-                         || ':' || top.word), 18, 15))::UBIGINT
-                         AS BIGINT) % 1024 AS bkt
+                       ${cmsBucket("hd.d", "top.word")} AS bkt
                 FROM top CROSS JOIN hd),
          cg AS (SELECT bs.batch_id, g.d, g.bkt, sum(g.cnt) AS cnt
                 FROM bs JOIN g ON g.batch_id <= bs.batch_id
@@ -2000,62 +1765,17 @@ object StreamQueries {
     // same 3-word-shingle sets as the dedup_* oracles): kept = docs not
     // matching an admitted earlier-wave doc nor a smaller-id wave-mate.
     Q("stream_dedup_ingest", streamDedupIngest _,
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+')
-                    AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(
-             list_transform(range(1, greatest(len(words) - 2, 1) + 1),
-               i -> array_to_string(words[i:least(i+2, len(words))], ' ')))
-               AS sh
-           FROM w),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                 >= 0.5),
-         kept1 AS (
-           SELECT d.doc_id FROM documents d
-           WHERE d.doc_id % 2 = 0
-             AND NOT EXISTS (SELECT 1 FROM p
-               WHERE p.id_b = d.doc_id AND p.id_a % 2 = 0)),
-         kept2 AS (
-           SELECT d.doc_id FROM documents d
-           WHERE d.doc_id % 2 = 1
-             AND NOT EXISTS (SELECT 1 FROM p JOIN kept1 k
-               ON (p.id_a = k.doc_id AND p.id_b = d.doc_id)
-               OR (p.id_b = k.doc_id AND p.id_a = d.doc_id))
-             AND NOT EXISTS (SELECT 1 FROM p
-               WHERE p.id_b = d.doc_id AND p.id_a % 2 = 1))
-         SELECT d.doc_id, d.lang, d.source
-         FROM documents d
-         JOIN (SELECT doc_id FROM kept1
-               UNION ALL SELECT doc_id FROM kept2) k USING (doc_id)
-         ORDER BY doc_id"""),
+      s"""WITH ${shingleCtes("sh")},
+         $WavePairs,
+         ${twoWaveKept("documents", "d")}
+         $KeptWavesRows"""),
     Q("stream_hourly_counts", streamHourly _,
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_bucket,
-                event_type, count(*) AS n_events,
-                round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type"""),
+      EventsHourlyOracle),
     // 10-minute-gap sessionization as batch gaps-and-islands SQL — the
     // sentinel-flushed stream emits every session, so the incremental
     // stateful path is held to the exact batch answer.
     Q("stream_sessions", streamSessions _,
-      """WITH x AS (
-           SELECT user_id, CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
-                    AS t, value,
-                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         IS NULL
-                       OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         > INTERVAL 10 MINUTE
-                       THEN 1 ELSE 0 END AS new_s
-           FROM events),
-         g AS (
-           SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY t
-             ROWS UNBOUNDED PRECEDING) AS grp
-           FROM x)
+      s"""${sessionCtes(", value", ">")}
          SELECT user_id, min(t) AS session_start, max(t) AS session_end,
                 CAST(count(*) AS INT) AS n_events,
                 round(sum(value), 4) AS sum_value

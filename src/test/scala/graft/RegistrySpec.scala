@@ -22,6 +22,14 @@ class RegistrySpec extends AnyFunSuite {
   test("every row has a non-blank oracle") {
     val blank = SparkEntry.entries.filter(_.oracle.trim.isEmpty).map(_.name)
     assert(blank.isEmpty, s"rows without an oracle: $blank")
+    // A shared chain read before its object is initialized composes as
+    // the word `null`; a chain spliced into a string without the `s`
+    // interpolator leaves its `${` behind.
+    val uninit = SparkEntry.entries.filter(q => "\\bnull\\b".r
+      .findFirstIn(q.oracle).nonEmpty).map(_.name)
+    assert(uninit.isEmpty, s"oracles with a null chain: $uninit")
+    val raw = SparkEntry.entries.filter(_.oracle.contains("${")).map(_.name)
+    assert(raw.isEmpty, s"oracles with an uninterpolated chain: $raw")
   }
 
   test("a row is named stream_* exactly when StreamQueries registers it") {

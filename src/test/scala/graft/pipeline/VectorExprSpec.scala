@@ -132,22 +132,6 @@ class VectorExprSpec extends AnyFunSuite {
       "extra trailing dims ignored (min length)")
   }
 
-  test("dot kernel ≡ HOF dot, and it codegens") {
-    val emb = s.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-    val native = emb.select(col("vec_id"),
-      graft.functions.VectorExpressions.dotNative(col("v"), col("v")).as("d"))
-    val hof = emb.select(col("vec_id"),
-      Similarity.dot(col("v"), col("v")).as("d"))
-    // identical accumulation order → identical doubles, no tolerance
-    assert(native.orderBy("vec_id").collect().toSeq ==
-      hof.orderBy("vec_id").collect().toSeq)
-    val gen = native.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    assert(gen.contains("Found 1 WholeStageCodegen"), gen.take(500))
-  }
-
   test("top-k kernel: exact order, id tie-break, self excluded, " +
       "empty for isolated rows") {
     import s.implicits._
