@@ -243,214 +243,27 @@ case class NearestCentroid(child: Expression,
       : NearestCentroid = copy(child = newChild)
 }
 
-/** Exact top-`k` cosine neighbors against a FIXED vector matrix in one
-  * fused pass per row: `array<struct<neighbor, cosine>>` sorted by
-  * (cosine desc, id asc), the row's own id excluded. The kNN-graph
-  * kernel: [[NearestCentroid]]'s plan-shipped-matrix pattern
-  * generalized from argmax to a k-sized insertion buffer, turning
-  * graph construction from crossJoin(N) → exchange → two ranking
-  * windows (N² rows shuffled and sorted) into a plain projection —
-  * N rows in, N·k structs out, ZERO shuffle.
+/** Exact top-`k` cosine neighbors of one query vector against one
+  * packed candidate BLOCK, in one fused pass per row:
+  * `array<struct<neighbor, cosine>>` sorted by (cosine desc, id asc),
+  * the row's own id (`selfId`) excluded. The block is a runtime column
+  * in the [[VectorExpressions.packBlock]] format — id-sorted
+  * `array<struct<id, v, nrm>>`, one corpus block per row — so a
+  * blocked top-k meets each (query row × block row) pair in a join and
+  * no single place ever holds more than one block. Per-block top-k
+  * unions then merge to the exact global top-k (a block's
+  * (cosine desc, id asc) top-k can only MISS candidates that a better
+  * candidate of the same block displaces, so the union of per-block
+  * top-ks contains the global top-k).
   *
   * Arithmetic is EXACTLY [[CosineSimilarity]]'s (`dot/(√nx·√ny)`,
-  * norms truncated to the common prefix; matrix norms precomputed once
-  * — the per-row factor an all-pairs kernel recomputes N times), and
-  * selection order is exactly the ranking window's (cosine desc, id
-  * asc), so results replay in an ANSI oracle. Zero-denominator
-  * candidates are skipped; a row with no valid neighbor yields an
-  * empty array. The matrix ships with the plan (index-fits-in-memory
-  * regime, the same contract the broadcast-query crossJoin had
-  * implicitly); beyond that, block the matrix and merge per-block
-  * top-k unions, or use the IVF cell path.
-  */
-case class TopKNeighbors(vec: Expression, selfId: Expression,
-    ids: Array[Long], matrix: Array[Array[Double]], k: Int)
-    extends BinaryExpression {
-
-  override def left: Expression = vec
-  override def right: Expression = selfId
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("neighbor", LongType, nullable = false),
-    StructField("cosine", DoubleType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (vec.dataType, selfId.dataType) match {
-      case (ArrayType(DoubleType, _), LongType)
-        if k >= 1 && ids.length == matrix.length && ids.nonEmpty &&
-          matrix.forall(_.length == matrix(0).length) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(DoubleType, _), LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          "top_k_neighbors needs k >= 1 and a non-empty id/vector list " +
-            "of equal length with uniform dimensionality")
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_k_neighbors expects (array<double>, bigint), got $l / $r")
-    }
-
-  /** √(Σv²) per matrix row, once — same arithmetic as
-    * [[CosineSimilarity]]'s `sqrt(ny)`.
-    */
-  private lazy val norms: Array[Double] = matrix.map { c =>
-    var s = 0.0; var i = 0
-    while (i < c.length) { s += c(i) * c(i); i += 1 }
-    math.sqrt(s)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val self = b.asInstanceOf[Long]
-    val nd = x.numElements()
-    val dim = matrix(0).length
-    val n = math.min(nd, dim)
-    var nx = 0.0
-    var i = 0
-    while (i < n) { val xi = x.getDouble(i); nx += xi * xi; i += 1 }
-    val snx = math.sqrt(nx)
-    val bn = new Array[Long](k); val bc = new Array[Double](k)
-    var size = 0
-    var c = 0
-    while (c < matrix.length) {
-      if (ids(c) != self) {
-        val row = matrix(c)
-        var dot = 0.0; i = 0
-        while (i < n) { dot += x.getDouble(i) * row(i); i += 1 }
-        val cn =
-          if (nd >= dim) norms(c)
-          else {
-            var s = 0.0; i = 0
-            while (i < n) { s += row(i) * row(i); i += 1 }
-            math.sqrt(s)
-          }
-        val denom = snx * cn
-        if (denom != 0.0) {
-          val cos = dot / denom
-          // insertion position under (cosine desc, id asc)
-          var j = size
-          while (j > 0 &&
-              (cos > bc(j - 1) || (cos == bc(j - 1) && ids(c) < bn(j - 1))))
-            j -= 1
-          if (j < k) {
-            val end = math.min(size, k - 1)
-            var m = end
-            while (m > j) { bc(m) = bc(m - 1); bn(m) = bn(m - 1); m -= 1 }
-            bc(j) = cos; bn(j) = ids(c)
-            if (size < k) size += 1
-          }
-        }
-      }
-      c += 1
-    }
-    val out = new Array[Any](size)
-    i = 0
-    while (i < size) { out(i) = InternalRow(bn(i), bc(i)); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val matRef = ctx.addReferenceObj("matrix", matrix, "double[][]")
-    val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
-    val normsRef = ctx.addReferenceObj("norms", norms, "double[]")
-    val rowClass = classOf[org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow].getName
-    val arrClass = classOf[org.apache.spark.sql.catalyst.util
-      .GenericArrayData].getName
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val c = ctx.freshName("c")
-      val j = ctx.freshName("j"); val m = ctx.freshName("m")
-      val nd = ctx.freshName("nd"); val n = ctx.freshName("n")
-      val nx = ctx.freshName("nx"); val snx = ctx.freshName("snx")
-      val dot = ctx.freshName("dot"); val denom = ctx.freshName("denom")
-      val cos = ctx.freshName("cos"); val cn = ctx.freshName("cn")
-      val s2 = ctx.freshName("s2"); val row = ctx.freshName("row")
-      val bn = ctx.freshName("bn"); val bc = ctx.freshName("bc")
-      val size = ctx.freshName("size"); val end = ctx.freshName("end")
-      val out = ctx.freshName("out"); val vals = ctx.freshName("vals")
-      s"""
-        int $nd = $a.numElements();
-        int $n = java.lang.Math.min($nd, $matRef[0].length);
-        double $nx = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double v = $a.getDouble($i); $nx += v * v;
-        }
-        double $snx = java.lang.Math.sqrt($nx);
-        long[] $bn = new long[$k]; double[] $bc = new double[$k];
-        int $size = 0;
-        for (int $c = 0; $c < $matRef.length; $c++) {
-          if ($idsRef[$c] == $b) continue;
-          double[] $row = $matRef[$c];
-          double $dot = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            $dot += $a.getDouble($i) * $row[$i];
-          }
-          double $cn;
-          if ($nd >= $row.length) {
-            $cn = $normsRef[$c];
-          } else {
-            double $s2 = 0.0;
-            for (int $i = 0; $i < $n; $i++) {
-              $s2 += $row[$i] * $row[$i];
-            }
-            $cn = java.lang.Math.sqrt($s2);
-          }
-          double $denom = $snx * $cn;
-          if ($denom == 0.0) continue;
-          double $cos = $dot / $denom;
-          int $j = $size;
-          while ($j > 0 && ($cos > $bc[$j - 1] ||
-              ($cos == $bc[$j - 1] && $idsRef[$c] < $bn[$j - 1]))) {
-            $j--;
-          }
-          if ($j < $k) {
-            int $end = java.lang.Math.min($size, $k - 1);
-            for (int $m = $end; $m > $j; $m--) {
-              $bc[$m] = $bc[$m - 1]; $bn[$m] = $bn[$m - 1];
-            }
-            $bc[$j] = $cos; $bn[$j] = $idsRef[$c];
-            if ($size < $k) $size++;
-          }
-        }
-        Object[] $out = new Object[$size];
-        for (int $i = 0; $i < $size; $i++) {
-          Object[] $vals = new Object[2];
-          $vals[0] = java.lang.Long.valueOf($bn[$i]);
-          $vals[1] = java.lang.Double.valueOf($bc[$i]);
-          $out[$i] = new $rowClass($vals);
-        }
-        ${ev.value} = new $arrClass($out);
-      """
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopKNeighbors =
-    copy(vec = newLeft, selfId = newRight)
-}
-
-/** [[TopKNeighbors]] with the candidate matrix as a RUNTIME COLUMN —
-  * `array<struct<id, v, nrm>>` built by packing one corpus block per
-  * row (`collect_list` sorted by id) — instead of a plan-shipped
-  * literal. This is the kernel of the BLOCKED kNN path: the monolithic
-  * kernel requires the whole corpus matrix on the driver and inside
-  * every task; this one meets each (query row × block row) pair in a
-  * join, so no single place ever holds more than one block. Per-block
-  * top-k unions then merge to the exact global top-k (a block's
-  * (cosine desc, id asc) top-k can only MISS candidates that a better
-  * global candidate displaces, so the union of per-block top-ks
-  * contains the global top-k).
-  *
-  * Arithmetic parity with [[TopKNeighbors]] is exact: same sequential
-  * dot/norm accumulation over the common prefix, same
-  * (cosine desc, id asc) insertion order (block arrays are id-sorted),
-  * same zero-denominator skip. `nrm` is the precomputed √Σv² of the
-  * candidate (the pack step computes it with an in-order fold, matching
-  * the kernel's loop); rows shorter than a candidate hit the same
-  * recompute-over-prefix slow path.
+  * norms truncated to the common prefix), and selection order is
+  * exactly the ranking window's (cosine desc, id asc), so results
+  * replay in an ANSI oracle. `nrm` is the candidate's precomputed √Σv²
+  * (an in-order fold, matching the kernel's loop); rows shorter than a
+  * candidate recompute its norm over the common prefix.
+  * Zero-denominator candidates are skipped; a row with no valid
+  * neighbor yields an empty array.
   */
 case class TopKNeighborsAgainst(vec: Expression, selfId: Expression,
     block: Expression, k: Int)
@@ -488,8 +301,9 @@ case class TopKNeighborsAgainst(vec: Expression, selfId: Expression,
     val blk = c.asInstanceOf[ArrayData]
     val nb = blk.numElements()
     val nd = x.numElements()
-    // query norm over min(nd, dim of first candidate) — identical to
-    // the monolithic kernel under its own uniform-dimensionality rule
+    // query norm over min(nd, dim of first candidate) — exact
+    // CosineSimilarity arithmetic when the block's vectors share one
+    // dimensionality
     val dim = if (nb == 0) 0
       else blk.getStruct(0, 3).getArray(1).numElements()
     val n0 = math.min(nd, dim)
@@ -855,26 +669,9 @@ object VectorExpressions {
       graftshim.columnExpr(vec.cast("array<double>")),
       planes.flatten.toArray, planes.size))
 
-  /** Column API for [[TopKNeighbors]]: matrix rows sorted by id so the
-    * scan order (and thus any tie handling) is reproducible regardless
-    * of the order the caller collected them in.
-    */
-  def topKNeighborsNative(vec: Column, selfId: Column,
-      ids: Array[Long], matrix: Array[Array[Double]], k: Int): Column = {
-    require(ids.length == matrix.length && ids.nonEmpty,
-      "top_k_neighbors: id/vector lists must align and be non-empty")
-    require(matrix.forall(_.length == matrix(0).length),
-      "top_k_neighbors: vectors must share one dimensionality")
-    val order = ids.indices.sortBy(ids(_)).toArray
-    graftshim.columnOf(TopKNeighbors(
-      graftshim.columnExpr(vec), graftshim.columnExpr(selfId),
-      order.map(ids(_)), order.map(matrix(_)), k))
-  }
-
-  /** Column API for [[TopKNeighborsAgainst]]: `block` must be an
-    * id-SORTED `array<struct<id, v, nrm>>` (the pack step sorts), so
-    * the candidate scan order — and thus tie handling — matches the
-    * monolithic kernel's id-sorted matrix.
+  /** Column API for [[TopKNeighborsAgainst]]: `block` must be a
+    * [[packBlock]] column, whose id order fixes the candidate scan
+    * order and thus the tie handling.
     */
   def topKNeighborsAgainst(vec: Column, selfId: Column, block: Column,
       k: Int): Column = {
@@ -882,6 +679,20 @@ object VectorExpressions {
     graftshim.columnOf(TopKNeighborsAgainst(
       graftshim.columnExpr(vec), graftshim.columnExpr(selfId),
       graftshim.columnExpr(block), k))
+  }
+
+  /** The one builder of the [[TopKNeighborsAgainst]] block format, as
+    * an aggregate: the group's (id, v) rows as an id-sorted
+    * `array<struct<id bigint, v array<double>, nrm double>>`, `nrm` the
+    * in-order √Σv² fold (bit-identical to the kernel's own
+    * accumulation). Use as `groupBy(blockKeys).agg(packBlock(id, v))`.
+    */
+  def packBlock(id: Column, v: Column): Column = {
+    import org.apache.spark.sql.functions._
+    transform(sort_array(collect_list(struct(id.as("id"), v.as("v")))),
+      s => struct(s("id").as("id"), s("v").as("v"),
+        sqrt(aggregate(s("v"), lit(0.0d), (acc, x) => acc + x * x))
+          .as("nrm")))
   }
 
   /** Column API for [[NearestCentroid]]: cells sorted ascending so the

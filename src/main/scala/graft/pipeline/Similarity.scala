@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.VectorExpressions.{packBlock, topKNeighborsAgainst}
 
 /** Approximate-nearest-neighbor similarity search over an embedding
   * column (`Array[Float]`).
@@ -13,8 +14,8 @@ import org.apache.spark.sql.expressions.Window
   *    vector side, per-query top-k via ranking window. The baseline any
   *    ANN must beat and the verifier for recall.
   *  - [[IvfIndex]] — IVF-style scale path: k-means coarse quantizer
-  *    (Spark MLlib), vectors assigned to their nearest centroid once
-  *    (cluster-pruned storage); queries probe only `nprobe` nearest
+  *    ([[buildIvfDeterministic]]), vectors assigned to their nearest
+  *    centroid once (cluster-pruned storage); queries probe only `nprobe` nearest
   *    cells, scanning a fraction of the data. At 100 TB this is the
   *    difference between a full-table scan per query batch and touching
   *    `nprobe/nlist` of it.
@@ -127,7 +128,7 @@ object Similarity {
     rankTopK(rescored, k, idCol)
   }
 
-  /** IVF coarse index: centroids fit once (sampled k-means, fixed seed),
+  /** IVF coarse index: centroids fit once (deterministic k-means),
     * vectors carry their cell id. `table` is set when the index is
     * persisted ([[persistIvf]]/[[loadIvf]]) — probes then prune data
     * FILES by cell instead of filtering cached partitions.
@@ -174,16 +175,6 @@ object Similarity {
       Some(t))
   }
 
-  /** Incrementally index newly-arrived vectors: assign each to its
-    * nearest EXISTING centroid and append to the cell-partitioned index
-    * table — a normal snapshot-isolated lake commit, so the next probe
-    * sees the new rows with the same file-level cell pruning. No re-fit:
-    * the quantizer only needs re-training on distribution drift, which
-    * the caller detects (e.g. rising mean assignment distance) and
-    * handles by rebuilding via [[buildIvf]]+[[persistIvf]]. This is the
-    * 100 TB maintenance path — appending a day's vectors touches only
-    * the new data, never the existing index files.
-    */
   /** Assignment-quality stats of a vector batch against a FIXED
     * centroid set: (count, mean squared L2 distance to the nearest
     * centroid, 1e-6 rounded) — the drift signal behind the "when do I
@@ -220,6 +211,16 @@ object Similarity {
     (row.getLong(0), row.getDouble(1))
   }
 
+  /** Incrementally index newly-arrived vectors: assign each to its
+    * nearest EXISTING centroid and append to the cell-partitioned index
+    * table — a normal snapshot-isolated lake commit, so the next probe
+    * sees the new rows with the same file-level cell pruning. No re-fit:
+    * the quantizer only needs re-training on distribution drift, which
+    * the caller detects (e.g. rising mean assignment distance) and
+    * handles by rebuilding via [[buildIvfDeterministic]]+[[persistIvf]].
+    * This is the 100 TB maintenance path — appending a day's vectors
+    * touches only the new data, never the existing index files.
+    */
   def refreshIvf(spark: org.apache.spark.sql.SparkSession, location: String,
       newVectors: DataFrame, vecCol: String = "embedding",
       idCol: String = "vec_id",
@@ -235,52 +236,6 @@ object Similarity {
     loadIvf(spark, location)
   }
 
-  /** `maxTrainRows > 0` caps the QUANTIZER-TRAINING sample (seeded,
-    * deterministic): coarse centroids need ~10²-10³ points per cell,
-    * not the corpus — at 100 TB training the quantizer on every vector
-    * is 10 full corpus passes for no recall gain (the standard IVF
-    * practice: fit on a bounded sample, assign everything). Assignment
-    * below always covers the FULL corpus either way.
-    */
-  def buildIvf(vectors: DataFrame, nlist: Int, vecCol: String = "embedding",
-      idCol: String = "vec_id", sampleFraction: Double = 1.0,
-      maxTrainRows: Long = 0L): IvfIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val frac =
-      if (maxTrainRows <= 0L) sampleFraction
-      else {
-        // On a bare parquet scan this count is metadata-only; on a
-        // filtered/derived frame it is a full (column-pruned) pass —
-        // acceptable because the fit itself makes 10. The seeded
-        // Bernoulli sample enforces the row cap only APPROXIMATELY
-        // (binomial around the target), which is fine: the cap bounds
-        // training cost, it is not a semantic contract.
-        val n = vectors.count()
-        math.min(sampleFraction,
-          if (n <= maxTrainRows) 1.0 else maxTrainRows.toDouble / n)
-      }
-    // Few fat partitions for the iterative fit: k-means makes 10 passes,
-    // and at sample scale 32 tiny tasks/pass is pure scheduler overhead.
-    val train = (if (frac < 1.0)
-      vectors.sample(withReplacement = false, frac, seed = 42)
-    else vectors)
-      .select(array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-      .coalesce(4)
-    val model = new KMeans().setK(nlist).setSeed(42).setMaxIter(10)
-      .fit(train)
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray) }
-    val assignments = vectors
-      .transform(assignCells(centroids, vecCol, idCol))
-    IvfIndex(centroids, assignments)
-  }
-
-  /** Nearest-centroid assignment as a broadcast join + ranking window:
-    * N×nlist scored rows, vectors never shuffled by data volume — the
-    * plan that survives 100× scale (a giant unrolled argmin expression
-    * does not: it blows up analysis/codegen at nlist×dim literals).
-    */
   /** Nearest-centroid assignment by cosine against a centroid TABLE
     * `(cell, centroid vector)` — the building block of semantic
     * clustering and cluster-balanced sampling. Centroid sets are
@@ -311,17 +266,17 @@ object Similarity {
   /** Distributed Lloyd's k-means (cosine assignment, elementwise-mean
     * update) with deterministic seeding — the iterative broadcast-train
     * loop, hand-rolled so every step is an auditable Spark plan (unlike
-    * [[buildIvf]]'s MLlib fit, whose seeding is library-internal and
-    * thus not oracle-replayable). Per iteration the corpus streams ONCE
+    * an MLlib fit, whose seeding is library-internal and thus not
+    * oracle-replayable). Per iteration the corpus streams ONCE
     * through the codegen'd [[graft.functions.NearestCentroid]] argmax
     * kernel — assignment itself never shuffles; the mean update is one
     * vector-sum aggregate ([[graft.functions.VectorSumAgg]]) whose
     * exchange carries k×partitions fixed-size partial-sum vectors
     * (map-side combine). Centroids live on the driver between
     * iterations — k×dim doubles, metadata-sized by the same contract
-    * as [[buildIvf]]/[[assignToCentroids]] — and round to a 1e-12 grid
-    * so assignments are stable across summation orders (engine,
-    * partition layout).
+    * as [[buildIvfDeterministic]]/[[assignToCentroids]] — and round to a
+    * 1e-12 grid so assignments are stable across summation orders
+    * (engine, partition layout).
     *
     * Seeding: the k corpus vectors ranked first by `md5(id)` — a
     * deterministic uniform permutation (the [[Sampling.uniformSample]]
@@ -446,16 +401,15 @@ object Similarity {
         col("cell"), col("centroid_cosine"))
   }
 
-  /** [[buildIvf]] with the ORACLE-REPLAYABLE quantizer: centroids from
-    * the in-house deterministic Lloyd loop ([[kmeansTrain]] — md5
-    * seeding, fixed iterations, gridded means) instead of MLlib's
-    * library-internal k-means||. Everything downstream (L2 cell
-    * assignment, persistence layout, probe shape) is IDENTICAL — this
-    * exists so the whole IVF probe, quantizer included, can replay in
-    * ANSI SQL and the `sim_topk_ivf` row hash-checks instead of being
-    * the one recall-gated exception. Also drops the MLlib dependency
-    * from streaming ingest scenarios (class-loading alone dominated
-    * small fits).
+  /** Build an [[IvfIndex]] with an ORACLE-REPLAYABLE quantizer:
+    * centroids from the in-house deterministic Lloyd loop
+    * ([[kmeansTrain]] — md5 seeding, fixed iterations, gridded means),
+    * every vector assigned to its L2-nearest cell ([[assignCells]]).
+    * The whole IVF probe, quantizer included, replays in ANSI SQL, so
+    * the `sim_topk_ivf` row hash-checks instead of being recall-gated.
+    * `maxTrainRows > 0` caps the QUANTIZER-TRAINING sample (seeded):
+    * coarse centroids need ~10²-10³ points per cell, not the corpus;
+    * assignment always covers the FULL corpus.
     */
   def buildIvfDeterministic(vectors: DataFrame, nlist: Int,
       iters: Int = 2, vecCol: String = "embedding",
@@ -1023,21 +977,32 @@ object Similarity {
     */
   private[graft] def assignCellsDist(
       centroids: Array[(Int, Array[Double])],
+      vecCol: String, idCol: String)(vectors: DataFrame): DataFrame =
+    vectors.transform(nearestCells(centroids, 1, vecCol, idCol))
+      .select(col(idCol), col(vecCol), col("cell"), col("dist").as("_dist"))
+
+  /** The nearest-cell probe: each `vectors` row's `n` nearest cells by
+    * squared L2 to the broadcast centroid table (order-identical to
+    * L2), ties to the lower cell — the rows plus `cell` and `dist`. The
+    * index layout ([[assignCellsDist]], n = 1), the [[ivfTopK]] query
+    * probe and the [[knnGraphIvf]] corpus probe all rank cells here, so
+    * a probe can never disagree with the layout it probes.
+    */
+  private def nearestCells(centroids: Array[(Int, Array[Double])], n: Int,
       vecCol: String, idCol: String)(vectors: DataFrame): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val cents = broadcast(
       centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
         .toDF("cell", "cvec"))
-    val scored = vectors.crossJoin(cents)
+    val w = Window.partitionBy(col(idCol))
+      .orderBy(col("dist"), col("cell"))
+    vectors.crossJoin(cents)
       .withColumn("dist",
         aggregate(zip_with(col(vecCol), col("cvec"),
           (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, x) => acc + x))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("dist"), col("cell"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col(idCol), col(vecCol), col("cell"), col("dist").as("_dist"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= n)
   }
 
   /** ANN top-k: probe the `nprobe` cells nearest each query, exact
@@ -1046,20 +1011,9 @@ object Similarity {
   def ivfTopK(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = broadcast(
-      index.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
-        .toDF("cell", "cvec"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist"), col("cell"))
     val probes =
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-        .crossJoin(cents)
-        .withColumn("dist",
-          aggregate(zip_with(col("qvec"), col("cvec"),
-            (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, x) => acc + x))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= nprobe)
+        .transform(nearestCells(index.centroids, nprobe, "qvec", "query_id"))
         .select(col("query_id"), col("qvec"), col("cell"))
     // Persisted index: the probe assignment is queries×nprobe rows —
     // already small enough to broadcast by contract — so collect it ONCE
@@ -1077,14 +1031,8 @@ object Similarity {
         (t.read(col("cell").isin(cells: _*)), qxLocal)
       case None => (index.assignments, broadcast(probes))
     }
-    val scored = scanBase.join(qx, Seq("cell"))
-      .withColumn("cosine", cosine(col(vecCol), col("qvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(idCol).as("neighbor"),
-        round(col("cosine"), 6).as("cosine"))
+    rankTopK(scanBase.join(qx, Seq("cell"))
+      .withColumn("cosine", cosine(col(vecCol), col("qvec"))), k, idCol)
   }
 
   /** Exact cosine k-NN graph: every vector's top-`k` neighbors, with a
@@ -1094,106 +1042,19 @@ object Similarity {
     *
     * Scale shape — BLOCKED matrix: any join-then-rank formulation
     * materializes N² candidate ROWS through an exchange and two
-    * ranking sorts, and a monolithic plan-shipped matrix
-    * ([[knnGraphLocal]]) needs the whole corpus on the driver and in
-    * every task. This path needs neither: the corpus is hashed into
-    * `nBlocks` PACKED block rows (id-sorted `array<struct<id,v,nrm>>`),
-    * each query row meets each block row in a shuffle join on block id,
-    * and a fused kernel ([[graft.functions.TopKNeighborsAgainst]])
-    * selects the per-block top-k inside one codegen'd projection —
-    * N·B kernel rows in, N·B·k id-sized candidates out, exact global
-    * top-k after a vector-free merge. No corpus-wide `collect()`
-    * anywhere; the largest single allocation is one block (corpus/B —
-    * B is the knob that fits it to task memory at any scale).
+    * ranking sorts. This path is the corpus against itself through
+    * [[crossTopK]]: the corpus hashes into packed block rows, each
+    * vector meets each block in a shuffle join on block id, and the
+    * fused kernel ([[graft.functions.TopKNeighborsAgainst]]) selects
+    * the per-block top-k inside one codegen'd projection — N·B kernel
+    * rows in, N·B·k id-sized candidates out, exact global top-k after a
+    * vector-free merge. No corpus-wide `collect()` anywhere; the
+    * largest single allocation is one block (corpus/B).
     */
   def knnGraph(vectors: DataFrame, k: Int = 5,
-      vecCol: String = "embedding", idCol: String = "vec_id",
-      nBlocks: Int = 0): DataFrame = {
-    import graft.functions.VectorExpressions.topKNeighborsAgainst
-    // Block count defaults to the session's shuffle parallelism: block
-    // keys are the join's max parallelism, and a handful of fat blocks
-    // would idle most of the cluster. More blocks also means smaller
-    // per-task matrices — the memory knob scales with the config the
-    // deployment already sizes.
-    val b = if (nBlocks > 0) nBlocks
-      else vectors.sparkSession.sessionState.conf.numShufflePartitions
-    val v = vectors.select(col(idCol).cast("long").as("_id"),
-      col(vecCol).cast("array<double>").as("_v"))
-    // Pack each block into ONE row: an id-sorted candidate array with
-    // precomputed norms (an in-order fold — bit-identical to the
-    // kernel's own accumulation, so the fast path never drifts).
-    val packed = v
-      .groupBy(pmod(xxhash64(col("_id")), lit(b.toLong)).as("_blk"))
-      .agg(sort_array(collect_list(
-        struct(col("_id").as("id"), col("_v").as("v")))).as("_p"))
-      .select(col("_blk"),
-        transform(col("_p"), s => struct(
-          s("id").as("id"), s("v").as("v"),
-          sqrt(aggregate(s("v"), lit(0.0d),
-            (acc, x) => acc + x * x)).as("nrm"))).as("_block"))
-    // Block-nested-loop join: replicate the query side ×B and
-    // shuffle-join on block id, so each task holds exactly ONE block's
-    // matrix and streams query rows through the fused kernel. B is the
-    // memory knob (a block must fit in a task); query replication is
-    // the inherent exact-all-pairs cost — the approximate escape is the
-    // IVF cell route. Explicit partition count: B keys is the join's
-    // max parallelism and AQE would otherwise coalesce the tiny test
-    // shuffle to one task.
-    val cand = v
-      .withColumn("_blk", explode(sequence(lit(0L),
-        lit(b.toLong - 1L))))
-      .repartition(b, col("_blk"))
-      .join(packed, Seq("_blk"))
-      .select(col("_id").as("src"),
-        topKNeighborsAgainst(col("_v"), col("_id"), col("_block"), k)
-          .as("_c"))
-    // The union of per-block top-ks contains the global top-k (a block
-    // top-k only drops candidates displaced by ≥k better ones in the
-    // SAME block, which displace them globally too), so ranking the
-    // k·B-per-src union under the kernel's own (cosine desc, id asc)
-    // order is exact. The merge exchange carries only (src, dst,
-    // cosine) — no vectors. Materialized ONCE (k·N id rows): the
-    // mutuality join reads both sides.
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cosine").desc, col("dst"))
-    val edges = cand
-      .select(col("src"), explode(col("_c")).as("e"))
-      .select(col("src"), col("e.neighbor").as("dst"),
-        col("e.cosine").as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("src"), col("rank"), col("dst"),
-        round(col("cosine"), 6).as("cosine"))
-      .localCheckpoint()
-    mutualFlag(edges)
-  }
-
-  /** Monolithic-kernel variant of [[knnGraph]]: the whole corpus matrix
-    * collected once and shipped with the plan
-    * ([[graft.functions.TopKNeighbors]]) — zero shuffle, zero joins on
-    * the scoring path, but an explicit index-fits-in-driver-memory
-    * contract. The small-corpus fast path and the equality witness for
-    * the blocked route (PipelineSpec pins blocked == local == naive).
-    */
-  def knnGraphLocal(vectors: DataFrame, k: Int = 5,
-      vecCol: String = "embedding", idCol: String = "vec_id")
-      : DataFrame = {
-    import graft.functions.VectorExpressions.topKNeighborsNative
-    val local = vectors
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .collect()
-    val ids = local.map(_.getLong(0))
-    val mat = local.map(_.getSeq[Double](1).toArray)
-    val edges = vectors
-      .select(col(idCol).as("src"), posexplode(topKNeighborsNative(
-        col(vecCol).cast("array<double>"), col(idCol).cast("long"),
-        ids, mat, k)))
-      .select(col("src"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.neighbor").as("dst"),
-        round(col("col.cosine"), 6).as("cosine"))
-      .localCheckpoint()
-    mutualFlag(edges)
-  }
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    knnEdges(crossTopK(vectors, vectors, k, vecCol, idCol,
+      excludeSelf = true), "_qid")
 
   /** Approximate kNN graph — the SCALE PATH for [[knnGraph]]. The
     * exact blocked route is O(N²) dot products by algorithm (every
@@ -1225,63 +1086,25 @@ object Similarity {
   def knnGraphIvf(vectors: DataFrame, k: Int = 5, nlist: Int = 16,
       nprobe: Int = 2, vecCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame = {
-    import graft.functions.VectorExpressions.topKNeighborsAgainst
-    val spark = vectors.sparkSession
-    import spark.implicits._
     val v = vectors.select(col(idCol).cast("long").as("_id"),
       col(vecCol).cast("array<double>").as("_v"))
     val idx = buildIvfDeterministic(v, nlist, vecCol = "_v",
       idCol = "_id")
-    // Pack each cell into ONE block row — the knnGraph pack with the
-    // quantizer cell as the block key. Cell sizes follow the data
-    // distribution, not a uniform hash; nlist is the knob that keeps
-    // the expected cell (N/nlist rows) inside task memory.
-    val packed = idx.assignments
-      .groupBy(col("cell"))
-      .agg(sort_array(collect_list(
-        struct(col("_id").as("id"), col("_v").as("v")))).as("_p"))
-      .select(col("cell"),
-        transform(col("_p"), s => struct(
-          s("id").as("id"), s("v").as("v"),
-          sqrt(aggregate(s("v"), lit(0.0d),
-            (acc, x) => acc + x * x)).as("nrm"))).as("_block"))
-    // Each vector probes its nprobe nearest cells by centroid L2
-    // (squared — order-identical), ties on cell id: the ivfTopK probe
-    // with the corpus itself as the query set. The centroid frame is
-    // nlist rows of metadata, broadcast.
-    val cents = broadcast(
-      idx.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
-        .toDF("cell", "cvec"))
-    val wProbe = Window.partitionBy(col("_id"))
-      .orderBy(col("dist"), col("cell"))
-    val probes = v.crossJoin(cents)
-      .withColumn("dist",
-        aggregate(zip_with(col("_v"), col("cvec"),
-          (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, x) => acc + x))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+    // Pack each cell into ONE block row, the quantizer cell as the
+    // block key. Cell sizes follow the data distribution, not a uniform
+    // hash; nlist is the knob that keeps the expected cell (N/nlist
+    // rows) inside task memory.
+    val packed = idx.assignments.groupBy(col("cell"))
+      .agg(packBlock(col("_id"), col("_v")).as("_block"))
+    // Each vector probes its nprobe nearest cells — the ivfTopK probe
+    // with the corpus itself as the query set — and one probe row meets
+    // one packed cell row: N·nprobe kernel rows total, so the
+    // nprobe/nlist work fraction is exactly this join's size.
+    val meet = v.transform(nearestCells(idx.centroids, nprobe, "_v", "_id"))
       .select(col("_id"), col("_v"), col("cell"))
-    // One probe row meets one packed cell row; the kernel emits k
-    // id-sized candidates per meeting. N·nprobe kernel rows total —
-    // the nprobe/nlist work fraction is exactly this join's size.
-    val cand = probes
       .repartition(col("cell"))
       .join(packed, Seq("cell"))
-      .select(col("_id").as("src"),
-        topKNeighborsAgainst(col("_v"), col("_id"), col("_block"), k)
-          .as("_c"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cosine").desc, col("dst"))
-    val edges = cand
-      .select(col("src"), explode(col("_c")).as("e"))
-      .select(col("src"), col("e.neighbor").as("dst"),
-        col("e.cosine").as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("src"), col("rank"), col("dst"),
-        round(col("cosine"), 6).as("cosine"))
-      .localCheckpoint()
-    mutualFlag(edges)
+    knnEdges(blockTopK(meet, "_id", "_v", col("_id"), k), "_id")
   }
 
   /** Hard-negative mining: each vector's top-`k` nearest neighbors
@@ -1345,35 +1168,19 @@ object Similarity {
     val packed = v
       .groupBy(col("_lbl").as("_plbl"),
         pmod(xxhash64(col("_id")), lit(nSubs.toLong)).as("_sub"))
-      .agg(sort_array(collect_list(
-        struct(col("_id").as("id"), col("_v").as("v")))).as("_p"))
-      .select(col("_plbl"), col("_sub"),
-        transform(col("_p"), s => struct(
-          s("id").as("id"), s("v").as("v"),
-          sqrt(aggregate(s("v"), lit(0.0d),
-            (acc, x) => acc + x * x)).as("nrm"))).as("_block"))
+      .agg(packBlock(col("_id"), col("_v")).as("_block"))
     (v, packed)
   }
 
   private def neighborsFromBlocks(v: DataFrame, packed: DataFrame,
       k: Int, sameLabel: Boolean, idCol: String): DataFrame = {
-    import graft.functions.VectorExpressions.topKNeighborsAgainst
     val keys = packed.select(col("_plbl"), col("_sub"))
-    val cand = v
+    val meet = v
       .crossJoin(broadcast(keys))
       .filter(if (sameLabel) col("_plbl") === col("_lbl")
         else col("_plbl") =!= col("_lbl"))
       .join(packed, Seq("_plbl", "_sub"))
-      .select(col("_id"),
-        topKNeighborsAgainst(col("_v"), col("_id"), col("_block"), k)
-          .as("_c"))
-    val w = Window.partitionBy(col("_id"))
-      .orderBy(col("cosine").desc, col("neighbor"))
-    cand.select(col("_id"), explode(col("_c")).as("e"))
-      .select(col("_id"), col("e.neighbor").as("neighbor"),
-        col("e.cosine").as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    blockTopK(meet, "_id", "_v", col("_id"), k)
       .select(col("_id").as(idCol), col("rank"), col("neighbor"),
         round(col("cosine"), 6).as("cosine"))
   }
@@ -1436,46 +1243,70 @@ object Similarity {
   }
 
   /** Cross-corpus exact top-k: every `queries` row's k nearest
-    * `corpus` rows — [[knnGraph]]'s blocked kernel shape with the two
-    * sides decoupled (the corpus packs into blocks, the query side
-    * replicates ×B), which is what retrieval, hard-negative mining and
-    * bitext mining all want. Same exactness argument as [[knnGraph]]:
-    * the union of per-block top-ks contains the global top-k, and the
-    * merge exchange carries only (qid, nid, cosine) — no vectors.
-    * Cosines are emitted UNROUNDED — callers that derive further
-    * arithmetic (margin ratios) round once at their own edge.
+    * `corpus` rows, as (`_qid`, `neighbor`, `cosine`, `rank`) — the
+    * hashed-block route retrieval, bitext mining, decontamination and
+    * (corpus against itself, `excludeSelf`) [[knnGraph]] share. The
+    * corpus packs into B block rows by id hash, the query side
+    * replicates ×B, and [[blockTopK]] scores and merges. Cosines are
+    * emitted UNROUNDED — callers that derive further arithmetic
+    * (margin ratios) round once at their own edge.
     */
   private def crossTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      vecCol: String, idCol: String, nBlocks: Int = 0): DataFrame = {
-    import graft.functions.VectorExpressions.topKNeighborsAgainst
-    val b = if (nBlocks > 0) nBlocks
-      else queries.sparkSession.sessionState.conf.numShufflePartitions
+      vecCol: String, idCol: String, excludeSelf: Boolean = false)
+      : DataFrame = {
+    // Block count = the session's shuffle parallelism: block keys are
+    // the join's max parallelism, and a handful of fat blocks would
+    // idle most of the cluster. More blocks also means smaller per-task
+    // matrices — the memory knob scales with the config the deployment
+    // already sizes.
+    val b = queries.sparkSession.sessionState.conf.numShufflePartitions
     val q = queries.select(col(idCol).cast("long").as("_qid"),
       col(vecCol).cast("array<double>").as("_qv"))
     val packed = corpus
       .select(col(idCol).cast("long").as("_id"),
         col(vecCol).cast("array<double>").as("_v"))
       .groupBy(pmod(xxhash64(col("_id")), lit(b.toLong)).as("_blk"))
-      .agg(sort_array(collect_list(
-        struct(col("_id").as("id"), col("_v").as("v")))).as("_p"))
-      .select(col("_blk"),
-        transform(col("_p"), s => struct(
-          s("id").as("id"), s("v").as("v"),
-          sqrt(aggregate(s("v"), lit(0.0d),
-            (acc, x) => acc + x * x)).as("nrm"))).as("_block"))
-    val cand = q
+      .agg(packBlock(col("_id"), col("_v")).as("_block"))
+    // Block-nested-loop join: replicate the query side ×B and
+    // shuffle-join on block id, so each task holds exactly ONE block's
+    // matrix and streams query rows through the fused kernel. Query
+    // replication is the inherent exact-all-pairs cost — the
+    // approximate escape is the IVF cell route. Explicit partition
+    // count: B keys is the join's max parallelism and AQE would
+    // otherwise coalesce the tiny test shuffle to one task.
+    val meet = q
       .withColumn("_blk", explode(sequence(lit(0L), lit(b.toLong - 1L))))
       .repartition(b, col("_blk"))
       .join(packed, Seq("_blk"))
-      // selfId = -1: cross-corpus sides may share an id space; the
-      // caller decides disjointness, the kernel must not drop anything.
-      .select(col("_qid"),
-        topKNeighborsAgainst(col("_qv"), lit(-1L), col("_block"), k)
-          .as("_c"))
-    val w = Window.partitionBy(col("_qid"))
-      .orderBy(col("cosine").desc, col("_nid"))
-    cand.select(col("_qid"), explode(col("_c")).as("e"))
-      .select(col("_qid"), col("e.neighbor").as("_nid"),
+    // selfId = -1 across corpora: the two sides may share an id space;
+    // the caller decides disjointness, the kernel must not drop anything.
+    blockTopK(meet, "_qid", "_qv",
+      if (excludeSelf) col("_qid") else lit(-1L), k)
+  }
+
+  /** The one blocked top-k: each `meet` row pairs a query (`qid`,
+    * vector `qvec`) with one [[graft.functions.VectorExpressions.packBlock]]
+    * `_block` row; the fused [[graft.functions.TopKNeighborsAgainst]]
+    * kernel selects that block's top-`k` (never the candidate whose id
+    * is `selfId`), and one merge ranks each query's union of per-block
+    * top-ks. The union contains the global top-k (a block top-k only
+    * drops candidates displaced by ≥k better ones in the SAME block,
+    * which displace them globally too), so ranking it under the
+    * kernel's own (cosine desc, id asc) order is exact — over the
+    * blocks the query met. The merge exchange carries only (qid,
+    * neighbor, cosine), no vectors. Returns (`qid`, `neighbor`,
+    * `cosine`, `rank`), cosine unrounded. Which blocks a query meets
+    * (hash replication, IVF probes, label keys, RAG's exclusion keys)
+    * is each caller's own join.
+    */
+  private[graft] def blockTopK(meet: DataFrame, qid: String, qvec: String,
+      selfId: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy(col(qid))
+      .orderBy(col("cosine").desc, col("neighbor"))
+    meet.select(col(qid),
+        topKNeighborsAgainst(col(qvec), selfId, col("_block"), k).as("_c"))
+      .select(col(qid), explode(col("_c")).as("e"))
+      .select(col(qid), col("e.neighbor").as("neighbor"),
         col("e.cosine").as("cosine"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -1500,26 +1331,23 @@ object Similarity {
     */
   def bitextMine(vectors: DataFrame, srcFilter: Column, tgtFilter: Column,
       k: Int = 4, marginThreshold: Double = 1.0,
-      vecCol: String = "embedding", idCol: String = "vec_id",
-      nBlocks: Int = 0): DataFrame = {
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val src = vectors.filter(srcFilter)
     val tgt = vectors.filter(tgtFilter)
-    val fwd = crossTopK(src, tgt, k, vecCol, idCol, nBlocks)
-      .localCheckpoint()
-    val bwd = crossTopK(tgt, src, k, vecCol, idCol, nBlocks)
-      .localCheckpoint()
+    val fwd = crossTopK(src, tgt, k, vecCol, idCol).localCheckpoint()
+    val bwd = crossTopK(tgt, src, k, vecCol, idCol).localCheckpoint()
     val degSrc = fwd.groupBy(col("_qid").as("src_id"))
       .agg(avg(col("cosine")).as("_dsrc"))
     val degTgt = bwd.groupBy(col("_qid").as("tgt_id"))
       .agg(avg(col("cosine")).as("_dtgt"))
     val best = fwd.filter(col("rank") === 1)
-      .select(col("_qid").as("src_id"), col("_nid").as("tgt_id"),
+      .select(col("_qid").as("src_id"), col("neighbor").as("tgt_id"),
         col("cosine"))
     // one row per TARGET vector — corpus-sized, so NOT broadcast: the
     // mutual flag rides the same narrow-row shuffle join as the degree
     // frames (AQE may still pick broadcast when the side is small)
     val mut = bwd.filter(col("rank") === 1)
-      .select(col("_qid").as("tgt_id"), col("_nid").as("src_id"),
+      .select(col("_qid").as("tgt_id"), col("neighbor").as("src_id"),
         lit(1).as("_m"))
     val den = (col("_dsrc") + col("_dtgt")) / 2
     best.join(degSrc, Seq("src_id")).join(degTgt, Seq("tgt_id"))
@@ -1551,8 +1379,7 @@ object Similarity {
     */
   def semanticDecontaminate(vectors: DataFrame, trainFilter: Column,
       benchFilter: Column, tau: Double = 0.98,
-      vecCol: String = "embedding", idCol: String = "vec_id",
-      nBlocks: Int = 0): DataFrame = {
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val train = vectors.filter(trainFilter)
     val bench = vectors.filter(benchFilter)
     // An empty benchmark slice must mean "nothing is contaminated",
@@ -1566,18 +1393,24 @@ object Similarity {
         lit(null).cast("double").as("cosine"),
         lit(false).as("dropped"))
     else
-      crossTopK(train, bench, k = 1, vecCol, idCol, nBlocks)
-        .select(col("_qid").as(idCol), col("_nid").as("bench_id"),
+      crossTopK(train, bench, k = 1, vecCol, idCol)
+        .select(col("_qid").as(idCol), col("neighbor").as("bench_id"),
           round(col("cosine"), 6).as("cosine"),
           (round(col("cosine"), 6) >= tau).as("dropped"))
   }
 
-  /** mutual = the reversed (dst, src) pair is itself an edge; the edge
-    * set is k·N rows of ids — broadcast-sized relative to the corpus at
-    * any k that makes sense. `edges` must be materialized (both sides
-    * of the self-join read it).
+  /** A kNN graph's edge rows from a [[blockTopK]] result whose query
+    * id column `srcCol` is the source: (src, rank, dst, rounded cosine),
+    * materialized ONCE (k·N id rows — both sides of the mutuality join
+    * read it), plus `mutual` = the reversed (dst, src) pair is itself
+    * an edge. The edge set is broadcast-sized relative to the corpus at
+    * any k that makes sense.
     */
-  private def mutualFlag(edges: DataFrame): DataFrame = {
+  private def knnEdges(top: DataFrame, srcCol: String): DataFrame = {
+    val edges = top
+      .select(col(srcCol).as("src"), col("rank"),
+        col("neighbor").as("dst"), round(col("cosine"), 6).as("cosine"))
+      .localCheckpoint()
     val rev = broadcast(edges.select(col("src").as("dst"),
       col("dst").as("src"), lit(1).as("_m")))
     edges.join(rev, Seq("src", "dst"), "left")

@@ -1159,7 +1159,6 @@ object PipelineQueries {
     * fixtures); output rounds for display.
     */
   def pipelineRag(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VectorExpressions.topKNeighborsAgainst
     val stride = 48; val chunk = 64; val dim = 8
     // spread BEFORE the chunk/md5-embed chain: the whole encoder ran in
     // one task off a single-split local scan (2.2 s of the row's 3.0 s;
@@ -1194,46 +1193,31 @@ object PipelineQueries {
     // document), so the kernel's id-asc tie-break IS the (doc_id,
     // chunk_idx) tie-break and decode is a shift + mask.
     val b = s.sessionState.conf.numShufflePartitions
-    val packed = emb.select(
+    val packed = emb
+      .groupBy(
         when(col("doc_id") < 3, col("doc_id")).otherwise(lit(-1L))
           .as("_excl"),
         when(col("doc_id") < 3, lit(0L))
           .otherwise(pmod(xxhash64(col("doc_id"), col("chunk_idx")),
-            lit(b.toLong))).as("_blk"),
-        (col("doc_id") * lit(1048576L) + col("chunk_idx")).as("_cid"),
-        col("vec"))
-      .groupBy(col("_excl"), col("_blk"))
-      .agg(sort_array(collect_list(
-        struct(col("_cid").as("id"), col("vec").as("v")))).as("_p"))
-      .select(col("_excl"), col("_blk"),
-        transform(col("_p"), st => struct(
-          st("id").as("id"), st("v").as("v"),
-          sqrt(aggregate(st("v"), lit(0.0d),
-            (acc, x) => acc + x * x)).as("nrm"))).as("_block"))
+            lit(b.toLong))).as("_blk"))
+      .agg(graft.functions.VectorExpressions.packBlock(
+        col("doc_id") * lit(1048576L) + col("chunk_idx"), col("vec"))
+        .as("_block"))
     val keys = packed.select(col("_excl"), col("_blk"))
     // the (query × block-key) side is nQueries×(B+3) skinny rows —
     // broadcast it EXPLICITLY so the packed corpus streams through the
     // join without ever re-shuffling its vector blocks (static stats
     // over-estimate the filtered query side and would sort-merge)
-    val cand = broadcast(q.crossJoin(broadcast(keys))
+    val meet = broadcast(q.crossJoin(broadcast(keys))
         .filter(col("_excl") =!= col("query_id")))
       .join(packed, Seq("_excl", "_blk"))
-      .select(col("query_id"),
-        // selfId −1: no encoded cid is negative, and own-doc exclusion
-        // already happened at the key level
-        topKNeighborsAgainst(col("qvec"), lit(-1L), col("_block"), 5)
-          .as("_c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("_cid"))
-    cand.select(col("query_id"), explode(col("_c")).as("e"))
-      .select(col("query_id"), col("e.neighbor").as("_cid"),
-        col("e.cosine").as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    // selfId −1: no encoded id is negative, and own-doc exclusion
+    // already happened at the key level
+    Similarity.blockTopK(meet, "query_id", "qvec", lit(-1L), 5)
       .select(col("query_id"), col("rank"),
-        shiftright(col("_cid"), 20).as("doc_id"),
-        col("_cid").bitwiseAND(lit(1048575L)).cast("int").as("chunk_idx"),
+        shiftright(col("neighbor"), 20).as("doc_id"),
+        col("neighbor").bitwiseAND(lit(1048575L)).cast("int")
+          .as("chunk_idx"),
         round(col("cosine"), 6).as("cosine"))
       .orderBy("query_id", "rank")
   }
@@ -2062,6 +2046,40 @@ object PipelineQueries {
   }
 
   private val BpeRounds = 6
+
+  /** Label-propagation voting rounds 1..`iters` of the `knn_label_prop`
+    * oracle (`e`, `nodes`, `seed` and `l0` in scope): round r counts
+    * the labeled out-neighbors under l(r−1), keeps the majority label
+    * (ties to the smallest) and clamps the seeds into l(r).
+    */
+  private def labelPropRounds(iters: Int): String = (1 to iters).map { r =>
+    s""",
+         v$r AS (SELECT e.src AS node, l${r - 1}.lbl, count(*) AS n
+                FROM e JOIN l${r - 1} ON l${r - 1}.node = e.dst
+                WHERE l${r - 1}.lbl IS NOT NULL GROUP BY e.src, l${r - 1}.lbl),
+         w$r AS (SELECT node, lbl FROM (
+                  SELECT node, lbl, row_number() OVER (PARTITION BY node
+                    ORDER BY n DESC, lbl) AS rk FROM v$r) WHERE rk = 1),
+         l$r AS (SELECT nodes.node, coalesce(seed.lbl, w$r.lbl) AS lbl
+                FROM nodes LEFT JOIN seed USING (node)
+                LEFT JOIN w$r USING (node))"""
+  }.mkString
+
+  /** PageRank iterations 1..`iters` of the `knn_pagerank` oracle (`e`,
+    * `nodes`, `n`, `outd` and `r0` in scope): c_r sums r(r−1) over the
+    * sources' out-degrees, r_r damps it (0.85) onto the 1e-12 grid.
+    */
+  private def pagerankRounds(iters: Int): String = (1 to iters).map { r =>
+    s""",
+         c$r AS (SELECT e.dst AS node, sum(r${r - 1}.rank / outd.od) AS cs
+                FROM e JOIN outd USING (src)
+                JOIN r${r - 1} ON r${r - 1}.node = e.src GROUP BY e.dst),
+         r$r AS (SELECT nodes.node,
+                       round(CAST(0.15 AS DOUBLE) / n.nn +
+                         CAST(0.85 AS DOUBLE) * coalesce(c$r.cs, 0), 12) AS rank
+                FROM nodes CROSS JOIN n
+                LEFT JOIN c$r ON c$r.node = nodes.node)"""
+  }.mkString
 
   /** The k-center traversal unrolled: per round r, d_r computes every
     * unselected point's 1e-6-rounded min squared L2 distance to the
@@ -3286,25 +3304,7 @@ object PipelineQueries {
          seed AS (SELECT vec_id AS node, CAST(label AS INT) AS lbl
                   FROM embeddings WHERE vec_id % 5 = 0),
          l0 AS (SELECT nodes.node, seed.lbl FROM nodes
-                LEFT JOIN seed USING (node)),
-         v1 AS (SELECT e.src AS node, l0.lbl, count(*) AS n
-                FROM e JOIN l0 ON l0.node = e.dst
-                WHERE l0.lbl IS NOT NULL GROUP BY e.src, l0.lbl),
-         w1 AS (SELECT node, lbl FROM (
-                  SELECT node, lbl, row_number() OVER (PARTITION BY node
-                    ORDER BY n DESC, lbl) AS rk FROM v1) WHERE rk = 1),
-         l1 AS (SELECT nodes.node, coalesce(seed.lbl, w1.lbl) AS lbl
-                FROM nodes LEFT JOIN seed USING (node)
-                LEFT JOIN w1 USING (node)),
-         v2 AS (SELECT e.src AS node, l1.lbl, count(*) AS n
-                FROM e JOIN l1 ON l1.node = e.dst
-                WHERE l1.lbl IS NOT NULL GROUP BY e.src, l1.lbl),
-         w2 AS (SELECT node, lbl FROM (
-                  SELECT node, lbl, row_number() OVER (PARTITION BY node
-                    ORDER BY n DESC, lbl) AS rk FROM v2) WHERE rk = 1),
-         l2 AS (SELECT nodes.node, coalesce(seed.lbl, w2.lbl) AS lbl
-                FROM nodes LEFT JOIN seed USING (node)
-                LEFT JOIN w2 USING (node))
+                LEFT JOIN seed USING (node))${labelPropRounds(2)}
          SELECT node AS vec_id, lbl AS label FROM l2 ORDER BY vec_id"""),
     // PageRank with the 3 iterations UNROLLED over the same kNN edges;
     // per-iteration 1e-12 rounding keeps both engines on one grid (the
@@ -3313,31 +3313,7 @@ object PipelineQueries {
       s"""$KnnEdgeCtes,
          n AS (SELECT count(*) AS nn FROM nodes),
          outd AS (SELECT src, count(*) AS od FROM e GROUP BY src),
-         r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / n.nn AS rank FROM nodes CROSS JOIN n),
-         c1 AS (SELECT e.dst AS node, sum(r0.rank / outd.od) AS cs
-                FROM e JOIN outd USING (src)
-                JOIN r0 ON r0.node = e.src GROUP BY e.dst),
-         r1 AS (SELECT nodes.node,
-                       round(CAST(0.15 AS DOUBLE) / n.nn +
-                         CAST(0.85 AS DOUBLE) * coalesce(c1.cs, 0), 12) AS rank
-                FROM nodes CROSS JOIN n
-                LEFT JOIN c1 ON c1.node = nodes.node),
-         c2 AS (SELECT e.dst AS node, sum(r1.rank / outd.od) AS cs
-                FROM e JOIN outd USING (src)
-                JOIN r1 ON r1.node = e.src GROUP BY e.dst),
-         r2 AS (SELECT nodes.node,
-                       round(CAST(0.15 AS DOUBLE) / n.nn +
-                         CAST(0.85 AS DOUBLE) * coalesce(c2.cs, 0), 12) AS rank
-                FROM nodes CROSS JOIN n
-                LEFT JOIN c2 ON c2.node = nodes.node),
-         c3 AS (SELECT e.dst AS node, sum(r2.rank / outd.od) AS cs
-                FROM e JOIN outd USING (src)
-                JOIN r2 ON r2.node = e.src GROUP BY e.dst),
-         r3 AS (SELECT nodes.node,
-                       round(CAST(0.15 AS DOUBLE) / n.nn +
-                         CAST(0.85 AS DOUBLE) * coalesce(c3.cs, 0), 12) AS rank
-                FROM nodes CROSS JOIN n
-                LEFT JOIN c3 ON c3.node = nodes.node)
+         r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / n.nn AS rank FROM nodes CROSS JOIN n)${pagerankRounds(3)}
          SELECT node, round(rank, 6) AS rank FROM r3 ORDER BY node"""),
     // Hard negatives: rank on the RAW cross-label cosine, ties on
     // neighbor id, round only in the output (the knn_graph stance).

@@ -1345,6 +1345,35 @@ object StreamQueries {
     seedIvf(s, d)
   }
 
+  /** One quantizer's probe-scan fraction in the `stream_ann_refit`
+    * oracle (`drift`, `q` and `nq` in scope): the drifted vectors' L2
+    * cell layout (`d<tag>`), its cell sizes, and the share of layout
+    * rows the 4-nearest-cell probes of `q` scan (`f<tag>`). Written
+    * once for the fitted (`c2`, tag `pre`) and refit (`rc2`, tag
+    * `post`) centroid sets.
+    */
+  private def annProbeScan(tag: String, cents: String): String =
+    s"""d$tag AS (SELECT vec_id, cell FROM
+                   (SELECT d.vec_id, c.cell, row_number() OVER
+                      (PARTITION BY d.vec_id ORDER BY
+                        ${sqDist("d", "c")},
+                        c.cell) AS rn
+                    FROM drift d CROSS JOIN $cents c)
+                  WHERE rn = 1),
+         c$tag AS (SELECT cell, count(*) AS n FROM d$tag GROUP BY cell),
+         t$tag AS (SELECT sum(n) AS t FROM c$tag),
+         qp$tag AS (SELECT qid, cell FROM
+                    (SELECT q.vec_id AS qid, c.cell, row_number() OVER
+                       (PARTITION BY q.vec_id ORDER BY
+                         ${sqDist("q", "c")},
+                         c.cell) AS rn
+                     FROM q CROSS JOIN $cents c)
+                   WHERE rn <= 4),
+         f$tag AS (SELECT sum(coalesce(c$tag.n, 0))::DOUBLE /
+                    (nq.n * t$tag.t) AS f
+                  FROM qp$tag LEFT JOIN c$tag USING (cell), nq, t$tag
+                  GROUP BY nq.n, t$tag.t)"""
+
   val entries: Seq[Q] = Seq(
     // The COMPOSED funnel replayed: static verdicts (gate chain + nested
     // classifier oracle with its calibrated cut + benchmark gram overlap)
@@ -1462,46 +1491,8 @@ object StreamQueries {
          q AS MATERIALIZED (SELECT vec_id, v FROM drift
                             WHERE wave = 1 AND vec_id < 30000040),
          nq AS (SELECT count(*) AS n FROM q),
-         dpre AS (SELECT vec_id, cell FROM
-                   (SELECT d.vec_id, c.cell, row_number() OVER
-                      (PARTITION BY d.vec_id ORDER BY
-                        ${sqDist("d", "c")},
-                        c.cell) AS rn
-                    FROM drift d CROSS JOIN c2 c)
-                  WHERE rn = 1),
-         cpre AS (SELECT cell, count(*) AS n FROM dpre GROUP BY cell),
-         tpre AS (SELECT sum(n) AS t FROM cpre),
-         qppre AS (SELECT qid, cell FROM
-                    (SELECT q.vec_id AS qid, c.cell, row_number() OVER
-                       (PARTITION BY q.vec_id ORDER BY
-                         ${sqDist("q", "c")},
-                         c.cell) AS rn
-                     FROM q CROSS JOIN c2 c)
-                   WHERE rn <= 4),
-         fpre AS (SELECT sum(coalesce(cpre.n, 0))::DOUBLE /
-                    (nq.n * tpre.t) AS f
-                  FROM qppre LEFT JOIN cpre USING (cell), nq, tpre
-                  GROUP BY nq.n, tpre.t),
-         dpost AS (SELECT vec_id, cell FROM
-                    (SELECT d.vec_id, c.cell, row_number() OVER
-                       (PARTITION BY d.vec_id ORDER BY
-                         ${sqDist("d", "c")},
-                         c.cell) AS rn
-                     FROM drift d CROSS JOIN rc2 c)
-                   WHERE rn = 1),
-         cpost AS (SELECT cell, count(*) AS n FROM dpost GROUP BY cell),
-         tpost AS (SELECT sum(n) AS t FROM cpost),
-         qppost AS (SELECT qid, cell FROM
-                     (SELECT q.vec_id AS qid, c.cell, row_number() OVER
-                        (PARTITION BY q.vec_id ORDER BY
-                          ${sqDist("q", "c")},
-                          c.cell) AS rn
-                      FROM q CROSS JOIN rc2 c)
-                    WHERE rn <= 4),
-         fpost AS (SELECT sum(coalesce(cpost.n, 0))::DOUBLE /
-                     (nq.n * tpost.t) AS f
-                   FROM qppost LEFT JOIN cpost USING (cell), nq, tpost
-                   GROUP BY nq.n, tpost.t)
+         ${annProbeScan("pre", "c2")},
+         ${annProbeScan("post", "rc2")}
          SELECT CAST(prem.pre_mean > 2.0 * fitm.fit_mean AS BOOLEAN)
                   AS refit_triggered,
                 fitm.fit_mean AS fit_mean_sq,

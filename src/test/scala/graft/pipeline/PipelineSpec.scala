@@ -117,7 +117,7 @@ class PipelineSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(embD, queries, k = 5)
       .select("query_id", "neighbor").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val index = Similarity.buildIvf(embD, nlist = 16)
+    val index = Similarity.buildIvfDeterministic(embD, nlist = 16)
     val approx = Similarity.ivfTopK(index, queries, k = 5, nprobe = 4)
       .select("query_id", "neighbor").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -153,7 +153,8 @@ class PipelineSpec extends AnyFunSuite {
       col("embedding").cast("array<double>").as("embedding"))
     val loc = java.nio.file.Files.createTempDirectory("ivf-refresh-")
       .resolve("index").toString
-    Similarity.persistIvf(Similarity.buildIvf(embD, nlist = 16), loc)
+    Similarity.persistIvf(
+      Similarity.buildIvfDeterministic(embD, nlist = 16), loc)
     val queries = embD.filter(col("vec_id") < 5)
     // exact twins of the queries, appended AFTER the index was built —
     // identical embeddings land in the same cell as their originals, so
@@ -462,7 +463,8 @@ class PipelineSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("annidem-")
     val idxLoc = base.resolve("index").toString
     Similarity.persistIvf(
-      Similarity.buildIvf(embD.filter(col("vec_id") % 2 === 0), nlist = 8),
+      Similarity.buildIvfDeterministic(
+        embD.filter(col("vec_id") % 2 === 0), nlist = 8),
       idxLoc)
     val waves = base.resolve("waves")
     java.nio.file.Files.createDirectories(waves)
@@ -734,19 +736,39 @@ class PipelineSpec extends AnyFunSuite {
       s"two-phase selection drifted: ${got.diff(naive).take(5)}")
   }
 
-  test("blocked kNN path equals the monolithic kernel, row for row") {
+  test("blocked kNN graph equals the crossJoin+window baseline, row for row") {
     // Full-row equality (ranks, rounded cosines, mutual flags): the
     // blocked route must be a pure re-plumbing of the same arithmetic,
-    // not an approximation — and it must hold at a block count that
-    // doesn't divide the corpus evenly.
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3), r.getBoolean(4))).toSet
-    val blocked = key(Similarity.knnGraph(emb, nBlocks = 7))
-    val mono = key(Similarity.knnGraphLocal(emb))
-    assert(blocked == mono,
-      s"blocked path drifted: ${blocked.diff(mono).take(5)} / " +
-        s"${mono.diff(blocked).take(5)}")
+    // not an approximation — and it must hold at a block count (the
+    // shuffle partition count) that doesn't divide the corpus evenly.
+    import org.apache.spark.sql.expressions.Window
+    val e = emb.select(col("vec_id").cast("long").as("src"),
+      col("embedding").cast("array<double>").as("v"))
+    val w = Window.partitionBy(col("src"))
+      .orderBy(col("cos").desc, col("dst"))
+    val top = e.crossJoin(e.select(col("src").as("dst"), col("v").as("u")))
+      .filter(col("src") =!= col("dst"))
+      .withColumn("cos", Similarity.cosine(col("v"), col("u")))
+      .filter(col("cos").isNotNull)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("src"), col("rank"), col("dst"),
+        round(col("cos"), 6))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getDouble(3)))
+    val pairs = top.map(t => (t._1, t._3)).toSet
+    val naive = top.map { case (a, rk, b, c) =>
+      (a, rk, b, c, pairs((b, a))) }.toSet
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, "7")
+    val blocked = try Similarity.knnGraph(emb).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+          r.getDouble(3), r.getBoolean(4))).toSet
+      finally s.conf.set(key, prev)
+    assert(blocked == naive,
+      s"blocked path drifted: ${blocked.diff(naive).take(5)} / " +
+        s"${naive.diff(blocked).take(5)}")
   }
 
   test("IVF kNN graph: well-formed, honest recall vs the exact graph") {

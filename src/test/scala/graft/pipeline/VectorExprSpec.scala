@@ -135,20 +135,22 @@ class VectorExprSpec extends AnyFunSuite {
   test("top-k kernel: exact order, id tie-break, self excluded, " +
       "empty for isolated rows") {
     import s.implicits._
-    import graft.functions.VectorExpressions.topKNeighborsNative
+    import graft.functions.VectorExpressions.{packBlock,
+      topKNeighborsAgainst}
     // constructed matrix: id 1 is a duplicate of id 2 (cosine 1 tie →
     // lower id first); id 9 is orthogonal to everything but itself
     val vecs: Seq[(Long, Array[Double])] = Seq(
-      1L -> Array(1.0, 0.0, 0.0),
-      2L -> Array(1.0, 0.0, 0.0),
       3L -> Array(1.0, 1.0, 0.0),
+      1L -> Array(1.0, 0.0, 0.0),
+      9L -> Array(0.0, 0.0, 0.0), // zero vector: no valid cosine
       4L -> Array(-1.0, 0.0, 0.0),
-      9L -> Array(0.0, 0.0, 0.0)) // zero vector: no valid cosine
-    val ids = vecs.map(_._1).toArray
-    val mat = vecs.map(_._2).toArray
-    val df = vecs.toDF("vec_id", "v")
-      .select(col("vec_id"), topKNeighborsNative(col("v"), col("vec_id"),
-        ids, mat, k = 2).as("nn"))
+      2L -> Array(1.0, 0.0, 0.0))
+    val rows = vecs.toDF("vec_id", "v")
+    // the whole matrix as ONE packed block (packBlock sorts by id)
+    val block = rows.agg(packBlock(col("vec_id"), col("v")).as("_block"))
+    val df = rows.crossJoin(block)
+      .select(col("vec_id"), topKNeighborsAgainst(col("v"), col("vec_id"),
+        col("_block"), k = 2).as("nn"))
     val got = df.collect().map(r => r.getLong(0) ->
       r.getSeq[org.apache.spark.sql.Row](1)
         .map(x => (x.getLong(0), math.rint(x.getDouble(1) * 1e6) / 1e6)))
@@ -181,14 +183,14 @@ class VectorExprSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9) / 1e9)).toSet
-    val local = emb
-      .select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>")).collect()
-    val got = emb.select(col("vec_id"),
-        posexplode(graft.functions.VectorExpressions.topKNeighborsNative(
-          col("embedding").cast("array<double>"), col("vec_id"),
-          local.map(_.getLong(0)),
-          local.map(_.getSeq[Double](1).toArray), k = 3)))
+    val v = emb.select(col("vec_id").cast("long").as("vec_id"),
+      col("embedding").cast("array<double>").as("v"))
+    val block = v.agg(graft.functions.VectorExpressions.packBlock(
+      col("vec_id"), col("v")).as("_block"))
+    val got = v.crossJoin(block)
+      .select(col("vec_id"),
+        posexplode(graft.functions.VectorExpressions.topKNeighborsAgainst(
+          col("v"), col("vec_id"), col("_block"), k = 3)))
       .collect()
       .map(r => (r.getLong(0), r.getInt(1) + 1, r.getStruct(2).getLong(0),
         math.rint(r.getStruct(2).getDouble(1) * 1e9) / 1e9)).toSet

@@ -6,6 +6,8 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Loads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 oracle_sql.json entry in DuckDB with the sf parquet tables registered as
 views, sorts columns by name, compares row-by-row (floats to 1e-9 rel).
+Ends with `checked N of M rows: ok=... fail=...`; a run that was killed
+part-way is the one whose output lacks that line.
 NOT part of the shipped library — builder-side validation only.
 """
 import json, sys, math
@@ -24,8 +26,9 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    fails = 0
+    checked = fails = 0
     for name, sql in sorted(oracle.items()):
+        checked += 1
         try:
             got = con.sql(
                 f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
@@ -62,6 +65,8 @@ def main(sf_dir, out_dir):
         except Exception as e:
             print(f"ERROR {name}: {e}")
             fails += 1
+    print(f"checked {checked} of {len(oracle)} rows: "
+          f"ok={checked - fails} fail={fails}")
     sys.exit(1 if fails else 0)
 
 if __name__ == "__main__":
