@@ -27,7 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def intArg(e: Expression, fn: String): Int = e match {
+  private[functions] def intArg(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, _) => v
     case Literal(v: Long, _) =>
       require(v == v.toInt, s"$fn: size argument $v out of Int range")
@@ -36,89 +36,29 @@ object GraftExtensions {
       s"$fn: the size argument must be an integer literal, got $other")
   }
 
+  private[functions] def function(name: String, cls: Class[_], params: String*)(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => {
+        require(args.length == params.length,
+          params.mkString(s"$name(", ", ", ")"))
+        build(args)
+      })
+
   /** The injected (identifier, info, builder) triples — one source of
-    * truth for both the build-time extension and live registration.
+    * truth for both the build-time extension and live registration. The
+    * ten text kernels come from their table, [[ShingleExpressions.all]].
     */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        "cosine_similarity"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "cosine_similarity(a, b)")
-        CosineSimilarity(args(0), args(1))
-      }),
-    (new FunctionIdentifier("hashed_shingles"),
-      new ExpressionInfo(classOf[HashedShingles].getName,
-        "hashed_shingles"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "hashed_shingles(text, k)")
-        HashedShingles(args(0), intArg(args(1), "hashed_shingles"))
-      }),
-    (new FunctionIdentifier("hashed_chargrams"),
-      new ExpressionInfo(classOf[HashedChargrams].getName,
-        "hashed_chargrams"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "hashed_chargrams(text, n)")
-        HashedChargrams(args(0), intArg(args(1), "hashed_chargrams"))
-      }),
-    (new FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName,
-        "winnow_fingerprints"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "winnow_fingerprints(text, k, w)")
-        WinnowFingerprints(args(0),
-          intArg(args(1), "winnow_fingerprints"),
-          intArg(args(2), "winnow_fingerprints"))
-      }),
-    (new FunctionIdentifier("positional_shingles"),
-      new ExpressionInfo(classOf[PositionalShingles].getName,
-        "positional_shingles"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "positional_shingles(text, k)")
-        PositionalShingles(args(0), intArg(args(1), "positional_shingles"))
-      }),
-    (new FunctionIdentifier("bigram_buckets"),
-      new ExpressionInfo(classOf[BigramBuckets].getName,
-        "bigram_buckets"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "bigram_buckets(text, buckets)")
-        BigramBuckets(args(0), intArg(args(1), "bigram_buckets"))
-      }),
-    (new FunctionIdentifier("simhash_sketch"),
-      new ExpressionInfo(classOf[SimhashSketch].getName,
-        "simhash_sketch"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "simhash_sketch(text)")
-        SimhashSketch(args(0))
-      }),
-    (new FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvAgg].getName, "kmv_sketch"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "kmv_sketch(hashed, k)")
-        KmvAgg(args(0), intArg(args(1), "kmv_sketch"))
-          .toAggregateExpression()
-      }),
-    (new FunctionIdentifier("minhash_sketch"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_sketch"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "minhash_sketch(hashed, numHashes)")
-        MinHashAgg(args(0), intArg(args(1), "minhash_sketch"))
-          .toAggregateExpression()
-      }),
-    (new FunctionIdentifier("cms_buckets"),
-      new ExpressionInfo(classOf[CmsBuckets].getName, "cms_buckets"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "cms_buckets(text, depth, width)")
-        CmsBuckets(args(0), intArg(args(1), "cms_buckets"),
-          intArg(args(2), "cms_buckets"))
-      }),
-    (new FunctionIdentifier("dhash_sketch"),
-      new ExpressionInfo(classOf[DhashSketch].getName, "dhash_sketch"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "dhash_sketch(content)")
-        DhashSketch(args(0))
-      }))
+    function("cosine_similarity", classOf[CosineSimilarity], "a", "b")(a =>
+      CosineSimilarity(a(0), a(1))),
+    function("kmv_sketch", classOf[KmvAgg], "hashed", "k")(a =>
+      KmvAgg(a(0), intArg(a(1), "kmv_sketch")).toAggregateExpression()),
+    function("minhash_sketch", classOf[MinHashAgg], "hashed", "numHashes")(
+      a => MinHashAgg(a(0), intArg(a(1), "minhash_sketch"))
+        .toAggregateExpression())
+  ) ++ ShingleExpressions.all.map(_.function)
 
   /** Install the functions into an already-built session (idempotent —
     * re-registration overwrites with identical builders).

@@ -1,15 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, graftshim}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{
   CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass kernel behind [[HashedShingles]]: word boundaries, k-word
+/** Single-pass kernel behind `hashed_shingles`: word boundaries, k-word
   * shingle assembly, xxhash64 (seed 42, byte-identical to Spark's
   * `xxhash64` over the shingle string), and dedup — one traversal of the
   * UTF-8 bytes, zero intermediate arrays.
@@ -301,7 +303,7 @@ object ShingleKernel {
   def cmsCell(d: Int, word: String, width: Int): Long = {
     // The kernel writes the row prefix as the single byte '0'+d
     // (cmsBuckets); the string form here agrees with that only for
-    // d in [0, 9]. CmsBuckets' analysis guard enforces depth <= 10 on
+    // d in [0, 9]. The `cms_buckets` analysis guard enforces depth <= 10 on
     // the plan side — enforce the same bound here so a future caller
     // probing deeper fails loudly instead of silently reading wrong
     // cells.
@@ -332,7 +334,8 @@ object ShingleKernel {
     * pre-counted cells — ≤ depth·width distinct keys however large
     * the vocabulary. Counts fit 32 bits by construction; `depth` is
     * capped at 10 so the row prefix stays one decimal byte, and the
-    * packing requires depth·width < 2³¹ (enforced by [[CmsBuckets]]).
+    * packing requires depth·width < 2³¹ (enforced at analysis by
+    * [[ShingleExpressions.cmsBuckets]]).
     */
   def cmsBuckets(s: UTF8String, depth: Int, width: Int): ArrayData = {
     val bytes = s.getBytes
@@ -346,9 +349,9 @@ object ShingleKernel {
     // the confusing OutOfMemoryError this guard exists to pre-empt)
     val nCells = nWords.toLong * depth
     require(nCells <= Int.MaxValue - 8,
-      s"cms_buckets: document too large ($nWords words × depth $depth " +
-      s"= $nCells cells exceeds the array limit) — chunk the document " +
-      "first")
+      s"count-min cells: document too large ($nWords words × depth " +
+      s"$depth = $nCells cells exceeds the array limit) — chunk the " +
+      "document first")
     val md = md5Local.get()
     val cells = new Array[Long](nCells.toInt)
     val buf = new Array[Byte](bytes.length + 2)
@@ -521,401 +524,185 @@ object ShingleKernel {
   }
 }
 
-/** `hashed_shingles(text, k)` → sorted distinct `array<long>` of the
-  * xxhash64 values of the text's k-word shingles. The composable
-  * equivalent (split → k shifted slices → zip_with concat →
-  * array_distinct → transform(xxhash64)) walks the word array ~2k times
-  * and allocates k+2 intermediate arrays per row; this is one fused
-  * byte-level pass. Input must already be `trim(lower(text))` — case
-  * and edge-whitespace normalization stay in (cheap, unicode-correct)
-  * built-ins.
+/** One native text kernel, written once: its SQL name, input type
+  * (string, or binary for `dhash_sketch`), result type, the
+  * [[ShingleKernel]] method that interpreted eval and generated code
+  * both call, its integer parameters and the bound they must meet.
+  * Applied to a column it is the column API
+  * (`ShingleExpressions.hashedShingles(text, k)`); [[function]] is its
+  * SQL registration. Every kernel evaluates through the one
+  * [[TextKernelExpression]].
   */
-case class HashedShingles(child: Expression, k: Int)
-    extends UnaryExpression {
+final class TextKernel private[functions] (val name: String,
+    input: DataType, val dataType: DataType, method: String,
+    params: Seq[String], bound: String = "",
+    valid: Seq[Int] => Boolean = _ => true) extends Serializable {
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  private def arguments: Seq[String] =
+    (if (input == BinaryType) "content" else "text") +: params
+
+  /** The kernel method, for interpreted eval; generated code calls the
+    * same static method by name ([[call]]).
+    */
+  @transient private lazy val target: java.lang.reflect.Method =
+    Class.forName(TextKernel.Owner).getMethod(method,
+      (TextKernel.javaClass(input) +: params.map(_ => Integer.TYPE)): _*)
+
+  def check(t: DataType, args: Seq[Int]): TypeCheckResult =
+    if (t == input && args.length == params.length && valid(args))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name expects a ${input.simpleString} column" +
+        (if (bound.isEmpty) "" else s" and $bound") + s", got $t" +
+        params.zip(args).map { case (p, a) => s" / $p=$a" }.mkString)
+
+  def eval(in: Any, args: Seq[Int]): Any =
+    try target.invoke(null, (in.asInstanceOf[AnyRef] +: args.map(Int.box)): _*)
+    catch { case e: java.lang.reflect.InvocationTargetException =>
+      throw e.getCause }
+
+  /** The generated code: `ShingleKernel.<method>(in, args…)`. */
+  def call(in: String, args: Seq[Int]): String =
+    (in +: args).mkString(s"${TextKernel.Owner}.$method(", ", ", ")")
+
+  def apply(text: Column, args: Int*): Column = {
+    require(args.length == params.length,
+      arguments.mkString(s"$name(", ", ", ")"))
+    graftshim.columnOf(
+      TextKernelExpression(this, graftshim.columnExpr(text), args))
+  }
+
+  /** The `(identifier, info, builder)` that [[GraftExtensions]] injects;
+    * every integer argument must be a literal.
+    */
+  def function: (FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression) =
+    GraftExtensions.function(name, classOf[TextKernelExpression],
+      arguments: _*)(a => TextKernelExpression(this, a.head,
+        a.tail.map(GraftExtensions.intArg(_, name))))
+}
+
+object TextKernel {
+  private val Owner = ShingleKernel.getClass.getName.stripSuffix("$")
+
+  private def javaClass(t: DataType): Class[_] = t match {
+    case BinaryType => classOf[Array[Byte]]
+    case _ => classOf[UTF8String]
+  }
+}
+
+/** The one expression behind every [[TextKernel]]: `kernel(child,
+  * args…)`, one row in, one value out, null for a null input. Generated
+  * code is a single static call into [[ShingleKernel]].
+  */
+case class TextKernelExpression(kernel: TextKernel, child: Expression,
+    args: Seq[Int]) extends UnaryExpression {
+
+  override def dataType: DataType = kernel.dataType
   override def nullable: Boolean = child.nullable
+  override def prettyName: String = kernel.name
+  override protected def flatArguments: Iterator[Any] = Iterator(child) ++ args
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if k >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hashed_shingles expects a string column and k >= 1, got $other / k=$k")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    kernel.check(child.dataType, args)
 
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.compute(input.asInstanceOf[UTF8String], k)
+  override def nullSafeEval(input: Any): Any = kernel.eval(input, args)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.compute($c, $k)")
+    defineCodeGen(ctx, ev, c => kernel.call(c, args))
 
   override protected def withNewChildInternal(newChild: Expression)
-      : HashedShingles = copy(child = newChild)
+      : TextKernelExpression = copy(child = newChild)
 }
 
-/** `hashed_chargrams(text, n)` → `array<long>` of the xxhash64 values
-  * of every n-character gram (duplicates kept — downstream counts term
-  * frequencies). Replaces split-to-chars + k shifted zip_with concats +
-  * explode + length-filter + xxhash64 with one no-copy pass.
+/** The table of the ten text kernels. Word kernels expect
+  * `trim(lower(text))`: case and edge-whitespace normalization stay in
+  * (cheap, unicode-correct) built-ins.
   */
-case class HashedChargrams(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if n >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hashed_chargrams expects a string column and n >= 1, got $other / n=$n")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.chargrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.chargrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : HashedChargrams = copy(child = newChild)
-}
-
-/** `chargram_strings(text, n)` → `array<string>` of every n-character
-  * gram (duplicates kept). The string twin of [[HashedChargrams]], for
-  * consumers that need the gram text itself (e.g. an ANSI-replicable
-  * ordering); grams are zero-copy views over the input buffer.
-  */
-case class ChargramStrings(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if n >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"chargram_strings expects a string column and n >= 1, got $other / n=$n")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.chargramStrings(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.chargramStrings($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : ChargramStrings = copy(child = newChild)
-}
-
-/** `winnow_fingerprints(text, k, w)` → sorted distinct `array<long>`
-  * of winnowing-selected 60-bit md5 gram hashes (see
-  * [[ShingleKernel.winnow]]). Input must already be
-  * `trim(lower(text))`.
-  */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if k >= 1 && w >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_fingerprints expects a string column and k, w >= 1, " +
-            s"got $other / k=$k / w=$w")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.winnow($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : WinnowFingerprints = copy(child = newChild)
-}
-
-/** `positional_shingles(text, k)` → `array<long>` of POSITIONAL
-  * xxhash64 k-word shingle hashes, document order, duplicates kept
-  * (see [[ShingleKernel.positionalHashes]]). Input must already be
-  * `trim(lower(text))`.
-  */
-case class PositionalShingles(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if k >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"positional_shingles expects a string column and k >= 1, " +
-            s"got $other / k=$k")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.positional(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.positional($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PositionalShingles = copy(child = newChild)
-}
-
-
-/** `simhash_sketch(text)` → 64-bit SimHash of the whitespace words
-  * (see [[ShingleKernel.simhashSketch]]). Input must already be
-  * `trim(lower(text))`.
-  */
-case class SimhashSketch(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash_sketch expects a string column, got $other")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.simhashSketch(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.simhashSketch($c)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SimhashSketch = copy(child = newChild)
-}
-
-
-/** `dhash_sketch(content)` → 64-bit difference hash of a BINARY
-  * payload (see [[ShingleKernel.dhashSketch]]).
-  */
-case class DhashSketch(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dhash_sketch expects a binary column, got $other")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.dhashSketch(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.dhashSketch($c)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : DhashSketch = copy(child = newChild)
-}
-
-
-/** `positional_gram_strings(text, k)` → `array<string>` of POSITIONAL
-  * k-word gram strings, document order, duplicates kept (see
-  * [[ShingleKernel.positionalGramStrings]]). Input must already be
-  * `trim(lower(text))`.
-  */
-case class PositionalGramStrings(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if k >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"positional_gram_strings expects a string column and k >= 1, " +
-            s"got $other / k=$k")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.positionalGramStrings(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.positionalGramStrings($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : PositionalGramStrings = copy(child = newChild)
-}
-
-/** `bigram_buckets(text, buckets)` → `array<long>` of packed
-  * `(bucket << 32) | count` DSIR bigram bucket counts (see
-  * [[ShingleKernel.bigramBuckets]]). Input must already be
-  * `trim(lower(text))`.
-  */
-case class BigramBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if buckets >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bigram_buckets expects a string column and buckets >= 1, " +
-            s"got $other / buckets=$buckets")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.bigramBuckets(input.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.bigramBuckets($c, $buckets)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : BigramBuckets = copy(child = newChild)
-}
-
-/** Fused per-document count-min grid cells as packed
-  * `((d·width + bkt) << 32) | count` longs (see
-  * [[ShingleKernel.cmsBuckets]]). Input must already be
-  * `trim(lower(text))`.
-  */
-case class CmsBuckets(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      // depth·width < 2^31: the packed (cell << 32) | count layout and
-      // every consumer's integer arithmetic need the cell id to fit a
-      // non-negative int — an unbounded width would silently corrupt
-      // cells through the sign bit instead of failing here
-      case StringType if depth >= 1 && depth <= 10 && width >= 2 &&
-          depth.toLong * width < (1L << 31) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cms_buckets expects a string column, 1 <= depth <= 10, " +
-            s"width >= 2 and depth*width < 2^31, got $other / " +
-            s"depth=$depth width=$width")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.cmsBuckets(input.asInstanceOf[UTF8String], depth, width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.cmsBuckets($c, $depth, $width)")
-
-  override def prettyName: String = "cms_buckets"
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : CmsBuckets = copy(child = newChild)
-}
-
 object ShingleExpressions {
-  import org.apache.spark.sql.graftshim
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val positive: Seq[Int] => Boolean = _.forall(_ >= 1)
 
-  /** Column API: `positionalGramStrings(trim(lower(text)), k)`. */
-  def positionalGramStrings(normalizedText: Column, k: Int): Column =
-    graftshim.columnOf(PositionalGramStrings(
-      graftshim.columnExpr(normalizedText), k))
+  /** Sorted distinct xxhash64 of the k-word shingles
+    * ([[ShingleKernel.compute]]). The composable equivalent (split → k
+    * shifted slices → zip_with concat → array_distinct →
+    * transform(xxhash64)) walks the word array ~2k times and allocates
+    * k+2 intermediate arrays per row; this is one fused byte-level pass.
+    */
+  val hashedShingles = new TextKernel("hashed_shingles", StringType, longs,
+    "compute", Seq("k"), "k >= 1", positive)
 
-  /** Column API: `simhashSketch(trim(lower(text)))`. */
-  def simhashSketch(normalizedText: Column): Column =
-    graftshim.columnOf(SimhashSketch(
-      graftshim.columnExpr(normalizedText)))
+  /** xxhash64 of every n-character gram, duplicates kept for term
+    * frequencies ([[ShingleKernel.chargrams]]): one no-copy pass in
+    * place of split-to-chars + shifted zip_with concats + explode +
+    * length filter + xxhash64.
+    */
+  val hashedChargrams = new TextKernel("hashed_chargrams", StringType, longs,
+    "chargrams", Seq("n"), "n >= 1", positive)
 
-  /** Column API: `dhashSketch(binaryContent)`. */
-  def dhashSketch(content: Column): Column =
-    graftshim.columnOf(DhashSketch(
-      graftshim.columnExpr(content)))
+  /** Every n-character gram as a string, duplicates kept
+    * ([[ShingleKernel.chargramStrings]]): the string twin of
+    * [[hashedChargrams]] for consumers that need the gram text (an
+    * ANSI-replicable ordering); grams are zero-copy views of the input.
+    */
+  val chargramStrings = new TextKernel("chargram_strings", StringType,
+    strings, "chargramStrings", Seq("n"), "n >= 1", positive)
 
-  /** Column API: `positionalShingles(trim(lower(text)), k)`. */
-  def positionalShingles(normalizedText: Column, k: Int): Column =
-    graftshim.columnOf(PositionalShingles(
-      graftshim.columnExpr(normalizedText), k))
+  /** Sorted distinct winnowing-selected 60-bit md5 gram hashes
+    * ([[ShingleKernel.winnow]]).
+    */
+  val winnowFingerprints = new TextKernel("winnow_fingerprints", StringType,
+    longs, "winnow", Seq("k", "w"), "k, w >= 1", positive)
 
-  /** Column API: `bigramBuckets(trim(lower(text)), buckets)`. */
-  def bigramBuckets(normalizedText: Column, buckets: Int): Column =
-    graftshim.columnOf(BigramBuckets(
-      graftshim.columnExpr(normalizedText), buckets))
+  /** Positional xxhash64 k-word shingle hashes, document order,
+    * duplicates kept ([[ShingleKernel.positionalHashes]]).
+    */
+  val positionalShingles = new TextKernel("positional_shingles", StringType,
+    longs, "positional", Seq("k"), "k >= 1", positive)
 
-  /** Column API: `cmsBuckets(trim(lower(text)), depth, width)`. */
-  def cmsBuckets(normalizedText: Column, depth: Int, width: Int): Column =
-    graftshim.columnOf(CmsBuckets(
-      graftshim.columnExpr(normalizedText), depth, width))
+  /** Positional k-word gram strings, document order, duplicates kept
+    * ([[ShingleKernel.positionalGramStrings]]).
+    */
+  val positionalGramStrings = new TextKernel("positional_gram_strings",
+    StringType, strings, "positionalGramStrings", Seq("k"), "k >= 1",
+    positive)
 
-  /** Column API: `winnowFingerprints(trim(lower(text)), k, w)`. */
-  def winnowFingerprints(normalizedText: Column, k: Int, w: Int): Column =
-    graftshim.columnOf(WinnowFingerprints(
-      graftshim.columnExpr(normalizedText), k, w))
+  /** Packed `(bucket << 32) | count` DSIR bigram bucket counts
+    * ([[ShingleKernel.bigramBuckets]]).
+    */
+  val bigramBuckets = new TextKernel("bigram_buckets", StringType, longs,
+    "bigramBuckets", Seq("buckets"), "buckets >= 1", positive)
 
-  /** Column API: `hashedShingles(trim(lower(text)), k)`. */
-  def hashedShingles(normalizedText: Column, k: Int): Column =
-    graftshim.columnOf(HashedShingles(
-      graftshim.columnExpr(normalizedText), k))
+  /** Per-document count-min grid cells as packed
+    * `((d·width + bkt) << 32) | count` longs
+    * ([[ShingleKernel.cmsBuckets]]). depth·width < 2³¹: the packed
+    * layout and every consumer's integer arithmetic need the cell id to
+    * fit a non-negative int — an unbounded width would silently corrupt
+    * cells through the sign bit instead of failing at analysis; depth ≤
+    * 10 keeps the hash-row prefix one decimal byte.
+    */
+  val cmsBuckets = new TextKernel("cms_buckets", StringType, longs,
+    "cmsBuckets", Seq("depth", "width"),
+    "1 <= depth <= 10, width >= 2 and depth*width < 2^31",
+    { case Seq(depth, width) => depth >= 1 && depth <= 10 && width >= 2 &&
+      depth.toLong * width < (1L << 31) })
 
-  /** Column API: `hashedChargrams(normalizedText, n)`. */
-  def hashedChargrams(normalizedText: Column, n: Int): Column =
-    graftshim.columnOf(HashedChargrams(
-      graftshim.columnExpr(normalizedText), n))
+  /** 64-bit SimHash of the whitespace words
+    * ([[ShingleKernel.simhashSketch]]).
+    */
+  val simhashSketch = new TextKernel("simhash_sketch", StringType, LongType,
+    "simhashSketch", Nil)
 
-  /** Column API: `chargramStrings(normalizedText, n)`. */
-  def chargramStrings(normalizedText: Column, n: Int): Column =
-    graftshim.columnOf(ChargramStrings(
-      graftshim.columnExpr(normalizedText), n))
+  /** 64-bit difference hash of a BINARY payload
+    * ([[ShingleKernel.dhashSketch]]).
+    */
+  val dhashSketch = new TextKernel("dhash_sketch", BinaryType, LongType,
+    "dhashSketch", Nil)
+
+  val all: Seq[TextKernel] = Seq(hashedShingles, hashedChargrams,
+    chargramStrings, winnowFingerprints, positionalShingles,
+    positionalGramStrings, bigramBuckets, cmsBuckets, simhashSketch,
+    dhashSketch)
 }

@@ -8,6 +8,37 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+/** The shared part of the double-vector aggregates ([[VectorSumAgg]],
+  * [[OuterProductSumAgg]]): one primitive `double` buffer per group,
+  * evaluated as a non-null `array<double>` and shipped between
+  * partitions as raw big-endian doubles. Subclasses define `update`,
+  * `merge` and the copy methods.
+  */
+abstract class DoubleVectorAgg
+    extends TypedImperativeAggregate[Array[Double]] {
+  def child: Expression
+
+  override def children: Seq[Expression] = Seq(child)
+  override def nullable: Boolean = false
+  override def dataType: DataType =
+    ArrayType(DoubleType, containsNull = false)
+
+  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
+
+  override def eval(buf: Array[Double]): Any = new GenericArrayData(buf)
+
+  override def serialize(buf: Array[Double]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 * buf.length)
+    buf.foreach(bb.putDouble)
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Double] = {
+    val bb = ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(bb.getDouble)
+  }
+}
+
 /** Element-wise sum of an `array<double>` column as ONE aggregate
   * (TypedImperativeAggregate, the [[MinHashAgg]] pattern): each group's
   * buffer is a single primitive double vector, merged element-wise
@@ -28,14 +59,7 @@ case class VectorSumAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    ArrayType(DoubleType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
+  extends DoubleVectorAgg {
 
   private def grow(buf: Array[Double], n: Int): Array[Double] =
     if (buf.length >= n) buf
@@ -59,19 +83,6 @@ case class VectorSumAgg(
     var i = 0
     while (i < b.length) { out(i) += b(i); i += 1 }
     out
-  }
-
-  override def eval(buf: Array[Double]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putDouble)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getDouble)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): VectorSumAgg =
@@ -117,14 +128,7 @@ case class OuterProductSumAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    ArrayType(DoubleType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
+  extends DoubleVectorAgg {
 
   override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
     val v = child.eval(input)
@@ -167,19 +171,6 @@ case class OuterProductSumAgg(
       while (i < b.length) { a(i) += b(i); i += 1 }
       a
     }
-  }
-
-  override def eval(buf: Array[Double]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putDouble)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getDouble)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int)

@@ -10,9 +10,9 @@ import graft.functions.ShingleExpressions
   * contains a benchmark answer span inflates eval scores).
   *
   * Scale shape: the corpus side explodes to 64-bit hashed grams (the
-  * [[graft.functions.HashedShingles]] single-pass kernel — no string
-  * materialization); the benchmark side reduces to a DISTINCT hashed-gram
-  * set first. Real benchmarks are MBs against a 100 TB corpus, so the
+  * [[graft.functions.ShingleExpressions.hashedShingles]] single-pass
+  * kernel — no string materialization); the benchmark side reduces to
+  * a DISTINCT hashed-gram set first. Real benchmarks are MBs against a 100 TB corpus, so the
   * gram set broadcasts and the corpus never shuffles — the join is a
   * map-side semi probe, one corpus scan total.
   */
@@ -43,7 +43,7 @@ object Decontaminate {
     grams(corpus)
       .join(benchGrams, "_gram")
       .groupBy(col(idCol))
-      // grams are already per-doc distinct (HashedShingles dedups), so a
+      // grams are already per-doc distinct (hashed_shingles dedups), so a
       // plain count is a distinct count — no count_distinct re-shuffle.
       .agg(count(lit(1)).as("n_shared"))
   }

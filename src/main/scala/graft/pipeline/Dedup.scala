@@ -93,8 +93,9 @@ object Dedup {
     * representation similarity shuffles ever carry (never shingle
     * strings or arrays). Hashing merges colliding shingles
     * (~n²/2⁶⁵ chance corpus-wide). Computed by the fused native
-    * [[graft.functions.HashedShingles]] kernel (one byte-level pass;
-    * hash values byte-identical to `xxhash64` over [[shingles]]).
+    * [[graft.functions.ShingleExpressions.hashedShingles]] kernel (one
+    * byte-level pass; hash values byte-identical to `xxhash64` over
+    * [[shingles]]).
     */
   private def hashedTokens(df: DataFrame, textCol: String, idCol: String,
       k: Int): DataFrame =
@@ -393,7 +394,7 @@ object Dedup {
     *
     * One fused byte-level pass per row
     * ([[graft.functions.ShingleKernel.winnow]], the [[exactDupPairs]]
-    * HashedShingles stance): word boundaries, positional gram
+    * hashed_shingles stance): word boundaries, positional gram
     * assembly, the 60-bit md5 prefix (the
     * [[graft.pipeline.Sampling]] hash60 layout — replayed verbatim by
     * the oracle), window minima, sorted distinct. The composable

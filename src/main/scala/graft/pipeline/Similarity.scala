@@ -181,33 +181,25 @@ object Similarity {
     * re-fit the quantizer" maintenance decision [[refreshIvf]]'s
     * scaladoc leaves to the owner: a rising mean assignment distance
     * across ingest batches says the arriving distribution has walked
-    * away from the fitted cells. Same distance arithmetic as
-    * [[assignCells]] (direct Σ(x−y)², not a sqrt round-trip), same
-    * broadcast-centroids shape: one O(batch×nlist) scored expansion,
-    * one per-id min, one global average — nothing corpus-shaped, and
-    * the result is two scalars.
+    * away from the fitted cells. It is [[meanAssignDist]] over the
+    * index layout's own assignment ([[assignCellsDist]]), the estimator
+    * the ANN ingest door stamps per batch.
     */
   def assignmentStats(vectors: DataFrame,
       centroids: Array[(Int, Array[Double])],
       vecCol: String = "embedding",
-      idCol: String = "vec_id"): (Long, Double) = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val cents = broadcast(
-      centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
-        .toDF("cell", "cvec"))
-    val row = vectors
-      .select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
-      .crossJoin(cents)
-      .withColumn("dist",
-        aggregate(zip_with(col("_v"), col("cvec"),
-          (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, x) => acc + x))
-      .groupBy(col(idCol)).agg(min(col("dist")).as("_d"))
-      // coalesce: avg over ZERO rows is null — an empty batch reports
-      // (0, 0.0) instead of throwing at the row accessor
-      .agg(count(lit(1)).cast("long").as("n"),
-        round(coalesce(avg(col("_d")), lit(0.0d)), 6).as("m"))
-      .collect().head
+      idCol: String = "vec_id"): (Long, Double) =
+    meanAssignDist(
+      vectors.transform(assignCellsDist(centroids, vecCol, idCol)))
+
+  /** (count, mean `_dist` rounded to 6 places) of an [[assignCellsDist]]
+    * frame. avg over ZERO rows is null, so an empty batch reports
+    * (0, 0.0) instead of throwing at the row accessor.
+    */
+  private[graft] def meanAssignDist(assigned: DataFrame): (Long, Double) = {
+    val row = assigned.agg(count(lit(1)).cast("long"),
+        round(coalesce(avg(col("_dist")), lit(0.0d)), 6))
+      .head()
     (row.getLong(0), row.getDouble(1))
   }
 
@@ -971,9 +963,8 @@ object Similarity {
 
   /** [[assignCells]] keeping the winning squared L2 distance as
     * `_dist` — one expansion serves BOTH the index layout (cell) and
-    * the assignment-quality stats the ANN ingest door stamps per batch
-    * (the door previously ran the O(batch×nlist) expansion twice, once
-    * in assignmentStats and once in refreshIvf's assignCells).
+    * the assignment-quality stats ([[meanAssignDist]]) the ANN ingest
+    * door stamps per batch.
     */
   private[graft] def assignCellsDist(
       centroids: Array[(Int, Array[Double])],

@@ -145,8 +145,9 @@ object TextAnalysis {
       profileSize: Int = 200): DataFrame = {
     val s = lower(regexp_replace(col(textCol), "\\s+", " "))
     // Doc-side trigrams as 64-bit hashes from the fused native
-    // [[graft.functions.HashedChargrams]] kernel — one no-copy pass per
-    // document, and every downstream shuffle/join key is a long.
+    // [[graft.functions.ShingleExpressions.hashedChargrams]] kernel — one
+    // no-copy pass per document, and every downstream shuffle/join key
+    // is a long.
     // (History: per-position substr lambdas measured ~16x slower than
     // zip_with over shifted arrays; the native kernel replaces even
     // that with a single traversal.)

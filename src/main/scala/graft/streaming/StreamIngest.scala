@@ -433,18 +433,11 @@ object StreamIngest {
         .transform(Similarity.assignCellsDist(
           idx.centroids, "embedding", "vec_id"))
         .localCheckpoint(true)
-      // same estimator (and 6-dp rounding) as
-      // Similarity.assignmentStats — the stamped mean must stay
-      // oracle-identical
-      val statsRow = assigned
-        .agg(count(lit(1)).cast("long").as("n"),
-          round(coalesce(avg(col("_dist")), lit(0.0d)), 6).as("m"))
-        .head()
+      val (n, mean) = Similarity.meanAssignDist(assigned)
       idx.table.get.append(
         assigned.drop("_dist").repartition(col("cell")),
         summary = stamped(queryName, batchId) ++ Map(
-          NVectorsKey -> statsRow.getLong(0).toString,
-          MeanSqDistKey -> statsRow.getDouble(1).toString))
+          NVectorsKey -> n.toString, MeanSqDistKey -> mean.toString))
       true
     }
 

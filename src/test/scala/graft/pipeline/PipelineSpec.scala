@@ -714,33 +714,11 @@ class PipelineSpec extends AnyFunSuite {
       s"kept ${out.count()} of $total")
   }
 
-  test("plan-shipped kNN kernel equals the single-window baseline") {
-    import org.apache.spark.sql.expressions.Window
-    val e = emb.select(col("vec_id"), col("embedding"))
-    val q = e.select(col("vec_id").as("query_id"),
-      col("embedding").as("qvec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val naive = e.crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Similarity.cosine(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val got = Similarity.knnGraph(emb)
-      .select(col("src"), col("rank"), col("dst"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got == naive,
-      s"two-phase selection drifted: ${got.diff(naive).take(5)}")
-  }
-
   test("blocked kNN graph equals the crossJoin+window baseline, row for row") {
     // Full-row equality (ranks, rounded cosines, mutual flags): the
     // blocked route must be a pure re-plumbing of the same arithmetic,
-    // not an approximation — and it must hold at a block count (the
-    // shuffle partition count) that doesn't divide the corpus evenly.
+    // not an approximation — at the default block count (the shuffle
+    // partition count) and at one that doesn't divide the corpus evenly.
     import org.apache.spark.sql.expressions.Window
     val e = emb.select(col("vec_id").cast("long").as("src"),
       col("embedding").cast("array<double>").as("v"))
@@ -761,14 +739,16 @@ class PipelineSpec extends AnyFunSuite {
       (a, rk, b, c, pairs((b, a))) }.toSet
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, "7")
-    val blocked = try Similarity.knnGraph(emb).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getDouble(3), r.getBoolean(4))).toSet
-      finally s.conf.set(key, prev)
-    assert(blocked == naive,
-      s"blocked path drifted: ${blocked.diff(naive).take(5)} / " +
-        s"${naive.diff(blocked).take(5)}")
+    for (blocks <- Seq(prev, "7")) {
+      s.conf.set(key, blocks)
+      val blocked = try Similarity.knnGraph(emb).collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+            r.getDouble(3), r.getBoolean(4))).toSet
+        finally s.conf.set(key, prev)
+      assert(blocked == naive,
+        s"blocked path drifted at $blocks blocks: " +
+          s"${blocked.diff(naive).take(5)} / ${naive.diff(blocked).take(5)}")
+    }
   }
 
   test("IVF kNN graph: well-formed, honest recall vs the exact graph") {

@@ -29,8 +29,9 @@ class VectorExprSpec extends AnyFunSuite {
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
     assert(gen.contains("Found 1 WholeStageCodegen"), gen.take(500))
-    assert(gen.contains("Math.sqrt("), "doGenCode loop missing from " +
-      "generated code — expression fell back to interpreted eval")
+    assert(gen.contains("graft.functions.VectorKernel.cosine("),
+      "kernel call missing from generated code — expression fell back " +
+        "to interpreted eval")
   }
 
   test("nearest-centroid kernel: argmax matches per-pair cosine, codegens") {
@@ -74,28 +75,13 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("extensions expose the native kernels to SQL text") {
-    // cosine_similarity / hashed_shingles resolve via GraftExtensions
-    // (spark.sql.extensions) — same Expression, so results must equal
-    // the Column API exactly
+    // cosine_similarity / kmv_sketch / cms_buckets resolve via
+    // GraftExtensions (spark.sql.extensions); KernelModeSpec checks that
+    // every kernel's SQL name equals its Column API call
     val one = s.sql(
       "SELECT cosine_similarity(array(1.0d, 0.0d), array(2.0d, 0.0d)) c")
       .head().getDouble(0)
     assert(math.abs(one - 1.0) < 1e-15)
-    val viaSql = s.sql(
-      "SELECT hashed_shingles(' a b c ', 2) sh").head().getSeq[Long](0)
-    val viaCol = s.range(1).select(
-      graft.functions.ShingleExpressions
-        .hashedShingles(lit(" a b c "), 2).as("sh"))
-      .head().getSeq[Long](0)
-    assert(viaSql == viaCol)
-    val winSql = s.sql(
-      "SELECT winnow_fingerprints('a b c d e f g h', 3, 4) w")
-      .head().getSeq[Long](0)
-    val winCol = s.range(1).select(
-      graft.functions.ShingleExpressions
-        .winnowFingerprints(lit("a b c d e f g h"), 3, 4).as("w"))
-      .head().getSeq[Long](0)
-    assert(winSql == winCol && winSql.nonEmpty)
     val kmvSql = s.sql(
       "SELECT kmv_sketch(h, 3) sk FROM " +
         "(SELECT explode(array(5L, 1L, 9L, 1L, 3L)) h)")
@@ -104,12 +90,7 @@ class VectorExprSpec extends AnyFunSuite {
     val cmsSql = s.sql(
       "SELECT cms_buckets('a b a', 4, 1024) pc")
       .head().getSeq[Long](0)
-    val cmsCol = s.range(1).select(
-      graft.functions.ShingleExpressions
-        .cmsBuckets(lit("a b a"), 4, 1024).as("pc"))
-      .head().getSeq[Long](0)
-    assert(cmsSql == cmsCol && cmsSql.length == 8,
-      s"cms via SQL: $cmsSql")
+    assert(cmsSql.length == 8, s"cms via SQL: $cmsSql")
     // 'a' appears twice, 'b' once: 4 cells with count 2, 4 with count 1
     assert(cmsSql.map(_ & 0xFFFFFFFFL).sorted ==
       Seq(1L, 1L, 1L, 1L, 2L, 2L, 2L, 2L), s"cms counts: $cmsSql")
