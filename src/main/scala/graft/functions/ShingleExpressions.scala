@@ -349,9 +349,9 @@ object ShingleKernel {
     // the confusing OutOfMemoryError this guard exists to pre-empt)
     val nCells = nWords.toLong * depth
     require(nCells <= Int.MaxValue - 8,
-      s"count-min cells: document too large ($nWords words × depth " +
-      s"$depth = $nCells cells exceeds the array limit) — chunk the " +
-      "document first")
+      s"${ShingleExpressions.cmsBuckets.name}: document too large " +
+      s"($nWords words × depth $depth = $nCells cells exceeds the array " +
+      "limit) — chunk the document first")
     val md = md5Local.get()
     val cells = new Array[Long](nCells.toInt)
     val buf = new Array[Byte](bytes.length + 2)
@@ -528,25 +528,23 @@ object ShingleKernel {
   * (string, or binary for `dhash_sketch`), result type, the
   * [[ShingleKernel]] method that interpreted eval and generated code
   * both call, its integer parameters and the bound they must meet.
-  * Applied to a column it is the column API
-  * (`ShingleExpressions.hashedShingles(text, k)`); [[function]] is its
+  * The arity is part of the type: [[TextKernel0]], [[TextKernel1]] and
+  * [[TextKernel2]] each have a typed `apply`, the column API
+  * (`ShingleExpressions.hashedShingles(text, k)`); [[function]] is the
   * SQL registration. Every kernel evaluates through the one
   * [[TextKernelExpression]].
   */
-final class TextKernel private[functions] (val name: String,
-    input: DataType, val dataType: DataType, method: String,
-    params: Seq[String], bound: String = "",
-    valid: Seq[Int] => Boolean = _ => true) extends Serializable {
+sealed abstract class TextKernel(val name: String, input: DataType,
+    val dataType: DataType, method: String, params: Seq[String],
+    bound: String) extends Serializable {
+
+  /** Interpreted eval: a direct call of the method that [[call]] names. */
+  def eval(in: Any, args: Seq[Int]): Any
+
+  protected def valid(args: Seq[Int]): Boolean
 
   private def arguments: Seq[String] =
     (if (input == BinaryType) "content" else "text") +: params
-
-  /** The kernel method, for interpreted eval; generated code calls the
-    * same static method by name ([[call]]).
-    */
-  @transient private lazy val target: java.lang.reflect.Method =
-    Class.forName(TextKernel.Owner).getMethod(method,
-      (TextKernel.javaClass(input) +: params.map(_ => Integer.TYPE)): _*)
 
   def check(t: DataType, args: Seq[Int]): TypeCheckResult =
     if (t == input && args.length == params.length && valid(args))
@@ -556,21 +554,13 @@ final class TextKernel private[functions] (val name: String,
         (if (bound.isEmpty) "" else s" and $bound") + s", got $t" +
         params.zip(args).map { case (p, a) => s" / $p=$a" }.mkString)
 
-  def eval(in: Any, args: Seq[Int]): Any =
-    try target.invoke(null, (in.asInstanceOf[AnyRef] +: args.map(Int.box)): _*)
-    catch { case e: java.lang.reflect.InvocationTargetException =>
-      throw e.getCause }
-
   /** The generated code: `ShingleKernel.<method>(in, args…)`. */
   def call(in: String, args: Seq[Int]): String =
     (in +: args).mkString(s"${TextKernel.Owner}.$method(", ", ", ")")
 
-  def apply(text: Column, args: Int*): Column = {
-    require(args.length == params.length,
-      arguments.mkString(s"$name(", ", ", ")"))
+  protected def column(text: Column, args: Int*): Column =
     graftshim.columnOf(
       TextKernelExpression(this, graftshim.columnExpr(text), args))
-  }
 
   /** The `(identifier, info, builder)` that [[GraftExtensions]] injects;
     * every integer argument must be a literal.
@@ -584,11 +574,42 @@ final class TextKernel private[functions] (val name: String,
 
 object TextKernel {
   private val Owner = ShingleKernel.getClass.getName.stripSuffix("$")
+}
 
-  private def javaClass(t: DataType): Class[_] = t match {
-    case BinaryType => classOf[Array[Byte]]
-    case _ => classOf[UTF8String]
-  }
+/** A text kernel without integer parameters, over `T` (`UTF8String`,
+  * or `Array[Byte]` for a binary input).
+  */
+final class TextKernel0[T] private[functions] (name: String,
+    input: DataType, dataType: DataType, method: String, run: T => Any)
+    extends TextKernel(name, input, dataType, method, Nil, "") {
+  def eval(in: Any, args: Seq[Int]): Any = run(in.asInstanceOf[T])
+  protected def valid(args: Seq[Int]): Boolean = true
+  def apply(text: Column): Column = column(text)
+}
+
+/** A string kernel with one size parameter, which must be >= 1. */
+final class TextKernel1 private[functions] (name: String,
+    dataType: DataType, method: String, param: String,
+    run: (UTF8String, Int) => Any)
+    extends TextKernel(name, StringType, dataType, method, Seq(param),
+      s"$param >= 1") {
+  def eval(in: Any, args: Seq[Int]): Any =
+    run(in.asInstanceOf[UTF8String], args(0))
+  protected def valid(args: Seq[Int]): Boolean = args(0) >= 1
+  def apply(text: Column, a: Int): Column = column(text, a)
+}
+
+/** A string kernel with two integer parameters and its own bound. */
+final class TextKernel2 private[functions] (name: String,
+    dataType: DataType, method: String, params: (String, String),
+    bound: String, ok: (Int, Int) => Boolean,
+    run: (UTF8String, Int, Int) => Any)
+    extends TextKernel(name, StringType, dataType, method,
+      Seq(params._1, params._2), bound) {
+  def eval(in: Any, args: Seq[Int]): Any =
+    run(in.asInstanceOf[UTF8String], args(0), args(1))
+  protected def valid(args: Seq[Int]): Boolean = ok(args(0), args(1))
+  def apply(text: Column, a: Int, b: Int): Column = column(text, a, b)
 }
 
 /** The one expression behind every [[TextKernel]]: `kernel(child,
@@ -623,7 +644,6 @@ case class TextKernelExpression(kernel: TextKernel, child: Expression,
 object ShingleExpressions {
   private val longs = ArrayType(LongType, containsNull = false)
   private val strings = ArrayType(StringType, containsNull = false)
-  private val positive: Seq[Int] => Boolean = _.forall(_ >= 1)
 
   /** Sorted distinct xxhash64 of the k-word shingles
     * ([[ShingleKernel.compute]]). The composable equivalent (split → k
@@ -631,49 +651,50 @@ object ShingleExpressions {
     * transform(xxhash64)) walks the word array ~2k times and allocates
     * k+2 intermediate arrays per row; this is one fused byte-level pass.
     */
-  val hashedShingles = new TextKernel("hashed_shingles", StringType, longs,
-    "compute", Seq("k"), "k >= 1", positive)
+  val hashedShingles = new TextKernel1("hashed_shingles", longs, "compute",
+    "k", ShingleKernel.compute)
 
   /** xxhash64 of every n-character gram, duplicates kept for term
     * frequencies ([[ShingleKernel.chargrams]]): one no-copy pass in
     * place of split-to-chars + shifted zip_with concats + explode +
     * length filter + xxhash64.
     */
-  val hashedChargrams = new TextKernel("hashed_chargrams", StringType, longs,
-    "chargrams", Seq("n"), "n >= 1", positive)
+  val hashedChargrams = new TextKernel1("hashed_chargrams", longs,
+    "chargrams", "n", ShingleKernel.chargrams)
 
   /** Every n-character gram as a string, duplicates kept
     * ([[ShingleKernel.chargramStrings]]): the string twin of
     * [[hashedChargrams]] for consumers that need the gram text (an
     * ANSI-replicable ordering); grams are zero-copy views of the input.
     */
-  val chargramStrings = new TextKernel("chargram_strings", StringType,
-    strings, "chargramStrings", Seq("n"), "n >= 1", positive)
+  val chargramStrings = new TextKernel1("chargram_strings", strings,
+    "chargramStrings", "n", ShingleKernel.chargramStrings)
 
   /** Sorted distinct winnowing-selected 60-bit md5 gram hashes
     * ([[ShingleKernel.winnow]]).
     */
-  val winnowFingerprints = new TextKernel("winnow_fingerprints", StringType,
-    longs, "winnow", Seq("k", "w"), "k, w >= 1", positive)
+  val winnowFingerprints = new TextKernel2("winnow_fingerprints", longs,
+    "winnow", ("k", "w"), "k, w >= 1", (k, w) => k >= 1 && w >= 1,
+    ShingleKernel.winnow)
 
   /** Positional xxhash64 k-word shingle hashes, document order,
     * duplicates kept ([[ShingleKernel.positionalHashes]]).
     */
-  val positionalShingles = new TextKernel("positional_shingles", StringType,
-    longs, "positional", Seq("k"), "k >= 1", positive)
+  val positionalShingles = new TextKernel1("positional_shingles", longs,
+    "positional", "k", ShingleKernel.positional)
 
   /** Positional k-word gram strings, document order, duplicates kept
     * ([[ShingleKernel.positionalGramStrings]]).
     */
-  val positionalGramStrings = new TextKernel("positional_gram_strings",
-    StringType, strings, "positionalGramStrings", Seq("k"), "k >= 1",
-    positive)
+  val positionalGramStrings = new TextKernel1("positional_gram_strings",
+    strings, "positionalGramStrings", "k",
+    ShingleKernel.positionalGramStrings)
 
   /** Packed `(bucket << 32) | count` DSIR bigram bucket counts
     * ([[ShingleKernel.bigramBuckets]]).
     */
-  val bigramBuckets = new TextKernel("bigram_buckets", StringType, longs,
-    "bigramBuckets", Seq("buckets"), "buckets >= 1", positive)
+  val bigramBuckets = new TextKernel1("bigram_buckets", longs,
+    "bigramBuckets", "buckets", ShingleKernel.bigramBuckets)
 
   /** Per-document count-min grid cells as packed
     * `((d·width + bkt) << 32) | count` longs
@@ -683,23 +704,23 @@ object ShingleExpressions {
     * cells through the sign bit instead of failing at analysis; depth ≤
     * 10 keeps the hash-row prefix one decimal byte.
     */
-  val cmsBuckets = new TextKernel("cms_buckets", StringType, longs,
-    "cmsBuckets", Seq("depth", "width"),
-    "1 <= depth <= 10, width >= 2 and depth*width < 2^31",
-    { case Seq(depth, width) => depth >= 1 && depth <= 10 && width >= 2 &&
-      depth.toLong * width < (1L << 31) })
+  val cmsBuckets = new TextKernel2("cms_buckets", longs, "cmsBuckets",
+    ("depth", "width"), "1 <= depth <= 10, width >= 2 and depth*width < 2^31",
+    (depth, width) => depth >= 1 && depth <= 10 && width >= 2 &&
+      depth.toLong * width < (1L << 31),
+    ShingleKernel.cmsBuckets)
 
   /** 64-bit SimHash of the whitespace words
     * ([[ShingleKernel.simhashSketch]]).
     */
-  val simhashSketch = new TextKernel("simhash_sketch", StringType, LongType,
-    "simhashSketch", Nil)
+  val simhashSketch = new TextKernel0[UTF8String]("simhash_sketch",
+    StringType, LongType, "simhashSketch", ShingleKernel.simhashSketch)
 
   /** 64-bit difference hash of a BINARY payload
     * ([[ShingleKernel.dhashSketch]]).
     */
-  val dhashSketch = new TextKernel("dhash_sketch", BinaryType, LongType,
-    "dhashSketch", Nil)
+  val dhashSketch = new TextKernel0[Array[Byte]]("dhash_sketch", BinaryType,
+    LongType, "dhashSketch", ShingleKernel.dhashSketch)
 
   val all: Seq[TextKernel] = Seq(hashedShingles, hashedChargrams,
     chargramStrings, winnowFingerprints, positionalShingles,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{
   TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
-  Expression, TernaryExpression, UnaryExpression}
+  Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{
   CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -25,10 +25,11 @@ import org.apache.spark.sql.types._
   */
 object VectorKernel {
 
-  /** Cosine of `x` and `y` over their common prefix, or NaN where
-    * there is none: a zero norm, or a NaN or infinite component. The
-    * expression reads NaN as null, so the value stays a primitive
-    * double in generated code.
+  /** Cosine of `x` and `y` over their common prefix; NaN where the
+    * denominator `√nx·√ny` is zero, and NaN (as the arithmetic gives
+    * it) where a component is NaN or infinite. [[cosineUndefined]]
+    * tells the two apart, so the value stays a primitive double in
+    * generated code.
     */
   def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
@@ -41,6 +42,23 @@ object VectorKernel {
     }
     val denom = math.sqrt(nx) * math.sqrt(ny)
     if (denom == 0.0) Double.NaN else dot / denom
+  }
+
+  /** Whether [[cosine]]'s denominator is zero (a zero vector, or norms
+    * that underflow): the null case of `cosine_similarity`. It repeats
+    * the norm sums in the same order, and callers ask only when the
+    * cosine came out NaN.
+    */
+  def cosineUndefined(x: ArrayData, y: ArrayData): Boolean = {
+    val n = math.min(x.numElements(), y.numElements())
+    var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getDouble(i); val yi = y.getDouble(i)
+      nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    math.sqrt(nx) * math.sqrt(ny) == 0.0
   }
 
   /** `(cell, cosine)` of the centroid nearest `x` by cosine, or null
@@ -78,7 +96,7 @@ object VectorKernel {
       }
       c += 1
     }
-    if (bestCell < 0) null else InternalRow(bestCell, bestCos)
+    if (bestCell < 0) null else pair(bestCell, bestCos)
   }
 
   /** Top-`k` `(neighbor, cosine)` of `x` against one packed block
@@ -136,8 +154,15 @@ object VectorKernel {
     }
     val out = new Array[Any](size)
     i = 0
-    while (i < size) { out(i) = InternalRow(bn(i), bc(i)); i += 1 }
+    while (i < size) { out(i) = pair(bn(i), bc(i)); i += 1 }
     new GenericArrayData(out)
+  }
+
+  /** A two-field result row over one `Object[2]` (no varargs copy). */
+  private def pair(a: Any, b: Any): InternalRow = {
+    val vals = new Array[Any](2)
+    vals(0) = a; vals(1) = b
+    new GenericInternalRow(vals)
   }
 
   /** Sign bits of `v` against `nPlanes` hyperplanes (`planes` flattened
@@ -210,7 +235,8 @@ object VectorKernel {
   * per row; this walks once and allocates nothing. Used by
   * [[graft.pipeline.Similarity]] when both sides are DoubleType arrays
   * (brute-force scoring = N×Q evaluations — the kernel that dominates).
-  * A zero-norm side yields null.
+  * A zero denominator (a zero-norm side) yields null; a NaN or
+  * infinite component yields the NaN the arithmetic gives.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -227,16 +253,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val c = VectorKernel.cosine(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-    if (c.isNaN) null else c
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    val c = VectorKernel.cosine(x, y)
+    if (c.isNaN && VectorKernel.cosineUndefined(x, y)) null else c
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""${ev.value} = graft.functions.VectorKernel.cosine($a, $b);
-         |${ev.isNull} = java.lang.Double.isNaN(${ev.value});""".stripMargin)
+         |${ev.isNull} = java.lang.Double.isNaN(${ev.value}) &&
+         |  graft.functions.VectorKernel.cosineUndefined($a, $b);"""
+        .stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

@@ -11,8 +11,8 @@ import graft.pipeline.Similarity
   * The inputs are fixture rows read back from parquet, so nothing is
   * constant-folded, plus edge rows: a zero vector, a vector shorter
   * than the centroids and the block, a null vector, an empty top-k
-  * block, rows whose own id is in their block, and null, empty and
-  * whitespace-edged text.
+  * block, vectors with a NaN or an infinite component, rows whose own
+  * id is in their block, and null, empty and whitespace-edged text.
   */
 class KernelModeSpec extends AnyFunSuite {
   import TestSpark._
@@ -87,7 +87,10 @@ class KernelModeSpec extends AnyFunSuite {
       (-1L, Array.fill(dim)(0.0)), // zero vector
       (-2L, embeddings(3)._2.take(5)), // shorter than centroids/block
       (-3L, null), // null input
-      (-4L, embeddings(30)._2)) // gets the empty block
+      (-4L, embeddings(30)._2), // gets the empty block
+      (-5L, embeddings(5)._2.updated(2, Double.NaN)), // NaN component
+      (-6L, embeddings(6)._2.updated(0, Double.PositiveInfinity)),
+      (-7L, Array.fill(dim)(0.0))) // zero, against the infinite vector
     val base = (embeddings.toSeq ++ edges).toDF("id", "v")
     val next = base.select((col("id") - 1).as("id"), col("v").as("w"))
     val blk = base.filter(col("id").between(0, 23))
@@ -138,6 +141,8 @@ class KernelModeSpec extends AnyFunSuite {
     assert(!rows(-2L).isNullAt(2) && rows(-2L).getInt(3) == 3 &&
       rows(-2L).isNullAt(4), "short vector: cell and neighbors, no PQ code")
     assert(rows(-4L).getInt(3) == 0, "empty block: no neighbors")
+    assert(!rows(-5L).isNullAt(1) && rows(-5L).getDouble(1).isNaN,
+      "NaN component: a NaN cosine, not null")
   }
 
   /** Each text kernel as SQL text over the normalized column `t` and as
