@@ -22,6 +22,11 @@ import org.apache.spark.sql.types._
   * The cosine arithmetic is shared by all three cosine kernels:
   * `dot/(√nx·√ny)` with both norms truncated to the common prefix, so
   * results replay in an ANSI oracle.
+  *
+  * A kernel that reads its input vector more than once per row copies
+  * it to a `double[]` first: the methods are shared by every query in
+  * the JVM, so their `getDouble` call sites see every `ArrayData` class
+  * (unsafe, generic, columnar) and stop inlining.
   */
 object VectorKernel {
 
@@ -68,18 +73,19 @@ object VectorKernel {
     */
   def nearestCentroid(x: ArrayData, cells: Array[Int],
       centroids: Array[Array[Double]], cnorms: Array[Double]): InternalRow = {
-    val nd = x.numElements()
+    val xs = x.toDoubleArray()
+    val nd = xs.length
     val n = math.min(nd, centroids(0).length)
     var nx = 0.0
     var i = 0
-    while (i < n) { val xi = x.getDouble(i); nx += xi * xi; i += 1 }
+    while (i < n) { val xi = xs(i); nx += xi * xi; i += 1 }
     val snx = math.sqrt(nx)
     var bestCell = -1; var bestCos = 0.0
     var c = 0
     while (c < centroids.length) {
       val cent = centroids(c)
       var dot = 0.0; i = 0
-      while (i < n) { dot += x.getDouble(i) * cent(i); i += 1 }
+      while (i < n) { dot += xs(i) * cent(i); i += 1 }
       val cn =
         if (nd >= cent.length) cnorms(c)
         else {
@@ -108,13 +114,14 @@ object VectorKernel {
   def topKAgainst(x: ArrayData, self: Long, block: ArrayData, k: Int)
       : ArrayData = {
     val nb = block.numElements()
-    val nd = x.numElements()
+    val xs = x.toDoubleArray()
+    val nd = xs.length
     val dim =
       if (nb == 0) 0 else block.getStruct(0, 3).getArray(1).numElements()
     val n0 = math.min(nd, dim)
     var nx = 0.0
     var i = 0
-    while (i < n0) { val xi = x.getDouble(i); nx += xi * xi; i += 1 }
+    while (i < n0) { val xi = xs(i); nx += xi * xi; i += 1 }
     val snx = math.sqrt(nx)
     val bn = new Array[Long](k); val bc = new Array[Double](k)
     var size = 0
@@ -127,7 +134,7 @@ object VectorKernel {
         val clen = row.numElements()
         val n = math.min(nd, clen)
         var dot = 0.0; i = 0
-        while (i < n) { dot += x.getDouble(i) * row.getDouble(i); i += 1 }
+        while (i < n) { dot += xs(i) * row.getDouble(i); i += 1 }
         val cn =
           if (nd >= clen) cand.getDouble(2)
           else {
@@ -172,14 +179,15 @@ object VectorKernel {
   def signCodes(v: ArrayData, planes: Array[Double], nPlanes: Int)
       : ArrayData = {
     val dim = planes.length / nPlanes
-    val n = math.min(v.numElements(), dim)
+    val vs = v.toDoubleArray()
+    val n = math.min(vs.length, dim)
     val words = new Array[Long]((nPlanes + 63) / 64)
     var p = 0
     while (p < nPlanes) {
       var dot = 0.0
       val off = p * dim
       var i = 0
-      while (i < n) { dot += v.getDouble(i) * planes(off + i); i += 1 }
+      while (i < n) { dot += vs(i) * planes(off + i); i += 1 }
       if (dot > 0) words(p >> 6) |= (1L << (p & 63))
       p += 1
     }
@@ -194,6 +202,7 @@ object VectorKernel {
   def pqEncode(x: ArrayData, flat: Array[Double], m: Int, ksub: Int,
       dsub: Int): ArrayData = {
     if (x.numElements() < m * dsub) return null
+    val xs = x.toDoubleArray()
     val codes = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -206,7 +215,7 @@ object VectorKernel {
         var d2 = 0.0
         var i = 0
         while (i < dsub) {
-          val diff = x.getDouble(base + i) - flat(off + i)
+          val diff = xs(base + i) - flat(off + i)
           d2 += diff * diff
           i += 1
         }
