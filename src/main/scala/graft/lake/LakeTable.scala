@@ -66,13 +66,23 @@ class LakeTable(val spark: SparkSession, val location: String) {
 
   // ---- internal helpers ----------------------------------------------
 
+  /** Commit `manifest` plus the `appended` files of new rows as the next
+    * snapshot of `branch`. Each appended file inherits its row ids (v3
+    * row lineage, Iceberg's `first_row_id`): in staged order, it gets
+    * `firstRowId` from the `nextRowId` watermark, which advances by its
+    * row count, and its `_row_id` stats become that id range, so pruning
+    * on row ids stays exact.
+    */
   private def commitSnapshot(
       base: TableMetadata,
       operation: String,
-      manifest: Manifest,
+      delta: Manifest,
       branch: String,
-      rowsAssigned: Long,
-      summary: Map[String, String] = Map.empty): Snapshot = {
+      summary: Map[String, String] = Map.empty,
+      appended: Seq[DataFileEntry] = Nil): Snapshot = {
+    val firstIds = appended.scanLeft(base.nextRowId)(_ + _.recordCount)
+    val manifest = delta.copy(addedData = delta.addedData ++
+      appended.zip(firstIds).map { case (f, first) => inheriting(f, first) })
     val seq = base.lastSequenceNumber + 1
     val snapId = base.lastSnapshotId + 1
     val parent = base.refs.get(branch).map(_.snapshotId)
@@ -108,11 +118,24 @@ class LakeTable(val spark: SparkSession, val location: String) {
     Meta.commit(base.copy(
       lastSequenceNumber = seq,
       lastSnapshotId = snapId,
-      nextRowId = base.nextRowId + rowsAssigned,
+      nextRowId = firstIds.last,
       snapshots = base.snapshots :+ snap,
       refs = base.refs + (branch -> Ref(snapId, "branch"))))
     snap
   }
+
+  private def inheriting(f: DataFileEntry, first: Long): DataFileEntry =
+    f.copy(firstRowId = Some(first), stats =
+      if (f.recordCount == 0) f.stats
+      else f.stats + (RowId -> ColumnStats(Some(first.toString),
+        Some((first + f.recordCount - 1).toString), 0L)))
+
+  /** New rows as written: a null `_row_id`, which the commit's
+    * `firstRowId` fills ([[commitSnapshot]]), and sequence `seq`.
+    */
+  private def newRows(df: DataFrame, seq: Long): DataFrame =
+    df.withColumn(RowId, lit(null).cast(LongType))
+      .withColumn(LastUpdatedSeq, lit(seq).cast(LongType))
 
   /** Align an arbitrary df to the current schema: missing columns take
     * their default (v3 default values, `sql:166-169`) or null; extras are
@@ -200,8 +223,26 @@ class LakeTable(val spark: SparkSession, val location: String) {
     if (nullSafe && keyCols.indices.exists(i => b.getAs[Long](s"_nn_$i") > 0))
       files
     else if (box.exists(_._2 == null)) Nil
-    else Scan.pruneFiles(m, files, Some(box.map { case (n, mn, mx) =>
-      col(n) >= lit(mn) && col(n) <= lit(mx) }.reduce(_ && _)))
+    else Scan.prunePred(m, files, inBox(box))
+  }
+
+  /** Every `(column, min, max)` range of a key box holds. */
+  private def inBox(box: Seq[(String, Any, Any)]): Transforms.Pred =
+    box.map { case (n, mn, mx) =>
+      Transforms.AndP(Transforms.Cmp(">=", n, mn), Transforms.Cmp("<=", n, mx))
+    }.reduce[Transforms.Pred](Transforms.AndP(_, _))
+
+  /** Column `c`'s canonical `(min, max)` in each delete file, from the
+    * parquet footers read in-process (no Spark job); None when any footer
+    * lacks usable stats for `c`, or counts a null in it.
+    */
+  private def footerRanges(files: Seq[DeleteFileEntry], c: String)
+      : Option[Seq[(String, String)]] = {
+    val ranges = files.map { d =>
+      Writer.footerStats(spark, Paths.get(location, d.path).toString)._3
+        .get(c).filter(_.nullCount == 0).flatMap(st => st.min.zip(st.max))
+    }
+    if (ranges.forall(_.isDefined)) Some(ranges.flatten) else None
   }
 
   /** Copy-on-write: of the `candidates`, rewrite only the files holding
@@ -228,13 +269,13 @@ class LakeTable(val spark: SparkSession, val location: String) {
       rewrite(Scan.readEntries(spark, m, affected, dels)))
     Some(commitSnapshot(m, operation,
       Manifest(entries.toList, Nil, affected.map(_.path).toList, Nil),
-      branch, 0))
+      branch))
   }
 
   /** Optimistic-concurrency retry: re-run `body` when its commit loses
     * the metadata CAS to a concurrent writer (the Iceberg commit loop).
     * The retry unit is FULL RE-EXECUTION, not manifest rebase: each
-    * attempt reloads current metadata, so row-lineage ids are assigned
+    * attempt reloads current metadata, so new files inherit row ids
     * from the advanced watermark (no collision with the winner's rows),
     * DML predicates re-evaluate against the winner's committed rows,
     * and scan pruning sees the winner's files — the outcome is exactly
@@ -280,6 +321,8 @@ class LakeTable(val spark: SparkSession, val location: String) {
     * Caller-supplied lineage columns are dropped: `$row_id` assignment
     * belongs to the table (re-appending rows read with meta columns must
     * get FRESH ids, or MoR deletes keyed on row id would hit imposters).
+    * The rows are written with a null `_row_id` and inherit their ids
+    * from the commit, so the append is one Spark job over `df`.
     */
   def append(df: DataFrame, branch: String = "main",
       summary: Map[String, String] = Map.empty): Snapshot =
@@ -290,13 +333,12 @@ class LakeTable(val spark: SparkSession, val location: String) {
       Scan.PathCol, Scan.MtimeCol, Scan.PartitionCol)
     val aligned = align(cleaned, m.currentSchema.struct)
     val seq = m.lastSequenceNumber + 1
-    val withLin =
-      if (Scan.rowLineageEnabled(m)) Writer.withLineage(aligned, m.nextRowId, seq)
-      else aligned
-    val entries = writeData(m, seq, withLin)
-    val rows = entries.map(_.recordCount).sum
-    commitSnapshot(m, "append",
-      Manifest(entries.toList, Nil, Nil, Nil), branch, rows, summary)
+    if (Scan.rowLineageEnabled(m))
+      commitSnapshot(m, "append", Manifest(Nil, Nil, Nil, Nil), branch,
+        summary, appended = writeData(m, seq, newRows(aligned, seq)))
+    else commitSnapshot(m, "append",
+      Manifest(writeData(m, seq, aligned).toList, Nil, Nil, Nil), branch,
+      summary)
   }
 
   /** DELETE FROM … WHERE (`sql:137,228,240`). MoR writes a deletion
@@ -315,7 +357,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
       Writer.writeDeleteFile(matched.select(col(RowId)), location,
           m.lastSequenceNumber + 1)
         .map(d => commitSnapshot(m, "delete",
-          Manifest(Nil, List(d), Nil, Nil), branch, 0))
+          Manifest(Nil, List(d), Nil, Nil), branch))
     } else rewriteFiles(m, "delete", branch, candidates, dels,
       _.filter(matches(cond)), _.filter(!matches(cond)))
   }
@@ -351,7 +393,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
       Writer.writeEqualityDeleteFile(keys, keyCols, fieldIds, location,
           m.lastSequenceNumber + 1)
         .map(d => commitSnapshot(m, "delete",
-          Manifest(Nil, List(d), Nil, Nil), branch, 0))
+          Manifest(Nil, List(d), Nil, Nil), branch))
     else {
       // CoW: the key set (persisted: the box agg reads it, then it
       // broadcasts in both the hit-detection semi-join and the survivor
@@ -392,7 +434,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
         Writer.writeDeleteFile(matched.select(col(RowId)), location, seq)
           .map(d => commitSnapshot(m, "overwrite", Manifest(
             writeData(m, seq, assign(matched, target, set, seq)).toList,
-            List(d), Nil, Nil), branch, 0))
+            List(d), Nil, Nil), branch))
       } finally matched.unpersist()
     } else rewriteFiles(m, "overwrite", branch, candidates, dels,
       _.filter(matches(cond)),
@@ -456,7 +498,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
           assign(joined.filter(isMatched && condCol), target, set, seq)
         }
 
-        // unmatched source rows → inserts (fresh $row_id)
+        // unmatched source rows → inserts (their files inherit fresh ids)
         val insertedOpt =
           if (whenNotMatchedInsert) Some(align(
             joined.filter(col(RowId).isNull).select(source.columns
@@ -479,7 +521,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
               "MERGE: one target row matched more than one source row")
           }
           // The update-side writes (delete vector + rewritten rows) and
-          // the insert-side writes (lineage + new rows) read only the
+          // the insert-side write (new rows) read only the
           // cached frames and land in DISJOINT files — overlap them
           // (guide §2.6); the commit below is still one atomic snapshot.
           graft.SparkEnv.overlap(
@@ -487,17 +529,18 @@ class LakeTable(val spark: SparkSession, val location: String) {
               Writer.writeDeleteFile(upd.select(col(RowId)), location, seq)
                 .map(de => (writeData(m, seq, upd), de))
             },
-            insertedOpt.map(ins =>
-              writeData(m, seq, Writer.withLineage(ins, m.nextRowId, seq))))
+            insertedOpt.map(ins => writeData(m, seq, newRows(ins, seq))))
         } finally updatedOpt.foreach(_.unpersist())
         val inserted = insPart.toList.flatten
-        val manifest = Manifest(updPart.toList.flatMap(_._1) ++ inserted,
+        val manifest = Manifest(updPart.toList.flatMap(_._1),
           updPart.map(_._2).toList, Nil, Nil)
-        if (manifest.addedData.isEmpty && manifest.addedDeletes.isEmpty) None
+        if (manifest.addedData.isEmpty && inserted.isEmpty &&
+            manifest.addedDeletes.isEmpty) None
         else Some(commitSnapshot(m, "overwrite", manifest, branch,
-          inserted.map(_.recordCount).sum, summary = summary ++ Map(
+          summary = summary ++ Map(
             "candidate-data-files" -> candidates.size.toString,
-            "total-data-files" -> files.size.toString)))
+            "total-data-files" -> files.size.toString),
+          appended = inserted))
       } finally joined.unpersist()
     } finally source.unpersist()
   }
@@ -650,21 +693,25 @@ class LakeTable(val spark: SparkSession, val location: String) {
             val (eqDels, posDels) =
               mf.addedDeletes.partition(_.content == "equality")
             // Position deletes: join parent state against the new
-            // delete ids. Deletion vectors are metadata-sized → take
-            // their row-id bounds first and prune parent files whose
-            // _row_id stats can't overlap — the preimage scan touches
-            // only files that actually lost rows, not the whole parent
-            // snapshot.
+            // delete ids. The deletion vectors' row-id bounds come from
+            // their footers, and parent files whose _row_id stats can't
+            // overlap are pruned — the preimage scan touches only files
+            // that actually lost rows, not the whole parent snapshot.
             val posPre: Option[DataFrame] = if (posDels.isEmpty) None else {
               val delDf = broadcast(Scan.readDeletes(spark, location, posDels))
-              val b = delDf.agg(min(col("_del_row_id")), max(col("_del_row_id")))
-                .head()
-              val (lo, hi) = (b.getLong(0), b.getLong(1))
-              val prunedParent = pData.filter { f =>
-                f.stats.get(RowId).forall { st =>
-                  st.min.forall(_.toLong <= hi) && st.max.forall(_.toLong >= lo)
+              val prunedParent =
+                footerRanges(posDels, "_del_row_id") match {
+                  case Some(rs) =>
+                    val lo = rs.map(_._1.toLong).min
+                    val hi = rs.map(_._2.toLong).max
+                    pData.filter { f =>
+                      f.stats.get(RowId).forall { st =>
+                        st.min.forall(_.toLong <= hi) &&
+                          st.max.forall(_.toLong >= lo)
+                      }
+                    }
+                  case None => pData
                 }
-              }
               val parent = Scan.readEntries(spark, m, prunedParent, pDels)
               Some(parent.join(delDf,
                 parent(RowId) === delDf("_del_row_id") &&
@@ -673,22 +720,38 @@ class LakeTable(val spark: SparkSession, val location: String) {
             // Equality deletes: the preimage is the parent rows whose
             // key null-safe-equals a delete-file row (same semi-join
             // the scan path uses as anti-join). Key-set files are
-            // CDC-batch-sized → broadcast; parent files are pruned by
-            // the key set's bounding box first ([[keyCandidates]], the
-            // deleteByKeys-CoW rule), so a narrow-key delete commit's
-            // preimage never scans the rest of a 100 TB parent snapshot.
+            // CDC-batch-sized → broadcast; parent files are pruned first
+            // by each delete file's key box, read from its footer, so a
+            // narrow-key delete commit's preimage never scans the rest
+            // of a 100 TB parent snapshot. A null key matches null-keyed
+            // rows in any file, so it keeps every file (the
+            // deleteByKeys-CoW rule, [[keyCandidates]]).
             val eqPres: Seq[DataFrame] =
               eqDels.groupBy(_.equalityIds).toSeq.map { case (ids, fs) =>
-                val names = ids.map { id =>
+                val fields = ids.map { id =>
                   m.currentSchema.struct.fields
                     .find(f => SchemaEvolution.fieldId(f) == id)
                     .getOrElse(throw new IllegalArgumentException(
                       s"equality delete references dropped field id $id"))
-                    .name
                 }
+                val names = fields.map(_.name)
                 val delDf = broadcast(Scan.readDeletes(spark, location, fs))
-                val prunedParent = keyCandidates(m, pData, delDf,
-                  ids.map(id => s"k_$id"), names, nullSafe = true)
+                // a canonical stat as a predicate value of column `f`
+                // (one that does not parse prunes nothing)
+                def value(f: StructField, v: String): Any =
+                  Transforms.parseCanonical(v, f.dataType) match {
+                    case Some(d: BigDecimal) => d.bigDecimal
+                    case other => other.getOrElse(v)
+                  }
+                val boxes = ids.zip(fields).map { case (id, f) =>
+                  footerRanges(fs, s"k_$id").map(_.map { case (mn, mx) =>
+                    (f.name, value(f, mn), value(f, mx)) })
+                }
+                val prunedParent =
+                  if (boxes.exists(_.isEmpty)) pData
+                  else Scan.prunePred(m, pData, fs.indices
+                    .map(i => inBox(boxes.map(_.get(i))))
+                    .reduce[Transforms.Pred](Transforms.OrP(_, _)))
                 val parent = Scan.readEntries(spark, m, prunedParent, pDels)
                 val keyEq = ids.zip(names).map { case (id, n) =>
                   parent(n) <=> delDf(s"k_$id") }.reduce(_ && _)
@@ -790,7 +853,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
     Some(commitSnapshot(m, "replace",
       Manifest(entries.toList, Nil, selected.map(_.path).toList,
         if (allCompacted) dels.map(_.path).toList else Nil),
-      branch, 0))
+      branch))
   }
 
   /** CALL expire_snapshots (`sql:260`): drop snapshots older than the

@@ -54,7 +54,15 @@ object Meta {
     */
   case class ColumnStats(min: Option[String], max: Option[String], nullCount: Long)
 
-  /** A data file plus everything needed to prune it without opening it. */
+  /** A data file plus everything needed to prune it without opening it.
+    *
+    * `firstRowId` is v3 row-lineage inheritance (Iceberg's
+    * `first_row_id`): a file of new rows stores a null `_row_id`, and
+    * its row at position `p` has id `firstRowId + p`. The commit that
+    * adds the file assigns it. `None` means the ids are stored in the
+    * file: rewrites keep the ids they read, and manifests written before
+    * inheritance existed parse to `None`.
+    */
   case class DataFileEntry(
       path: String,
       specId: Int,
@@ -63,7 +71,8 @@ object Meta {
       recordCount: Long,
       sizeBytes: Long,
       stats: Map[String, ColumnStats],
-      dataSeq: Long)
+      dataSeq: Long,
+      firstRowId: Option[Long] = None)
 
   /** A delete file. Two contents, mirroring the public Iceberg v2/v3
     * spec's delete-file taxonomy:

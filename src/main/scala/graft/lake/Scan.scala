@@ -24,6 +24,11 @@ import org.apache.spark.sql.types._
   * infers nothing, and starts no Spark job. The delete-file
   * anti-join broadcasts the delete side (deletion vectors are
   * metadata-sized), so MoR reads never shuffle the data side.
+  *
+  * Row lineage is inherited (Iceberg v3): a file whose manifest entry
+  * carries `firstRowId` stores a null `_row_id`, and the scan reads it as
+  * `firstRowId + _metadata.row_index`. The id reaches each row as a
+  * per-file partition value, so no join or literal map is involved.
   */
 object Scan {
   import Meta._
@@ -39,6 +44,7 @@ object Scan {
   /** Internal per-file metadata column names (pre-rename). */
   val GraftPath = "_graft_path"
   val GraftMtime = "_graft_mtime"
+  private val FirstRowId = "_first_row_id"
 
   case class ReadOptions(
       ref: Option[String] = None,
@@ -80,19 +86,23 @@ object Scan {
   def pruneFiles(meta: TableMetadata, files: Seq[DataFileEntry],
       filter: Option[Column], namesSchemaId: Option[Int] = None)
       : Seq[DataFileEntry] =
-    filter.map(Transforms.analyzeColumn) match {
-      case Some(p) =>
-        val names = namesSchemaId.map(meta.schema(_).struct)
-          .getOrElse(meta.currentSchema.struct)
-        val bySchema = scala.collection.mutable.Map[Int, Transforms.Pred]()
-        files.filter { f =>
-          val fileSchema = meta.schema(f.schemaId).struct
-          val fp = bySchema.getOrElseUpdate(f.schemaId,
-            Transforms.remapPred(p, names, fileSchema))
-          Transforms.mightMatch(fp, f, fileSchema, meta.spec(f.specId))
-        }
-      case None => files
+    filter.fold(files)(f =>
+      prunePred(meta, files, Transforms.analyzeColumn(f), namesSchemaId))
+
+  /** [[pruneFiles]] for a predicate already in the `Transforms.Pred` form. */
+  def prunePred(meta: TableMetadata, files: Seq[DataFileEntry],
+      p: Transforms.Pred, namesSchemaId: Option[Int] = None)
+      : Seq[DataFileEntry] = {
+    val names = namesSchemaId.map(meta.schema(_).struct)
+      .getOrElse(meta.currentSchema.struct)
+    val bySchema = scala.collection.mutable.Map[Int, Transforms.Pred]()
+    files.filter { f =>
+      val fileSchema = meta.schema(f.schemaId).struct
+      val fp = bySchema.getOrElseUpdate(f.schemaId,
+        Transforms.remapPred(p, names, fileSchema))
+      Transforms.mightMatch(fp, f, fileSchema, meta.spec(f.specId))
     }
+  }
 
   /** Read specific data-file entries, aligned to the current schema (by
     * stable field id: renames follow the id, dropped columns vanish,
@@ -215,11 +225,11 @@ object Scan {
           StructField(RowId, LongType), StructField(LastUpdatedSeq, LongType)))
       else fileStruct
     val fs = fileSystem(spark, meta.location)
-    var df = parquetFrame(spark, readSchema, files.map(f => fileStatus(fs,
-      meta.location, f.path, if (withPath) None else Some(f.sizeBytes))))
-    if (withPath)
-      df = df.withColumn(GraftPath, col("_metadata.file_path"))
-        .withColumn(GraftMtime, col("_metadata.file_modification_time"))
+    val statuses = files.map(f => fileStatus(fs, meta.location, f.path,
+      if (withPath) None else Some(f.sizeBytes)))
+    val inherits = lineage && files.exists(_.firstRowId.isDefined)
+    val df = parquetFrame(spark, readSchema, statuses,
+      if (inherits) files.map(f => f.firstRowId.map(Long.box).orNull) else Nil)
 
     val cur = target
     val byId = fileStruct.fields.map(f => SchemaEvolution.fieldId(f) -> f).toMap
@@ -232,38 +242,58 @@ object Scan {
             .getOrElse(lit(null)).cast(cf.dataType).as(cf.name)
       }
     }
-    val extras = (if (lineage) Seq(col(RowId), col(LastUpdatedSeq)) else Nil) ++
-      (if (withPath) Seq(col(GraftPath), col(GraftMtime)) else Nil)
+    // inherited lineage: a null `_row_id` is the file's first id plus the
+    // row's position in the file
+    val rowId =
+      if (inherits) coalesce(col(RowId),
+        col(FirstRowId) + col("_metadata.row_index")).as(RowId)
+      else col(RowId)
+    val extras = (if (lineage) Seq(rowId, col(LastUpdatedSeq)) else Nil) ++
+      (if (withPath) Seq(col("_metadata.file_path").as(GraftPath),
+        col("_metadata.file_modification_time").as(GraftMtime)) else Nil)
+    // one projection: each further Dataset step would be one more analysis
     df.select(projected ++ extras: _*)
   }
 
   /** Spark's file list for a lake read: the manifest entries themselves,
     * so planning lists, globs and stats nothing (Iceberg's "the manifests
-    * are the file list"). One partition directory with no values: graft's
-    * partition tuples live in the manifest, not in the paths. `listFiles`
-    * receives Catalyst's partition and data filters and ignores them.
+    * are the file list"). One partition directory per file, holding that
+    * file's values of `partitionSchema`: graft's partition tuples live in
+    * the manifest, not in the paths, so the only per-file value is an
+    * inherited file's first row id. `listFiles` receives Catalyst's
+    * partition and data filters and ignores them.
     */
-  private final case class ManifestIndex(files: Seq[FileStatus])
+  private final case class ManifestIndex(files: Seq[FileStatus],
+      values: Seq[InternalRow], partitionSchema: StructType)
       extends FileIndex {
     def rootPaths: Seq[HPath] = files.map(_.getPath)
     def listFiles(partitionFilters: Seq[Expression],
         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      Seq(PartitionDirectory(InternalRow.empty,
-        files.map(FileStatusWithMetadata(_))))
+      files.zip(values).map { case (f, v) =>
+        PartitionDirectory(v, Seq(FileStatusWithMetadata(f)))
+      }
     def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
     def refresh(): Unit = ()
     def sizeInBytes: Long = files.map(_.getLen).sum
-    def partitionSchema: StructType = new StructType()
   }
 
   /** A parquet frame over lake files whose schema is known up front:
-    * every lake-file read gets its Spark relation here.
+    * every lake-file read gets its Spark relation here. With
+    * `firstRowIds` (one per file, null for a file that stores its ids),
+    * the frame also carries each file's id as the column `_first_row_id`.
     */
   private def parquetFrame(spark: SparkSession, schema: StructType,
-      files: Seq[FileStatus]): DataFrame =
-    spark.baseRelationToDataFrame(HadoopFsRelation(ManifestIndex(files),
-      new StructType(), nullable(schema).asInstanceOf[StructType], None,
+      files: Seq[FileStatus], firstRowIds: Seq[java.lang.Long] = Nil)
+      : DataFrame = {
+    val index =
+      if (firstRowIds.isEmpty)
+        ManifestIndex(files, files.map(_ => InternalRow.empty), new StructType())
+      else ManifestIndex(files, firstRowIds.map(InternalRow(_)),
+        StructType(Seq(StructField(FirstRowId, LongType))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      index.partitionSchema, nullable(schema).asInstanceOf[StructType], None,
       new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Every level nullable, as a parquet relation's data schema always is
     * (a file may predate a column, or hold nulls a stricter schema bans).

@@ -11,14 +11,19 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{
   DateLogicalTypeAnnotation, StringLogicalTypeAnnotation,
   TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Data-file writer for the lake layer: partition-transform repartitioning,
-  * parquet write, manifest-stat collection, v3 row-lineage assignment
-  * (SURVEY §7 module `write`; reproduces the write path behind
-  * `iceberg_trino_sqldemo.sql:19-40` CTAS and all DML inserts).
+  * parquet write, manifest-stat collection (SURVEY §7 module `write`;
+  * reproduces the write path behind `iceberg_trino_sqldemo.sql:19-40`
+  * CTAS and all DML inserts).
+  *
+  * The writer assigns no row ids. New rows are written with a null
+  * `_row_id`, and the commit gives each new file its `firstRowId`
+  * (v3 row-lineage inheritance, `sql:65-68,133-135`); rewrites write the
+  * ids they read. So an append is one Spark job over its input.
   *
   * Stats come from the parquet *footers* of the just-written files — an
   * O(metadata) pass, no second scan of the data — which is what keeps
@@ -30,63 +35,9 @@ object Writer {
   val RowId = "_row_id"
   val LastUpdatedSeq = "_last_updated_seq"
 
-  /** Attach fresh `_row_id` (from `firstRowId`, dense and unique, stable
-    * for the life of the row — `sql:65-68,133-135`) and
-    * `_last_updated_seq`.
-    * Callers must pass lineage-free rows (append strips caller-supplied
-    * lineage; rewrite paths that preserve ids write files directly).
-    *
-    * Stays entirely in the DataFrame world (no RDD round-trip, no
-    * whole-stage-codegen break): `monotonically_increasing_id` encodes
-    * (partition id << 33 | in-partition offset); one extra
-    * count-per-partition job (metadata-sized result) converts it to
-    * dense ids via prefix sums, joined back broadcast — same ordering
-    * and the same extra-pass cost zipWithIndex had, minus the Row
-    * materialization. The extra pass covers only the *written* batch,
-    * never the whole table.
-    */
-  def withLineage(df: DataFrame, firstRowId: Long, seq: Long): DataFrame = {
-    require(!df.columns.contains(RowId),
-      s"withLineage expects lineage-free input; found $RowId")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pidCounts = df.groupBy(spark_partition_id().as("_pid"))
-      .count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = pidCounts.scanLeft(0L)(_ + _._2)
-    // broadcast pid→(offset, counted size) — one row per partition: a
-    // literal map would blow up analysis at 100k-task scale
-    val offDf = broadcast(
-      pidCounts.zip(offsets)
-        .map { case ((pid, cnt), off) => (pid, off, cnt) }
-        .toSeq.toDF("_pid", "_offset", "_cnt"))
-    df.withColumn("_mid", monotonically_increasing_id())
-      .withColumn("_pid", shiftright(col("_mid"), 33).cast(IntegerType))
-      .join(offDf, Seq("_pid"), "left")
-      // Nondeterminism guard, per row: a partition id the count job never
-      // saw (null _offset) OR an in-partition offset at/past that
-      // partition's counted size both mean the input repartitioned
-      // between the two jobs — fail loudly, because either could mint a
-      // duplicate/overlapping id, and a bad row id makes the row immune
-      // to every later MoR delete/update keyed on it. (A partition that
-      // SHRANK between jobs passes — ids stay unique, merely non-dense,
-      // which lineage semantics tolerate.)
-      .withColumn("_offset",
-        when(col("_offset").isNotNull &&
-            col("_mid").bitwiseAND(lit((1L << 33) - 1)) < col("_cnt"),
-          col("_offset"))
-          .otherwise(raise_error(lit(
-            "withLineage: partitioning changed between counting and id " +
-              "assignment — input is nondeterministic")).cast(LongType)))
-      .withColumn(RowId,
-        lit(firstRowId) + col("_offset") +
-          col("_mid").bitwiseAND(lit((1L << 33) - 1)))
-      .withColumn(LastUpdatedSeq, lit(seq).cast(LongType))
-      .select(df.columns.map(col).toSeq :+ col(RowId) :+ col(LastUpdatedSeq): _*)
-  }
-
-  /** Write `df` (already lineage-carrying, columns = file schema) as data
-    * files under `location/data`, returning manifest entries.
+  /** Write `df` (columns = file schema, lineage columns included) as data
+    * files under `location/data`, returning manifest entries in staged
+    * order.
     */
   def writeDataFiles(
       df: DataFrame,

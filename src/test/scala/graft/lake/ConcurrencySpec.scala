@@ -69,6 +69,41 @@ class ConcurrencySpec extends AnyFunSuite {
       "colliding $row_id across concurrent appends")
   }
 
+  test("racing appends inherit disjoint row-id ranges") {
+    import s.implicits._
+    val t = fresh()
+    val writers = 4
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(writers)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    (0 until writers).foreach { w =>
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          start.await()
+          try {
+            val mine = LakeTable.forLocation(s, t.location)
+            (0 until 3).foreach { i =>
+              mine.append((0 until 2).map(j => (5000L + w * 100 + i * 10 + j,
+                s"w$w-$i-$j")).toDF("custkey", "name").coalesce(1))
+            }
+          } catch { case e: Throwable => errs.add(e) }
+        }
+      })
+    }
+    start.countDown()
+    pool.shutdown()
+    assert(pool.awaitTermination(120, TimeUnit.SECONDS), "writers hung")
+    assert(errs.isEmpty, s"writer failed: ${Option(errs.peek())}")
+    val m = t.meta
+    val ranges = Meta.liveFiles(m, m.currentSnapshot.get)._1
+      .map(f => (f.firstRowId.get, f.recordCount)).sorted
+    // the ranges tile [0, nextRowId): disjoint, in commit order, no gap
+    assert(ranges.map(_._1) == ranges.scanLeft(0L)(_ + _._2).init)
+    assert(m.nextRowId == 10L + writers * 3 * 2)
+    assert(t.readWithMetaColumns().select(col("$row_id")).collect()
+      .map(_.getLong(0)).sorted.toSeq == (0L until m.nextRowId))
+  }
+
   test("optimize racing appends loses no rows and keeps lineage unique") {
     // The classic lakehouse race: compaction REPLACES files while
     // writers append new ones. The optimistic loop must converge to

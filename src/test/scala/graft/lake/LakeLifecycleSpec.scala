@@ -503,4 +503,169 @@ class LakeLifecycleSpec extends AnyFunSuite {
     assert(LakeTable.forLocation(s, srcLoc)
       .read().orderBy("custkey").collect().toSeq == rows0)
   }
+
+  // ---- v3 row lineage: ids inherited from the commit ---------------------
+
+  /** id → $row_id of every live row. */
+  private def rowIds(t: LakeTable): Map[Long, Long] =
+    t.readWithMetaColumns().select(col("id"), col("$row_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def liveData(t: LakeTable): List[Meta.DataFileEntry] =
+    Meta.liveFiles(t.meta, t.meta.currentSnapshot.get)._1
+
+  private def storedIds(t: LakeTable, f: Meta.DataFileEntry): DataFrame =
+    s.read.parquet(s"${t.location}/${f.path}").select(Writer.RowId)
+
+  test("unpartitioned appends inherit dense row ids in input order") {
+    // 4 and 3 input partitions of consecutive ids: the stored-id
+    // numbering gave every row $row_id = id (lake_row_lineage's contract)
+    val t = LakeTable.create(s, tmpLoc(), Right(s.range(0, 100, 1, 4)
+      .select(col("id"), (col("id") * 10).as("v"))))
+    t.append(s.range(100, 160, 1, 3).select(col("id"), (col("id") * 10).as("v")))
+    assert(rowIds(t) == (0L until 160L).map(i => i -> i).toMap)
+    assert(t.meta.nextRowId == 160L)
+    val files = liveData(t)
+    assert(files.size == 7)
+    files.foreach { f =>
+      val first = f.firstRowId.getOrElse(fail(s"${f.path} inherits no ids"))
+      assert(storedIds(t, f).filter(col(Writer.RowId).isNotNull).count() == 0,
+        "a new file stores no row ids")
+      assert(f.stats(Writer.RowId) == Meta.ColumnStats(Some(first.toString),
+        Some((first + f.recordCount - 1).toString), 0L))
+    }
+    assert(files.flatMap(_.firstRowId).sorted ==
+      Seq(0L, 25L, 50L, 75L, 100L, 120L, 140L))
+  }
+
+  test("inherited row ids survive row-group and page skipping") {
+    // many small row groups and pages per file: a pushed-down filter
+    // skips most of them, and row_index must still count from the file
+    val conf = Seq("parquet.block.size" -> "8192",
+      "parquet.page.row.count.limit" -> "64")
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    val t =
+      try LakeTable.create(s, tmpLoc(), Right(s.range(0, 20000, 1, 2)
+        .select(col("id"), sha2(col("id").cast("string"), 256).as("pad"))))
+      finally conf.foreach { case (k, _) => s.conf.unset(k) }
+    val probe = t.readWithMetaColumns()
+      .filter(col("id") === 13333L || col("id") > 19990L)
+      .select(col("id"), col("$row_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(probe.length == 10 && probe.forall { case (id, rid) => id == rid })
+  }
+
+  test("partitioned appends inherit unique, dense row ids") {
+    val batch = (from: Long, to: Long) => s.range(from, to, 1, 4)
+      .select(col("id"), (col("id") % 5).as("g"))
+    val t = LakeTable.create(s, tmpLoc(), Right(batch(0, 200)),
+      partitioning = Seq("g"))
+    t.append(batch(200, 300))
+    val ids = rowIds(t)
+    assert(ids.size == 300)
+    assert(ids.values.toSeq.sorted == (0L until 300L))
+    assert(ids.filter(_._1 >= 200).values.forall(_ >= 200L),
+      "the second append's ids start at the watermark")
+    assert(liveData(t).forall(_.firstRowId.isDefined))
+  }
+
+  test("optimize writes inherited row ids unchanged") {
+    import s.implicits._
+    val t = LakeTable.create(s, tmpLoc(), Right(Seq((1L, 10L), (2L, 20L))
+      .toDF("id", "v")), properties = Map("merge_mode" -> "merge-on-read"))
+    (3L to 5L).foreach(i => t.append(Seq((i, i * 10)).toDF("id", "v")))
+    t.delete(col("id") === 4L)
+    val before = rowIds(t)
+    val watermark = t.meta.nextRowId
+    assert(t.optimize().map(_.operation).contains("replace"))
+    assert(rowIds(t) == before)
+    assert(t.meta.nextRowId == watermark, "a rewrite mints no ids")
+    val files = liveData(t)
+    assert(files.forall(_.firstRowId.isEmpty), "a rewrite stores its ids")
+    files.foreach(f => assert(storedIds(t, f).collect().map(_.getLong(0))
+      .toSet.subsetOf(before.values.toSet)))
+  }
+
+  test("a table whose manifests carry no firstRowId reads its stored ids " +
+      "and time-travels") {
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    val loc = tmpLoc()
+    val t = LakeTable.create(s, loc,
+      Left(new StructType().add("id", LongType).add("v", LongType)),
+      properties = Map("merge_mode" -> "merge-on-read"))
+    // A data file as tables written before inheritance hold it: the ids
+    // stored in the file, and a manifest entry without `firstRowId`.
+    def legacyCommit(snapId: Long, rows: Seq[(Long, Long, Long)]): Unit = {
+      val stage = Files.createTempDirectory("legacy-")
+      rows.toDF("id", "v", Writer.RowId)
+        .withColumn(Writer.LastUpdatedSeq, lit(snapId)).coalesce(1)
+        .write.mode("overwrite").parquet(stage.toString)
+      val ls = Files.list(stage)
+      val part = try ls.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+        finally ls.close()
+      val target = java.nio.file.Paths.get(loc, "data", s"legacy-$snapId.parquet")
+      Files.createDirectories(target.getParent)
+      Files.move(part, target)
+      val (lo, hi) = (rows.map(_._3).min, rows.map(_._3).max)
+      val rel = s"metadata/manifest-legacy-$snapId.json"
+      Files.write(java.nio.file.Paths.get(loc, rel), (
+        s"""{"addedData":[{"path":"data/legacy-$snapId.parquet","specId":0,""" +
+        s""""schemaId":0,"partition":{},"recordCount":${rows.size},""" +
+        s""""sizeBytes":${Files.size(target)},"stats":{"_row_id":""" +
+        s"""{"min":"$lo","max":"$hi","nullCount":0}},"dataSeq":$snapId}],""" +
+        """"addedDeletes":[],"removedDataPaths":[],"removedDeletePaths":[]}""")
+        .getBytes("UTF-8"))
+      val m = Meta.load(loc)
+      val parent = m.currentSnapshot
+      Meta.commit(m.copy(lastSequenceNumber = snapId, lastSnapshotId = snapId,
+        nextRowId = hi + 1,
+        snapshots = m.snapshots :+ Meta.Snapshot(snapId,
+          parent.map(_.snapshotId), snapId, System.currentTimeMillis(),
+          "append", parent.map(_.manifests).getOrElse(Nil) :+ rel, Map.empty,
+          schemaId = 0),
+        refs = Map("main" -> Meta.Ref(snapId, "branch"))))
+    }
+    legacyCommit(1, Seq((1L, 10L, 0L), (2L, 20L, 1L), (3L, 30L, 2L)))
+    legacyCommit(2, Seq((4L, 40L, 3L), (5L, 50L, 4L)))
+    assert(liveData(t).forall(_.firstRowId.isEmpty))
+    assert(rowIds(t) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    val travelled = Scan.read(s, t.meta,
+      Scan.ReadOptions(snapshotId = Some(1L), withLineage = true))
+      .select(col("id"), col("$row_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(travelled == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
+
+    // new files beside the stored-id files inherit from the watermark
+    t.append(Seq((6L, 60L), (7L, 70L)).toDF("id", "v").coalesce(1))
+    t.update(col("id") === 4L, Map("v" -> lit(41L)))
+    t.delete(col("id").isin(2L, 7L))
+    assert(rowIds(t) == Map(1L -> 0L, 3L -> 2L, 4L -> 3L, 5L -> 4L, 6L -> 5L))
+    assert(t.read().filter(col("id") === 4L).head().getLong(1) == 41L)
+    assert(t.asOf(2L).count() == 5L)
+  }
+
+  test("changes over inherited files: every MoR change in its commit") {
+    import s.implicits._
+    val t = LakeTable.create(s, tmpLoc(), Right(Seq((1L, 10L), (2L, 20L),
+      (3L, 30L)).toDF("id", "v").coalesce(1)),
+      properties = Map("merge_mode" -> "merge-on-read"))
+    val start = t.meta.currentSnapshotId.get
+    t.append(Seq((4L, 40L), (5L, 50L)).toDF("id", "v").coalesce(1))
+    t.update(col("id") === 2L, Map("v" -> lit(21L)))
+    t.delete(col("id").isin(3L, 4L))
+    t.deleteByKeys(Seq(5L).toDF("id"), Seq("id"))
+    t.merge(Seq((1L, 11L), (6L, 60L)).toDF("id", "v"), Seq("id"))
+    t.optimize()
+    val got = t.changes(start, t.meta.currentSnapshotId.get)
+      .select("_change_ordinal", "_change_type", "id", "v").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq
+    assert(got == Seq((1, "insert", 4L, 40L), (1, "insert", 5L, 50L),
+      (2, "delete", 2L, 20L), (2, "insert", 2L, 21L),
+      (3, "delete", 3L, 30L), (3, "delete", 4L, 40L),
+      (4, "delete", 5L, 50L),
+      (5, "delete", 1L, 10L), (5, "insert", 1L, 11L), (5, "insert", 6L, 60L)))
+  }
 }

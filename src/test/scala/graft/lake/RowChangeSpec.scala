@@ -101,4 +101,24 @@ class RowChangeSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("MoR UPDATE, DELETE and MERGE hit the right inherited rows") {
+    // 4 + 2 files of new rows: every id is inherited, $row_id = id
+    val rows = (from: Long, to: Long, parts: Int) =>
+      s.range(from, to, 1, parts).select(col("id"), (col("id") * 10).as("v"))
+    val t = LakeTable.create(s,
+      Files.createTempDirectory("rowchange-test-").resolve("t").toString,
+      Right(rows(0, 40, 4)), properties = Map("merge_mode" -> "merge-on-read"))
+    t.append(rows(40, 60, 2))
+    assert(Meta.liveFiles(t.meta, t.meta.currentSnapshot.get)._1
+      .forall(_.firstRowId.isDefined))
+    t.delete(col("id") === 13L)
+    t.update(col("id") === 45L, Map("v" -> lit(-1L)))
+    t.merge(Seq((22L, -2L), (70L, 700L)).toDF("id", "v"), Seq("id"))
+    val expected = (0L until 60L).filter(_ != 13L).map { id =>
+      id -> (if (id == 45L) -1L else if (id == 22L) -2L else id * 10, id)
+    }.toMap + (70L -> (700L, 60L))
+    assert(state(t).map { case (id, (v, rowId, _)) => id -> (v, rowId) } ==
+      expected)
+  }
 }

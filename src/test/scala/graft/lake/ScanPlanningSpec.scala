@@ -94,6 +94,52 @@ class ScanPlanningSpec extends AnyFunSuite {
       (0L until 2000L).count(i => i % 7 == 3 && i != 5 && i != 7).toLong))
   }
 
+  test("binding a table_changes read over position- and equality-delete " +
+      "commits starts no Spark job") {
+    val (gs, t, created) = fixture
+    val head = t.meta.currentSnapshotId.get
+    var frames = Seq.empty[DataFrame]
+    val jobs = jobsDuring {
+      frames = Seq(t.changes(created, head), gs.execute(
+        s"""SELECT id, _change_type FROM TABLE(system.table_changes(
+           |  schema_name => 'demo', table_name => 't',
+           |  start_snapshot_id => $created, end_snapshot_id => $head))"""
+          .stripMargin))
+    }
+    assert(jobs.isEmpty, s"bind started ${jobs.size} job(s): $jobs")
+    frames.foreach { f =>
+      assert(f.select("id", "_change_type").collect().map(r =>
+        (r.getLong(0), r.getString(1))).sorted.toSeq ==
+        Seq((5L, "delete"), (7L, "delete")))
+    }
+  }
+
+  test("a GraftSql INSERT ... VALUES runs one Spark job") {
+    val (gs, _, _) = fixture
+    gs.cat.createTable("demo.ins",
+      s.range(0, 1).select(col("id"), lit("x").as("tag")),
+      partitioning = Seq("bucket(id, 4)"),
+      properties = Map("merge_mode" -> "merge-on-read"))
+    val jobs = jobsDuring {
+      gs.execute("INSERT INTO ins (id, tag) VALUES (1, 'a'), (2, 'b'), " +
+        "(3, 'c'), (4, 'd')")
+    }
+    assert(jobs.size == 1, s"INSERT ran ${jobs.size} job(s): $jobs")
+    assert(gs.execute("SELECT count(*) FROM ins").head().getLong(0) == 5L)
+  }
+
+  test("an append computes its input once") {
+    val acc = s.sparkContext.longAccumulator("append-input-rows")
+    val counted = udf { (_: Long) => acc.add(1); true }.asNondeterministic()
+    val t = LakeTable.create(s,
+      Files.createTempDirectory("scanplan-").resolve("t").toString,
+      Left(new org.apache.spark.sql.types.StructType().add("id", "long")))
+    t.append(s.range(0, 500, 1, 4).toDF().filter(counted(col("id"))))
+    assert(t.read().count() == 500L)
+    assert(acc.value == 500L,
+      s"the input was evaluated ${acc.value} times for 500 rows")
+  }
+
   test("inputFiles are the live manifest paths, qualified") {
     val (_, t, created) = fixture
     val m = t.meta
