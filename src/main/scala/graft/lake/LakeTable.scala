@@ -232,15 +232,17 @@ class LakeTable(val spark: SparkSession, val location: String) {
       Transforms.AndP(Transforms.Cmp(">=", n, mn), Transforms.Cmp("<=", n, mx))
     }.reduce[Transforms.Pred](Transforms.AndP(_, _))
 
-  /** Column `c`'s canonical `(min, max)` in each delete file, from the
-    * parquet footers read in-process (no Spark job); None when any footer
-    * lacks usable stats for `c`, or counts a null in it.
+  /** Column `c`'s canonical `(min, max)` in each delete file, from its
+    * manifest stats, or for an entry written before delete files carried
+    * stats, from its parquet footer read in-process (no Spark job); None
+    * when any file lacks usable stats for `c`, or counts a null in it.
     */
-  private def footerRanges(files: Seq[DeleteFileEntry], c: String)
+  private def deleteRanges(files: Seq[DeleteFileEntry], c: String)
       : Option[Seq[(String, String)]] = {
     val ranges = files.map { d =>
-      Writer.footerStats(spark, Paths.get(location, d.path).toString)._3
-        .get(c).filter(_.nullCount == 0).flatMap(st => st.min.zip(st.max))
+      val stats = if (d.stats.nonEmpty) d.stats
+        else Writer.footerStats(spark, Paths.get(location, d.path).toString)._3
+      stats.get(c).filter(_.nullCount == 0).flatMap(st => st.min.zip(st.max))
     }
     if (ranges.forall(_.isDefined)) Some(ranges.flatten) else None
   }
@@ -597,8 +599,9 @@ class LakeTable(val spark: SparkSession, val location: String) {
   private def evolveSchema(f: StructType => StructType): Unit =
       withCommitRetry("ALTER TABLE") {
     val m = meta
-    val next = SchemaInfo(m.currentSchemaId + 1,
-      f(m.currentSchema.struct).json)
+    val struct = f(m.currentSchema.struct)
+    Scan.requireUserColumns(struct)
+    val next = SchemaInfo(m.currentSchemaId + 1, struct.json)
     Meta.commit(m.copy(schemas = m.schemas :+ next,
       currentSchemaId = next.schemaId))
   }
@@ -694,13 +697,13 @@ class LakeTable(val spark: SparkSession, val location: String) {
               mf.addedDeletes.partition(_.content == "equality")
             // Position deletes: join parent state against the new
             // delete ids. The deletion vectors' row-id bounds come from
-            // their footers, and parent files whose _row_id stats can't
+            // their stats, and parent files whose _row_id stats can't
             // overlap are pruned — the preimage scan touches only files
             // that actually lost rows, not the whole parent snapshot.
             val posPre: Option[DataFrame] = if (posDels.isEmpty) None else {
               val delDf = broadcast(Scan.readDeletes(spark, location, posDels))
               val prunedParent =
-                footerRanges(posDels, "_del_row_id") match {
+                deleteRanges(posDels, "_del_row_id") match {
                   case Some(rs) =>
                     val lo = rs.map(_._1.toLong).min
                     val hi = rs.map(_._2.toLong).max
@@ -721,7 +724,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
             // key null-safe-equals a delete-file row (same semi-join
             // the scan path uses as anti-join). Key-set files are
             // CDC-batch-sized → broadcast; parent files are pruned first
-            // by each delete file's key box, read from its footer, so a
+            // by each delete file's key box, read from its stats, so a
             // narrow-key delete commit's preimage never scans the rest
             // of a 100 TB parent snapshot. A null key matches null-keyed
             // rows in any file, so it keeps every file (the
@@ -744,7 +747,7 @@ class LakeTable(val spark: SparkSession, val location: String) {
                     case other => other.getOrElse(v)
                   }
                 val boxes = ids.zip(fields).map { case (id, f) =>
-                  footerRanges(fs, s"k_$id").map(_.map { case (mn, mx) =>
+                  deleteRanges(fs, s"k_$id").map(_.map { case (mn, mx) =>
                     (f.name, value(f, mn), value(f, mx)) })
                 }
                 val prunedParent =
@@ -999,6 +1002,7 @@ object LakeTable {
       case Left(s) => s
       case Right(df) => df.schema
     }
+    Scan.requireUserColumns(userSchema)
     val base = if (exists) Meta.load(location) else null
     val schemaId = if (exists) base.currentSchemaId + 1 else 0
     val specId = if (exists) base.specs.map(_.specId).max + 1 else 0

@@ -93,11 +93,17 @@ object Meta {
     *    immunity rule as position deletes, so a row re-inserted after
     *    the delete survives.
     *
-    * Both fields default for manifests written before equality deletes
-    * existed (json4s fills constructor defaults on missing fields).
+    * `stats` are the file's footer stats, as a data file's are: the
+    * `_del_row_id` or `k_<fieldId>` range tells which rows the file can
+    * hit without opening it.
+    *
+    * `content`, `equalityIds` and `stats` default for manifests written
+    * before they existed (json4s fills constructor defaults on missing
+    * fields); empty `stats` means the range is unknown.
     */
   case class DeleteFileEntry(path: String, recordCount: Long, dataSeq: Long,
-      content: String = "position", equalityIds: List[Int] = Nil)
+      content: String = "position", equalityIds: List[Int] = Nil,
+      stats: Map[String, ColumnStats] = Map.empty)
 
   /** An immutable manifest: the delta one commit contributed. */
   case class Manifest(

@@ -27,8 +27,9 @@ import org.apache.spark.sql.types._
   *
   * Row lineage is inherited (Iceberg v3): a file whose manifest entry
   * carries `firstRowId` stores a null `_row_id`, and the scan reads it as
-  * `firstRowId + _metadata.row_index`. The id reaches each row as a
-  * per-file partition value, so no join or literal map is involved.
+  * `firstRowId` plus the row's position in the file. The first id reaches
+  * each row as a per-file partition value, so no join or literal map is
+  * involved.
   */
 object Scan {
   import Meta._
@@ -45,6 +46,22 @@ object Scan {
   val GraftPath = "_graft_path"
   val GraftMtime = "_graft_mtime"
   private val FirstRowId = "_first_row_id"
+  private val StoredRowId = "_stored_row_id"
+  /** The data column the parquet reader fills with each row's position in
+    * its file: what `_metadata.row_index` reads, without the `_metadata`
+    * struct, which a frame keeps reading once any column selected it.
+    */
+  private val RowIndex = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+
+  /** Names a user column may not take: the lineage columns a read adds
+    * beside a file's own columns would shadow it. Spark resolves names
+    * case-insensitively, so the check is too.
+    */
+  def requireUserColumns(schema: StructType): Unit =
+    schema.fieldNames.foreach { n =>
+      require(!Seq(RowId, LastUpdatedSeq, FirstRowId, RowIndex)
+        .exists(_.equalsIgnoreCase(n)), s"column name $n is reserved")
+    }
 
   case class ReadOptions(
       ref: Option[String] = None,
@@ -119,42 +136,49 @@ object Scan {
       .getOrElse(meta.currentSchema.struct)
     if (entries.isEmpty)
       return emptyRaw(spark, meta, lineage, withPath, target)
+    val (eqDels, posDels) =
+      if (lineage) deletes.partition(_.content == "equality") else (Nil, Nil)
+    // An inherited id costs a per-row sum over the row's position. A
+    // position delete that cannot reach any inherited file is matched
+    // against the stored ids alone, so a read that does not select
+    // `$row_id` computes none.
+    val storedKey = posDels.nonEmpty &&
+      entries.exists(_.firstRowId.isDefined) &&
+      !posDels.exists(d => entries.exists(mayHit(d, _)))
     val groups = entries.groupBy(_.schemaId).toSeq.sortBy(_._1)
     val parts = groups.map { case (sid, files) =>
-      readGroup(spark, meta, sid, files, lineage, withPath, target)
+      readGroup(spark, meta, sid, files, lineage, withPath, target, storedKey)
     }
     var df = parts.reduce(_ unionByName _)
-    if (deletes.nonEmpty && lineage) {
-      val (eqDels, posDels) = deletes.partition(_.content == "equality")
-      if (posDels.nonEmpty) {
-        val delDf = broadcast(readDeletes(spark, meta.location, posDels))
-        df = df.join(delDf,
-          df(RowId) === delDf("_del_row_id") &&
-            df(LastUpdatedSeq) < delDf("_del_seq"),
-          "left_anti")
+    if (posDels.nonEmpty) {
+      val delDf = broadcast(readDeletes(spark, meta.location, posDels))
+      df = df.join(delDf,
+        df(if (storedKey) StoredRowId else RowId) === delDf("_del_row_id") &&
+          df(LastUpdatedSeq) < delDf("_del_seq"),
+        "left_anti")
+      if (storedKey) df = df.drop(StoredRowId)
+    }
+    // Equality deletes (Iceberg v2/v3 delete shape): anti-join on
+    // null-safe key equality, gated by the same sequence rule as
+    // position deletes (row seq < delete seq → hit; a row
+    // re-inserted after the delete is immune). Delete files are
+    // key-set-sized (CDC batches), so the delete side broadcasts —
+    // the data side never shuffles, same plan shape as deletion
+    // vectors. Files are grouped by key-id set so mixed-key-history
+    // tables still read in one pass per distinct key set.
+    eqDels.groupBy(_.equalityIds).foreach { case (ids, files) =>
+      val names = ids.map { id =>
+        target.fields.find(f => SchemaEvolution.fieldId(f) == id)
+          .getOrElse(throw new IllegalArgumentException(
+            s"equality delete references dropped field id $id"))
+          .name
       }
-      // Equality deletes (Iceberg v2/v3 delete shape): anti-join on
-      // null-safe key equality, gated by the same sequence rule as
-      // position deletes (row seq < delete seq → hit; a row
-      // re-inserted after the delete is immune). Delete files are
-      // key-set-sized (CDC batches), so the delete side broadcasts —
-      // the data side never shuffles, same plan shape as deletion
-      // vectors. Files are grouped by key-id set so mixed-key-history
-      // tables still read in one pass per distinct key set.
-      eqDels.groupBy(_.equalityIds).foreach { case (ids, files) =>
-        val names = ids.map { id =>
-          target.fields.find(f => SchemaEvolution.fieldId(f) == id)
-            .getOrElse(throw new IllegalArgumentException(
-              s"equality delete references dropped field id $id"))
-            .name
-        }
-        val delDf = broadcast(readDeletes(spark, meta.location, files))
-        val keyEq = ids.zip(names).map { case (id, n) =>
-          df(n) <=> delDf(s"k_$id")
-        }.reduce(_ && _)
-        df = df.join(delDf,
-          keyEq && df(LastUpdatedSeq) < delDf("_del_seq"), "left_anti")
-      }
+      val delDf = broadcast(readDeletes(spark, meta.location, files))
+      val keyEq = ids.zip(names).map { case (id, n) =>
+        df(n) <=> delDf(s"k_$id")
+      }.reduce(_ && _)
+      df = df.join(delDf,
+        keyEq && df(LastUpdatedSeq) < delDf("_del_seq"), "left_anti")
     }
     df
   }
@@ -215,19 +239,38 @@ object Scan {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
   }
 
+  /** Whether position-delete file `d` can hit a row of the inherited
+    * file `f`: `f`'s rows all carry its data sequence number, and their
+    * ids are `f`'s id range. A delete without `_del_row_id` stats may hit
+    * any file.
+    */
+  private def mayHit(d: DeleteFileEntry, f: DataFileEntry): Boolean =
+    f.firstRowId.exists { first =>
+      f.dataSeq < d.dataSeq &&
+        d.stats.get("_del_row_id").flatMap(st => st.min.zip(st.max)).forall {
+          case (lo, hi) =>
+            lo.toLong < first + f.recordCount && hi.toLong >= first
+        }
+    }
+
+  /** One schema version's files. `storedKey` adds the ids the files
+    * store, before inheritance, as `_stored_row_id`.
+    */
   private def readGroup(spark: SparkSession, meta: TableMetadata, sid: Int,
       files: Seq[DataFileEntry], lineage: Boolean, withPath: Boolean,
-      target: StructType): DataFrame = {
+      target: StructType, storedKey: Boolean): DataFrame = {
     val fileStruct = meta.schema(sid).struct
+    val inherits = lineage && files.exists(_.firstRowId.isDefined)
     val readSchema =
       if (lineage)
         StructType(fileStruct.fields ++ Seq(
-          StructField(RowId, LongType), StructField(LastUpdatedSeq, LongType)))
+          StructField(RowId, LongType), StructField(LastUpdatedSeq, LongType)) ++
+          (if (inherits && !withPath) Seq(StructField(RowIndex, LongType))
+          else Nil))
       else fileStruct
     val fs = fileSystem(spark, meta.location)
     val statuses = files.map(f => fileStatus(fs, meta.location, f.path,
       if (withPath) None else Some(f.sizeBytes)))
-    val inherits = lineage && files.exists(_.firstRowId.isDefined)
     val df = parquetFrame(spark, readSchema, statuses,
       if (inherits) files.map(f => f.firstRowId.map(Long.box).orNull) else Nil)
 
@@ -243,12 +286,15 @@ object Scan {
       }
     }
     // inherited lineage: a null `_row_id` is the file's first id plus the
-    // row's position in the file
+    // row's position in the file (a `withPath` read reads `_metadata`
+    // anyway, and Spark allows no data column named like its row index
+    // beside it)
+    val rowIndex = if (withPath) col("_metadata.row_index") else col(RowIndex)
     val rowId =
-      if (inherits) coalesce(col(RowId),
-        col(FirstRowId) + col("_metadata.row_index")).as(RowId)
+      if (inherits) coalesce(col(RowId), col(FirstRowId) + rowIndex).as(RowId)
       else col(RowId)
     val extras = (if (lineage) Seq(rowId, col(LastUpdatedSeq)) else Nil) ++
+      (if (storedKey) Seq(col(RowId).as(StoredRowId)) else Nil) ++
       (if (withPath) Seq(col("_metadata.file_path").as(GraftPath),
         col("_metadata.file_modification_time").as(GraftMtime)) else Nil)
     // one projection: each further Dataset step would be one more analysis

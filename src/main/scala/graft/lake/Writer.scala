@@ -98,9 +98,10 @@ object Writer {
       Files.createDirectories(delDir)
       val name = s"d$seq-${UUID.randomUUID.toString.take(8)}.parquet"
       Files.move(staged.head, delDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      val (rows, _, _) = footerStats(spark, delDir.resolve(name).toString)
+      val (rows, _, stats) = footerStats(spark, delDir.resolve(name).toString)
       if (rows == 0) { Files.delete(delDir.resolve(name)); None }
-      else Some(DeleteFileEntry(s"deletes/$name", rows, seq))
+      else Some(DeleteFileEntry(s"deletes/$name", rows, seq,
+        stats = stats - "_del_seq"))
     } finally deleteRecursively(tmp)
   }
 
@@ -135,10 +136,11 @@ object Writer {
       Files.createDirectories(delDir)
       val name = s"eq$seq-${UUID.randomUUID.toString.take(8)}.parquet"
       Files.move(staged.head, delDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      val (rows, _, _) = footerStats(spark, delDir.resolve(name).toString)
+      val (rows, _, stats) = footerStats(spark, delDir.resolve(name).toString)
       if (rows == 0) { Files.delete(delDir.resolve(name)); None }
       else Some(DeleteFileEntry(s"deletes/$name", rows, seq,
-        content = "equality", equalityIds = fieldIds.toList))
+        content = "equality", equalityIds = fieldIds.toList,
+        stats = stats - "_del_seq"))
     } finally deleteRecursively(tmp)
   }
 

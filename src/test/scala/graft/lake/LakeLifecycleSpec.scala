@@ -668,4 +668,42 @@ class LakeLifecycleSpec extends AnyFunSuite {
       (4, "delete", 5L, 50L),
       (5, "delete", 1L, 10L), (5, "insert", 1L, 11L), (5, "insert", 6L, 60L)))
   }
+
+  test("a position delete computes inherited ids only when it can reach " +
+      "an inherited file") {
+    import s.implicits._
+    val t = LakeTable.create(s, tmpLoc(), Right(Seq((1L, 10L), (2L, 20L))
+      .toDF("id", "v")), properties = Map("merge_mode" -> "merge-on-read"))
+    (3L to 4L).foreach(i => t.append(Seq((i, i * 10)).toDF("id", "v")))
+    t.optimize() // ids 0..3 stored in the rewritten file
+    t.append(Seq((5L, 50L)).toDF("id", "v")) // inherits id 4
+    def readsRowIndex: Boolean =
+      t.read().queryExecution.sparkPlan.toString.contains("row_index")
+    t.delete(col("id") === 2L) // deletes id 1: out of the inherited range
+    assert(!readsRowIndex)
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 3L, 4L, 5L))
+    assert(rowIds(t) == Map(1L -> 0L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    t.delete(col("id") === 5L) // deletes the inherited id 4
+    assert(readsRowIndex)
+    assert(rowIds(t) == Map(1L -> 0L, 3L -> 2L, 4L -> 3L))
+  }
+
+  test("a user column may not take a lineage column's name") {
+    val lineage = Seq(Writer.RowId, Writer.LastUpdatedSeq, "_first_row_id",
+      "_FIRST_ROW_ID")
+    lineage.foreach { n =>
+      intercept[IllegalArgumentException] {
+        LakeTable.create(s, tmpLoc(), Left(new StructType()
+          .add("id", LongType).add(n, LongType)))
+      }
+    }
+    val t = LakeTable.create(s, tmpLoc(),
+      Left(new StructType().add("id", LongType).add("v", LongType)))
+    lineage.foreach { n =>
+      intercept[IllegalArgumentException](t.addColumn(n, LongType))
+      intercept[IllegalArgumentException](t.renameColumn("v", n))
+    }
+    assert(t.meta.currentSchema.struct.fieldNames.toSeq == Seq("id", "v"))
+  }
 }

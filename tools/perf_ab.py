@@ -3,22 +3,24 @@
 
 Usage:
     python3 tools/perf_ab.py --parent DIR --change DIR --workload lake_lifecycle \
-        [--seeds 1-5] [--seconds 18] [--keep DIR]
+        [--seeds 1-10] [--keep DIR]
 
-Runs `python3 perfbench/run.py --workload W --seed S --seconds T --trace 0`
-once in each checkout per seed, alternating which side runs first (odd
-pairs parent first, even pairs change first), so drift on the machine
-falls on both sides alike. Both checkouts are built before the first pair.
-Put BOTH sides in copies outside the working repository, side by side
-(`git archive <commit> | tar -x -C DIR`): the checkout's location alone
-has moved lake_lifecycle timings by several percent.
+Runs `python3 perfbench/run.py --workload W --seed S --trace 0` for
+BENCHMARK.json's `run_seconds` once in each checkout per seed, alternating
+which side runs first (odd pairs parent first, even pairs change first),
+so drift on the machine falls on both sides alike. Both checkouts are
+built before the first pair. Put BOTH sides in copies outside the working
+repository, side by side (`git archive <commit> | tar -x -C DIR`): the
+checkout's location alone has moved lake_lifecycle timings by several
+percent.
 
 Prints one line per run, then one line per end-to-end metric of
 BENCHMARK.json (read from the change checkout): the parent and change
 medians, the change/parent ratio, the pairs the change won, the parent's
-interquartile range, and whether the ratio is within the metric's bound.
-A gain counts only when the change wins at least 9 of 10 pairs and its
-median beats the parent's by more than the parent's IQR.
+quartile spread (Q3 - Q1) / median as `perfbench/report.py` defines it,
+whether the ratio is within the metric's bound, and whether the change
+is a gain: it wins at least 9 of 10 pairs and its median beats the
+parent's by more than the parent's quartile spread.
 
 With --keep, each run's result.json is copied to DIR, and for every seed
 run on both sides the read digests of the statements both sides ran and
@@ -33,12 +35,11 @@ import statistics
 import subprocess
 import sys
 
-
-def seeds_arg(text):
-    if "-" in text:
-        lo, hi = text.split("-", 1)
-        return list(range(int(lo), int(hi) + 1))
-    return [int(s) for s in text.split(",")]
+sys.dont_write_bytecode = True
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "..", "perfbench"))
+import report  # noqa: E402
+from spread import seeds  # noqa: E402
 
 
 def build(side):
@@ -60,13 +61,6 @@ def run(side, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
-def quartiles(xs):
-    if len(xs) < 2:
-        return xs[0], xs[0]
-    q = statistics.quantiles(xs, n=4, method="inclusive")
-    return q[0], q[2]
-
-
 def digests(path):
     with open(path) as f:
         r = json.load(f)
@@ -80,8 +74,7 @@ def main(argv=None):
     ap.add_argument("--parent", required=True)
     ap.add_argument("--change", required=True)
     ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", type=seeds_arg, default=seeds_arg("1-5"))
-    ap.add_argument("--seconds", type=float, default=18)
+    ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--keep")
     a = ap.parse_args(argv)
     sides = {"parent": os.path.abspath(a.parent),
@@ -93,11 +86,12 @@ def main(argv=None):
     for side in sides.values():
         build(side)
 
+    pairs = seeds(a.seeds)
     runs = {"parent": [], "change": []}
-    for i, seed in enumerate(a.seeds):
+    for i, seed in enumerate(pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for name in order:
-            line = run(sides[name], a.workload, seed, a.seconds)
+            line = run(sides[name], a.workload, seed, bench["run_seconds"])
             metrics = {k: v["value"] for k, v in line["metrics"].items()}
             runs[name].append(metrics)
             print(f"pair {i + 1} seed {seed} {name}: correct={line['correct']} "
@@ -110,9 +104,9 @@ def main(argv=None):
                                          "result.json"),
                             os.path.join(a.keep, f"{name}-{a.workload}-seed{seed}.json"))
 
-    print(f"\n{a.workload}: {len(a.seeds)} pairs, seeds {a.seeds}")
+    print(f"\n{a.workload}: {len(pairs)} pairs, seeds {a.seeds}")
     print(f"{'metric':<18}{'parent':>12}{'change':>12}{'ratio':>8}"
-          f"{'wins':>7}{'parent IQR':>22}  within bound")
+          f"{'wins':>7}{'spread':>8}  within bound / gain")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         p = [r[name] for r in runs["parent"]]
@@ -120,14 +114,17 @@ def main(argv=None):
         pm, cm = statistics.median(p), statistics.median(c)
         ratio = cm / pm if pm else float("nan")
         wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
-        q1, q3 = quartiles(p)
+        spread = report.quartile_spread(p) if len(p) > 1 and pm else 0.0
         ok = ratio <= 1 + m["bound"] if lower else ratio >= 1 - m["bound"]
+        gain = (wins >= 0.9 * len(p) and
+                (1 - ratio if lower else ratio - 1) > spread)
         print(f"{name:<18}{pm:>12.4g}{cm:>12.4g}{ratio:>8.3f}"
-              f"{wins:>4}/{len(p):<2}{q1:>11.4g}..{q3:<9.4g}  "
-              f"{'yes' if ok else 'NO'} (bound {m['bound']})")
+              f"{wins:>4}/{len(p):<2}{spread:>8.3f}  "
+              f"{'yes' if ok else 'NO'} (bound {m['bound']})"
+              f"{' / gain' if gain else ''}")
 
     if a.keep and a.workload == "lake_lifecycle":
-        for seed in a.seeds:
+        for seed in pairs:
             pr, pf = digests(os.path.join(a.keep, f"parent-{a.workload}-seed{seed}.json"))
             cr, cf = digests(os.path.join(a.keep, f"change-{a.workload}-seed{seed}.json"))
             common = sorted(set(pr) & set(cr))
