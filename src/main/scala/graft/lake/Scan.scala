@@ -46,7 +46,6 @@ object Scan {
   val GraftPath = "_graft_path"
   val GraftMtime = "_graft_mtime"
   private val FirstRowId = "_first_row_id"
-  private val StoredRowId = "_stored_row_id"
   /** The data column the parquet reader fills with each row's position in
     * its file: what `_metadata.row_index` reads, without the `_metadata`
     * struct, which a frame keeps reading once any column selected it.
@@ -126,11 +125,17 @@ object Scan {
     * added columns materialize their default — `sql:166-189`), carrying
     * raw lineage columns, with delete files applied. The building block
     * for user reads, DML rewrites, CDC and compaction.
+    *
+    * An inherited id costs a per-row sum over the row's position and a
+    * partition column. With `rowIds = false` (the caller selects no
+    * `_row_id`) a read computes them only when a position delete can
+    * reach an inherited file; otherwise `_row_id` holds the stored ids
+    * alone, null in inherited files.
     */
   def readEntries(spark: SparkSession, meta: TableMetadata,
       entries: Seq[DataFileEntry], deletes: Seq[DeleteFileEntry],
-      withPath: Boolean = false, targetSchemaId: Option[Int] = None)
-      : DataFrame = {
+      withPath: Boolean = false, targetSchemaId: Option[Int] = None,
+      rowIds: Boolean = true): DataFrame = {
     val lineage = rowLineageEnabled(meta)
     val target = targetSchemaId.map(meta.schema(_).struct)
       .getOrElse(meta.currentSchema.struct)
@@ -138,25 +143,19 @@ object Scan {
       return emptyRaw(spark, meta, lineage, withPath, target)
     val (eqDels, posDels) =
       if (lineage) deletes.partition(_.content == "equality") else (Nil, Nil)
-    // An inherited id costs a per-row sum over the row's position. A
-    // position delete that cannot reach any inherited file is matched
-    // against the stored ids alone, so a read that does not select
-    // `$row_id` computes none.
-    val storedKey = posDels.nonEmpty &&
-      entries.exists(_.firstRowId.isDefined) &&
-      !posDels.exists(d => entries.exists(mayHit(d, _)))
+    val inherit = rowIds || posDels.exists(d => entries.exists(mayHit(d, _)))
     val groups = entries.groupBy(_.schemaId).toSeq.sortBy(_._1)
     val parts = groups.map { case (sid, files) =>
-      readGroup(spark, meta, sid, files, lineage, withPath, target, storedKey)
+      readGroup(spark, meta, sid, files, lineage, lineage && inherit, withPath,
+        target)
     }
     var df = parts.reduce(_ unionByName _)
     if (posDels.nonEmpty) {
       val delDf = broadcast(readDeletes(spark, meta.location, posDels))
       df = df.join(delDf,
-        df(if (storedKey) StoredRowId else RowId) === delDf("_del_row_id") &&
+        df(RowId) === delDf("_del_row_id") &&
           df(LastUpdatedSeq) < delDf("_del_seq"),
         "left_anti")
-      if (storedKey) df = df.drop(StoredRowId)
     }
     // Equality deletes (Iceberg v2/v3 delete shape): anti-join on
     // null-safe key equality, gated by the same sequence rule as
@@ -208,7 +207,8 @@ object Scan {
             emptyRaw(spark, meta, lineage, opts.withFileMeta, target),
             target, opts, lineage)
         var df = readEntries(spark, meta, data, deletes,
-          withPath = opts.withFileMeta, targetSchemaId = schemaAt)
+          withPath = opts.withFileMeta, targetSchemaId = schemaAt,
+          rowIds = opts.withLineage)
         if (opts.withFileMeta) df = attachPartitionCol(spark, df, meta, data)
         opts.filter.foreach(f => df = df.filter(f))
         finalProject(df, target, opts, lineage)
@@ -253,14 +253,12 @@ object Scan {
         }
     }
 
-  /** One schema version's files. `storedKey` adds the ids the files
-    * store, before inheritance, as `_stored_row_id`.
-    */
+  /** One schema version's files; `inherit` computes inherited ids. */
   private def readGroup(spark: SparkSession, meta: TableMetadata, sid: Int,
-      files: Seq[DataFileEntry], lineage: Boolean, withPath: Boolean,
-      target: StructType, storedKey: Boolean): DataFrame = {
+      files: Seq[DataFileEntry], lineage: Boolean, inherit: Boolean,
+      withPath: Boolean, target: StructType): DataFrame = {
     val fileStruct = meta.schema(sid).struct
-    val inherits = lineage && files.exists(_.firstRowId.isDefined)
+    val inherits = inherit && files.exists(_.firstRowId.isDefined)
     val readSchema =
       if (lineage)
         StructType(fileStruct.fields ++ Seq(
@@ -294,7 +292,6 @@ object Scan {
       if (inherits) coalesce(col(RowId), col(FirstRowId) + rowIndex).as(RowId)
       else col(RowId)
     val extras = (if (lineage) Seq(rowId, col(LastUpdatedSeq)) else Nil) ++
-      (if (storedKey) Seq(col(RowId).as(StoredRowId)) else Nil) ++
       (if (withPath) Seq(col("_metadata.file_path").as(GraftPath),
         col("_metadata.file_modification_time").as(GraftMtime)) else Nil)
     // one projection: each further Dataset step would be one more analysis

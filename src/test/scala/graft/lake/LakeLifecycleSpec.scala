@@ -669,8 +669,8 @@ class LakeLifecycleSpec extends AnyFunSuite {
       (5, "delete", 1L, 10L), (5, "insert", 1L, 11L), (5, "insert", 6L, 60L)))
   }
 
-  test("a position delete computes inherited ids only when it can reach " +
-      "an inherited file") {
+  test("a read computes inherited ids only when it selects them or a " +
+      "position delete can reach an inherited file") {
     import s.implicits._
     val t = LakeTable.create(s, tmpLoc(), Right(Seq((1L, 10L), (2L, 20L))
       .toDF("id", "v")), properties = Map("merge_mode" -> "merge-on-read"))
@@ -679,6 +679,9 @@ class LakeLifecycleSpec extends AnyFunSuite {
     t.append(Seq((5L, 50L)).toDF("id", "v")) // inherits id 4
     def readsRowIndex: Boolean =
       t.read().queryExecution.sparkPlan.toString.contains("row_index")
+    assert(!readsRowIndex)
+    assert(t.readWithMetaColumns().queryExecution.sparkPlan.toString
+      .contains("row_index"))
     t.delete(col("id") === 2L) // deletes id 1: out of the inherited range
     assert(!readsRowIndex)
     assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
