@@ -48,7 +48,8 @@ object Scan {
   private val FirstRowId = "_first_row_id"
   /** The data column the parquet reader fills with each row's position in
     * its file: what `_metadata.row_index` reads, without the `_metadata`
-    * struct, which a frame keeps reading once any column selected it.
+    * struct, which the scan reads whole when the optimizer prunes away the
+    * column that selected it (a read that needs no ids).
     */
   private val RowIndex = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
 

@@ -692,6 +692,31 @@ class LakeLifecycleSpec extends AnyFunSuite {
     assert(rowIds(t) == Map(1L -> 0L, 3L -> 2L, 4L -> 3L))
   }
 
+  test("delete entries written without stats still apply and bound changes") {
+    import s.implicits._
+    val t = LakeTable.create(s, tmpLoc(), Right(Seq((1L, 10L), (2L, 20L),
+      (3L, 30L)).toDF("id", "v").coalesce(1)),
+      properties = Map("merge_mode" -> "merge-on-read"))
+    val start = t.meta.currentSnapshotId.get
+    t.delete(col("id") === 2L)
+    t.deleteByKeys(Seq(3L).toDF("id"), Seq("id"))
+    // as manifests written before delete files carried stats hold them
+    t.meta.currentSnapshot.get.manifests.foreach { rel =>
+      val m = Meta.readManifest(t.location, rel)
+      Meta.writeManifest(t.location, rel.stripPrefix("metadata/"),
+        m.copy(addedDeletes = m.addedDeletes.map(_.copy(stats = Map.empty))))
+    }
+    val dels = Meta.liveFiles(t.meta, t.meta.currentSnapshot.get)._2
+    assert(dels.size == 2 && dels.forall(_.stats.isEmpty))
+    assert(t.read().select("id").as[Long].collect().toSeq == Seq(1L))
+    assert(rowIds(t) == Map(1L -> 0L))
+    val got = t.changes(start, t.meta.currentSnapshotId.get)
+      .select("_change_ordinal", "_change_type", "id", "v").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq
+    assert(got == Seq((1, "delete", 2L, 20L), (2, "delete", 3L, 30L)))
+  }
+
   test("a user column may not take a lineage column's name") {
     val lineage = Seq(Writer.RowId, Writer.LastUpdatedSeq, "_first_row_id",
       "_FIRST_ROW_ID")
